@@ -21,14 +21,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from . import cells as C
-from .kernels import LAT0, LON0, MPD_X, MPD_Y
 
 _OFF = 1 << 28
 _SQRT3_3 = math.sqrt(3.0) / 3.0
-
-
-def project_cols(lon: Column, lat: Column) -> tuple[Column, Column]:
-    return (lon - F.lit(LON0)) * F.lit(MPD_X), (lat - F.lit(LAT0)) * F.lit(MPD_Y)
 
 
 def hex_qr_cols(x: Column, y: Column, res: int) -> tuple[Column, Column]:
@@ -59,14 +54,6 @@ def hex_pack(res: int, q: Column, r: Column) -> Column:
 def hex_cell_cols(x: Column, y: Column, res: int) -> Column:
     q, r = hex_qr_cols(x, y, res)
     return hex_pack(res, q, r)
-
-
-def hex_disk_cols(x: Column, y: Column, res: int, k: int) -> Column:
-    """grid_disk(k) cell ids around the point's cell — array column."""
-    q, r = hex_qr_cols(x, y, res)
-    return F.array(*[
-        hex_pack(res, q + dq, r + dr) for dq, dr in C.hex_ring_offsets(k)
-    ])
 
 
 def hex_disk_of_cell_cols(cell: Column, k: int) -> Column:

@@ -107,11 +107,6 @@ def unproject_tm(e: np.ndarray, n: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return np.degrees(lam) + _UTM33_LON0, np.degrees(lat)
 
 
-def polyline_length_m(lons: np.ndarray, lats: np.ndarray) -> float:
-    x, y = project(lons, lats)
-    return float(np.sum(np.hypot(np.diff(x), np.diff(y))))
-
-
 def points_along_line(
     lons: np.ndarray, lats: np.ndarray, spacing_m: float
 ) -> tuple[np.ndarray, np.ndarray]:

@@ -61,18 +61,6 @@ def checkpoints_udf(geom: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def make_point_disk_udf(res: int, k: int):
-    """(x, y) metric point -> hexcell ids of grid_disk(k) around its cell."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def point_disk(x: pd.Series, y: pd.Series) -> pd.Series:
-        cell = C.hex_encode_xy(x.to_numpy(), y.to_numpy(), res)
-        disk = C.hex_disk(cell, k)
-        return pd.Series(list(disk))
-
-    return point_disk
-
-
 def make_point_cell_udf(res: int):
     """(lon, lat) -> single hexcell id."""
 
@@ -81,14 +69,6 @@ def make_point_cell_udf(res: int):
         return pd.Series(C.hex_encode(lon.to_numpy(), lat.to_numpy(), res))
 
     return point_cell
-
-
-def make_point_cell_xy_udf(res: int):
-    @F.pandas_udf(LongType())
-    def point_cell_xy(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(C.hex_encode_xy(x.to_numpy(), y.to_numpy(), res))
-
-    return point_cell_xy
 
 
 def make_segments_udf(res: int):
@@ -127,19 +107,6 @@ def make_segments_udf(res: int):
     return segments
 
 
-@F.pandas_udf(DoubleType())
-def point_segment_distance_udf(
-    px: pd.Series, py: pd.Series,
-    ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series,
-) -> pd.Series:
-    return pd.Series(
-        K.point_segment_distance(
-            px.to_numpy(), py.to_numpy(),
-            ax.to_numpy(), ay.to_numpy(), bx.to_numpy(), by.to_numpy(),
-        )
-    )
-
-
 def point_segment_distance_cols(
     px: Column, py: Column, ax: Column, ay: Column, bx: Column, by: Column
 ) -> Column:
@@ -171,44 +138,3 @@ def make_offset_udf():
         return pd.Series(out)
 
     return offset_line
-
-
-def make_s2_cells_udf(level: int):
-    """Geometry -> unique S2 covering cells of all segments at ``level``."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def s2_cells(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            if g is None or len(g) == 0:
-                out.append([])
-                continue
-            lons, lats = _geom_to_arrays(g)
-            if len(lons) == 1:
-                cells = C.s2_parent(C.s2_encode(lons, lats), level)
-            else:
-                parts = [
-                    C.s2_covering_of_segment(lons[i], lats[i], lons[i + 1], lats[i + 1], level)
-                    for i in range(len(lons) - 1)
-                ]
-                cells = np.unique(np.concatenate(parts))
-            out.append([int(c) for c in np.unique(cells)])
-        return pd.Series(out)
-
-    return s2_cells
-
-
-def geometry_length_m() -> Column:
-    """Polyline length in metres as a pure column expression (no UDF):
-    sum of segment hypots in the local metric frame."""
-    g = F.col("geometry")
-    n = F.size(g)
-    idx = F.sequence(F.lit(0), n - 2)
-    seg = F.transform(
-        idx,
-        lambda i: F.sqrt(
-            F.pow((g[i + 1]["x"] - g[i]["x"]) * K.MPD_X, 2)
-            + F.pow((g[i + 1]["y"] - g[i]["y"]) * K.MPD_Y, 2)
-        ),
-    )
-    return F.when(n >= 2, F.aggregate(seg, F.lit(0.0), lambda a, x: a + x)).otherwise(F.lit(0.0))

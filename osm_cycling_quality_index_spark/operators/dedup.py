@@ -73,6 +73,23 @@ def release_session_pinned(spark) -> None:
     _SESSION_PINNED.clear()
 
 
+#: operator name heading a line of ``queryExecution().sparkPlan()``'s tree
+#: string, after the tree-drawing prefix (``:``, ``+-``, spaces)
+_PLAN_OP = _re.compile(r"[\s:+-]*([A-Za-z]+)")
+#: operators that are, or need, a shuffle.  sparkPlan() precedes
+#: EnsureRequirements, so the exchanges a join/aggregate/window REQUIRES
+#: are not printed yet — those operators count as shuffled too, or their
+#: frames would fall through to the rdd probe, which under AQE executes the
+#: entire upstream subtree to materialize the final RDD (the exact probe
+#: cost this classification exists to avoid)
+_SHUFFLING_OPS = frozenset({
+    "Exchange", "HashAggregate", "ObjectHashAggregate", "SortAggregate",
+    "SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin",
+    "BroadcastNestedLoopJoin", "Window", "WindowGroupLimit",
+    "ArrowWindowPython",
+})
+
+
 def fan_out(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to the cluster's defaultParallelism when its
     current layout is narrower — the guard every operator whose per-row
@@ -86,55 +103,39 @@ def fan_out(df: DataFrame) -> DataFrame:
     never adds a shuffle at scale.  Only safe for consumers whose results
     are layout-independent (aggregates, value-derived buckets — true for
     every caller in this repo)."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    try:
-        # Probing width with ``df.rdd.getNumPartitions()`` is only cheap
-        # on a scan-only plan (metadata: the file split count).  On a plan
-        # containing a shuffle, AQE EXECUTES the upstream query stages to
-        # materialize the final RDD, so the old unconditional probe ran
-        # the whole subtree once and threw the result away (measured:
-        # decontaminate over a repartitioned input paid ~4x at sf1).  And
-        # a shuffled plan's width cannot be assumed cluster-wide either:
-        # AQE byte-size coalescing collapses a small post-shuffle frame to
-        # 1-2 partitions, which serialized the hyperplane-projection stage
-        # for a whole 70 s at sf1 when a draft of this function skipped
-        # shuffled plans outright.  The pre-execution sparkPlan is pure
-        # planning — classify from its string.
-        plan = df._jdf.queryExecution().sparkPlan().toString().lower()
-        # sparkPlan() precedes EnsureRequirements, so the exchanges a
-        # join/aggregate/window REQUIRES are not printed yet — classify
-        # those operators as shuffled too, or their frames would fall
-        # through to the rdd probe below, which under AQE executes the
-        # entire upstream subtree to materialize the final RDD (the exact
-        # probe cost this classification exists to avoid)
-        has_shuffle = ("exchange hashpartitioning" in plan
-                       or "exchange roundrobinpartitioning" in plan
-                       or "exchange rangepartitioning" in plan
-                       or "hashaggregate" in plan
-                       or "sortaggregate" in plan
-                       or "sortmergejoin" in plan
-                       or "shuffledhashjoin" in plan
-                       or "broadcasthashjoin" in plan
-                       or "broadcastnestedloopjoin" in plan
-                       or "window" in plan)
-        if has_shuffle:
-            # already explicitly width-pinned on top (repartition(k>=n) is
-            # the repo's anti-coalescing idiom; AQE honours explicit
-            # numPartitions)?  then adding another exchange buys nothing.
-            m = _re.match(r"exchange roundrobinpartitioning\((\d+)\)",
-                          plan.lstrip())
-            if m and int(m.group(1)) >= n:
-                return df
-            # one explicit exchange of the (post-shuffle, usually already
-            # reduced) frame guarantees the expensive map stage's width in
-            # BOTH regimes — no probe, no extra pass over the base data
-            return df.repartition(n)
-        # scan-only plan: the probe is metadata (file split count), no job
-        if df.rdd.getNumPartitions() < n:
-            return df.repartition(n)
-    except Exception:
-        pass  # plan not RDD-convertible (e.g. pure streaming) — leave as-is
+    if df.isStreaming:
+        # a streaming plan has no batch physical plan or RDD to classify
+        return df
+    n = df.sparkSession.sparkContext.defaultParallelism
+    # Probing width with ``df.rdd.getNumPartitions()`` is only cheap on a
+    # scan-only plan (metadata: the file split count).  On a plan
+    # containing a shuffle, AQE EXECUTES the upstream query stages to
+    # materialize the final RDD, so the old unconditional probe ran the
+    # whole subtree once and threw the result away (measured: decontaminate
+    # over a repartitioned input paid ~4x at sf1).  And a shuffled plan's
+    # width cannot be assumed cluster-wide either: AQE byte-size coalescing
+    # collapses a small post-shuffle frame to 1-2 partitions, which
+    # serialized the hyperplane-projection stage for a whole 70 s at sf1
+    # when a draft of this function skipped shuffled plans outright.  The
+    # pre-execution sparkPlan is pure planning — classify from the operator
+    # name heading each of its lines (never from raw substrings: a column
+    # named ``window`` is not a window operator).
+    lines = df._jdf.queryExecution().sparkPlan().toString().splitlines()
+    ops = {m.group(1) for m in map(_PLAN_OP.match, lines) if m}
+    if ops & _SHUFFLING_OPS:
+        # already explicitly width-pinned on top (repartition(k>=n) is the
+        # repo's anti-coalescing idiom; AQE honours explicit numPartitions)?
+        # then adding another exchange buys nothing.
+        m = _re.match(r"Exchange RoundRobinPartitioning\((\d+)\)", lines[0])
+        if m and int(m.group(1)) >= n:
+            return df
+        # one explicit exchange of the (post-shuffle, usually already
+        # reduced) frame guarantees the expensive map stage's width in BOTH
+        # regimes — no probe, no extra pass over the base data
+        return df.repartition(n)
+    # scan-only plan: the probe is metadata (file split count), no job
+    if df.rdd.getNumPartitions() < n:
+        return df.repartition(n)
     return df
 
 

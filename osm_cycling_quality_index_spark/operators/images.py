@@ -10,9 +10,17 @@
 
 Scale design: candidates are generated by hexcell equi-joins (never a cross
 join); ``bytes`` stays out of every shuffle — joins carry (image_id, lon,
-lat, cell) only and payloads re-attach by a final id-equi-join.  Skewed
-cells (dense urban areas) are split by AQE; an explicit salt can be added on
-the way side via ``salt_cells``.
+lat, cell) only and payloads re-attach by a final id-equi-join.
+
+J3 and J4 share one spatial-join core, written once per step: the way
+segment/cell source (``_way_segments_cells``, which the sidepath vote also
+uses), the shuffle cell join plus exact distance refine (``_cell_pairs``),
+and the broadcast CSR index (``_csr_pairs`` inside ``_broadcast_join``).
+The shuffle and broadcast forms differ only in their exchange and are
+bit-identical by test.  AQE skew-join splitting (``session.get_spark``:
+8 MB threshold, factor 2) is the one skew mechanism for hot cells: the
+``geotag_hotcell`` benchmark, with 25% of its points in one res-8 cell,
+measures a task skew (max/median task time) of 1.01-1.18.
 """
 
 from __future__ import annotations
@@ -24,8 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, BooleanType, FloatType, IntegerType, LongType,
-    StringType, StructField, StructType,
+    ArrayType, BinaryType, BooleanType, DoubleType, FloatType, IntegerType,
+    LongType, StringType, StructField, StructType,
 )
 
 from ..geo import cells as C
@@ -196,8 +204,8 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
     shuffled.  The exact ray-cast refine has two physical strategies:
 
     * polygon side fits the driver (the broadcast regime, checked with one
-      cheap dimension count like ``knn_ways_auto``): projected rings ship
-      once per worker via ``sc.broadcast`` and the refine is the
+      cheap dimension count against ``max_broadcast_polys``): projected
+      rings ship once per worker via ``sc.broadcast`` and the refine is the
       Arrow-batched numpy kernel (``geo.kernels.ray_cast_pip``), vectorized
       over all of a polygon's candidate points per batch.  The JVM column
       form of the same formula (``_pip_crossings_cols``) is a higher-order
@@ -337,57 +345,61 @@ def image_tile_assignment(images: DataFrame, tile_size_m: float = 500.0) -> Data
     return images.select("image_id", tile.alias("tile_id"))
 
 
-def _way_segments_cells(ways: DataFrame, res: int, rings: int = 0) -> DataFrame:
-    """Way polylines -> (segment endpoints, covering cell) rows; with
-    ``rings`` > 0 every covering cell expands to its grid_disk so the big
-    point side of the join can stay at one cell per row."""
-    # the segmentation UDF + two explodes (+ grid_disk when rings > 0) are
-    # the expensive per-row stage and would otherwise run at the ways
-    # scan's width (1-2 partitions on one-row-group fixtures); fan out
-    # first — already-wide inputs pass through untouched and every
-    # consumer is a join/aggregate, so layout never affects results
-    from .dedup import fan_out
+def _way_segments_cells(ways: DataFrame, res: int, rings: int = 0,
+                        carry: tuple = ()) -> DataFrame:
+    """Way polylines -> (carried way columns, segment endpoints, covering
+    cell) rows; with ``rings`` > 0 every covering cell expands to its
+    grid_disk so the big point side of the join can stay at one cell per
+    row.  ``carry`` lists the way columns every row keeps (names or aliased
+    Columns); the default keeps the way id as ``way_id``.
 
-    segs = fan_out(ways).select(
-        F.col("id").alias("way_id"),
-        F.explode(make_segments_udf(res)("geometry")).alias("seg"),
+    The segmentation UDF and the explodes are the expensive per-row stage,
+    so they must not run at a one-row-group scan's width: callers pass a
+    fanned-out ways side, or one whose upstream exchange already sets it."""
+    carry = carry or (F.col("id").alias("way_id"),)
+    segs = ways.select(
+        *carry, F.explode(make_segments_udf(res)("geometry")).alias("seg"),
     )
+    keep = segs.columns[:-1]
     out = segs.select(
-        "way_id",
+        *keep,
         F.col("seg.ax").alias("ax"), F.col("seg.ay").alias("ay"),
         F.col("seg.bx").alias("bx"), F.col("seg.by").alias("by"),
         F.explode("seg.cells").alias("cell"),
     )
     if rings > 0:
         out = out.select(
-            "way_id", "ax", "ay", "bx", "by",
+            *keep, "ax", "ay", "bx", "by",
             F.explode(hex_disk_of_cell_cols(F.col("cell"), rings)).alias("cell"),
         ).distinct()
     return out
 
 
-def _candidate_rows(points: DataFrame, wsegs: DataFrame, res: int, rings: int) -> DataFrame:
-    """(image_id, way_id, dist) for every candidate segment sharing a
-    grid_disk(rings) cell — the raw refine output before any aggregation."""
+def _cell_pairs(points: DataFrame, wsegs: DataFrame, res: int,
+                how: str = "inner", keep: tuple = ()) -> DataFrame:
+    """(image_id, *keep, way_id, dist) for every point and every way segment
+    sharing the point's single cell (the ways side is ring-expanded): the
+    shuffle path's cell equi-join plus exact distance refine, before any
+    aggregation.  A left join keeps candidate-less points with NULLs."""
     pc = points.withColumn("cell", hex_cell_cols(F.col("px"), F.col("py"), res))
-    cand = pc.join(wsegs, "cell")
     d = point_segment_distance_cols(
         F.col("px"), F.col("py"), F.col("ax"), F.col("ay"),
         F.col("bx"), F.col("by"),
     )
-    return cand.select("image_id", "way_id", d.alias("dist"))
+    return pc.join(wsegs, "cell", how).select(
+        "image_id", *keep, "way_id", d.alias("dist"))
 
 
-def _candidates(points: DataFrame, wsegs: DataFrame, res: int, rings: int) -> DataFrame:
+def _candidates(points: DataFrame, wsegs: DataFrame, res: int) -> DataFrame:
     """Per (image, way) minimum distance among candidate segments."""
     return (
-        _candidate_rows(points, wsegs, res, rings)
+        _cell_pairs(points, wsegs, res)
         .groupBy("image_id", "way_id")
         .agg(F.min("dist").alias("dist_m"))
     )
 
 
-def _nearest(points: DataFrame, wsegs: DataFrame, res: int, rings: int,
+def _nearest(points: DataFrame, wsegs: DataFrame, res: int,
              carry: tuple = ()) -> DataFrame:
     """k=1 fast path: each point carries a single cell (the ways side is
     ring-expanded instead), candidates reduce through one map-side-combinable
@@ -398,14 +410,8 @@ def _nearest(points: DataFrame, wsegs: DataFrame, res: int, rings: int,
     that pre-groups the ways side into broadcast arrays and computes
     array-min per row was measured slower: the struct-array transform falls
     out of whole-stage codegen.)"""
-    pc = points.withColumn("cell", hex_cell_cols(F.col("px"), F.col("py"), res))
-    cand = pc.join(wsegs, "cell", "left")
-    d = point_segment_distance_cols(
-        F.col("px"), F.col("py"), F.col("ax"), F.col("ay"),
-        F.col("bx"), F.col("by"),
-    )
     best = (
-        cand.select("image_id", "px", "py", *carry, "way_id", d.alias("dist"))
+        _cell_pairs(points, wsegs, res, "left", ("px", "py", *carry))
         .groupBy("image_id")
         .agg(
             F.min(F.struct(F.col("dist"), F.col("way_id"))).alias("b"),
@@ -443,7 +449,7 @@ def knn_ways(
     edges) can be missed by design; raise ``coarse_drop`` for sparser data.
     Output: (image_id, way_id, dist_m, rank).
     """
-    from .dedup import fan_out
+    from .dedup import fan_out, pin_session
 
     # when the planner broadcasts the ways side, the candidate distance
     # compute + map-side partial aggregation run at the POINT side's width
@@ -454,27 +460,25 @@ def knn_ways(
         ((F.col("lat") - LAT0) * MPD_Y).alias("py"),
         *carry,
     ))
+    ways = fan_out(ways)
+    res2 = max(0, res - coarse_drop)
+    wsegs1 = _way_segments_cells(ways, res, rings)
+    wsegs2 = _way_segments_cells(ways, res2, 2)
+    guarantee1 = rings * math.sqrt(3.0) * C.hex_edge_m(res)
 
     if k == 1:
         out_cols = ["image_id", *carry, "way_id", "dist_m", "rank"]
-        wsegs = _way_segments_cells(ways, res, rings)
-        # eager persist: round 2 and the final union both branch off this
-        # frame; a lazy cache lets the branches race and recompute the join
-        # persist: the two complementary filters below both consume round 1;
-        # measured faster than recomputing the map-side round
-        best1 = _nearest(pts, wsegs, res, rings, carry).persist()
-        from .dedup import pin_session
-
+        # persist: the two complementary filters below both consume round
+        # 1; measured faster than recomputing the map-side round
+        best1 = _nearest(pts, wsegs1, res, carry).persist()
         pin_session(images.sparkSession, best1.unpersist)
-        guarantee = rings * math.sqrt(3.0) * C.hex_edge_m(res)
-        done1 = best1.where(F.col("dist_m") < guarantee).select(*out_cols)
+        done1 = best1.where(F.col("dist_m") < guarantee1).select(*out_cols)
         # round 2: points with no round-1 candidate (NULL from the left join)
         # or an unguaranteed best — a filter, never a join
         rest = best1.where(
-            F.col("dist_m").isNull() | (F.col("dist_m") >= guarantee)
+            F.col("dist_m").isNull() | (F.col("dist_m") >= guarantee1)
         ).select("image_id", "px", "py", *carry)
-        res2 = max(0, res - coarse_drop)
-        best2 = _nearest(rest, _way_segments_cells(ways, res2, 2), res2, 2, carry)
+        best2 = _nearest(rest, wsegs2, res2, carry)
         return done1.unionByName(best2.select(*out_cols))
 
     def topk(cand: DataFrame, guarantee_m: float) -> DataFrame:
@@ -487,10 +491,9 @@ def knn_ways(
         # because Tungsten's window sort is already a per-partition
         # external sort with code-gen'd comparators.  The heap idea IS
         # the right one where the candidates never enter the JVM row
-        # format at all — the broadcast regime (geotag_join_broadcast /
-        # knn_ways_auto) does exactly that with numpy heaps per Arrow
-        # batch.  In the shuffle regime the JVM window wins; combiner
-        # rejected on measurement.
+        # format at all — the broadcast regime (knn_ways_broadcast) does
+        # exactly that with numpy heaps per Arrow batch.  In the shuffle
+        # regime the JVM window wins; combiner rejected on measurement.
         w = Window.partitionBy("image_id").orderBy(F.asc("dist_m"), F.asc("way_id"))
         # persist: the ranked frame feeds three branches (result rows, the
         # completeness check, and the round-2 anti-join); without a boundary
@@ -500,8 +503,6 @@ def knn_ways(
             .where(F.col("rank") <= k)
             .persist()
         )
-        from .dedup import pin_session
-
         pin_session(images.sparkSession, ranked.unpersist)
         counts = ranked.groupBy("image_id").agg(
             F.count(F.lit(1)).alias("n"), F.max("dist_m").alias("kth")
@@ -512,17 +513,11 @@ def knn_ways(
         pin_session(images.sparkSession, complete.unpersist)
         return ranked, complete
 
-    wsegs = _way_segments_cells(ways, res, rings)
-    cand1 = _candidates(pts, wsegs, res, rings)
-    ranked1, complete1 = topk(cand1, rings * math.sqrt(3.0) * C.hex_edge_m(res))
+    ranked1, complete1 = topk(_candidates(pts, wsegs1, res), guarantee1)
     done1 = ranked1.join(complete1, "image_id", "left_semi")
-
     rest = pts.join(complete1, "image_id", "left_anti")
-    res2 = max(0, res - coarse_drop)
-    wsegs2 = _way_segments_cells(ways, res2, 2)
-    cand2 = _candidates(rest, wsegs2, res2, 2)
-    ranked2, _ = topk(cand2, 2 * math.sqrt(3.0) * C.hex_edge_m(res2))
-
+    ranked2, _ = topk(_candidates(rest, wsegs2, res2),
+                      2 * math.sqrt(3.0) * C.hex_edge_m(res2))
     return done1.unionByName(ranked2)
 
 
@@ -531,10 +526,12 @@ def _csr_level(ways: DataFrame, res: int, rings: int) -> dict:
     keyed by covering cell (ring-expanded on the way side, like the shuffle
     path).  Way ids are interned as ints in lexicographic order so the int
     argmin tie-break equals the shuffle path's min-string tie-break."""
+    from .dedup import fan_out
+
     # Arrow collect + numpy group-by-cell: the dimension build is
     # driver-serial, so it must not loop in Python over the (segment, cell)
     # rows (~10^5 at bench scale, more on a real extract)
-    pdf = _way_segments_cells(ways, res, rings).toPandas()
+    pdf = _way_segments_cells(fan_out(ways), res, rings).toPandas()
     wid_str = pdf["way_id"].to_numpy(dtype=object)
     ids = np.unique(wid_str)  # sorted -> int order == lexicographic order
     wid_all = np.searchsorted(ids, wid_str)
@@ -553,13 +550,10 @@ def _csr_level(ways: DataFrame, res: int, rings: int) -> dict:
         cells = np.array([], dtype=np.int64)
         starts = np.zeros(1, dtype=np.int64)
     raw = raw[order]
-    # precompute per-segment constants (dx, dy, 1/len^2): the pair loop then
-    # reads 5 doubles per candidate instead of recomputing them per point
-    dx = raw[:, 2] - raw[:, 0]
-    dy = raw[:, 3] - raw[:, 1]
-    ll = dx * dx + dy * dy
-    inv = np.where(ll > 0, 1.0 / np.where(ll > 0, ll, 1.0), 0.0)
-    seg = np.column_stack([raw[:, 0], raw[:, 1], dx, dy, inv])
+    # per-segment (ax, ay, dx, dy): the pair expansion reads 4 doubles per
+    # candidate and never recomputes the segment direction per point
+    seg = np.column_stack([raw[:, 0], raw[:, 1],
+                           raw[:, 2] - raw[:, 0], raw[:, 3] - raw[:, 1]])
     wid = wid_all[order].astype(np.int64)
     return {"res": res, "cells": cells, "starts": starts, "seg": seg,
             "wid": wid, "ids": ids}
@@ -580,21 +574,20 @@ def build_segment_index(ways: DataFrame, res: int = 8, rings: int = 1,
             "g1": rings * math.sqrt(3.0) * C.hex_edge_m(res)}
 
 
-def _index_nearest(level: dict, x: np.ndarray, y: np.ndarray):
-    """Vectorized nearest-segment lookup against one CSR level.
-    Returns (way int idx or -1, dist or nan).
+def _csr_pairs(level: dict, x: np.ndarray, y: np.ndarray):
+    """CSR expansion of points against one index level: one flat row per
+    (point, candidate segment) pair, with its exact distance.  Returns
+    ``(cnt, row, wid, dist)`` — candidates per point, then per pair the
+    point's row (non-decreasing), way int and distance — or None when no
+    point has a candidate.
 
-    Works in squared distances and reduces per-point minima with two
-    ``np.minimum.reduceat`` passes (min d2, then min way-int among the d2
-    winners) — the (d, way) tie-break equals the shuffle path's
-    ``min(struct(dist, way_id))`` because way ints are interned in
-    lexicographic order.  No sort, minimal temporaries: this loop is
-    DRAM-bandwidth-bound at high core counts, so traffic is the budget."""
-    n = len(x)
-    best_w = np.full(n, -1, dtype=np.int64)
-    best_d = np.full(n, np.nan)
-    if n == 0 or len(level["cells"]) == 0:
-        return best_w, best_d
+    The distance op order matches :func:`geo.udfs.point_segment_distance_cols`
+    EXACTLY (division by len², closest point as ``a + t*d``): a
+    reciprocal-multiply or a different subtraction association differs by
+    ulps, which can flip a guarantee-radius or tie decision vs the shuffle
+    path."""
+    if len(x) == 0 or len(level["cells"]) == 0:
+        return None
     cell = C.hex_encode_xy(x, y, level["res"])
     slot = np.searchsorted(level["cells"], cell)
     slot = np.clip(slot, 0, len(level["cells"]) - 1)
@@ -603,73 +596,7 @@ def _index_nearest(level: dict, x: np.ndarray, y: np.ndarray):
     cnt = np.where(hit, level["starts"][slot + 1], 0) - s0
     total = int(cnt.sum())
     if total == 0:
-        return best_w, best_d
-    # CSR expansion: one (point, candidate-segment) pair per flat row;
-    # `row` is non-decreasing by construction
-    cum = np.cumsum(cnt)
-    flat_i = np.arange(total)
-    row = np.searchsorted(cum, flat_i, side="right")
-    pos = s0[row] + (flat_i - (cum[row] - cnt[row]))
-    seg = level["seg"][pos]
-    px, py = x[row], y[row]
-    rx = px - seg[:, 0]
-    ry = py - seg[:, 1]
-    # op order matches geo.udfs.point_segment_distance_cols EXACTLY
-    # (division by len², closest point as a + t*d): reciprocal-multiply or
-    # a different subtraction association differs by ulps, which can flip a
-    # guarantee-radius or tie decision vs the shuffle path
-    dxs, dys = seg[:, 2], seg[:, 3]
-    ll = dxs * dxs + dys * dys
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(ll > 0, (rx * dxs + ry * dys) / np.where(ll > 0, ll, 1.0), 0.0)
-    t = np.minimum(1.0, np.maximum(0.0, t))
-    cx = seg[:, 0] + t * dxs
-    cy = seg[:, 1] + t * dys
-    # sqrt BEFORE the min/tie-break, not after: the shuffle path compares
-    # sqrt'd distances, and sqrt is monotone but not injective in float64 —
-    # two distinct d2 values can collapse to one double, where the shuffle
-    # path tie-breaks by way id while a d2 comparison would not.  Comparing
-    # in the same (sqrt'd) domain keeps the paths bit-identical.
-    d = np.sqrt((px - cx) * (px - cx) + (py - cy) * (py - cy))
-    w = level["wid"][pos]
-    present = cnt > 0
-    seg_starts = (cum - cnt)[present]
-    rowmin = np.minimum.reduceat(d, seg_starts)
-    is_min = d <= np.repeat(rowmin, cnt[present])
-    best_wid = np.minimum.reduceat(np.where(is_min, w, np.int64(2**62)), seg_starts)
-    best_w[present] = best_wid
-    best_d[present] = rowmin
-    return best_w, best_d
-
-
-def _index_topk(level: dict, x: np.ndarray, y: np.ndarray, k: int):
-    """Vectorized k-nearest-ways lookup against one CSR level.
-
-    Returns ``(sel_row, sel_wid, sel_dist, sel_rank, count, kth)`` where the
-    ``sel_*`` arrays hold up to ``k`` (way, dist) rows per input point ranked
-    by ``(dist, way-int)`` — the same tie-break as the shuffle path's
-    ``row_number() OVER (ORDER BY dist_m, way_id)`` because way ints are
-    interned in lexicographic order — and ``count``/``kth`` (per input point)
-    feed the caller's completeness check.  Distance op order matches
-    :func:`geo.udfs.point_segment_distance_cols` exactly (division by len²,
-    closest point as ``a + t*d``), so the result is bit-identical to the
-    shuffle path."""
-    n = len(x)
-    count = np.zeros(n, dtype=np.int64)
-    kth = np.full(n, np.inf)
-    empty = (np.array([], dtype=np.int64), np.array([], dtype=np.int64),
-             np.array([]), np.array([], dtype=np.int64))
-    if n == 0 or len(level["cells"]) == 0:
-        return (*empty, count, kth)
-    cell = C.hex_encode_xy(x, y, level["res"])
-    slot = np.searchsorted(level["cells"], cell)
-    slot = np.clip(slot, 0, len(level["cells"]) - 1)
-    hit = level["cells"][slot] == cell
-    s0 = np.where(hit, level["starts"][slot], 0)
-    cnt = np.where(hit, level["starts"][slot + 1], 0) - s0
-    total = int(cnt.sum())
-    if total == 0:
-        return (*empty, count, kth)
+        return None
     cum = np.cumsum(cnt)
     flat_i = np.arange(total)
     row = np.searchsorted(cum, flat_i, side="right")
@@ -685,11 +612,57 @@ def _index_topk(level: dict, x: np.ndarray, y: np.ndarray, k: int):
     t = np.minimum(1.0, np.maximum(0.0, t))
     cx = seg[:, 0] + t * dx
     cy = seg[:, 1] + t * dy
-    # sqrt before ranking for the same monotone-not-injective reason as
-    # _index_nearest: the shuffle path's row_number orders by the sqrt'd
-    # distance, so ties must form in that domain
+    # sqrt BEFORE any min/rank, not after: the shuffle path compares sqrt'd
+    # distances, and sqrt is monotone but not injective in float64 — two
+    # distinct d2 values can collapse to one double, where the shuffle path
+    # tie-breaks by way id while a d2 comparison would not
     d = np.sqrt((px - cx) * (px - cx) + (py - cy) * (py - cy))
-    w = level["wid"][pos]
+    return cnt, row, level["wid"][pos], d
+
+
+def _index_nearest(level: dict, x: np.ndarray, y: np.ndarray):
+    """Nearest segment per point against one CSR level.
+    Returns (way int idx or -1, dist or nan).
+
+    Reduces per-point minima with two ``np.minimum.reduceat`` passes (min
+    dist, then min way-int among the dist winners) — the (d, way) tie-break
+    equals the shuffle path's ``min(struct(dist, way_id))`` because way ints
+    are interned in lexicographic order.  No sort: this loop is
+    DRAM-bandwidth-bound at high core counts, so traffic is the budget."""
+    n = len(x)
+    best_w = np.full(n, -1, dtype=np.int64)
+    best_d = np.full(n, np.nan)
+    pairs = _csr_pairs(level, x, y)
+    if pairs is None:
+        return best_w, best_d
+    cnt, _, w, d = pairs
+    present = cnt > 0
+    seg_starts = (np.cumsum(cnt) - cnt)[present]
+    rowmin = np.minimum.reduceat(d, seg_starts)
+    is_min = d <= np.repeat(rowmin, cnt[present])
+    best_w[present] = np.minimum.reduceat(
+        np.where(is_min, w, np.int64(2**62)), seg_starts)
+    best_d[present] = rowmin
+    return best_w, best_d
+
+
+def _index_topk(level: dict, x: np.ndarray, y: np.ndarray, k: int):
+    """k nearest ways per point against one CSR level.
+
+    Returns ``(sel_row, sel_wid, sel_dist, sel_rank, count, kth)`` where the
+    ``sel_*`` arrays hold up to ``k`` (way, dist) rows per input point ranked
+    by ``(dist, way-int)`` — the same tie-break as the shuffle path's
+    ``row_number() OVER (ORDER BY dist_m, way_id)`` because way ints are
+    interned in lexicographic order — and ``count``/``kth`` (per input point)
+    feed the caller's completeness check."""
+    n = len(x)
+    count = np.zeros(n, dtype=np.int64)
+    kth = np.full(n, np.inf)
+    pairs = _csr_pairs(level, x, y)
+    if pairs is None:
+        none = np.array([], dtype=np.int64)
+        return none, none, np.array([]), none, count, kth
+    _, row, w, d = pairs
     # min distance per (point, way) group: sort pairs by (row, way), reduce
     order = np.lexsort((w, row))
     rs, ws, ds = row[order], w[order], d[order]
@@ -718,6 +691,50 @@ def _index_topk(level: dict, x: np.ndarray, y: np.ndarray, k: int):
             (within[keep] + 1).astype(np.int64), count, kth)
 
 
+def _broadcast_join(points: DataFrame, index: dict, schema: StructType,
+                    reduce, how: str) -> DataFrame:
+    """The broadcast spatial-index join both J3 and J4 run: the CSR index
+    ships once per python worker, the point side streams through
+    ``mapInPandas`` with ZERO shuffles, ``reduce(idx, pdf, x, y)`` turns one
+    Arrow batch (``x``/``y`` projected) into way-int rows, and the string
+    way id re-attaches by a JVM-side broadcast id-join (``how``).  Building
+    10^6-row python object arrays per batch is the measured bottleneck, not
+    the geometry math, so way ids stay ints inside the kernel."""
+    from .dedup import fan_out
+
+    spark = points.sparkSession
+    # memoize the broadcast + id dimension frame on the index: pickling the
+    # CSR arrays and building the 10^3-row ids frame are per-JOB costs
+    # (driver-serial), not per-query costs
+    if "_bc" not in index:
+        index["_bc"] = spark.sparkContext.broadcast(
+            {k: index[k] for k in ("fine", "coarse", "g1")}
+        )
+    if "_ids_df" not in index:
+        index["_ids_df"] = spark.createDataFrame(
+            [(int(i), str(w)) for i, w in enumerate(index["fine"]["ids"])],
+            "way_idx long, way_id string",
+        )
+    bidx = index["_bc"]
+
+    def run(batches):
+        idx = bidx.value
+        for pdf in batches:
+            x = (pdf["lon"].to_numpy(dtype=np.float64) - LON0) * MPD_X
+            y = (pdf["lat"].to_numpy(dtype=np.float64) - LAT0) * MPD_Y
+            yield reduce(idx, pdf, x, y)
+
+    # zero shuffles at scale still holds: fan_out only exchanges an input
+    # NARROWER than the cluster (the one-row-group local fixture, which
+    # otherwise runs the whole CSR lookup on 1-2 cores); wide fact tables
+    # pass through untouched
+    return (
+        fan_out(points.select("image_id", "lon", "lat"))
+        .mapInPandas(run, schema)
+        .join(F.broadcast(index["_ids_df"]), "way_idx", how)
+    )
+
+
 def knn_ways_broadcast(
     points: DataFrame,
     ways: DataFrame,
@@ -739,14 +756,6 @@ def knn_ways_broadcast(
     if index is None:
         index = build_segment_index(ways, res=res, rings=rings,
                                     coarse_drop=coarse_drop)
-    from pyspark.sql.types import DoubleType
-
-    spark = points.sparkSession
-    if "_bc" not in index:
-        index["_bc"] = spark.sparkContext.broadcast(
-            {kk: index[kk] for kk in ("fine", "coarse", "g1")}
-        )
-    bidx = index["_bc"]
     schema = StructType([
         StructField("image_id", StringType()),
         StructField("way_idx", LongType()),
@@ -754,69 +763,27 @@ def knn_ways_broadcast(
         StructField("rank", LongType()),
     ])
 
-    def run(batches):
-        idx = bidx.value
-        fine, coarse, g1 = idx["fine"], idx["coarse"], idx["g1"]
-        for pdf in batches:
-            ids = pdf["image_id"].to_numpy()
-            x = (pdf["lon"].to_numpy(dtype=np.float64) - LON0) * MPD_X
-            y = (pdf["lat"].to_numpy(dtype=np.float64) - LAT0) * MPD_Y
-            sr, sw, sd, srk, cnt, kth = _index_topk(fine, x, y, k)
-            complete = (cnt >= k) & (kth < g1)
-            out_r, out_w, out_d, out_k = [sr[complete[sr]]], [sw[complete[sr]]], \
-                [sd[complete[sr]]], [srk[complete[sr]]]
-            redo = np.flatnonzero(~complete)
-            if len(redo):
-                cr, cw, cd, crk, _, _ = _index_topk(coarse, x[redo], y[redo], k)
-                out_r.append(redo[cr])
-                out_w.append(cw)
-                out_d.append(cd)
-                out_k.append(crk)
-            r = np.concatenate(out_r)
-            yield pd.DataFrame({
-                "image_id": ids[r],
-                "way_idx": np.concatenate(out_w),
-                "dist_m": np.concatenate(out_d),
-                "rank": np.concatenate(out_k),
-            })
+    def topk(idx, pdf, x, y):
+        sr, sw, sd, srk, cnt, kth = _index_topk(idx["fine"], x, y, k)
+        complete = (cnt >= k) & (kth < idx["g1"])
+        done = complete[sr]
+        out_r, out_w, out_d, out_k = [sr[done]], [sw[done]], [sd[done]], [srk[done]]
+        redo = np.flatnonzero(~complete)
+        if len(redo):
+            cr, cw, cd, crk, _, _ = _index_topk(idx["coarse"], x[redo], y[redo], k)
+            out_r.append(redo[cr])
+            out_w.append(cw)
+            out_d.append(cd)
+            out_k.append(crk)
+        return pd.DataFrame({
+            "image_id": pdf["image_id"].to_numpy()[np.concatenate(out_r)],
+            "way_idx": np.concatenate(out_w),
+            "dist_m": np.concatenate(out_d),
+            "rank": np.concatenate(out_k),
+        })
 
-    if "_ids_df" not in index:
-        ids = index["fine"]["ids"]
-        index["_ids_df"] = spark.createDataFrame(
-            [(int(i), str(w)) for i, w in enumerate(ids)],
-            "way_idx long, way_id string",
-        )
-    # zero shuffles at scale still holds: fan_out only exchanges an input
-    # NARROWER than the cluster (the one-row-group local fixture, which
-    # otherwise runs the whole CSR top-k on 1-2 cores); wide fact tables
-    # pass through untouched
-    from .dedup import fan_out
-
-    return (
-        fan_out(points.select("image_id", "lon", "lat"))
-        .mapInPandas(run, schema)
-        .join(F.broadcast(index["_ids_df"]), "way_idx")
-        .select("image_id", "way_id", "dist_m", "rank")
-    )
-
-
-def knn_ways_auto(
-    points: DataFrame,
-    ways: DataFrame,
-    k: int = 3,
-    res: int = 8,
-    rings: int = 2,
-    max_broadcast_ways: int = 2_000_000,
-) -> DataFrame:
-    """Strategy chooser for the kNN spatial join, the Spark classic: when
-    the ways dimension is small enough to ship to every worker, use the
-    zero-shuffle broadcast CSR index; otherwise the cell-bucketed shuffle
-    join.  Both strategies are bit-identical by test, so the choice is pure
-    physics.  The dimension count is one cheap job (a fact-side count is
-    never taken)."""
-    if ways.count() <= max_broadcast_ways:
-        return knn_ways_broadcast(points, ways, k=k, res=res, rings=rings)
-    return knn_ways(points, ways, k=k, res=res, rings=rings)
+    return _broadcast_join(points, index, schema, topk, "inner").select(
+        "image_id", "way_id", "dist_m", "rank")
 
 
 def geotag_join_broadcast(images: DataFrame, ways: DataFrame,
@@ -827,22 +794,8 @@ def geotag_join_broadcast(images: DataFrame, ways: DataFrame,
     the plan that survives 10^12 rows (shuffling the fact table even once is
     the thing that doesn't).  Output and tie-breaks are identical to the
     shuffle path (``knn_ways`` k=1)."""
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType, StringType,
-    )
-
     if index is None:
         index = build_segment_index(ways, res=res, rings=1)
-    spark = images.sparkSession
-    # memoize the broadcast + id dimension frame on the index: pickling the
-    # CSR arrays and building the 10^3-row ids frame are per-JOB costs
-    # (driver-serial), not per-query costs
-    if "_bc" not in index:
-        index["_bc"] = spark.sparkContext.broadcast(
-            {k: index[k] for k in ("fine", "coarse", "g1")}
-        )
-    bidx = index["_bc"]
-
     schema = StructType([
         StructField("image_id", StringType()),
         StructField("lon", DoubleType()),
@@ -851,56 +804,26 @@ def geotag_join_broadcast(images: DataFrame, ways: DataFrame,
         StructField("dist_m", DoubleType()),
     ])
 
-    def run(batches):
-        idx = bidx.value
-        fine, coarse, g1 = idx["fine"], idx["coarse"], idx["g1"]
-        for pdf in batches:
-            lon = pdf["lon"].to_numpy(dtype=np.float64)
-            lat = pdf["lat"].to_numpy(dtype=np.float64)
-            x = (lon - LON0) * MPD_X
-            y = (lat - LAT0) * MPD_Y
-            w1, d1 = _index_nearest(fine, x, y)
-            # round 2 for unguaranteed/unmatched points, same rule as knn_ways
-            redo = ~(d1 < g1)
-            if redo.any():
-                w2, d2 = _index_nearest(coarse, x[redo], y[redo])
-                w1[redo] = w2
-                d1[redo] = d2
-            # way ids stay ints here; the string attach is a JVM-side
-            # broadcast join (building 10^6-row python object arrays per
-            # batch is the measured bottleneck, not the geometry math)
-            yield pd.DataFrame({
-                "image_id": pdf["image_id"],
-                "lon": pdf["lon"], "lat": pdf["lat"],
-                "way_idx": w1, "dist_m": d1,
-            })
+    def nearest(idx, pdf, x, y):
+        w, d = _index_nearest(idx["fine"], x, y)
+        # round 2 for unguaranteed/unmatched points, same rule as knn_ways
+        redo = ~(d < idx["g1"])
+        if redo.any():
+            w[redo], d[redo] = _index_nearest(idx["coarse"], x[redo], y[redo])
+        return pd.DataFrame({
+            "image_id": pdf["image_id"],
+            "lon": pdf["lon"], "lat": pdf["lat"],
+            "way_idx": w, "dist_m": d,
+        })
 
-    if "_ids_df" not in index:
-        ids = index["fine"]["ids"]
-        index["_ids_df"] = spark.createDataFrame(
-            [(int(i), str(w)) for i, w in enumerate(ids)],
-            "way_idx long, way_id string",
-        )
-    ids_df = index["_ids_df"]
-    # fan out a narrower-than-cluster input (one-row-group local scans)
-    # before the CSR lookup stage; wide fact tables pass through untouched,
-    # preserving the zero-shuffle-at-scale plan
-    from .dedup import fan_out
-
-    base = fan_out(images.select("image_id", "lon", "lat"))
-    nn = (
-        base.mapInPandas(run, schema)
-        .join(F.broadcast(ids_df), "way_idx", "left")
-        .select(
-            "image_id", "lon", "lat", "way_id",
-            F.when(F.col("way_idx") >= 0, F.col("dist_m")).alias("dist_m"),
-        )
+    nn = _broadcast_join(images, index, schema, nearest, "left").select(
+        "image_id", "lon", "lat", "way_id",
+        F.when(F.col("way_idx") >= 0, F.col("dist_m")).alias("dist_m"),
     )
     extra = [c for c in images.columns if c not in ("image_id", "lon", "lat")]
     if not extra:
         return nn
     return images.join(nn.select("image_id", "way_id", "dist_m"), "image_id", "left")
-
 
 def geotag_join(images: DataFrame, ways: DataFrame, res: int = 8) -> DataFrame:
     """J3: nearest way per image (kNN k=1 at a finer resolution).
@@ -1109,25 +1032,3 @@ def sample_frames(videos: DataFrame, every_k: int = 10) -> DataFrame:
 
     return videos.select("video_id", "bytes", "fmt").mapInPandas(run, _FRAME_SCHEMA)
 
-
-def salt_cells(df: DataFrame, cell_col: str, key_col: str, n_salt: int) -> DataFrame:
-    """Explicit skew mitigation (north_rule): append a salt derived from the
-    row key to the cell so one hot urban cell spreads over ``n_salt`` shuffle
-    partitions.  The other join side must be exploded across all salts."""
-    return df.withColumn(
-        cell_col,
-        F.col(cell_col) * n_salt + F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salt)),
-    )
-
-
-def explode_salts(df: DataFrame, cell_col: str, n_salt: int) -> DataFrame:
-    """Dimension-side counterpart of :func:`salt_cells`."""
-    return df.withColumn(
-        cell_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_salt - 1)),
-                lambda s: F.col(cell_col) * n_salt + s,
-            )
-        ),
-    )

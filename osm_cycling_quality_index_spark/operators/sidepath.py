@@ -6,10 +6,13 @@ in a Python loop (reference/cycling_quality_index.py:234-248) and accumulates
 votes in a driver-side dict (:250-288).  Here:
 
 1. check points every 100 m along each path + endpoint (G1+G2+U1);
-2. each point expands to its hexcell grid_disk(1) at res 9 — the 22 m disc is
-   strictly inside ring 1 (edge 174 m, property-tested);
+2. each check point takes its single res-9 hexcell; the roads side expands to
+   grid_disk(1) — the 22 m disc is strictly inside ring 1 (edge 174 m,
+   property-tested);
 3. road polylines explode to segments with covering cells sampled at half the
-   cell edge, guaranteeing cell overlap for any candidate within 22 m;
+   cell edge, guaranteeing cell overlap for any candidate within 22 m — the
+   same segment/cell source as the geotag and kNN joins
+   (``images._way_segments_cells``);
 4. equi-join on (cell) + same-layer predicate (J1a), exact point-to-segment
    distance refine, distinct (way, check point, road);
 5. ``groupBy`` votes replace the driver-side dict: a path is a sidepath when
@@ -23,18 +26,15 @@ join keys flow through the shuffle — never geometry arrays or payload bytes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import params as P
-from ..functions.nulls import falsy, truthy
+from ..functions.nulls import truthy
 from ..functions.tags import get_number, normalize_maxspeed
-from ..geo.cols import hex_cell_cols, hex_disk_of_cell_cols
-from ..geo.udfs import (
-    checkpoints_udf,
-    make_segments_udf,
-    point_segment_distance_cols,
-)
+from ..geo.cols import hex_cell_cols
+from ..geo.udfs import checkpoints_udf, point_segment_distance_cols
+from .images import _way_segments_cells
 
 _RES = 9  # hexcell resolution: 22 m disc fits in ring-1 (edge ~174 m)
 
@@ -49,27 +49,17 @@ def _check_points(paths: DataFrame) -> DataFrame:
 
 def _road_segments(roads: DataFrame) -> DataFrame:
     """(road_id, road_layer, road_highway, road_name, road_maxspeed,
-    ax..by, cell) — road polylines exploded to segments x covering cells."""
-    segs = roads.select(
+    ax..by, cell) — road polylines exploded to segments x covering cells,
+    ring-expanded on the small (roads) side so path check points join on a
+    single cell each.  The roads come from the stage's fanned-out input, so
+    no second exchange is added here."""
+    return _way_segments_cells(roads, _RES, 1, carry=(
         F.col("id").alias("road_id"),
         F.col("layer").alias("road_layer"),
         F.col("highway").alias("road_highway"),
         F.col("name").alias("road_name"),
         get_number(F.col("maxspeed")).alias("road_maxspeed"),
-        F.explode(make_segments_udf(_RES)("geometry")).alias("seg"),
-    )
-    return segs.select(
-        "road_id", "road_layer", "road_highway", "road_name", "road_maxspeed",
-        F.col("seg.ax").alias("ax"), F.col("seg.ay").alias("ay"),
-        F.col("seg.bx").alias("bx"), F.col("seg.by").alias("by"),
-        F.explode("seg.cells").alias("cell"),
-    ).select(
-        "road_id", "road_layer", "road_highway", "road_name", "road_maxspeed",
-        "ax", "ay", "bx", "by",
-        # ring-expand the small (roads) side so path check points join on a
-        # single cell each
-        F.explode(hex_disk_of_cell_cols(F.col("cell"), 1)).alias("cell"),
-    ).distinct()
+    ))
 
 
 def sidepath_votes(paths: DataFrame, roads: DataFrame) -> DataFrame:

@@ -29,6 +29,9 @@ def replay_stages(
     return spark.sql(sql)
 
 
+_WHOLE_STAGE = "spark.sql.codegen.wholeStage"
+
+
 def replay_session(spark: SparkSession) -> SparkSession:
     """Child session (shared SparkContext, isolated SQL conf) with
     whole-stage codegen OFF, for the committed-SQL replay queries only.
@@ -42,14 +45,19 @@ def replay_session(spark: SparkSession) -> SparkSession:
     here, per-operator projections compile fine).  A child session scopes
     the flag to these queries; ``newSession`` inherits every builder conf
     (verified: shuffle partitions, AQE, Arrow, thresholds), and one child
-    is cached per parent session."""
-    cached = getattr(spark, "_replay_nowscg_session", None)
-    if cached is not None:
-        return cached
-    s2 = spark.newSession()
-    s2.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark._replay_nowscg_session = s2
-    return s2
+    is cached per parent session.  A later ``get_spark()`` re-applies its
+    builder confs to the parent at runtime, so every call re-syncs the
+    cached child's runtime SQL confs with the parent's current values."""
+    child = getattr(spark, "_replay_nowscg_session", None)
+    if child is None:
+        child = spark.newSession()
+        spark._replay_nowscg_session = child
+    want = {**spark.conf.getAll, _WHOLE_STAGE: "false"}
+    have = child.conf.getAll
+    for key, value in want.items():
+        if have.get(key) != value and child.conf.isModifiable(key):
+            child.conf.set(key, value)
+    return child
 
 
 def parquet_base_sql(spark: SparkSession, path: str) -> str:

@@ -13,6 +13,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_driver_memory() -> str:
+    """Driver heap for a local session: a quarter of host RAM, clamped to
+    2-8 GB, so the JVM heap can never outgrow a small host."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024**3
+    return f"{max(2, min(8, ram_gb // 4))}g"
+
+
 def get_spark(
     app_name: str = "osm-cqi-spark",
     master: str | None = None,
@@ -42,7 +49,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         # deep when/otherwise trees (the way-type classifier) overflow the

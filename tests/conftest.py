@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
@@ -7,6 +9,7 @@ import pytest
 def spark():
     from osm_cycling_quality_index_spark.session import get_spark
 
-    s = get_spark(app_name="cqi-tests", master="local[8]", shuffle_partitions=8)
+    n = len(os.sched_getaffinity(0))  # what `nproc` reports
+    s = get_spark(app_name="cqi-tests", master=f"local[{n}]", shuffle_partitions=n)
     yield s
     s.stop()

@@ -98,18 +98,55 @@ def test_streaming_tumbling(spark, tmp_path):
 # broadcast geotag == shuffle geotag (J3 strategies)
 # ---------------------------------------------------------------------------
 
+def _hostile_geo(spark):
+    """Degenerate ways and points for the spatial-join parity tests: a
+    zero-length way, a single-vertex way, a way with a duplicated vertex
+    (a zero-length middle segment), two plain ways, and points on the
+    degenerate vertices plus one far from every way (no candidate at
+    either index level)."""
+    geom = "array<struct<x:double,y:double>>"
+
+    def line(*pts):
+        return [{"x": x, "y": y} for x, y in pts]
+
+    ways = spark.createDataFrame([
+        ("z0", line((13.400, 52.500), (13.400, 52.500))),
+        ("s1", line((13.401, 52.500))),
+        ("dup", line((13.399, 52.5003), (13.3995, 52.5003),
+                     (13.3995, 52.5003), (13.400, 52.5003))),
+        ("a", line((13.398, 52.4995), (13.402, 52.4995))),
+        ("b", line((13.398, 52.5010), (13.402, 52.5010))),
+    ], f"id string, geometry {geom}")
+    imgs = spark.createDataFrame([
+        ("on_z0", 13.400, 52.500),
+        ("on_dup", 13.3995, 52.5003),
+        ("near_dup", 13.3995, 52.5004),
+        ("on_s1", 13.401, 52.500),
+        ("between", 13.4005, 52.5002),
+        ("far", 15.4, 54.5),
+    ], "image_id string, lon double, lat double")
+    return ways, imgs
+
+
 def test_geotag_broadcast_parity(spark):
     from osm_cycling_quality_index_spark.operators import images as I
     from osm_cycling_quality_index_spark.sources import synth
 
     wpdf = synth.ways_pdf(n_roads=40)
-    ways = synth.ways_df(spark, n_roads=40).select("id", "geometry")
-    imgs = synth.images_df(spark, wpdf, n_images=400).select("image_id", "lon", "lat")
-    a = I.geotag_join(imgs, ways, res=9).select(
-        "image_id", "way_id", F.round("dist_m", 6).alias("d"))
-    b = I.geotag_join_broadcast(imgs, ways, res=9).select(
-        "image_id", "way_id", F.round("dist_m", 6).alias("d"))
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    cases = [
+        (synth.ways_df(spark, n_roads=40).select("id", "geometry"),
+         synth.images_df(spark, wpdf, n_images=400).select("image_id", "lon", "lat")),
+        _hostile_geo(spark),
+    ]
+    for ways, imgs in cases:
+        a = I.geotag_join(imgs, ways, res=9).select(
+            "image_id", "way_id", F.round("dist_m", 6).alias("d"))
+        b = I.geotag_join_broadcast(imgs, ways, res=9).select(
+            "image_id", "way_id", F.round("dist_m", 6).alias("d"))
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    got = {r["image_id"]: (r["way_id"], r["d"]) for r in a.collect()}
+    assert got["on_z0"] == ("z0", 0.0) and got["on_dup"] == ("dup", 0.0)
+    assert got["far"] == (None, None) and len(got) == 6
 
 
 def test_resize_and_image_embeddings(spark):
@@ -143,35 +180,6 @@ def test_resize_and_image_embeddings(spark):
     pairs = {(r["vec_a"], r["vec_b"])
              for r in embedding_near_dups(emb, threshold=0.999).collect()}
     assert ("img0", "img0_copy") in pairs or ("img0_copy", "img0") in pairs
-
-
-def test_salted_cell_join_parity(spark):
-    """salt_cells + explode_salts must leave cell-join results unchanged —
-    a point's salted cell always lands on exactly one of the dimension
-    side's exploded salt replicas (same cell, matching salt)."""
-    import numpy as np
-
-    from osm_cycling_quality_index_spark.operators.images import (
-        explode_salts, salt_cells,
-    )
-
-    rng = np.random.default_rng(9)
-    # one hot cell (80% of points) + a long tail — the skew shape salting
-    # exists for
-    cells = np.where(rng.uniform(size=2000) < 0.8, 7,
-                     rng.integers(0, 50, 2000))
-    pts = spark.createDataFrame(
-        [(str(i), int(c)) for i, c in enumerate(cells)], "pid string, cell long")
-    dim = spark.createDataFrame(
-        [(f"w{c}", int(c)) for c in range(50)], "way string, cell long")
-    plain = pts.join(dim, "cell").select("pid", "way")
-    salted = (
-        salt_cells(pts, "cell", "pid", 8)
-        .join(explode_salts(dim, "cell", 8), "cell")
-        .select("pid", "way")
-    )
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
 
 
 def test_sample_frames(spark):
@@ -285,18 +293,28 @@ def test_pip_join_brute_force(spark):
 def test_knn_broadcast_parity(spark):
     """knn_ways_broadcast (zero-shuffle CSR-index form) must reproduce the
     shuffle path bit-for-bit: same two-round guarantee semantics, same
-    (dist, way_id) tie-break, same drop of candidate-less points."""
+    (dist, way_id) tie-break, same drop of candidate-less points — for
+    k=3 and k=2, and on degenerate geometry."""
     from osm_cycling_quality_index_spark.operators import images as I
     from osm_cycling_quality_index_spark.sources import synth
 
-    wpdf = synth.ways_pdf(n_roads=40)
-    ways = synth.ways_df(spark, n_roads=40).select("id", "geometry")
-    imgs = synth.images_df(spark, wpdf, n_images=400).select("image_id", "lon", "lat")
-    a = I.knn_ways(imgs, ways, k=3, res=8, rings=2).select(
-        "image_id", "way_id", "rank", F.round("dist_m", 9).alias("d"))
-    b = I.knn_ways_broadcast(imgs, ways, k=3, res=8, rings=2).select(
-        "image_id", "way_id", "rank", F.round("dist_m", 9).alias("d"))
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    def synth_case(n_roads, n_images):
+        wpdf = synth.ways_pdf(n_roads=n_roads)
+        return (synth.ways_df(spark, n_roads=n_roads).select("id", "geometry"),
+                synth.images_df(spark, wpdf, n_images=n_images)
+                .select("image_id", "lon", "lat"))
+
+    cases = [(*synth_case(40, 400), 3), (*synth_case(30, 200), 2),
+             (*_hostile_geo(spark), 3)]
+    for ways, imgs, k in cases:
+        a = I.knn_ways(imgs, ways, k=k, res=8, rings=2).select(
+            "image_id", "way_id", "rank", F.round("dist_m", 9).alias("d"))
+        b = I.knn_ways_broadcast(imgs, ways, k=k, res=8, rings=2).select(
+            "image_id", "way_id", "rank", F.round("dist_m", 9).alias("d"))
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    got = {(r["image_id"], r["rank"]): r["way_id"] for r in a.collect()}
+    assert got[("on_z0", 1)] == "z0" and got[("on_dup", 1)] == "dup"
+    assert not any(i == "far" for i, _ in got) and len(got) == 5 * 3
 
 
 # ---------------------------------------------------------------------------
@@ -567,21 +585,6 @@ def test_ivf_lloyd_recall(spark):
     hits = exact.join(a1, ["query_id", "vec_id"], "left_semi").count()
     recall = hits / exact.count()
     assert recall >= 0.5, f"lloyd recall@5 = {recall:.2f}"
-
-
-def test_knn_auto_strategy(spark):
-    """The auto wrapper picks broadcast for a small dimension and shuffle
-    past the threshold; both deliver identical rows."""
-    from osm_cycling_quality_index_spark.operators import images as I
-    from osm_cycling_quality_index_spark.sources import synth
-
-    wpdf = synth.ways_pdf(n_roads=30)
-    ways = synth.ways_df(spark, n_roads=30).select("id", "geometry")
-    imgs = synth.images_df(spark, wpdf, n_images=200).select("image_id", "lon", "lat")
-    cols = ["image_id", "way_id", "rank"]
-    bc = I.knn_ways_auto(imgs, ways, k=2).select(cols)
-    sh = I.knn_ways_auto(imgs, ways, k=2, max_broadcast_ways=1).select(cols)
-    assert bc.exceptAll(sh).count() == 0 and sh.exceptAll(bc).count() == 0
 
 
 def test_main_resume_from_checkpoint(tmp_path):

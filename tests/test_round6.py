@@ -245,3 +245,15 @@ def test_fan_out_width_contract(spark):
     # second exchange)
     pinned = raw.repartition(n)
     assert fan_out(pinned) is pinned
+
+
+def test_fan_out_reads_operators_not_column_names(spark):
+    """A column named like a shuffling operator (``window``) is not one:
+    a scan already as wide as the cluster comes back untouched."""
+    from pyspark.sql import functions as F
+
+    from osm_cycling_quality_index_spark.operators.dedup import fan_out
+
+    n = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 100, 1, n).withColumn("window", F.col("id") % 3)
+    assert fan_out(wide) is wide

@@ -24,11 +24,6 @@ def truthy(c: Column) -> Column:
     return c.isNotNull() & (c != F.lit(""))
 
 
-def falsy_num(c: Column) -> Column:
-    """``not x`` for numeric attributes: NULL or zero."""
-    return c.isNull() | (c == F.lit(0.0))
-
-
 def neq(c: Column, value) -> Column:
     """Python ``x != v`` semantics where NULL != v is True (null-safe)."""
     return ~c.eqNullSafe(F.lit(value))
@@ -50,9 +45,3 @@ def fcoalesce(*cols: Column) -> Column:
     downstream consumer goes through ``falsy``/``isin``/dict lookups.
     """
     return F.coalesce(*[F.when(truthy(c), c) for c in cols])
-
-
-def nz(c: Column) -> Column:
-    """Numeric NULL -> 0.0 (reference patterns like
-    cycling_quality_index.py:874-877 set missing widths to 0)."""
-    return F.coalesce(c, F.lit(0.0))

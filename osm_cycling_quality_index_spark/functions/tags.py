@@ -26,12 +26,6 @@ def get_number(c: Column) -> Column:
     return c.cast("string").try_cast("double")
 
 
-def get_int(c: Column) -> Column:
-    """int(value) or NULL on parse failure (reference/definitions.py:13-14:
-    Python int() rejects '2.5', as does Spark's string->int try_cast)."""
-    return c.cast("string").try_cast("int")
-
-
 def get_access(df_or_cols, access_key: str) -> Column:
     """Access-tag inheritance ladder (reference/definitions.py:54-72):
     first non-falsy of ``access_key`` then its fallbacks
@@ -84,16 +78,6 @@ def split_delimited(c: Column, deli_char: str) -> Column:
     variant).  '|' must be escaped for the regex-based split."""
     pat = "\\|" if deli_char == "|" else deli_char
     return F.split(c, pat)
-
-
-def split_delimited_numbers(c: Column, deli_char: str) -> Column:
-    """Numeric variant: empty tokens count as 0
-    (reference/definitions.py:100-106)."""
-    pat = "\\|" if deli_char == "|" else deli_char
-    return F.transform(
-        F.split(c, pat),
-        lambda x: F.when(x == "", F.lit(0.0)).otherwise(x.try_cast("double")),
-    )
 
 
 def weakest_surface_value(arr: Column) -> Column:

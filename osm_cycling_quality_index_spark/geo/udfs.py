@@ -129,7 +129,8 @@ def make_offset_udf():
     def offset_line(geom: pd.Series, dist: pd.Series) -> pd.Series:
         out = []
         for g, d in zip(geom, dist):
-            if g is None or len(g) == 0 or d is None:
+            # Arrow hands a NULL distance over as NaN: no offset
+            if g is None or len(g) == 0 or pd.isna(d):
                 out.append(g)
                 continue
             lons, lats = _geom_to_arrays(g)

@@ -2,16 +2,16 @@
 from centerline tags (SURVEY.md §2 P8, G4, U2, F2;
 reference/cycling_quality_index.py:370-503).
 
-Each branch is a filter + projection of the conformed frame: the per-side
-attribute values overwrite the base tag columns exactly as the reference's
-``deriveAttribute`` writebacks do (:470-496), the branch rows get
-``side``/``type``/``offset`` set and are unioned with the centerline rows
-(``native:mergevectorlayers``, :503).
+The reference writes each offset layer separately and merges them back
+(``native:mergevectorlayers``, :503).  Here one pass does both: every
+centerline row is exploded into itself (branch id 0) plus one row per
+non-NULL branch offset (ids 1-4), and each overwritten column is one CASE on
+the branch id whose arms are the reference's per-side ``deriveAttribute``
+writebacks (:470-496).  The plan stays linear, so the scalar chain after it
+is optimized, compiled and run once rather than once per branch.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -72,13 +72,15 @@ def offset_flags(df: DataFrame, mode=None) -> DataFrame:
     })
 
 
-def _branch(df: DataFrame, typ: str, side: str, mode=None) -> DataFrame:
-    """One offset branch (reference/cycling_quality_index.py:456-496)."""
-    mode = P.OFFSET_DISTANCE if mode is None else mode
+#: branch ids 1-4 in the reference's layer order (:456-503); 0 is the
+#: centerline row
+_BRANCHES = [(typ, side) for side in ("left", "right") for typ in ("cycleway", "sidewalk")]
+
+
+def _branch_updates(cols, typ: str, side: str) -> dict[str, Column]:
+    """Per-side attribute writebacks of one branch
+    (reference/cycling_quality_index.py:456-496), read from the input row."""
     offset_col = f"offset_{typ}_{side}"
-    b = df.filter(F.col(offset_col).isNotNull())
-    cols = b.columns
-    sign = 1.0 if side == "left" else -1.0
 
     # surface/smoothness transfer condition (:476-479): cycle *lanes* share the
     # road surface unless a track or an explicit tag says otherwise; the
@@ -102,7 +104,7 @@ def _branch(df: DataFrame, typ: str, side: str, mode=None) -> DataFrame:
     updates: dict[str, Column] = {
         # the stored offset attribute is the positive distance for both sides
         # (:462); the sign only applies to the geometry offset direction
-        "offset": F.col(offset_col),
+        "offset": _c(offset_col),
         "type": F.lit(typ),
         "side": F.lit(side),
         "proc_sidepath": F.lit("yes"),
@@ -124,23 +126,48 @@ def _branch(df: DataFrame, typ: str, side: str, mode=None) -> DataFrame:
             "surface:colour",
         ]:
             updates[attr] = derive_attribute(cols, attr, typ, side, "str")
+    return updates
 
-    b = b.withColumns(updates)
-    # geometry offset (G4) only when a non-zero distance is configured;
-    # the default static offset 0 keeps geometry identical (:442-448)
-    if mode == "realistic" and "geometry" in cols:
-        b = b.withColumn(
-            "geometry", make_offset_udf()("geometry", F.col("offset") * F.lit(sign))
-        )
-    return b
+
+def _by_branch(bid: Column, values: dict[int, Column], default: Column | None = None) -> Column:
+    """One CASE on the branch id; rows of branches absent from ``values``
+    keep ``default`` (NULL when None)."""
+    out = None
+    for i, v in values.items():
+        out = F.when(bid == i, v) if out is None else out.when(bid == i, v)
+    return out if default is None else out.otherwise(default)
 
 
 def offset_stage(df: DataFrame, mode=None) -> DataFrame:
-    """Flags + 4 branches + union with the centerline frame (U2)."""
+    """Flags + the centerline row and its offset branches in one pass (U2)."""
+    mode = P.OFFSET_DISTANCE if mode is None else mode
     df = offset_flags(df, mode)
-    branches = [
-        _branch(df, typ, side, mode)
-        for side in ("left", "right")
-        for typ in ("cycleway", "sidewalk")
-    ]
-    return reduce(lambda a, b: a.unionByName(b), branches, df)
+    cols = df.columns
+    # one row per centerline plus one per non-NULL branch offset (the
+    # reference's per-layer filters + native:mergevectorlayers, :456-503)
+    bid = F.explode(F.array_compact(F.array(F.lit(0), *[
+        F.when(_c(f"offset_{typ}_{side}").isNotNull(), F.lit(i))
+        for i, (typ, side) in enumerate(_BRANCHES, 1)
+    ])))
+    df = df.withColumn("_branch", bid)
+    b = _c("_branch")
+
+    per_branch = {i: _branch_updates(cols, typ, side)
+                  for i, (typ, side) in enumerate(_BRANCHES, 1)}
+    names = dict.fromkeys(n for u in per_branch.values() for n in u)
+    updates = {
+        name: _by_branch(b, {i: u[name] for i, u in per_branch.items() if name in u},
+                         _c(name))
+        for name in names
+    }
+    # geometry offset (G4) only when a non-zero distance is configured;
+    # the default static offset 0 keeps geometry identical (:442-448).
+    # The signed distance is NULL on centerline rows, which the UDF passes
+    # through unchanged.
+    if mode == "realistic" and "geometry" in cols:
+        dist = _by_branch(b, {
+            i: _c(f"offset_{typ}_{side}") * F.lit(1.0 if side == "left" else -1.0)
+            for i, (typ, side) in enumerate(_BRANCHES, 1)
+        })
+        updates["geometry"] = make_offset_udf()(_c("geometry"), dist)
+    return df.withColumns(updates).drop("_branch")

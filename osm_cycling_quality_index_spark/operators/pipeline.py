@@ -25,15 +25,7 @@ def cqi_pipeline(ways: DataFrame, with_geometry: bool = True) -> DataFrame:
     """
     df = conform_ways(ways, keep_geometry=with_geometry)
     if with_geometry:
-        # materialization boundary: the offset stage fans the frame into 5
-        # union branches; persisting here keeps the spatial-join DAG from
-        # being replanned and re-executed per branch (at cluster scale this
-        # boundary is an Iceberg snapshot checkpoint instead, see
-        # checkpoint.py)
-        df = sidepath_stage(df).persist()
-        from .dedup import pin_session
-
-        pin_session(df.sparkSession, df.unpersist)
+        df = sidepath_stage(df)
     df = offset_stage(df)
     df = classify(df)
     df = derive_attributes(df)

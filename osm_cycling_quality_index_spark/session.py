@@ -26,7 +26,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # unset: the cores this process may run on (what `nproc` reports)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local mode: one shuffle partition per core keeps all stages busy

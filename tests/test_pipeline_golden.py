@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 
 from osm_cycling_quality_index_spark import params as P
 from osm_cycling_quality_index_spark.operators.pipeline import cqi_pipeline
@@ -30,6 +31,9 @@ def _norm(v):
 
 def test_pipeline_matches_golden(spark):
     out = cqi_pipeline(ways_df(spark, n_roads=24))
+    # the offset split is one exploded pass, not a union of branch copies
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert not re.search(r"^[\s:+\-!]*Union\b", plan, re.M)
     cols = list(P.ATTRIBUTES_LIST_FINALLY_RETAINED)
     got = [
         {c: _norm(r[c]) for c in cols}

@@ -218,17 +218,64 @@ def test_way_type_offset_sides(spark):
          "cycleway:right:lane": "exclusive", "oneway": "yes"},
         {"id": "t", "highway": "residential", "cycleway:left": "track", "oneway": "no"},
         {"id": "s", "highway": "residential", "sidewalk:right:bicycle": "yes"},
+        # all four branches
+        {"id": "a", "highway": "residential", "cycleway:both": "lane",
+         "sidewalk:both:bicycle": "yes"},
+        # NULL highway still spawns: `highway != 'cycleway'` is True (:377)
+        {"id": "n", "highway": None, "cycleway:left": "lane"},
+        # a cycleway's own cycleway tags spawn nothing
+        {"id": "c", "highway": "cycleway", "cycleway:both": "track"},
     ]
     from osm_cycling_quality_index_spark.operators.offset import offset_stage
 
     df = conform_ways(spark.createDataFrame(rows), keep_geometry=False)
-    out = score(derive_attributes(classify(offset_stage(df))))
-    got = {(r["id"], r["side"]): r["way_type"] for r in out.collect()}
+    out = score(derive_attributes(classify(offset_stage(df)))).collect()
+    got = {(r["id"], r["side"]): r["way_type"] for r in out}
     assert got[("r", None)] == "shared road"
     assert got[("r", "right")] == "cycle lane (exclusive)"
     assert got[("t", "left")] == "cycle track"
     assert got[("s", "right")] == "shared footway"
     assert ("t", "right") not in got  # no right cycleway tagged
+    branches = sorted(
+        (r["id"], r["side"] or "", r["type"] or "", r["offset"]) for r in out
+    )
+    centerline = [(i, "", "", None) for i in "acnrst"]
+    assert branches == sorted(centerline + [
+        ("a", "left", "cycleway", 0.0), ("a", "left", "sidewalk", 0.0),
+        ("a", "right", "cycleway", 0.0), ("a", "right", "sidewalk", 0.0),
+        ("n", "left", "cycleway", 0.0),
+        ("r", "right", "cycleway", 0.0),
+        ("s", "right", "sidewalk", 0.0),
+        ("t", "left", "cycleway", 0.0),
+    ])
+
+
+def test_offset_udf_null_distance(spark):
+    """A NULL offset distance leaves the geometry bit-identical: Arrow hands
+    it to the UDF as NaN, not None."""
+    from osm_cycling_quality_index_spark.geo.udfs import make_offset_udf
+    from osm_cycling_quality_index_spark.operators.offset import offset_stage
+
+    line = [{"x": 13.4, "y": 52.5}, {"x": 13.41, "y": 52.5001}]
+    df = spark.createDataFrame(
+        [("keep", line, None), ("move", line, 2.0)],
+        "id string, geometry array<struct<x:double,y:double>>, d double",
+    )
+    got = {r["id"]: [p.asDict() for p in r["g"]] for r in
+           df.select("id", make_offset_udf()("geometry", "d").alias("g")).collect()}
+    assert got["keep"] == line
+    assert not any(math.isnan(v) for p in got["keep"] for v in p.values())
+    assert got["move"] != line
+
+    # realistic mode runs the UDF over every row: a way that spawns no
+    # branch keeps its centerline geometry
+    ways = conform_ways(spark.createDataFrame(
+        [("w", line, "residential")],
+        "id string, geometry array<struct<x:double,y:double>>, highway string",
+    ), keep_geometry=True)
+    out = offset_stage(ways, mode="realistic").collect()
+    assert [(r["id"], r["side"]) for r in out] == [("w", None)]
+    assert [p.asDict() for p in out[0]["geometry"]] == line
 
 
 # -- LTS (reference/cycling_quality_index.py:1583-1626) ----------------------

@@ -16,7 +16,7 @@ def main() -> int:
     from osm_cycling_quality_index_spark.plans.cqi_query import q_cqi_score_ways
     from osm_cycling_quality_index_spark.session import get_spark
 
-    spark = get_spark(app_name="cqi-prof", master="local[32]", shuffle_partitions=32)
+    spark = get_spark(app_name="cqi-prof")
     spark.range(1000).count()
 
     t0 = time.time()

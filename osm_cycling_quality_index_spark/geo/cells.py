@@ -12,9 +12,9 @@ Two encoders, both vectorized numpy (no h3/s2 library dependency):
 * **s2** — a faithful S2 cell id (cube face -> quadratic s/t -> Hilbert
   curve position, 64-bit id, public algorithm), used for covering sets.
 
-Hierarchy note: aperture-7 hexagon grids never nest exactly (true for H3
-too); ``hex_parent`` re-encodes the cell center at the coarser resolution,
-giving center-containment, which is what the engine relies on.
+Aperture-7 hexagon grids never nest exactly (true for H3 too), so the engine
+never derives a coarse cell from a fine one: each resolution is encoded from
+coordinates.
 """
 
 from __future__ import annotations
@@ -86,16 +86,6 @@ def hex_center_xy(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return x, y
 
 
-def hex_parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
-    """Re-encode the cell center at a coarser resolution (center
-    containment; aperture-7 grids cannot nest exactly)."""
-    from .kernels import unproject
-
-    x, y = hex_center_xy(cell)
-    lon, lat = unproject(x, y)
-    return hex_encode(lon, lat, parent_res)
-
-
 def hex_distance(cell_a: np.ndarray, cell_b: np.ndarray) -> np.ndarray:
     """Hex (ring) distance between same-resolution cells."""
     _, qa, ra = hex_decode(cell_a)
@@ -124,6 +114,48 @@ def hex_disk(cell: np.ndarray, k: int) -> np.ndarray:
         (res << 58) | ((q + dq) << 29) | (r + dr) for dq, dr in offs
     ]
     return np.stack(cols, axis=1)
+
+
+def segment_cells(x, y, offsets, res: int, rings: int = 0):
+    """Polylines -> their segments and the hex cells covering each segment:
+    the one segmentation kernel, behind both the Spark segmentation UDF
+    (``geo.udfs.make_segments_udf``) and the driver-built segment index.
+
+    ``x``/``y`` hold every polyline's projected vertices back to back, and
+    polyline ``i`` owns ``offsets[i]:offsets[i + 1]`` (``offsets[0] == 0``);
+    a polyline with fewer than two vertices has no segment.  Each segment is
+    sampled at half the cell edge, endpoints included (the values
+    ``np.linspace`` gives, bit for bit), so any point within ring 1 of a
+    segment point shares a cell with a sample.  With ``rings`` > 0 every
+    covering cell expands to its grid_disk.
+
+    Returns ``(line, ax, ay, bx, by)`` per segment, in polyline then vertex
+    order, and ``(seg, cell)`` per covering cell, in segment then cell
+    order; before the ring expansion each cell appears once per segment."""
+    x = np.asarray(x, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    line_of = np.repeat(np.arange(len(offsets) - 1), np.diff(offsets))
+    # segment i joins vertex i to vertex i + 1 of the same polyline
+    start = np.flatnonzero(line_of[:-1] == line_of[1:])
+    line = line_of[start]
+    ax, ay, bx, by = x[start], y[start], x[start + 1], y[start + 1]
+    dx, dy = bx - ax, by - ay
+    n = np.maximum(2, (np.hypot(dx, dy) / (hex_edge_m(res) / 2.0)).astype(np.int64) + 2)
+    seg = np.repeat(np.arange(len(start)), n)
+    first = np.cumsum(n) - n
+    t = (np.arange(len(seg)) - first[seg]).astype(np.float64) * (1.0 / (n - 1))[seg]
+    t[first + n - 1] = 1.0
+    cell = hex_encode_xy(ax[seg] + t * dx[seg], ay[seg] + t * dy[seg], res)
+    order = np.lexsort((cell, seg))
+    seg, cell = seg[order], cell[order]
+    keep = np.ones(len(seg), dtype=bool)
+    keep[1:] = (seg[1:] != seg[:-1]) | (cell[1:] != cell[:-1])
+    seg, cell = seg[keep], cell[keep]
+    if rings > 0:
+        disk = hex_disk(cell, rings)
+        seg, cell = np.repeat(seg, disk.shape[1]), disk.ravel()
+    return (line, ax, ay, bx, by), (seg, cell)
 
 
 def k_for_distance(distance_m: float, res: int) -> int:

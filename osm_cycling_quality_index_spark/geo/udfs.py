@@ -74,35 +74,27 @@ def make_point_cell_udf(res: int):
 def make_segments_udf(res: int):
     """Geometry -> segments with their covering hexcells (sampled at half the
     cell edge, so any point within ring-1 of a segment point shares a cell
-    with a sample — the prefilter guarantee of join J1)."""
-    edge = C.hex_edge_m(res)
+    with a sample — the prefilter guarantee of join J1).  One
+    :func:`geo.cells.segment_cells` call per Arrow batch."""
 
     @F.pandas_udf(_SEGMENT_TYPE)
     def segments(geom: pd.Series) -> pd.Series:
-        out = []
-        step = edge / 2.0
-        for g in geom:
-            if g is None or len(g) < 2:
-                out.append([])
-                continue
-            lons, lats = _geom_to_arrays(g)
-            x, y = K.project(lons, lats)
-            segs = []
-            for i in range(len(x) - 1):
-                ax, ay, bx, by = x[i], y[i], x[i + 1], y[i + 1]
-                length = float(np.hypot(bx - ax, by - ay))
-                n = max(2, int(length / step) + 2)
-                t = np.linspace(0.0, 1.0, n)
-                cells = np.unique(
-                    C.hex_encode_xy(ax + t * (bx - ax), ay + t * (by - ay), res)
-                )
-                segs.append({
-                    "ax": float(ax), "ay": float(ay),
-                    "bx": float(bx), "by": float(by),
-                    "cells": [int(c) for c in cells],
-                })
-            out.append(segs)
-        return pd.Series(out)
+        lens = [0 if g is None else len(g) for g in geom]
+        pts = [p for g in geom if g is not None for p in g]
+        x, y = K.project(np.array([p["x"] for p in pts], dtype=np.float64),
+                         np.array([p["y"] for p in pts], dtype=np.float64))
+        (line, ax, ay, bx, by), (seg, cell) = C.segment_cells(
+            x, y, np.concatenate([[0], np.cumsum(lens)]), res)
+        # each segment's cells, then each way's segments, as slice bounds
+        cs = np.searchsorted(seg, np.arange(len(line) + 1)).tolist()
+        ls = np.searchsorted(line, np.arange(len(lens) + 1)).tolist()
+        cells = cell.tolist()
+        segs = [
+            {"ax": a, "ay": b, "bx": c, "by": d, "cells": cells[s:e]}
+            for a, b, c, d, s, e in zip(ax.tolist(), ay.tolist(), bx.tolist(),
+                                        by.tolist(), cs[:-1], cs[1:])
+        ]
+        return pd.Series([segs[s:e] for s, e in zip(ls[:-1], ls[1:])])
 
     return segments
 

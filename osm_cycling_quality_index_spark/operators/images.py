@@ -12,15 +12,23 @@ Scale design: candidates are generated by hexcell equi-joins (never a cross
 join); ``bytes`` stays out of every shuffle — joins carry (image_id, lon,
 lat, cell) only and payloads re-attach by a final id-equi-join.
 
-J3 and J4 share one spatial-join core, written once per step: the way
-segment/cell source (``_way_segments_cells``, which the sidepath vote also
-uses), the shuffle cell join plus exact distance refine (``_cell_pairs``),
-and the broadcast CSR index (``_csr_pairs`` inside ``_broadcast_join``).
-The shuffle and broadcast forms differ only in their exchange and are
-bit-identical by test.  AQE skew-join splitting (``session.get_spark``:
-8 MB threshold, factor 2) is the one skew mechanism for hot cells: the
+J3 and J4 share one spatial-join core: the shuffle cell join plus exact
+distance refine (``_cell_pairs``), the broadcast CSR index
+(``build_segment_index``, ``_csr_pairs`` inside ``_broadcast_join``), and
+the way segment/cell rows.  Those rows have two forms over the one
+segmentation kernel ``geo.cells.segment_cells``, held equal bit for bit by
+test: ``_way_segments_cells`` in Spark (the shuffle form and the sidepath
+vote) and ``_csr_level`` on the driver, which builds the broadcast index
+faster than collecting the Spark rows.  The shuffle and broadcast forms
+differ only in their exchange and are bit-identical by test.
+``geotag_join`` takes the broadcast form whenever a bound on its index,
+measured on the ways' geometry, is within
+``spark.sql.autoBroadcastJoinThreshold``, and always for a streaming image
+side; the shuffle form serves ways sides too big for the driver.  AQE
+skew-join splitting (``session.get_spark``: 8 MB threshold, factor 2) is
+the one skew mechanism for hot cells in the shuffle form: the
 ``geotag_hotcell`` benchmark, with 25% of its points in one res-8 cell,
-measures a task skew (max/median task time) of 1.01-1.18.
+measured a task skew (max/median task time) of 1.01-1.18 there.
 """
 
 from __future__ import annotations
@@ -521,24 +529,53 @@ def knn_ways(
     return done1.unionByName(ranked2)
 
 
-def _csr_level(ways: DataFrame, res: int, rings: int) -> dict:
-    """One level of the broadcast segment index: CSR buckets of way segments
-    keyed by covering cell (ring-expanded on the way side, like the shuffle
-    path).  Way ids are interned as ints in lexicographic order so the int
-    argmin tie-break equals the shuffle path's min-string tie-break."""
-    from .dedup import fan_out
+def _collect_ways(ways: DataFrame) -> dict:
+    """The ways side of the broadcast index, collected once as ``(id,
+    geometry)`` through Arrow: every way's projected vertices back to back
+    (``x``, ``y``, ``offsets`` as :func:`geo.cells.segment_cells` takes
+    them) and its id interned as an int (``wid``; ``ids`` maps back).  Ids
+    are interned in lexicographic order, so the int argmin tie-break equals
+    the shuffle path's min-id tie-break; like the Spark rows, only ways with
+    a segment (two or more vertices) take part."""
+    import pyarrow.compute as pc
 
-    # Arrow collect + numpy group-by-cell: the dimension build is
-    # driver-serial, so it must not loop in Python over the (segment, cell)
-    # rows (~10^5 at bench scale, more on a real extract)
-    pdf = _way_segments_cells(fan_out(ways), res, rings).toPandas()
-    wid_str = pdf["way_id"].to_numpy(dtype=object)
-    ids = np.unique(wid_str)  # sorted -> int order == lexicographic order
-    wid_all = np.searchsorted(ids, wid_str)
-    cell_all = pdf["cell"].to_numpy(dtype=np.int64)
-    raw = pdf[["ax", "ay", "bx", "by"]].to_numpy(dtype=np.float64)
-    order = np.argsort(cell_all, kind="stable")
-    cell_s = cell_all[order]
+    from ..geo.kernels import project
+
+    tbl = ways.select("id", "geometry").toArrow()
+    geom = tbl.column("geometry").combine_chunks()
+    lens = pc.list_value_length(geom).fill_null(0).to_numpy(
+        zero_copy_only=False).astype(np.int64)
+    lon, lat = (v.to_numpy(zero_copy_only=False) for v in geom.flatten().flatten())
+    x, y = project(lon, lat)
+    id_all = tbl.column("id").to_numpy()
+    has = lens >= 2
+    ids = np.unique(id_all[has])  # sorted -> int order == lexicographic order
+    wid = np.zeros(len(lens), dtype=np.int64)
+    wid[has] = np.searchsorted(ids, id_all[has])
+    return {"x": x, "y": y, "offsets": np.concatenate([[0], np.cumsum(lens)]),
+            "wid": wid, "ids": ids}
+
+
+def _csr_level(raw: dict, res: int, rings: int) -> dict:
+    """One level of the broadcast segment index, in numpy on the driver from
+    :func:`_collect_ways` output: the rows of :func:`_way_segments_cells`
+    bit for bit (ring-expanded on the way side, and with ``rings`` > 0 equal
+    rows collapsed, as under its ``distinct``), bucketed by cell in CSR form
+    (``cells`` sorted, cell ``i`` owning rows ``starts[i]:starts[i + 1]``)."""
+    (line, ax, ay, bx, by), (seg, cell) = C.segment_cells(
+        raw["x"], raw["y"], raw["offsets"], res, rings)
+    cols = [raw["wid"][line][seg], ax[seg], ay[seg], bx[seg], by[seg]]
+    if rings > 0:
+        keys = [cell, cols[0], *(c.view(np.int64) for c in cols[1:])]
+        order = np.lexsort(keys[::-1])
+        keys = [k[order] for k in keys]
+        keep = np.ones(len(order), dtype=bool)
+        keep[1:] = np.any([k[1:] != k[:-1] for k in keys], axis=0)
+        order = order[keep]
+    else:
+        order = np.argsort(cell, kind="stable")
+    cell_s = cell[order]
+    wid, ax, ay, bx, by = (c[order] for c in cols)
     first = np.empty(len(cell_s), dtype=bool)
     if len(cell_s):
         first[0] = True
@@ -549,29 +586,26 @@ def _csr_level(ways: DataFrame, res: int, rings: int) -> dict:
     else:
         cells = np.array([], dtype=np.int64)
         starts = np.zeros(1, dtype=np.int64)
-    raw = raw[order]
     # per-segment (ax, ay, dx, dy): the pair expansion reads 4 doubles per
     # candidate and never recomputes the segment direction per point
-    seg = np.column_stack([raw[:, 0], raw[:, 1],
-                           raw[:, 2] - raw[:, 0], raw[:, 3] - raw[:, 1]])
-    wid = wid_all[order].astype(np.int64)
+    seg = np.column_stack([ax, ay, bx - ax, by - ay])
     return {"res": res, "cells": cells, "starts": starts, "seg": seg,
-            "wid": wid, "ids": ids}
+            "wid": wid, "ids": raw["ids"]}
 
 
 def build_segment_index(ways: DataFrame, res: int = 8, rings: int = 1,
                         coarse_drop: int = 3) -> dict:
-    """Driver-side dimension build for the broadcast geotag join: fine level
-    at ``res`` + coarse fallback at ``res - coarse_drop`` (grid_disk 2), with
-    the same guarantee radii as :func:`knn_ways` k=1."""
+    """Driver-side dimension build for the broadcast joins: fine level at
+    ``res`` + coarse fallback at ``res - coarse_drop`` (grid_disk 2), with
+    the same guarantee radii as :func:`knn_ways` k=1.  Eager: one Spark job
+    (the Arrow collect of ``(id, geometry)``) serves both levels, and the
+    segmentation, cell sampling and ring expansion run in numpy here."""
+    raw = _collect_ways(ways)
     res2 = max(0, res - coarse_drop)
-    fine = _csr_level(ways, res, rings)
-    coarse = _csr_level(ways, res2, 2)
-    # both levels intern the same way set in the same (lexicographic) order,
-    # so one int->id mapping serves both
-    assert list(fine["ids"]) == list(coarse["ids"])
-    return {"fine": fine, "coarse": coarse,
-            "g1": rings * math.sqrt(3.0) * C.hex_edge_m(res)}
+    return {"fine": _csr_level(raw, res, rings),
+            "coarse": _csr_level(raw, res2, 2),
+            "g1": rings * math.sqrt(3.0) * C.hex_edge_m(res),
+            "id_type": ways.schema["id"].dataType}
 
 
 def _csr_pairs(level: dict, x: np.ndarray, y: np.ndarray):
@@ -711,9 +745,12 @@ def _broadcast_join(points: DataFrame, index: dict, schema: StructType,
             {k: index[k] for k in ("fine", "coarse", "g1")}
         )
     if "_ids_df" not in index:
+        ids = index["fine"]["ids"]
         index["_ids_df"] = spark.createDataFrame(
-            [(int(i), str(w)) for i, w in enumerate(index["fine"]["ids"])],
-            "way_idx long, way_id string",
+            pd.DataFrame({"way_idx": np.arange(len(ids), dtype=np.int64),
+                          "way_id": ids}),
+            StructType([StructField("way_idx", LongType()),
+                        StructField("way_id", index["id_type"])]),
         )
     bidx = index["_bc"]
 
@@ -757,7 +794,7 @@ def knn_ways_broadcast(
         index = build_segment_index(ways, res=res, rings=rings,
                                     coarse_drop=coarse_drop)
     schema = StructType([
-        StructField("image_id", StringType()),
+        points.schema["image_id"],
         StructField("way_idx", LongType()),
         StructField("dist_m", DoubleType()),
         StructField("rank", LongType()),
@@ -789,17 +826,19 @@ def knn_ways_broadcast(
 def geotag_join_broadcast(images: DataFrame, ways: DataFrame,
                           res: int = 8, index: dict | None = None) -> DataFrame:
     """J3 as a broadcast spatial-index join: the small ways side becomes a
-    driver-built CSR cell index shipped to every python worker; the big image
-    side streams through ``mapInPandas`` with ZERO shuffles and no persist —
-    the plan that survives 10^12 rows (shuffling the fact table even once is
-    the thing that doesn't).  Output and tie-breaks are identical to the
-    shuffle path (``knn_ways`` k=1)."""
+    driver-built CSR cell index (:func:`build_segment_index`, unless
+    ``index`` is given) shipped to every python worker; the big image side
+    streams through ``mapInPandas`` with ZERO shuffles and no persist — the
+    plan that survives 10^12 rows (shuffling the fact table even once is the
+    thing that doesn't), and a stateless map, so it also runs on a stream.
+    Output and tie-breaks are identical to the shuffle path (``knn_ways``
+    k=1).  :func:`geotag_join` takes this form when its index fits a
+    broadcast."""
     if index is None:
         index = build_segment_index(ways, res=res, rings=1)
+    # image_id, lon and lat keep the images' own types, as in the shuffle form
     schema = StructType([
-        StructField("image_id", StringType()),
-        StructField("lon", DoubleType()),
-        StructField("lat", DoubleType()),
+        *(images.schema[c] for c in ("image_id", "lon", "lat")),
         StructField("way_idx", LongType()),
         StructField("dist_m", DoubleType()),
     ])
@@ -825,14 +864,60 @@ def geotag_join_broadcast(images: DataFrame, ways: DataFrame,
         return nn
     return images.join(nn.select("image_id", "way_id", "dist_m"), "image_id", "left")
 
-def geotag_join(images: DataFrame, ways: DataFrame, res: int = 8) -> DataFrame:
-    """J3: nearest way per image (kNN k=1 at a finer resolution).
-    Output: images + (way_id, dist_m).
 
-    Payload-free frames (only image_id/lon/lat) skip the final id-equi-join:
-    lon/lat ride through the kNN agg as carry columns, saving a full shuffle
-    join of the big side.  Frames with payload columns (bytes!) re-attach by
-    the final equi-join so payloads never enter the kNN shuffle."""
+# bytes per index row: the segment (4 float64) and way int, plus the
+# cells/starts entries of a row that opens its own cell
+_INDEX_ROW_BYTES = 4 * 8 + 8 + 2 * 8
+
+
+def _index_bytes_bound(ways: DataFrame, res: int, rings: int,
+                       coarse_drop: int = 3) -> int:
+    """Upper bound on the bytes :func:`build_segment_index` would build and
+    broadcast for ``ways``, from one aggregate over the geometry itself (not
+    the optimizer's size estimate, which prices a vertex array at a default
+    width whatever its length).  A segment of length ``l`` gets at most
+    ``l / (edge / 2) + 2`` cell samples in :func:`geo.cells.segment_cells`,
+    and each sample at most a grid_disk of rows, so both levels together
+    hold at most ``sum(disk * (L / step + 2 * S))`` rows for ``S`` segments
+    of total projected length ``L``."""
+    g = F.col("geometry")
+    n = F.greatest(F.size(g) - 1, F.lit(0))
+    seg_m = F.zip_with(
+        F.slice(g, 1, n), F.slice(g, 2, n),
+        lambda a, b: F.hypot((b["x"] - a["x"]) * MPD_X, (b["y"] - a["y"]) * MPD_Y))
+    segs, length = ways.agg(
+        F.sum(n), F.sum(F.aggregate(seg_m, F.lit(0.0), lambda acc, v: acc + v)),
+    ).first()
+    segs, length = segs or 0, length or 0.0
+    rows = sum((1 + 3 * k * (k + 1)) * (length / (C.hex_edge_m(r) / 2.0) + 2 * segs)
+               for r, k in ((res, rings), (max(0, res - coarse_drop), 2)))
+    return int(math.ceil(rows * _INDEX_ROW_BYTES))
+
+
+def geotag_join(images: DataFrame, ways: DataFrame, res: int = 8) -> DataFrame:
+    """J3: nearest way per image (kNN k=1 at ``res``, ring 1, coarse
+    fallback).  Output: images + (way_id, dist_m).
+
+    The broadcast form, :func:`geotag_join_broadcast`, runs whenever its
+    CSR index fits a broadcast: :func:`_index_bytes_bound`, measured on the
+    ways' geometry by one aggregate, is within
+    ``spark.sql.autoBroadcastJoinThreshold`` (a negative threshold disables
+    it, as for Spark's own broadcast joins).  The index is then built here,
+    eagerly, from one collect of the ways.  A streaming ``images`` frame
+    always takes the broadcast form, since the shuffle form persists, which
+    a stream cannot.  Otherwise, for a ways side too big to hold on the
+    driver, it is the shuffle form, ``knn_ways`` k=1.  Both give the same
+    rows and tie-breaks (tested).
+
+    In the shuffle form, payload-free frames (only image_id/lon/lat) skip
+    the final id-equi-join: lon/lat ride through the kNN agg as carry
+    columns, saving a full shuffle join of the big side.  Frames with
+    payload columns (bytes!) re-attach by the final equi-join so payloads
+    never enter the kNN shuffle."""
+    limit = images.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    if images.isStreaming or 0 <= limit and _index_bytes_bound(ways, res, 1) <= limit:
+        return geotag_join_broadcast(images, ways, res=res)
     extra = [c for c in images.columns if c not in ("image_id", "lon", "lat")]
     if not extra:
         return knn_ways(images, ways, k=1, res=res, rings=1,

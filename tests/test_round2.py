@@ -129,24 +129,179 @@ def _hostile_geo(spark):
 
 
 def test_geotag_broadcast_parity(spark):
+    """geotag_join's two plans give the same rows bit for bit: the shuffle
+    form (``knn_ways`` k=1), forced by disabling broadcasts, against the
+    default, which on these small ways sides is the broadcast CSR form —
+    MapInPandas with no cell exchange.  Both keep the images' own
+    ``image_id`` type (a numeric id included)."""
     from osm_cycling_quality_index_spark.operators import images as I
     from osm_cycling_quality_index_spark.sources import synth
 
+    def rows(df):
+        return sorted(
+            (r["image_id"], r["way_id"], r["dist_m"]) for r in df.collect())
+
     wpdf = synth.ways_pdf(n_roads=40)
+    ways = synth.ways_df(spark, n_roads=40).select("id", "geometry")
+    imgs = synth.images_df(spark, wpdf, n_images=400).select("image_id", "lon", "lat")
     cases = [
-        (synth.ways_df(spark, n_roads=40).select("id", "geometry"),
-         synth.images_df(spark, wpdf, n_images=400).select("image_id", "lon", "lat")),
+        (ways, imgs),
+        (ways, imgs.withColumn("image_id", F.xxhash64("image_id"))),
         _hostile_geo(spark),
     ]
+    key = "spark.sql.autoBroadcastJoinThreshold"
     for ways, imgs in cases:
-        a = I.geotag_join(imgs, ways, res=9).select(
-            "image_id", "way_id", F.round("dist_m", 6).alias("d"))
-        b = I.geotag_join_broadcast(imgs, ways, res=9).select(
-            "image_id", "way_id", F.round("dist_m", 6).alias("d"))
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    got = {r["image_id"]: (r["way_id"], r["d"]) for r in a.collect()}
+        saved = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            shuffled = I.geotag_join(imgs, ways, res=9)
+            assert "MapInPandas" not in _plan(shuffled)
+            a = rows(shuffled)
+        finally:
+            spark.conf.set(key, saved)
+        default = I.geotag_join(imgs, ways, res=9)
+        plan = _plan(default)
+        assert "MapInPandas" in plan
+        assert "Exchange hashpartitioning(cell" not in plan
+        assert rows(default) == a and len(a) == imgs.count()
+        id_type = imgs.schema["image_id"].dataType
+        assert shuffled.schema["image_id"].dataType == id_type
+        assert default.schema["image_id"].dataType == id_type
+    got = {i: (w, round(d, 6) if d is not None else None) for i, w, d in a}
     assert got["on_z0"] == ("z0", 0.0) and got["on_dup"] == ("dup", 0.0)
     assert got["far"] == (None, None) and len(got) == 6
+
+
+def test_geotag_size_rule_reads_the_geometry(spark, tmp_path):
+    """The broadcast/shuffle choice is made on the index the ways would
+    build, not on Spark's size estimate: on a parquet ways table with wide
+    tag columns and long polylines, the estimate of ``(id, geometry)``
+    passes a 1 MB threshold while the built index is several times larger,
+    so geotag_join must take the shuffle form.  The bound the rule reads
+    holds the built index, here and on the degenerate ways."""
+    from osm_cycling_quality_index_spark.operators import images as I
+
+    rng = np.random.default_rng(7)
+    tags = {f"tag{j}": "x" * 400 for j in range(30)}
+    rows = []
+    for i in range(30):
+        lon = 13.30 + 0.005 * i + np.cumsum(rng.uniform(0.0, 0.0008, 200))
+        lat = 52.45 + np.cumsum(rng.uniform(-0.0004, 0.0004, 200))
+        rows.append({"id": f"w{i}", **tags,
+                     "geometry": [{"x": float(x), "y": float(y)}
+                                  for x, y in zip(lon, lat)]})
+    geom = "array<struct<x:double,y:double>>"
+    schema = ", ".join(["id string", *(f"{t} string" for t in tags),
+                        f"geometry {geom}"])
+    spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / "wide"))
+    wide = spark.read.parquet(str(tmp_path / "wide"))
+
+    def index_bytes(ways):
+        idx = I.build_segment_index(ways, res=8, rings=1)
+        return sum(idx[lvl][k].nbytes for lvl in ("fine", "coarse")
+                   for k in ("cells", "starts", "seg", "wid"))
+
+    limit = 1 << 20
+    est = wide.select("id", "geometry")._jdf.queryExecution() \
+        .optimizedPlan().stats().sizeInBytes()
+    built = index_bytes(wide)
+    assert int(est) <= limit < built
+    for ways in (wide, _hostile_geo(spark)[0]):
+        assert I._index_bytes_bound(ways, 8, 1) >= index_bytes(ways)
+
+    imgs = spark.createDataFrame(
+        [(f"i{k}", 13.30 + 0.001 * k, 52.45) for k in range(50)],
+        "image_id string, lon double, lat double")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(limit))
+    try:
+        plan = _plan(I.geotag_join(imgs, wide))
+    finally:
+        spark.conf.set(key, saved)
+    assert "MapInPandas" not in plan
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _spark_csr_rows(ways, res, rings, ids):
+    """The Spark-built segment rows as a bit matrix (cell, way int, ax, ay,
+    dx, dy) — the CSR content — in lexicographic row order."""
+    from osm_cycling_quality_index_spark.operators import images as I
+
+    pdf = I._way_segments_cells(ways, res, rings).toPandas()
+    assert list(np.unique(pdf["way_id"].to_numpy(dtype=object))) == list(ids)
+    ax, ay, bx, by = (pdf[c].to_numpy(np.float64) for c in ("ax", "ay", "bx", "by"))
+    return _sorted_bits(pdf["cell"].to_numpy(np.int64),
+                        np.searchsorted(ids, pdf["way_id"].to_numpy(dtype=object)),
+                        ax, ay, bx - ax, by - ay)
+
+
+def _sorted_bits(*cols):
+    m = np.column_stack([np.asarray(c).view(np.int64) for c in cols])
+    return m[np.lexsort(m.T[::-1])] if len(m) else m
+
+
+def test_segment_index_matches_spark_rows(spark):
+    """The driver-built index holds exactly the Spark segment/cell rows, bit
+    for bit, at the fine (res 8, ring 1) and coarse (res 5, ring 2) levels,
+    on synth ways and on zero-length, single-vertex and duplicated-vertex
+    ways."""
+    from osm_cycling_quality_index_spark.operators import images as I
+    from osm_cycling_quality_index_spark.sources import synth
+
+    cases = [synth.ways_df(spark, n_roads=40).select("id", "geometry"),
+             _hostile_geo(spark)[0]]
+    for ways in cases:
+        idx = I.build_segment_index(ways, res=8, rings=1, coarse_drop=3)
+        for name, res, rings in (("fine", 8, 1), ("coarse", 5, 2)):
+            lvl = idx[name]
+            assert lvl["res"] == res
+            assert np.all(np.diff(lvl["cells"]) > 0)
+            want = _spark_csr_rows(ways, res, rings, lvl["ids"])
+            cell = np.repeat(lvl["cells"], np.diff(lvl["starts"]))
+            got = _sorted_bits(cell, lvl["wid"], *lvl["seg"].T)
+            assert got.shape == want.shape and np.array_equal(got, want)
+    # the hostile ways: z0 and dup keep their zero-length segments, s1 has none
+    assert list(idx["fine"]["ids"]) == ["a", "b", "dup", "z0"]
+
+
+def test_segments_udf_is_the_kernel(spark):
+    """make_segments_udf returns what geo.cells.segment_cells gives for the
+    same geometries, and both sample each segment at np.linspace points."""
+    from osm_cycling_quality_index_spark.geo import cells as C
+    from osm_cycling_quality_index_spark.geo import kernels as K
+    from osm_cycling_quality_index_spark.geo.udfs import make_segments_udf
+    from osm_cycling_quality_index_spark.sources import synth
+
+    res = 9
+    ways = synth.ways_df(spark, n_roads=12).select("id", "geometry").unionByName(
+        _hostile_geo(spark)[0])
+    got = {r["id"]: [(s["ax"], s["ay"], s["bx"], s["by"], list(s["cells"]))
+                     for s in r["segs"]]
+           for r in ways.select("id", make_segments_udf(res)("geometry")
+                                .alias("segs")).collect()}
+    pdf = ways.toPandas()
+    geoms = list(pdf["geometry"])
+    lens = [len(g) for g in geoms]
+    x, y = K.project(np.array([p["x"] for g in geoms for p in g]),
+                     np.array([p["y"] for g in geoms for p in g]))
+    (line, ax, ay, bx, by), (seg, cell) = C.segment_cells(
+        x, y, np.concatenate([[0], np.cumsum(lens)]), res)
+    want = {i: [] for i in pdf["id"]}
+    step = C.hex_edge_m(res) / 2.0
+    for s in range(len(line)):
+        a, b, c, d = ax[s], ay[s], bx[s], by[s]
+        cells = cell[seg == s].tolist()
+        want[pdf["id"][line[s]]].append((a, b, c, d, cells))
+        # the sampling rule, segment by segment
+        t = np.linspace(0.0, 1.0, max(2, int(float(np.hypot(c - a, d - b)) / step) + 2))
+        ref = np.unique(C.hex_encode_xy(a + t * (c - a), b + t * (d - b), res))
+        assert cells == ref.tolist()
+    assert got == want
+    assert got["s1"] == [] and len(got["dup"]) == 3 and len(got["z0"]) == 1
 
 
 def test_resize_and_image_embeddings(spark):
@@ -442,6 +597,38 @@ def test_streaming_geotag_broadcast(spark, tmp_path):
     want = I.geotag_join_broadcast(imgs, ways, res=9, index=idx).select(
         "image_id", "way_id", F.round("dist_m", 6).alias("d"))
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_streaming_geotag_join(spark, tmp_path):
+    """geotag_join on a streaming source takes the broadcast form whatever
+    the size rule says (the shuffle form persists, which a stream cannot),
+    and streams the rows of the batch join's shuffle form."""
+    from osm_cycling_quality_index_spark.operators import images as I
+    from osm_cycling_quality_index_spark.sources import synth
+
+    wpdf = synth.ways_pdf(n_roads=20)
+    ways = synth.ways_df(spark, n_roads=20).select("id", "geometry")
+    imgs = synth.images_df(spark, wpdf, n_images=300).select("image_id", "lon", "lat")
+    src = str(tmp_path / "imgs_in")
+    imgs.write.parquet(src)
+    stream = spark.readStream.schema(imgs.schema).parquet(src)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = I.geotag_join(stream, ways, res=9)
+        want = sorted(tuple(r) for r in I.geotag_join(imgs, ways, res=9).select(
+            "image_id", "way_id", "dist_m").collect())
+    finally:
+        spark.conf.set(key, saved)
+    q = (
+        out.writeStream.format("memory").queryName("geotag_join_stream")
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    got = sorted(tuple(r) for r in spark.sql(
+        "SELECT image_id, way_id, dist_m FROM geotag_join_stream").collect())
+    assert got == want and len(got) == 300
 
 
 def test_streaming_dedup(spark, tmp_path):

@@ -12,8 +12,9 @@ Usage:
     python bench_extra.py --passes 3 q1 q2
 
 Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and
-$SPARK_GRAFT_CPUS (default 32) like bench.py.  Prints one JSON line per
-query and a closing summary line.
+$SPARK_GRAFT_CPUS (default: the CPUs this process may run on, as
+``session.get_spark`` counts them).  Prints one JSON line per query and a
+closing summary line.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
     import __spark_entry__ as E
     from osm_cycling_quality_index_spark.operators.dedup import (

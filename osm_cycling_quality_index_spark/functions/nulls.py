@@ -5,28 +5,31 @@ interchangeable with ``''`` under ``if not x:`` checks (e.g.
 reference/definitions.py:7-9, reference/cycling_quality_index.py:741).  Spark
 three-valued logic differs: ``NULL == x`` is NULL (falsy in ``when``), but
 ``NULL != x`` is also NULL where Python yields True.  Every ported conditional
-must use these helpers instead of raw operators.
+must use these helpers instead of raw operators.  They are written with the
+folding ``when``/``coalesce`` of :mod:`.fold`, so on an absent tag they fold
+to constants while the tree is built.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from .fold import coalesce, when
 
 
 def falsy(c: Column) -> Column:
     """``not x`` for QGIS string attributes: NULL or empty string."""
-    return c.isNull() | (c == F.lit(""))
+    return c.isNull() | (c == "")
 
 
 def truthy(c: Column) -> Column:
     """``bool(x)`` for QGIS string attributes."""
-    return c.isNotNull() & (c != F.lit(""))
+    return c.isNotNull() & (c != "")
 
 
 def neq(c: Column, value) -> Column:
     """Python ``x != v`` semantics where NULL != v is True (null-safe)."""
-    return ~c.eqNullSafe(F.lit(value))
+    return ~c.eqNullSafe(value)
 
 
 def notin(c: Column, values) -> Column:
@@ -44,4 +47,4 @@ def fcoalesce(*cols: Column) -> Column:
     a final ''; the two are indistinguishable under QGIS truthiness and every
     downstream consumer goes through ``falsy``/``isin``/dict lookups.
     """
-    return F.coalesce(*[F.when(truthy(c), c) for c in cols])
+    return coalesce(*[when(truthy(c), c) for c in cols])

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 def pyround(c: Column, n: int) -> Column:
     s = 10 ** n
-    y = c * F.lit(float(s))
+    y = c * float(s)
     f = F.floor(y)
     return F.when(y - f == 0.5, (f + f % 2) / s).otherwise(F.floor(y + 0.5) / s)
 

@@ -2,23 +2,19 @@
 as Catalyst column expressions — F1-F7, F13 in SURVEY.md §2.9).
 
 All functions return :class:`pyspark.sql.Column` trees; nothing here touches
-Python per row, so the whole scalar layer stays inside whole-stage codegen.
+Python per row, so the whole scalar layer compiles to Java.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import lru_cache
+
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .. import params as P
-from .nulls import falsy, fcoalesce, truthy
-
-
-def col_or_null(df_columns, name: str) -> Column:
-    """Read a column that may be missing from the frame (QGIS returns NULL for
-    absent attributes after the schema-conformance step,
-    reference/cycling_quality_index.py:136-149)."""
-    return F.col(f"`{name}`") if name in df_columns else F.lit(None).cast("string")
+from .fold import Tags, is_null, null, when
+from .nulls import falsy, fcoalesce
 
 
 def get_number(c: Column) -> Column:
@@ -26,24 +22,19 @@ def get_number(c: Column) -> Column:
     return c.cast("string").try_cast("double")
 
 
-def get_access(df_or_cols, access_key: str) -> Column:
+def get_access(t: Tags, access_key: str) -> Column:
     """Access-tag inheritance ladder (reference/definitions.py:54-72):
     first non-falsy of ``access_key`` then its fallbacks
     (e.g. bicycle <- vehicle <- access)."""
-    cols = df_or_cols.columns if isinstance(df_or_cols, DataFrame) else df_or_cols
     ladder = [access_key] + P.ACCESS_LADDERS.get(access_key, [])
-    return fcoalesce(*[col_or_null(cols, k) for k in ladder])
+    return fcoalesce(*[t(k) for k in ladder])
 
 
-def derive_attribute(cols, attr: str, typ: str, side: str, vartype: str) -> Column:
+def derive_attribute(t: Tags, attr: str, typ: str, side: str, vartype: str) -> Column:
     """Coalesce ``{typ}:{side}:{attr}`` -> ``{typ}:both:{attr}`` ->
     ``{typ}:{attr}`` and cast (reference/definitions.py:4-21). NULL on cast
     failure, mirroring the try/except."""
-    v = fcoalesce(
-        col_or_null(cols, f"{typ}:{side}:{attr}"),
-        col_or_null(cols, f"{typ}:both:{attr}"),
-        col_or_null(cols, f"{typ}:{attr}"),
-    )
+    v = fcoalesce(t(f"{typ}:{side}:{attr}"), t(f"{typ}:both:{attr}"), t(f"{typ}:{attr}"))
     if vartype == "float":
         return v.try_cast("double").cast("string")
     if vartype == "int":
@@ -51,33 +42,47 @@ def derive_attribute(cols, attr: str, typ: str, side: str, vartype: str) -> Colu
     return v
 
 
-def derive_separation(cols, traffic_mode: str) -> Column:
+def derive_separation(t: Tags, traffic_mode: str) -> Column:
     """Separation on the side of a given traffic mode
     (reference/definitions.py:26-49).  Sequencing matters: the second ``if``
     in the reference overwrites the first, so it becomes the outer ``when``."""
-    sep_l = col_or_null(cols, "separation:left")
-    sep_r = col_or_null(cols, "separation:right")
-    tm_l = col_or_null(cols, "traffic_mode:left")
-    tm_r = col_or_null(cols, "traffic_mode:right")
+    sep_l, sep_r = t("separation:left"), t("separation:right")
+    tm_l, tm_r = t("traffic_mode:left"), t("traffic_mode:right")
     if traffic_mode == "foot":
         # default for the right side: adjacent foot traffic
-        return F.when(falsy(tm_r) | (tm_r == "foot"), sep_r).otherwise(
-            F.when(tm_l == "foot", sep_l)
+        return when(falsy(tm_r) | (tm_r == "foot"), sep_r).otherwise(
+            when(tm_l == "foot", sep_l)
         )
     if traffic_mode == "motor_vehicle":
         # default for the left side: adjacent motor vehicle traffic
         mv = ["motor_vehicle", "parking", "psv"]
-        return F.when(falsy(tm_l) | tm_l.isin(mv), sep_l).otherwise(
-            F.when(tm_r.isin(mv), sep_r)
+        return when(falsy(tm_l) | tm_l.isin(mv), sep_l).otherwise(
+            when(tm_r.isin(mv), sep_r)
         )
-    return F.lit(None).cast("string")
+    return null("string")
 
 
 def split_delimited(c: Column, deli_char: str) -> Column:
     """String -> array of tokens (reference/definitions.py:88-109, string
     variant).  '|' must be escaped for the regex-based split."""
+    if is_null(c):
+        return null("array<string>")
     pat = "\\|" if deli_char == "|" else deli_char
     return F.split(c, pat)
+
+
+@lru_cache(maxsize=None)
+def _surfaces_weakest_first() -> Column:
+    # dict.fromkeys dedupe first: SURFACE_VALUE_ORDER lists paving_stones
+    # twice (reference parameter.py duplicate, kept verbatim); .index()/
+    # array_position resolve duplicates to their FIRST occurrence, so the
+    # reversed order must too — without the dedupe the later duplicate
+    # would outrank values between the two occurrences
+    # (one split literal, which Catalyst folds to an array literal, costs two
+    # py4j round-trips where 28 literals cost ~90)
+    order = list(reversed(list(dict.fromkeys(P.SURFACE_VALUE_ORDER))))
+    assert not any("," in v for v in order)
+    return F.split(F.lit(",".join(order)), ",")
 
 
 def weakest_surface_value(arr: Column) -> Column:
@@ -86,23 +91,17 @@ def weakest_surface_value(arr: Column) -> Column:
     (reference/definitions.py:114-126).
 
     The quality order is a fixed 29-value list, so "the present value with
-    the highest index" unrolls statically: coalesce over the REVERSED order
-    of ``array_contains`` gates.  No higher-order function — lambdas are
-    CodegenFallback (they evict the whole Project from whole-stage codegen)
-    and have no parseable SQL text for the generated-plan fast path
-    (plans/cqi_sql_gen.py) — and no ``element_at``, whose codegen on a
-    foldable array with a runtime-NULL index wrongly yields the last
-    element.
+    the highest index" is the first element of the reversed order that
+    ``arr`` holds: ``array_intersect`` keeps its first argument's order, and
+    ``get`` at the constant index 0 is NULL on an empty or NULL array.  No
+    higher-order function — lambdas are CodegenFallback (they evict the
+    whole Project from whole-stage codegen and run interpreted) — and no
+    ``element_at``, whose codegen on a foldable array with a runtime-NULL
+    index wrongly yields the last element.
     """
-    # dict.fromkeys dedupe first: SURFACE_VALUE_ORDER lists paving_stones
-    # twice (reference parameter.py duplicate, kept verbatim); .index()/
-    # array_position resolve duplicates to their FIRST occurrence, so the
-    # reversed scan must too — without the dedupe the later duplicate
-    # would outrank values between the two occurrences
-    return F.coalesce(*[
-        F.when(F.array_contains(arr, v), F.lit(v))
-        for v in reversed(list(dict.fromkeys(P.SURFACE_VALUE_ORDER)))
-    ])
+    if is_null(arr):
+        return null("string")
+    return F.get(F.array_intersect(_surfaces_weakest_first(), arr), 0)
 
 
 def joined_flags(pairs: list[tuple[Column, Column | str]]) -> Column:
@@ -110,9 +109,8 @@ def joined_flags(pairs: list[tuple[Column, Column | str]]) -> Column:
     the reference's repeated ``addDelimitedValue`` calls
     (reference/definitions.py:131-135) collapsed into one linear expression
     (a when/otherwise accumulator would duplicate the tree exponentially)."""
-    frags = [
-        F.when(flag, F.lit(v) if isinstance(v, str) else v) for flag, v in pairs
-    ]
+    # array_join skips NULL elements, so fragments known to be NULL drop out
+    frags = [f for f in (when(flag, v) for flag, v in pairs) if not is_null(f)]
     return F.array_join(F.array(*frags), ";", None) if frags else F.lit("")
 
 
@@ -121,9 +119,9 @@ def normalize_maxspeed(maxspeed: Column, highway: Column) -> Column:
     default 10; reference/cycling_quality_index.py:296-302) followed by
     float parse."""
     return (
-        F.when(maxspeed == "walk", F.lit(10.0))
-        .when(falsy(maxspeed) & (highway == "living_street"), F.lit(10.0))
-        .when(maxspeed == "none", F.lit(299.0))
+        when(maxspeed == "walk", 10.0)
+        .when(falsy(maxspeed) & (highway == "living_street"), 10.0)
+        .when(maxspeed == "none", 299.0)
         .otherwise(get_number(maxspeed))
     )
 
@@ -131,6 +129,8 @@ def normalize_maxspeed(maxspeed: Column, highway: Column) -> Column:
 def last_pipe_token_number(c: Column) -> Column:
     """Width of the rightmost lane from a pipe list
     (reference/cycling_quality_index.py:795-802)."""
+    if is_null(c):
+        return null("double")
     return F.element_at(F.split(c, "\\|"), -1).try_cast("double")
 
 

@@ -9,8 +9,6 @@ splits, replace-based occurrence counts, and bounded modular arithmetic.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd  # module-level so the pandas-UDF type hints resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -144,43 +142,6 @@ def fingerprint(df: DataFrame, text_col: str = "text",
     return (
         chars.groupBy("doc_id")
         .agg((F.sum(contrib) % _FP_MOD).alias("fingerprint"))
-    )
-
-
-def fingerprint_fast(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Production form of :func:`fingerprint`: identical output, computed in
-    a vectorized pandas UDF instead of a per-character ``posexplode`` (which
-    inflates one shuffle row per character — correct and SQL-mirrorable, but
-    ~10^3x row inflation at scale).  Codepoints are extracted per document as
-    a utf-32 numpy view (matches ``F.ascii`` per split character), the
-    polynomial is a dot product with the tiled 31^(i mod 4) powers, chunked
-    so the int64 accumulator cannot overflow."""
-    from pyspark.sql.types import LongType
-
-    pows = np.array(_FP_POW, dtype=np.int64)
-    chunk = 1 << 20  # 1M chars: max partial sum ~3.3e16 << int64 max
-
-    @F.pandas_udf(LongType())
-    def fp(texts: pd.Series) -> pd.Series:
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, s in enumerate(texts.to_numpy()):
-            if s is None or len(s) == 0:
-                continue
-            codes = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-            acc = 0
-            for lo in range(0, len(codes), chunk):
-                seg = codes[lo:lo + chunk]
-                p = pows[np.arange(lo, lo + len(seg)) % 4]
-                acc = (acc + int(np.dot(seg, p))) % _FP_MOD
-            out[i] = acc
-        return pd.Series(out)
-
-    # empty/NULL docs emit no row, exactly like the posexplode form
-    return (
-        df.where(F.length(F.col(text_col)) > 0)
-        .select(F.col(id_col).alias("doc_id"),
-                fp(F.col(text_col)).alias("fingerprint"))
     )
 
 

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import os as _os
 import re as _re
-import time as _time
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -810,12 +809,8 @@ def connected_components(
             )
         else:
             labels = spark.createDataFrame([], schema)
-        if _os.environ.get("CC_DEBUG"):
-            print(f"[cc] local path: {n_sym} sym rows, "
-                  f"{len(out_rows)} nodes", flush=True)
         _drop(sym_ids)
         return labels
-    _t_loop = _time.time()
     for it in range(max_iter):
         # jump: adopt the label OF the label (pointer doubling) — a
         # self-join on the materialized label frame, so nothing upstream
@@ -894,13 +889,7 @@ def connected_components(
                 ),
                 eager=False,
             )
-        _t0 = _time.time()
         changed = new.agg(F.max("_changed")).first()[0]
-        if _os.environ.get("CC_DEBUG"):
-            print(f"[cc] round {it}: action {_time.time()-_t0:.2f}s "
-                  f"full {_time.time()-_t_loop:.2f}s changed={changed}",
-                  flush=True)
-        _t_loop = _time.time()
         # the superseded round's blocks are only safe to drop AFTER the
         # action that read them
         _drop(label_ids)

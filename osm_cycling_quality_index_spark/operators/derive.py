@@ -15,25 +15,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.colcache import ccol, clit
-
 from .. import params as P
-from ..functions.nulls import falsy, fcoalesce, neq, notin, truthy
+from ..functions.fold import Tags, coalesce, is_null, null, when
+from ..functions.nulls import falsy, fcoalesce, neq, truthy
 from ..functions.rounding import pyround
 from ..functions.tags import (
-    contains_sign,
     get_number,
     last_pipe_token_number,
     split_delimited,
     weakest_surface_value,
 )
-from ..functions.tags import get_access
-
-
-def _c(name: str) -> Column:
-    # memoized: Column leaves are immutable and each F.col is a py4j
-    # round-trip (functions/colcache.py)
-    return ccol(f"`{name}`")
 
 
 def _nonzero(c: Column) -> Column:
@@ -41,7 +32,7 @@ def _nonzero(c: Column) -> Column:
 
 
 def _nzd(c: Column) -> Column:
-    return F.coalesce(c, F.lit(0.0))
+    return coalesce(c, 0.0)
 
 
 _ONEWAY_VALUES = ["yes", "no", "-1", "alternating", "reversible"]
@@ -54,83 +45,83 @@ _PATHISH = [
 _ROADISH = ["shared road", "shared traffic lane", "bicycle road", "track or service"]
 
 
-def oneway_expr() -> Column:
+def oneway_expr(t: Tags) -> Column:
     """proc_oneway (reference/cycling_quality_index.py:703-743)."""
-    wt = _c("way_type")
-    oneway = _c("oneway")
-    ob = _c("oneway:bicycle")
-    cw_ow = _c("cycleway:oneway")
+    wt = t("way_type")
+    oneway = t("oneway")
+    ob = t("oneway:bicycle")
+    cw_ow = t("cycleway:oneway")
     pathish_base = (
-        F.when(oneway.isin(_ONEWAY_VALUES), oneway)
+        when(oneway.isin(_ONEWAY_VALUES), oneway)
         .when(cw_ow.isin(_ONEWAY_VALUES), cw_ow)
         .otherwise(
-            F.when(
-                wt.isin(["cycle track", "shared path", "shared footway"]) & truthy(_c("side")),
-                F.lit(P.DEFAULT_ONEWAY_CYCLE_TRACK),
+            when(
+                wt.isin(["cycle track", "shared path", "shared footway"]) & truthy(t("side")),
+                P.DEFAULT_ONEWAY_CYCLE_TRACK,
             )
-            .when(wt.contains("cycle lane"), F.lit(P.DEFAULT_ONEWAY_CYCLE_LANE))
-            .otherwise(F.lit("no"))
+            .when(wt.contains("cycle lane"), P.DEFAULT_ONEWAY_CYCLE_LANE)
+            .otherwise("no")
         )
     )
-    pathish = F.when(ob.isin(_ONEWAY_VALUES), ob).otherwise(pathish_base)
-    roadish = F.when(
+    pathish = when(ob.isin(_ONEWAY_VALUES), ob).otherwise(pathish_base)
+    roadish = when(
         falsy(ob) | oneway.eqNullSafe(ob),
-        F.when(oneway.isin(_ONEWAY_VALUES), oneway).otherwise(F.lit("no")),
+        when(oneway.isin(_ONEWAY_VALUES), oneway).otherwise("no"),
     ).otherwise(
-        F.when(
+        when(
             ob == "no",
-            F.when(
+            when(
                 oneway.isin(_ONEWAY_VALUES), F.concat(oneway, F.lit("_motor_vehicles"))
-            ).otherwise(F.lit("no")),
-        ).otherwise(F.lit("yes"))
+            ).otherwise("no"),
+        ).otherwise("yes")
     )
     proc = (
-        F.when(wt.isin(_PATHISH), pathish)
-        .when(wt == "shared bus lane", F.lit("yes"))
+        when(wt.isin(_PATHISH), pathish)
+        .when(wt == "shared bus lane", "yes")
         .when(wt.isin(_ROADISH), roadish)
     )
-    return F.when(falsy(proc), F.lit("unknown")).otherwise(proc)
+    return when(falsy(proc), "unknown").otherwise(proc)
 
 
-def _width_group_a(wt: Column, proc_oneway: Column) -> tuple[Column, Column]:
+def _width_group_a(t: Tags, wt: Column, proc_oneway: Column) -> tuple[Column, Column]:
     """Paths and cycle lanes (reference/cycling_quality_index.py:750-765)."""
-    pw_cw = get_number(_c("cycleway:width"))
-    pw_w = get_number(_c("width"))
+    pw_cw = get_number(t("cycleway:width"))
+    pw_w = get_number(t("width"))
     default = (
-        F.when(
+        when(
             wt.isin(["cycle path", "shared path", "cycle lane (protected)"]),
-            F.lit(P.DEFAULT_HIGHWAY_WIDTH_DICT["path"]),
+            P.DEFAULT_HIGHWAY_WIDTH_DICT["path"],
         )
-        .when(wt == "shared footway", F.lit(P.DEFAULT_HIGHWAY_WIDTH_DICT["footway"]))
-        .otherwise(F.lit(P.DEFAULT_HIGHWAY_WIDTH_DICT["cycleway"]))
+        .when(wt == "shared footway", P.DEFAULT_HIGHWAY_WIDTH_DICT["footway"])
+        .otherwise(P.DEFAULT_HIGHWAY_WIDTH_DICT["cycleway"])
     )
-    default = F.when(proc_oneway == "no", default * 1.6).otherwise(default)
+    default = when(proc_oneway == "no", default * 1.6).otherwise(default)
     missing = ~_nonzero(pw_cw) & ~_nonzero(pw_w)
-    width = F.when(_nonzero(pw_cw), pw_cw).when(_nonzero(pw_w), pw_w).otherwise(default)
+    width = when(_nonzero(pw_cw), pw_cw).when(_nonzero(pw_w), pw_w).otherwise(default)
     return width, missing
 
 
-def _width_group_b(proc_oneway: Column) -> tuple[Column, Column, Column]:
+def _width_group_b(t: Tags, proc_oneway: Column) -> tuple[Column, Column, Column]:
     """Segregated path (reference/cycling_quality_index.py:766-788).
     Returns (width, missing_first, missing_second) — the reference can append
     'width' to data_missing twice on this branch (:778 and :787)."""
-    is_path = _c("highway") == "path"
-    pw_cw = get_number(_c("cycleway:width"))
-    w = get_number(_c("width"))
-    fw = get_number(_c("footway:width"))
-    pw_path = F.when(_nonzero(pw_cw), pw_cw).otherwise(
-        F.when(_nonzero(w), F.when(_nonzero(fw), w - fw).otherwise(w / 2))
+    is_path = t("highway") == "path"
+    pw_cw = get_number(t("cycleway:width"))
+    w = get_number(t("width"))
+    fw = get_number(t("footway:width"))
+    pw_path = when(_nonzero(pw_cw), pw_cw).otherwise(
+        when(_nonzero(w), when(_nonzero(fw), w - fw).otherwise(w / 2))
     )
     missing1 = is_path & ~_nonzero(pw_cw)
-    pw = F.when(is_path, pw_path).otherwise(w)
+    pw = when(is_path, pw_path).otherwise(w)
     missing2 = ~_nonzero(pw)
     default = F.lit(P.DEFAULT_HIGHWAY_WIDTH_DICT["path"])
-    default = F.when(proc_oneway == "no", default * 1.6).otherwise(default)
-    width = F.when(_nonzero(pw), pw).otherwise(default)
+    default = when(proc_oneway == "no", default * 1.6).otherwise(default)
+    width = when(_nonzero(pw), pw).otherwise(default)
     return width, missing1, missing2
 
 
-def _width_group_c_stage1(wt: Column, proc_oneway: Column) -> dict[str, Column]:
+def _width_group_c_stage1(t: Tags, wt: Column, proc_oneway: Column) -> dict[str, Column]:
     """Shared roads/lanes, part 1 (reference/cycling_quality_index.py:789-1008).
 
     Returns temp columns (prefixed ``_w_``) that part 2 combines.  Staging the
@@ -139,19 +130,19 @@ def _width_group_c_stage1(wt: Column, proc_oneway: Column) -> dict[str, Column]:
     analysis into minutes.
     """
     ow_yes = proc_oneway.contains("yes")
-    side = _c("side")
+    side = t("side")
 
     # --- lane-width sub-branch for shared traffic/bus lanes (:791-808)
-    wl, wlf, wlb = _c("width:lanes"), _c("width:lanes:forward"), _c("width:lanes:backward")
+    wl, wlf, wlb = t("width:lanes"), t("width:lanes:forward"), t("width:lanes:backward")
     c1 = (ow_yes | (wt != "shared bus lane")) & truthy(wl) & wl.contains("|")
     c2 = (wt == "shared bus lane") & ~ow_yes & (side == "right") & truthy(wlf) & wlf.contains("|")
     c3 = (wt == "shared bus lane") & ~ow_yes & (side == "left") & truthy(wlb) & wlb.contains("|")
-    lanes_else = F.when(
-        wt == "shared bus lane", F.lit(P.DEFAULT_WIDTH_BUS_LANE)
-    ).otherwise(F.lit(P.DEFAULT_WIDTH_TRAFFIC_LANE))
-    pw0 = F.when(
+    lanes_else = when(
+        wt == "shared bus lane", P.DEFAULT_WIDTH_BUS_LANE
+    ).otherwise(P.DEFAULT_WIDTH_TRAFFIC_LANE)
+    pw0 = when(
         wt.isin(["shared traffic lane", "shared bus lane"]),
-        F.when(c1, last_pipe_token_number(wl))
+        when(c1, last_pipe_token_number(wl))
         .when(c2, last_pipe_token_number(wlf))
         .when(c3, last_pipe_token_number(wlb))
         .otherwise(lanes_else),
@@ -159,34 +150,34 @@ def _width_group_c_stage1(wt: Column, proc_oneway: Column) -> dict[str, Column]:
     missing_width_lanes = (wt == "shared traffic lane") & ~c1
 
     # --- effective width / lane-count fallbacks (:810-820)
-    we = get_number(_c("width:effective"))
-    w = get_number(_c("width"))
-    lanes = get_number(_c("lanes"))
-    pw1 = F.when(_nonzero(we), we).when(
+    we = get_number(t("width:effective"))
+    w = get_number(t("width"))
+    lanes = get_number(t("lanes"))
+    pw1 = when(_nonzero(we), we).when(
         ~_nonzero(w) & _nonzero(lanes), lanes * P.DEFAULT_WIDTH_TRAFFIC_LANE
     )
 
     full = ~_nonzero(pw0) & ~_nonzero(pw1)
 
     # --- parking widths (:824-877)
-    pl = fcoalesce(_c("parking:left"), _c("parking:both"))
-    pr = fcoalesce(_c("parking:right"), _c("parking:both"))
-    plo = fcoalesce(_c("parking:left:orientation"), _c("parking:both:orientation"))
-    pro = fcoalesce(_c("parking:right:orientation"), _c("parking:both:orientation"))
-    plw0 = get_number(_c("parking:left:width"))
-    prw0 = get_number(_c("parking:right:width"))
-    pbw = get_number(_c("parking:both:width"))
-    plw0 = F.when(_nonzero(pbw) & ~_nonzero(plw0), pbw).otherwise(plw0)
-    prw0 = F.when(_nonzero(pbw) & ~_nonzero(prw0), pbw).otherwise(prw0)
+    pl = fcoalesce(t("parking:left"), t("parking:both"))
+    pr = fcoalesce(t("parking:right"), t("parking:both"))
+    plo = fcoalesce(t("parking:left:orientation"), t("parking:both:orientation"))
+    pro = fcoalesce(t("parking:right:orientation"), t("parking:both:orientation"))
+    plw0 = get_number(t("parking:left:width"))
+    prw0 = get_number(t("parking:right:width"))
+    pbw = get_number(t("parking:both:width"))
+    plw0 = when(_nonzero(pbw) & ~_nonzero(plw0), pbw).otherwise(plw0)
+    prw0 = when(_nonzero(pbw) & ~_nonzero(prw0), pbw).otherwise(prw0)
 
     def park_width(p: Column, orient: Column, w0: Column) -> Column:
-        w1 = F.when(
+        w1 = when(
             p.isin(["lane", "half_on_kerb"]) & ~_nonzero(w0),
-            F.when(orient == "diagonal", F.lit(P.DEFAULT_WIDTH_PARKING_DIAGONAL))
-            .when(orient == "perpendicular", F.lit(P.DEFAULT_WIDTH_PARKING_PERPENDICULAR))
-            .otherwise(F.lit(P.DEFAULT_WIDTH_PARKING_PARALLEL)),
+            when(orient == "diagonal", P.DEFAULT_WIDTH_PARKING_DIAGONAL)
+            .when(orient == "perpendicular", P.DEFAULT_WIDTH_PARKING_PERPENDICULAR)
+            .otherwise(P.DEFAULT_WIDTH_PARKING_PARALLEL),
         ).otherwise(w0)
-        w2 = F.when(p == "half_on_kerb", w1 / 2).otherwise(w1)
+        w2 = when(p == "half_on_kerb", w1 / 2).otherwise(w1)
         return _nzd(w2)
 
     prw = park_width(pr, pro, prw0)
@@ -196,43 +187,43 @@ def _width_group_c_stage1(wt: Column, proc_oneway: Column) -> dict[str, Column]:
     # chains are staged by width_stage as _w_cwr/_w_cwl BEFORE this runs —
     # they are referenced many times below, and both Catalyst analysis and
     # Expression.sql duplicate shared subtrees per reference
-    cwr = _c("_w_cwr")
-    cwl = _c("_w_cwl")
-    ow_tag = _c("oneway")
+    cwr = t("_w_cwr")
+    cwl = t("_w_cwl")
+    ow_tag = t("oneway")
     ow_no = falsy(ow_tag) | (ow_tag == "no")
     lane_any = (cwr == "lane") | (cwl == "lane")
 
-    cww, cwbw = _c("cycleway:width"), _c("cycleway:both:width")
-    cwrw = _c("cycleway:right:width")
-    cwlw = _c("cycleway:left:width")
-    cwrw = F.when(lane_any & truthy(cww) & falsy(cwrw), cww).otherwise(cwrw)
-    cwlw = F.when(lane_any & truthy(cww) & falsy(cwlw) & ow_no, cww).otherwise(cwlw)
-    cwrw = F.when(lane_any & truthy(cwbw) & falsy(cwrw), cwbw).otherwise(cwrw)
-    cwlw = F.when(lane_any & truthy(cwbw) & falsy(cwlw), cwbw).otherwise(cwlw)
-    cwrw_num = F.when(
-        lane_any & (cwr == "lane") & falsy(cwrw), F.lit(P.DEFAULT_WIDTH_CYCLE_LANE)
+    cww, cwbw = t("cycleway:width"), t("cycleway:both:width")
+    cwrw = t("cycleway:right:width")
+    cwlw = t("cycleway:left:width")
+    cwrw = when(lane_any & truthy(cww) & falsy(cwrw), cww).otherwise(cwrw)
+    cwlw = when(lane_any & truthy(cww) & falsy(cwlw) & ow_no, cww).otherwise(cwlw)
+    cwrw = when(lane_any & truthy(cwbw) & falsy(cwrw), cwbw).otherwise(cwrw)
+    cwlw = when(lane_any & truthy(cwbw) & falsy(cwlw), cwbw).otherwise(cwlw)
+    cwrw_num = when(
+        lane_any & (cwr == "lane") & falsy(cwrw), P.DEFAULT_WIDTH_CYCLE_LANE
     ).otherwise(_nzd(get_number(cwrw)))
-    cwlw_num = F.when(
-        lane_any & (cwl == "lane") & falsy(cwlw), F.lit(P.DEFAULT_WIDTH_CYCLE_LANE)
+    cwlw_num = when(
+        lane_any & (cwl == "lane") & falsy(cwlw), P.DEFAULT_WIDTH_CYCLE_LANE
     ).otherwise(_nzd(get_number(cwlw)))
 
     def buffer_ladder(names: list[str]) -> Column:
-        return fcoalesce(*[_c(n) for n in names])
+        return fcoalesce(*[t(n) for n in names])
 
     # 9-term fallback chains (:938-960) — order is semantics
-    crbl = F.when(lane_any & (cwr == "lane"), buffer_ladder([
+    crbl = when(lane_any & (cwr == "lane"), buffer_ladder([
         "cycleway:right:buffer:left", "cycleway:right:buffer:both", "cycleway:right:buffer",
         "cycleway:both:buffer:left", "cycleway:both:buffer:both", "cycleway:both:buffer",
         "cycleway:buffer:left", "cycleway:buffer:both", "cycleway:buffer"]))
-    crbr = F.when(lane_any & (cwr == "lane"), buffer_ladder([
+    crbr = when(lane_any & (cwr == "lane"), buffer_ladder([
         "cycleway:right:buffer:right", "cycleway:right:buffer:both", "cycleway:right:buffer",
         "cycleway:both:buffer:right", "cycleway:both:buffer:both", "cycleway:both:buffer",
         "cycleway:buffer:right", "cycleway:buffer:both", "cycleway:buffer"]))
-    clbl = F.when(lane_any & (cwl == "lane"), buffer_ladder([
+    clbl = when(lane_any & (cwl == "lane"), buffer_ladder([
         "cycleway:left:buffer:left", "cycleway:left:buffer:both", "cycleway:left:buffer",
         "cycleway:both:buffer:left", "cycleway:both:buffer:both", "cycleway:both:buffer",
         "cycleway:buffer:left", "cycleway:buffer:both", "cycleway:buffer"]))
-    clbr = F.when(lane_any & (cwl == "lane"), buffer_ladder([
+    clbr = when(lane_any & (cwl == "lane"), buffer_ladder([
         "cycleway:left:buffer:right", "cycleway:left:buffer:both", "cycleway:left:buffer",
         "cycleway:both:buffer:right", "cycleway:both:buffer:both", "cycleway:both:buffer",
         "cycleway:buffer:right", "cycleway:buffer:both", "cycleway:buffer"]))
@@ -241,16 +232,16 @@ def _width_group_c_stage1(wt: Column, proc_oneway: Column) -> dict[str, Column]:
         # `if not x or x == 'no' or x == 'none': x = 0` (:965-972); an
         # unparseable non-'no' token then yields NULL through getNumber,
         # poisoning the sum exactly like the reference's NULL arithmetic.
-        return F.when(falsy(c) | c.isin(["no", "none"]), F.lit(0.0)).otherwise(get_number(c))
+        return when(falsy(c) | c.isin(["no", "none"]), 0.0).otherwise(get_number(c))
 
     buffer_sum = buffer_num(crbl) + buffer_num(crbr) + buffer_num(clbl) + buffer_num(clbr)
 
     # carriageway default (:974-985)
-    hw_default = _map_lookup(_c("highway"), P.DEFAULT_HIGHWAY_WIDTH_DICT, P.DEFAULT_HIGHWAY_WIDTH_FALLBACK)
+    hw_default = _map_lookup(t("highway"), P.DEFAULT_HIGHWAY_WIDTH_DICT, P.DEFAULT_HIGHWAY_WIDTH_FALLBACK)
     missing_width = full & ~_nonzero(w)
-    base_w = F.when(_nonzero(w), w).otherwise(
+    base_w = when(_nonzero(w), w).otherwise(
         # Python round() is banker's: round(2/1.6, 1) = 1.2, not 1.3 (:983)
-        F.when(ow_yes, pyround(hw_default / 1.6, 1)).otherwise(hw_default)
+        when(ow_yes, pyround(hw_default / 1.6, 1)).otherwise(hw_default)
     )
 
     return {
@@ -268,26 +259,26 @@ def _width_group_c_stage1(wt: Column, proc_oneway: Column) -> dict[str, Column]:
     }
 
 
-def _width_group_c_stage2(wt: Column) -> Column:
+def _width_group_c_stage2(t: Tags, wt: Column) -> Column:
     """Shared roads/lanes, part 2: combine the ``_w_*`` temp columns
     (reference/cycling_quality_index.py:987-1008)."""
-    pw2 = _c("_w_pw2")
-    ow_yes = _c("_w_ow_yes")
-    pw3 = F.when(_c("_w_has_parking"), pw2 - _c("_w_prw") - _c("_w_plw")).otherwise(
-        F.when(
+    pw2 = t("_w_pw2")
+    ow_yes = t("_w_ow_yes")
+    pw3 = when(t("_w_has_parking"), pw2 - t("_w_prw") - t("_w_plw")).otherwise(
+        when(
             wt == "shared road",
-            F.when(~ow_yes, F.least(pw2, F.lit(5.5))).otherwise(F.least(pw2, F.lit(4.0))),
+            when(~ow_yes, F.least(pw2, F.lit(5.5))).otherwise(F.least(pw2, F.lit(4.0))),
         ).otherwise(pw2)
     )
     # min-lane floor (:1006-1008): 'width' in data_missing is a substring test,
     # but width:lanes misses never coexist with the full-derivation branch
-    pw_full = F.when(
-        (pw3 < P.DEFAULT_WIDTH_TRAFFIC_LANE) & _c("_w_missing_width"),
-        F.lit(P.DEFAULT_WIDTH_TRAFFIC_LANE),
+    pw_full = when(
+        (pw3 < P.DEFAULT_WIDTH_TRAFFIC_LANE) & t("_w_missing_width"),
+        P.DEFAULT_WIDTH_TRAFFIC_LANE,
     ).otherwise(pw3)
     return (
-        F.when(_nonzero(_c("_w_pw0")), _c("_w_pw0"))
-        .when(_nonzero(_c("_w_pw1")), _c("_w_pw1"))
+        when(_nonzero(t("_w_pw0")), t("_w_pw0"))
+        .when(_nonzero(t("_w_pw1")), t("_w_pw1"))
         .otherwise(pw_full)
     )
 
@@ -295,36 +286,35 @@ def _width_group_c_stage2(wt: Column) -> Column:
 def _map_lookup(key: Column, mapping: dict, fallback=None) -> Column:
     expr = None
     for k, v in mapping.items():
-        cond = key == clit(k)
-        expr = F.when(cond, clit(v)) if expr is None else expr.when(cond, clit(v))
-    return expr.otherwise(clit(fallback))
+        expr = when(key == k, v) if expr is None else expr.when(key == k, v)
+    return expr.otherwise(fallback)
 
 
-def _cwr_cwl_exprs() -> dict[str, Column]:
+def _cwr_cwl_exprs(t: Tags) -> dict[str, Column]:
     """Resolved cycleway:right/left chains (:879-898) as temp columns."""
-    cw, cwb = _c("cycleway"), _c("cycleway:both")
-    ow_tag = _c("oneway")
+    cw, cwb = t("cycleway"), t("cycleway:both")
+    ow_tag = t("oneway")
     ow_no = falsy(ow_tag) | (ow_tag == "no")
-    cwr = _c("cycleway:right")
-    cwl = _c("cycleway:left")
-    cwr = F.when(truthy(cw) & falsy(cwr), cw).otherwise(cwr)
-    cwl = F.when(truthy(cw) & falsy(cwl) & ow_no, cw).otherwise(cwl)
-    cwr = F.when(truthy(cwb) & falsy(cwr), cwb).otherwise(cwr)
-    cwl = F.when(truthy(cwb) & falsy(cwl), cwb).otherwise(cwl)
+    cwr = t("cycleway:right")
+    cwl = t("cycleway:left")
+    cwr = when(truthy(cw) & falsy(cwr), cw).otherwise(cwr)
+    cwl = when(truthy(cw) & falsy(cwl) & ow_no, cw).otherwise(cwl)
+    cwr = when(truthy(cwb) & falsy(cwr), cwb).otherwise(cwr)
+    cwl = when(truthy(cwb) & falsy(cwl), cwb).otherwise(cwl)
     return {"_w_cwr": cwr, "_w_cwl": cwl}
 
 
-def width_stage(df: DataFrame) -> DataFrame:
+def width_stage(df: DataFrame, t: Tags) -> DataFrame:
     """proc_width + data_missing width flags
     (reference/cycling_quality_index.py:746-1013), staged through ``_w_*``
     temp columns to keep analyzed expression trees small."""
-    wt = _c("way_type")
-    proc_oneway = _c("proc_oneway")
-    df = df.withColumns(_cwr_cwl_exprs())
-    df = df.withColumns(_width_group_c_stage1(wt, proc_oneway))
-    a_width, a_missing = _width_group_a(wt, proc_oneway)
-    b_width, b_missing1, b_missing2 = _width_group_b(proc_oneway)
-    c_width = _width_group_c_stage2(wt)
+    wt = t("way_type")
+    proc_oneway = t("proc_oneway")
+    df = t.put(df, _cwr_cwl_exprs(t))
+    df = t.put(df, _width_group_c_stage1(t, wt, proc_oneway))
+    a_width, a_missing = _width_group_a(t, wt, proc_oneway)
+    b_width, b_missing1, b_missing2 = _width_group_b(t, proc_oneway)
+    c_width = _width_group_c_stage2(t, wt)
 
     in_a = wt.isin(_PATHISH) & (wt != "segregated path")
     in_b = wt == "segregated path"
@@ -332,204 +322,204 @@ def width_stage(df: DataFrame) -> DataFrame:
         "shared road", "shared traffic lane", "shared bus lane", "bicycle road",
         "track or service",
     ])
-    df = df.withColumn(
-        "_w_pw", F.when(in_a, a_width).when(in_b, b_width).when(in_c, c_width)
-    )
-    df = df.withColumns({
-        # trailing `if not proc_width: proc_width = NULL` (:1010-1011)
-        "proc_width": F.when(_nonzero(_c("_w_pw")), _c("_w_pw")),
-        "dm_width_lanes": in_c & _c("_w_missing_lanes"),
-        "dm_width_1": (in_a & a_missing) | (in_b & b_missing1) | (in_c & _c("_w_missing_width")),
-        "dm_width_2": in_b & b_missing2,
-        "dm_parking": in_c & _c("_w_missing_parking"),
+    df = t.put(df, {
+        "_w_pw": when(in_a, a_width).when(in_b, b_width).when(in_c, c_width)
     })
-    return df.drop(*[c for c in df.columns if c.startswith("_w_")])
+    df = t.put(df, {
+        # trailing `if not proc_width: proc_width = NULL` (:1010-1011)
+        "proc_width": when(_nonzero(t("_w_pw")), t("_w_pw")),
+        "dm_width_lanes": in_c & t("_w_missing_lanes"),
+        "dm_width_1": (in_a & a_missing) | (in_b & b_missing1) | (in_c & t("_w_missing_width")),
+        "dm_width_2": in_b & b_missing2,
+        "dm_parking": in_c & t("_w_missing_parking"),
+    })
+    return t.drop(df, "_w_")
 
 
 _SURFACE_KEYS = list(P.SURFACE_FACTOR_DICT.keys())
 _SMOOTHNESS_KEYS = list(P.SMOOTHNESS_FACTOR_DICT.keys())
 
 
-def surface_stage(df: DataFrame) -> DataFrame:
+def surface_stage(df: DataFrame, t: Tags) -> DataFrame:
     """proc_surface / proc_smoothness + their data_missing flags
     (reference/cycling_quality_index.py:1016-1095), staged through ``_s_*``
     temp columns: the bicycle-override (``ps0``) and merged (``ps1``)
     ladders are each referenced up to 29x by the unrolled weakest-surface
     gates, and shared subtrees are duplicated per reference by both
     Catalyst analysis and Expression.sql."""
-    wt = _c("way_type")
-    sb = _c("surface:bicycle")
-    smb = _c("smoothness:bicycle")
-    df = df.withColumns({
-        "_s_ps0": F.when(
+    wt = t("way_type")
+    sb = t("surface:bicycle")
+    smb = t("smoothness:bicycle")
+    df = t.put(df, {
+        "_s_ps0": when(
             truthy(sb),
-            F.when(sb.isin(_SURFACE_KEYS), sb).when(
+            when(sb.isin(_SURFACE_KEYS), sb).when(
                 sb.contains(";"), weakest_surface_value(split_delimited(sb, ";"))
             ),
         ),
-        "_s_psm0": F.when(truthy(smb) & smb.isin(_SMOOTHNESS_KEYS), smb),
+        "_s_psm0": when(truthy(smb) & smb.isin(_SMOOTHNESS_KEYS), smb),
     })
-    ps0 = _c("_s_ps0")
-    psm0 = _c("_s_psm0")
+    ps0 = t("_s_ps0")
+    psm0 = t("_s_psm0")
 
     seg = wt == "segregated path"
     hw_surface = _map_lookup(
-        _c("highway"), P.DEFAULT_HIGHWAY_SURFACE_DICT, P.DEFAULT_HIGHWAY_SURFACE_DICT["path"]
+        t("highway"), P.DEFAULT_HIGHWAY_SURFACE_DICT, P.DEFAULT_HIGHWAY_SURFACE_DICT["path"]
     )
-    ps_seg = fcoalesce(_c("cycleway:surface"), _c("surface"), hw_surface)
-    dm_surface_seg = falsy(_c("cycleway:surface")) & falsy(_c("surface"))
-    psm_seg = fcoalesce(psm0, _c("cycleway:smoothness"), _c("smoothness"))
-    dm_smooth_seg = falsy(psm0) & falsy(_c("cycleway:smoothness")) & falsy(_c("smoothness"))
+    ps_seg = fcoalesce(t("cycleway:surface"), t("surface"), hw_surface)
+    dm_surface_seg = falsy(t("cycleway:surface")) & falsy(t("surface"))
+    psm_seg = fcoalesce(psm0, t("cycleway:smoothness"), t("smoothness"))
+    dm_smooth_seg = falsy(psm0) & falsy(t("cycleway:smoothness")) & falsy(t("smoothness"))
 
     default_oth = (
-        F.when(
+        when(
             wt.isin([
                 "cycle lane (advisory)", "cycle lane (exclusive)",
                 "cycle lane (protected)", "cycle lane (central)",
             ]),
-            F.lit(P.DEFAULT_CYCLEWAY_SURFACE_LANES),
+            P.DEFAULT_CYCLEWAY_SURFACE_LANES,
         )
-        .when(wt == "cycle track", F.lit(P.DEFAULT_CYCLEWAY_SURFACE_TRACKS))
+        .when(wt == "cycle track", P.DEFAULT_CYCLEWAY_SURFACE_TRACKS)
         .when(
             wt == "track or service",
             _map_lookup(
-                _c("tracktype"), P.DEFAULT_TRACK_SURFACE_DICT,
+                t("tracktype"), P.DEFAULT_TRACK_SURFACE_DICT,
                 P.DEFAULT_TRACK_SURFACE_DICT["grade3"],
             ),
         )
         .otherwise(hw_surface)
     )
-    ps_oth = F.when(truthy(_c("surface")), _c("surface")).otherwise(default_oth)
-    dm_surface_oth = falsy(_c("surface"))
-    psm_oth = fcoalesce(psm0, _c("smoothness"))
-    dm_smooth_oth = falsy(psm0) & falsy(_c("smoothness"))
+    ps_oth = when(truthy(t("surface")), t("surface")).otherwise(default_oth)
+    dm_surface_oth = falsy(t("surface"))
+    psm_oth = fcoalesce(psm0, t("smoothness"))
+    dm_smooth_oth = falsy(psm0) & falsy(t("smoothness"))
 
-    df = df.withColumns({
-        "_s_ps1": F.when(truthy(ps0), ps0).otherwise(
-            F.when(seg, ps_seg).otherwise(ps_oth)
+    df = t.put(df, {
+        "_s_ps1": when(truthy(ps0), ps0).otherwise(
+            when(seg, ps_seg).otherwise(ps_oth)
         ),
-        "_s_psm1": F.when(truthy(ps0), psm0).otherwise(
-            F.when(seg, psm_seg).otherwise(psm_oth)
+        "_s_psm1": when(truthy(ps0), psm0).otherwise(
+            when(seg, psm_seg).otherwise(psm_oth)
         ),
         "dm_surface": falsy(ps0)
-        & F.when(seg, dm_surface_seg).otherwise(dm_surface_oth),
+        & when(seg, dm_surface_seg).otherwise(dm_surface_oth),
         "dm_smoothness": falsy(ps0)
-        & F.when(seg, dm_smooth_seg).otherwise(dm_smooth_oth),
+        & when(seg, dm_smooth_seg).otherwise(dm_smooth_oth),
     })
 
-    ps1 = _c("_s_ps1")
-    ps2 = F.when(
+    ps1 = t("_s_ps1")
+    ps2 = when(
         ps1.contains(";"), weakest_surface_value(split_delimited(ps1, ";"))
     ).otherwise(ps1)
-    df = df.withColumns({
-        "proc_surface": F.when(ps2.isin(_SURFACE_KEYS), ps2),
-        "proc_smoothness": F.when(_c("_s_psm1").isin(_SMOOTHNESS_KEYS), _c("_s_psm1")),
+    df = t.put(df, {
+        "proc_surface": when(ps2.isin(_SURFACE_KEYS), ps2),
+        "proc_smoothness": when(t("_s_psm1").isin(_SMOOTHNESS_KEYS), t("_s_psm1")),
     })
-    return df.drop("_s_ps0", "_s_psm0", "_s_ps1", "_s_psm1")
+    return t.drop(df, "_s_")
 
 
 _MVP = ["motor_vehicle", "psv", "parking"]
 _SIDEPATH_TYPES = ["cycle track", "shared path", "segregated path", "shared footway"]
 
 
-def separation_stage(df: DataFrame) -> DataFrame:
+def separation_stage(df: DataFrame, t: Tags) -> DataFrame:
     """Traffic modes, separation and buffers per side
     (reference/cycling_quality_index.py:1098-1214).  The resolved tml/tmr
     chains are staged as ``_sp_*`` temp columns first: tmr embeds tml, and
     the separation/buffer rules reference both repeatedly — shared
     subtrees are duplicated per reference by analysis/Expression.sql."""
-    wt = _c("way_type")
-    side = _c("side")
+    wt = t("way_type")
+    side = t("side")
     central = wt == "cycle lane (central)"
-    is_sidepath = _c("proc_sidepath")
+    is_sidepath = t("proc_sidepath")
 
-    pl = fcoalesce(_c("parking:left"), _c("parking:both"))
-    pr = fcoalesce(_c("parking:right"), _c("parking:both"))
-    tml1 = fcoalesce(_c("traffic_mode:left"), _c("traffic_mode:both"))
-    tmr1 = fcoalesce(_c("traffic_mode:right"), _c("traffic_mode:both"))
+    pl = fcoalesce(t("parking:left"), t("parking:both"))
+    pr = fcoalesce(t("parking:right"), t("parking:both"))
+    tml1 = fcoalesce(t("traffic_mode:left"), t("traffic_mode:both"))
+    tmr1 = fcoalesce(t("traffic_mode:right"), t("traffic_mode:both"))
     park_side = ((side == "right") & truthy(pr) & neq(pr, "no")) | (
         (side == "left") & truthy(pl) & neq(pl, "no")
     )
-    tml = F.when(truthy(tml1), tml1).otherwise(
-        F.when(wt == "cycle path", "no")
+    tml = when(truthy(tml1), tml1).otherwise(
+        when(wt == "cycle path", "no")
         .when(
             wt.isin(_SIDEPATH_TYPES) & (is_sidepath == "yes"),
-            F.when(park_side & neq(tmr1, "parking"), "parking").otherwise(F.lit("motor_vehicle")),
+            when(park_side & neq(tmr1, "parking"), "parking").otherwise("motor_vehicle"),
         )
         .when(
             wt.contains("cycle lane")
             | wt.isin(["shared road", "shared traffic lane", "shared bus lane", "crossing"]),
-            F.lit("motor_vehicle"),
+            "motor_vehicle",
         )
     )
-    df = df.withColumns({"_sp_tml": tml})
-    tml = _c("_sp_tml")
-    tmr = F.when(truthy(tmr1), tmr1).otherwise(
-        F.when(wt == "cycle path", "no")
+    df = t.put(df, {"_sp_tml": tml})
+    tml = t("_sp_tml")
+    tmr = when(truthy(tmr1), tmr1).otherwise(
+        when(wt == "cycle path", "no")
         .when(wt == "crossing", "motor_vehicle")
         .when(
             wt.contains("cycle lane"),
-            F.when(park_side & neq(tml, "parking"), "parking").otherwise(F.lit("foot")),
+            when(park_side & neq(tml, "parking"), "parking").otherwise("foot"),
         )
-        .when(wt.isin(_SIDEPATH_TYPES) & (is_sidepath == "yes"), F.lit("foot"))
+        .when(wt.isin(_SIDEPATH_TYPES) & (is_sidepath == "yes"), "foot")
     )
-    df = df.withColumns({"_sp_tmr": tmr})
-    tmr = _c("_sp_tmr")
+    df = t.put(df, {"_sp_tmr": tmr})
+    tmr = t("_sp_tmr")
 
-    sl0 = fcoalesce(_c("separation:left"), _c("separation:both"))
-    sr0 = fcoalesce(_c("separation:right"), _c("separation:both"))
-    sep = _c("separation")
+    sl0 = fcoalesce(t("separation:left"), t("separation:both"))
+    sr0 = fcoalesce(t("separation:right"), t("separation:both"))
+    sep = t("separation")
     tml_mvp = tml.isin(_MVP)
     tml_not_mvp = tml.isNull() | ~tml.isin(_MVP)
     if P.RIGHT_HAND_TRAFFIC:
-        sl1 = F.when(truthy(sep) & tml_mvp & falsy(sl0), sep).otherwise(sl0)
-        sr1 = F.when(
+        sl1 = when(truthy(sep) & tml_mvp & falsy(sl0), sep).otherwise(sl0)
+        sr1 = when(
             truthy(sep) & tml_not_mvp & (tmr == "motor_vehicle") & falsy(sr0), sep
         ).otherwise(sr0)
     else:  # pragma: no cover - left-hand traffic (reference/parameter.py:8 TODO)
         tmr_mvp = tmr.isin(_MVP)
         tmr_not_mvp = tmr.isNull() | ~tmr.isin(_MVP)
-        sr1 = F.when(truthy(sep) & tmr_mvp & falsy(sr0), sep).otherwise(sr0)
-        sl1 = F.when(
+        sr1 = when(truthy(sep) & tmr_mvp & falsy(sr0), sep).otherwise(sr0)
+        sl1 = when(
             truthy(sep) & tmr_not_mvp & (tml == "motor_vehicle") & falsy(sl0), sep
         ).otherwise(sl0)
-    sl = F.when(falsy(sl1), "no").otherwise(sl1)
-    sr = F.when(falsy(sr1), "no").otherwise(sr1)
+    sl = when(falsy(sl1), "no").otherwise(sl1)
+    sr = when(falsy(sr1), "no").otherwise(sr1)
 
-    bl0 = get_number(_c("buffer:left"))
-    br0 = get_number(_c("buffer:right"))
-    bb = get_number(_c("buffer:both"))
-    b = get_number(_c("buffer"))
-    bl1 = F.when(_nonzero(bb) & ~_nonzero(bl0), bb).otherwise(bl0)
-    br1 = F.when(_nonzero(bb) & ~_nonzero(br0), bb).otherwise(br0)
+    bl0 = get_number(t("buffer:left"))
+    br0 = get_number(t("buffer:right"))
+    bb = get_number(t("buffer:both"))
+    b = get_number(t("buffer"))
+    bl1 = when(_nonzero(bb) & ~_nonzero(bl0), bb).otherwise(bl0)
+    br1 = when(_nonzero(bb) & ~_nonzero(br0), bb).otherwise(br0)
     if P.RIGHT_HAND_TRAFFIC:
-        bl2 = F.when(_nonzero(b) & tml_mvp & ~_nonzero(bl1), b).otherwise(bl1)
-        br2 = F.when(
+        bl2 = when(_nonzero(b) & tml_mvp & ~_nonzero(bl1), b).otherwise(bl1)
+        br2 = when(
             _nonzero(b) & tml_not_mvp & (tmr == "motor_vehicle") & ~_nonzero(br1), b
         ).otherwise(br1)
     else:  # pragma: no cover
         tmr_mvp = tmr.isin(_MVP)
         tmr_not_mvp = tmr.isNull() | ~tmr.isin(_MVP)
-        br2 = F.when(_nonzero(b) & tmr_mvp & ~_nonzero(br1), b).otherwise(br1)
-        bl2 = F.when(
+        br2 = when(_nonzero(b) & tmr_mvp & ~_nonzero(br1), b).otherwise(br1)
+        bl2 = when(
             _nonzero(b) & tmr_not_mvp & (tml == "motor_vehicle") & ~_nonzero(bl1), b
         ).otherwise(bl1)
 
-    df = df.withColumns({
-        "proc_traffic_mode_left": F.when(central, F.lit("motor_vehicle")).otherwise(tml),
-        "proc_traffic_mode_right": F.when(central, F.lit("motor_vehicle")).otherwise(tmr),
-        "proc_separation_left": F.when(central, F.lit(None).cast("string")).otherwise(sl),
-        "proc_separation_right": F.when(central, F.lit(None).cast("string")).otherwise(sr),
-        "proc_buffer_left": F.when(central, F.lit(None).cast("double")).otherwise(bl2),
-        "proc_buffer_right": F.when(central, F.lit(None).cast("double")).otherwise(br2),
+    df = t.put(df, {
+        "proc_traffic_mode_left": when(central, "motor_vehicle").otherwise(tml),
+        "proc_traffic_mode_right": when(central, "motor_vehicle").otherwise(tmr),
+        "proc_separation_left": when(central, null("string")).otherwise(sl),
+        "proc_separation_right": when(central, null("string")).otherwise(sr),
+        "proc_buffer_left": when(central, null("double")).otherwise(bl2),
+        "proc_buffer_right": when(central, null("double")).otherwise(br2),
     })
-    return df.drop("_sp_tml", "_sp_tmr")
+    return t.drop(df, "_sp_")
 
 
-def mandatory_expr(cols, proc_oneway: Column) -> Column:
+def mandatory_expr(t: Tags, proc_oneway: Column) -> Column:
     """proc_mandatory (reference/cycling_quality_index.py:1220-1256)."""
-    wt = _c("way_type")
-    cw, cwb, cwr = _c("cycleway"), _c("cycleway:both"), _c("cycleway:right")
+    wt = t("way_type")
+    cw, cwb, cwr = t("cycleway"), t("cycleway:both"), t("cycleway:right")
     ow_yes = proc_oneway.contains("yes")
     lane_like = (
         cw.isin(["lane", "share_busway"])
@@ -538,24 +528,24 @@ def mandatory_expr(cols, proc_oneway: Column) -> Column:
     )
     track_like = (cw == "track") | (cwb == "track") | (ow_yes & (cwr == "track"))
     roadish = (
-        F.when(
-            _c("bicycle").isin(["use_sidepath", "optional_sidepath"]), _c("bicycle")
+        when(
+            t("bicycle").isin(["use_sidepath", "optional_sidepath"]), t("bicycle")
         )
-        .when(lane_like, F.lit("use_sidepath"))
-        .when(track_like, F.lit("optional_sidepath"))
+        .when(lane_like, "use_sidepath")
+        .when(track_like, "optional_sidepath")
     )
 
     # traffic-sign evaluation: last matching token decides; within a token the
     # mandatory match overwrites the not-mandatory one (:1243-1251).
     # Lambda-free form of the token fold (an F.aggregate here is
-    # CodegenFallback and has no parseable SQL for the generated-plan fast
-    # path): sign ids contain no ';', so a substring match in the full
+    # CodegenFallback): sign ids contain no ';', so a substring match in the full
     # ','->';' normalized string never crosses a token boundary, and the
     # fold's "last defined tok_val wins, mandatory beats not-mandatory
     # within a token" is exactly: compare the LAST ';'-token index holding
     # any mandatory sign (ties included) against the last holding any
     # not-mandatory sign.
-    ts = F.replace(_c("traffic_sign"), F.lit(","), F.lit(";"))
+    traffic_sign = t("traffic_sign")
+    ts = F.replace(traffic_sign, F.lit(","), F.lit(";"))
     ts_rev = F.reverse(ts)
     ts_len = F.length(ts)
 
@@ -563,71 +553,76 @@ def mandatory_expr(cols, proc_oneway: Column) -> Column:
         # 0-based index of the last token containing ``sign``; NULL if absent
         pos_rev = F.instr(ts_rev, sign[::-1])
         prefix = ts.substr(F.lit(1), ts_len - pos_rev + 1)
-        return F.when(
+        return when(
             pos_rev > 0,
             F.length(prefix) - F.length(F.replace(prefix, F.lit(";"), F.lit(""))),
         )
 
-    m_tok = F.greatest(*[last_tok_idx(s) for s in P.MANDATORY_TRAFFIC_SIGN_LIST])
-    n_tok = F.greatest(*[last_tok_idx(s) for s in P.NOT_MANDATORY_TRAFFIC_SIGN_LIST])
-    sign_val = (
-        F.when(m_tok.isNotNull() & (n_tok.isNull() | (m_tok >= n_tok)), F.lit("yes"))
-        .when(n_tok.isNotNull(), F.lit("no"))
+    def sign_val() -> Column:
+        m_tok = F.greatest(*[last_tok_idx(s) for s in P.MANDATORY_TRAFFIC_SIGN_LIST])
+        n_tok = F.greatest(*[last_tok_idx(s) for s in P.NOT_MANDATORY_TRAFFIC_SIGN_LIST])
+        return (
+            when(m_tok.isNotNull() & (n_tok.isNull() | (m_tok >= n_tok)), "yes")
+            .when(n_tok.isNotNull(), "no")
+        )
+
+    # without a traffic_sign tag the arm is dead: skip building its tree
+    pathish = when(
+        (t("proc_sidepath") == "yes") & truthy(traffic_sign),
+        null("string") if is_null(traffic_sign) else sign_val(),
     )
-    pathish = F.when(
-        (_c("proc_sidepath") == "yes") & truthy(_c("traffic_sign")), sign_val
+    base = when(wt.isin(_ROADISH), roadish).otherwise(pathish)
+    prohibited = t("highway").isin(P.CYCLING_HIGHWAY_PROHIBITION_LIST) | (
+        t("bicycle") == "no"
     )
-    base = F.when(wt.isin(_ROADISH), roadish).otherwise(pathish)
-    prohibited = _c("highway").isin(P.CYCLING_HIGHWAY_PROHIBITION_LIST) | (
-        _c("bicycle") == "no"
-    )
-    return F.when(prohibited, F.lit("prohibited")).otherwise(base)
+    return when(prohibited, "prohibited").otherwise(base)
 
 
 def derive_attributes(df: DataFrame) -> DataFrame:
     """Apply the whole stage-4 derivation."""
-    df = df.withColumn("proc_oneway", oneway_expr())
-    df = width_stage(df)
-    df = surface_stage(df)
-    df = separation_stage(df)
-    df = df.withColumns({
-        "proc_mandatory": mandatory_expr(df.columns, F.col("proc_oneway")),
-        "proc_traffic_sign": _c("traffic_sign"),
+    t = Tags(df)
+    df = t.put(df, {"proc_oneway": oneway_expr(t)})
+    df = width_stage(df, t)
+    df = surface_stage(df, t)
+    df = separation_stage(df, t)
+    df = t.put(df, {
+        "proc_mandatory": mandatory_expr(t, t("proc_oneway")),
+        "proc_traffic_sign": t("traffic_sign"),
     })
     # usable/way-type filter columns (:1264-1278)
-    df = df.withColumns({
-        "filter_usable": F.when(
-            F.col("proc_mandatory").isin(["prohibited", "use_sidepath"]), F.lit(0)
-        ).otherwise(F.lit(1)),
+    df = t.put(df, {
+        "filter_usable": when(
+            t("proc_mandatory").isin(["prohibited", "use_sidepath"]), 0
+        ).otherwise(1),
         "filter_way_type": (
-            F.when(
-                _c("way_type").isin([
+            when(
+                t("way_type").isin([
                     "cycle path", "cycle track", "shared path", "segregated path",
                     "shared footway", "cycle lane (protected)",
                 ]),
-                F.lit("separated"),
+                "separated",
             )
             .when(
-                _c("way_type").isin([
+                t("way_type").isin([
                     "cycle lane (advisory)", "cycle lane (exclusive)",
                     "cycle lane (central)", "link", "crossing",
                 ]),
-                F.lit("cycle lanes"),
+                "cycle lanes",
             )
-            .when(_c("way_type") == "bicycle road", F.lit("bicycle road"))
+            .when(t("way_type") == "bicycle road", "bicycle road")
             .when(
-                _c("way_type").isin([
+                t("way_type").isin([
                     "shared road", "shared traffic lane", "shared bus lane",
                     "track or service",
                 ]),
-                F.lit("shared traffic"),
+                "shared traffic",
             )
         ),
-        "data_missing_width": F.when(
-            F.col("dm_width_1") | F.col("dm_width_2"), F.lit(1)
+        "data_missing_width": when(
+            t("dm_width_1") | t("dm_width_2"), 1
         ).cast("int"),
-        "data_missing_surface": F.when(F.col("dm_surface"), F.lit(1)).cast("int"),
-        "data_missing_smoothness": F.when(F.col("dm_smoothness"), F.lit(1)).cast("int"),
-        "data_missing_parking": F.when(F.col("dm_parking"), F.lit(1)).cast("int"),
+        "data_missing_surface": when(t("dm_surface"), 1).cast("int"),
+        "data_missing_smoothness": when(t("dm_smoothness"), 1).cast("int"),
+        "data_missing_parking": when(t("dm_parking"), 1).cast("int"),
     })
     return df

@@ -14,23 +14,14 @@ Mirrors reference/cycling_quality_index.py:1282-1638.  Key parity points:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.colcache import ccol, clit
-
 from .. import params as P
+from ..functions.fold import Tags, coalesce, when
 from ..functions.nulls import falsy, neq, notin, truthy
 from ..functions.rounding import pyround, pyround_int
-from ..functions.tags import get_access, joined_flags, split_delimited
-
-
-def _c(name: str) -> Column:
-    # memoized: Column leaves are immutable and each F.col is a py4j
-    # round-trip (functions/colcache.py)
-    return ccol(f"`{name}`")
+from ..functions.tags import get_access, joined_flags
 
 
 def _nonzero(c: Column) -> Column:
@@ -40,8 +31,7 @@ def _nonzero(c: Column) -> Column:
 def _map_lookup(key: Column, mapping: dict) -> Column:
     expr = None
     for k, v in mapping.items():
-        cond = key == clit(k)
-        expr = F.when(cond, clit(v)) if expr is None else expr.when(cond, clit(v))
+        expr = when(key == k, v) if expr is None else expr.when(key == k, v)
     return expr
 
 
@@ -53,28 +43,29 @@ _SHARED_4 = ["bicycle road", "shared road", "shared traffic lane", "track or ser
 
 
 def score(df: DataFrame) -> DataFrame:
-    wt = _c("way_type")
-    proc_oneway = _c("proc_oneway")
-    proc_width = _c("proc_width")
-    is_sidepath = _c("proc_sidepath")
+    t = Tags(df)
+    wt = t("way_type")
+    proc_oneway = t("proc_oneway")
+    proc_width = t("proc_width")
+    is_sidepath = t("proc_sidepath")
     # stage the access ladder + the width-calc chain first: calc_width is
     # referenced by the nonzero gate, the logistic curve (4x) and the
     # pyround shim (~6x), and analysis/Expression.sql duplicate shared
     # subtrees per reference
-    mva0 = get_access(df.columns, "motor_vehicle")
-    df = df.withColumns({"_sc_mva": mva0})
-    mva = _c("_sc_mva")
+    mva0 = get_access(t, "motor_vehicle")
+    df = t.put(df, {"_sc_mva": mva0})
+    mva = t("_sc_mva")
     mva_restricted = mva.isin(list(P.MOTOR_VEHICLE_ACCESS_INDEX_DICT.keys()))
 
     # ---- width calc (:1307-1330)
     ow_yes = proc_oneway.contains("yes")
     dedicated = notin(wt, _SHARED_5) | (mva == "no")
-    calc_ded = F.when(
+    calc_ded = when(
         _nonzero(proc_width) & ~ow_yes, proc_width / 1.6
     ).otherwise(proc_width)
-    calc_shared = F.when(
+    calc_shared = when(
         _nonzero(proc_width),
-        F.when(
+        when(
             wt == "shared traffic lane",
             F.greatest(proc_width - 2 + ((4.5 - proc_width) / 3), F.lit(0.0)),
         )
@@ -83,54 +74,54 @@ def score(df: DataFrame) -> DataFrame:
             F.greatest(proc_width - 3 + ((5.5 - proc_width) / 3), F.lit(0.0)),
         )
         .otherwise(
-            F.when(~ow_yes, proc_width / 1.6).otherwise(proc_width) - 2
+            when(~ow_yes, proc_width / 1.6).otherwise(proc_width) - 2
         ),
     ).otherwise(proc_width)
-    df = df.withColumns({
-        "_sc_calc_width": F.when(dedicated, calc_ded).otherwise(calc_shared),
+    df = t.put(df, {
+        "_sc_calc_width": when(dedicated, calc_ded).otherwise(calc_shared),
         "_sc_dedicated": dedicated,
         "_sc_mva_restricted": mva_restricted,
     })
-    calc_width = _c("_sc_calc_width")
-    mva_restricted = _c("_sc_mva_restricted")
-    minimum_factor = F.when(_c("_sc_dedicated"), F.lit(0.0)).otherwise(F.lit(0.25))
+    calc_width = t("_sc_calc_width")
+    mva_restricted = t("_sc_mva_restricted")
+    minimum_factor = when(t("_sc_dedicated"), 0.0).otherwise(0.25)
 
     # ---- width factor curve (:1331-1348)
     cw = F.greatest(F.lit(0.001), calc_width)
-    fw_raw = F.when(
+    fw_raw = when(
         (cw <= 3) | wt.isin(_SHARED_5),
         1.1 / (1 + 20 * F.exp(-2.1 * cw)),
     ).otherwise(2 / (1 + 1.8 * F.exp(-0.24 * cw)))
-    fw_raw = F.when(
+    fw_raw = when(
         wt.isin(_SHARED_4) & mva_restricted, fw_raw + ((1 - fw_raw) / 2)
     ).otherwise(fw_raw)
-    df = df.withColumns({"_sc_fwr": fw_raw})
-    fac_width = F.when(
+    df = t.put(df, {"_sc_fwr": fw_raw})
+    fac_width = when(
         _nonzero(calc_width),
-        pyround(F.greatest(minimum_factor, _c("_sc_fwr")), 3),
+        pyround(F.greatest(minimum_factor, t("_sc_fwr")), 3),
     )
 
     # ---- base index (:1292-1302)
     base_index = _map_lookup(wt, P.BASE_INDEX_DICT)
-    base_index = F.when(
+    base_index = when(
         wt.isin(_SHARED_4) & mva_restricted,
         _map_lookup(mva, P.MOTOR_VEHICLE_ACCESS_INDEX_DICT),
     ).otherwise(base_index)
 
     # ---- surface factor (:1360-1365)
-    fac_surface = F.coalesce(
-        _map_lookup(_c("proc_smoothness"), P.SMOOTHNESS_FACTOR_DICT),
-        _map_lookup(_c("proc_surface"), P.SURFACE_FACTOR_DICT),
+    fac_surface = coalesce(
+        _map_lookup(t("proc_smoothness"), P.SMOOTHNESS_FACTOR_DICT),
+        _map_lookup(t("proc_surface"), P.SURFACE_FACTOR_DICT),
     )
 
     # ---- highway/maxspeed factors (:1375-1391)
-    proc_highway = _c("proc_highway")
-    proc_maxspeed = _c("proc_maxspeed")
-    fac_highway = F.coalesce(_map_lookup(proc_highway, P.HIGHWAY_FACTOR_DICT), F.lit(1.0))
+    proc_highway = t("proc_highway")
+    proc_maxspeed = t("proc_maxspeed")
+    fac_highway = coalesce(_map_lookup(proc_highway, P.HIGHWAY_FACTOR_DICT), 1.0)
     ms_steps = F.lit(1.0)
     for threshold, factor in sorted(P.MAXSPEED_FACTOR_STEPS):  # ascending like the dict
-        ms_steps = F.when(proc_maxspeed >= threshold, F.lit(factor)).otherwise(ms_steps)
-    fac_maxspeed = F.when(_nonzero(proc_maxspeed), ms_steps).otherwise(F.lit(1.0))
+        ms_steps = when(proc_maxspeed >= threshold, factor).otherwise(ms_steps)
+    fac_maxspeed = when(_nonzero(proc_maxspeed), ms_steps).otherwise(1.0)
     dm_maxspeed = (
         ~_nonzero(proc_maxspeed)
         & (wt != "track or service")
@@ -140,7 +131,7 @@ def score(df: DataFrame) -> DataFrame:
 
     # materialize the factor columns so downstream composites reference them
     # instead of re-inlining the trees (keeps Catalyst analysis linear)
-    df = df.withColumns({
+    df = t.put(df, {
         "base_index": base_index.cast("int"),
         "fac_width": fac_width,
         "fac_surface": fac_surface,
@@ -148,49 +139,49 @@ def score(df: DataFrame) -> DataFrame:
         "fac_maxspeed": fac_maxspeed,
         "_sc_dm_maxspeed": dm_maxspeed,
     })
-    base_index = _c("base_index")
-    fac_width = _c("fac_width")
-    fac_surface = _c("fac_surface")
-    fac_highway = _c("fac_highway")
-    fac_maxspeed = _c("fac_maxspeed")
-    mva_restricted = _c("_sc_mva_restricted")
-    dm_maxspeed = _c("_sc_dm_maxspeed")
+    base_index = t("base_index")
+    fac_width = t("fac_width")
+    fac_surface = t("fac_surface")
+    fac_highway = t("fac_highway")
+    fac_maxspeed = t("fac_maxspeed")
+    mva_restricted = t("_sc_mva_restricted")
+    dm_maxspeed = t("_sc_dm_maxspeed")
 
     # ---- factor 1: width & surface, low values weighted stronger (:1463-1476)
     wfw = F.greatest(1 - fac_width, F.lit(0.0)) + 0.5
     wfs = F.greatest(1 - fac_surface, F.lit(0.0)) + 0.5
     fac_1 = (
-        F.when(
+        when(
             _nonzero(fac_width) & _nonzero(fac_surface),
             (wfw * fac_width + wfs * fac_surface) / (wfw + wfs),
         )
         .when(_nonzero(fac_width), fac_width)
         .when(_nonzero(fac_surface), fac_surface)
-        .otherwise(F.lit(1.0))
+        .otherwise(1.0)
     )
 
     # ---- factor 2: highway & maxspeed blended by way-type weight (:1478-1490)
-    weight = F.coalesce(_map_lookup(wt, P.HIGHWAY_FACTOR_DICT_WEIGHTS), F.lit(1.0))
-    weight = F.when(
+    weight = coalesce(_map_lookup(wt, P.HIGHWAY_FACTOR_DICT_WEIGHTS), 1.0)
+    weight = when(
         wt.isin(["shared path", "segregated path", "shared footway"])
         & neq(is_sidepath, "yes"),
-        F.lit(0.0),
+        0.0,
     ).otherwise(weight)
     fac_2_raw = fac_highway * fac_maxspeed
     fac_2 = fac_2_raw + ((1 - fac_2_raw) * (1 - weight))
-    fac_2 = F.when(_nonzero(fac_2), fac_2).otherwise(F.lit(1.0))
+    fac_2 = when(_nonzero(fac_2), fac_2).otherwise(1.0)
 
     # ---- factor 3 (protection level) is disabled in the reference (:1500-1502)
     fac_3 = F.lit(1.0)
 
     # ---- factor 4: bonuses / maluses (:1504-1566)
-    cw_t, cwb_t = _c("cycleway"), _c("cycleway:both")
-    cwl_t, cwr_t = _c("cycleway:left"), _c("cycleway:right")
+    cw_t, cwb_t = t("cycleway"), t("cycleway:both")
+    cwl_t, cwr_t = t("cycleway:left"), t("cycleway:right")
     sharrow = wt.isin(["shared road", "shared traffic lane"]) & (
         (cw_t == "shared_lane") | (cwb_t == "shared_lane")
         | (cwl_t == "shared_lane") | (cwr_t == "shared_lane")
     )
-    surface_colour = _c("surface:colour")
+    surface_colour = t("surface:colour")
     colour_eligible = (
         wt.contains("cycle lane")
         | wt.isin(["crossing", "shared bus lane", "link", "bicycle road"])
@@ -201,17 +192,17 @@ def score(df: DataFrame) -> DataFrame:
         & truthy(surface_colour)
         & ~surface_colour.isin(["no", "none", "grey", "gray", "black"])
     )
-    colour_bonus = F.when(
-        coloured, F.when(wt == "crossing", F.lit(0.15)).otherwise(F.lit(0.05))
-    ).otherwise(F.lit(0.0))
+    colour_bonus = when(
+        coloured, when(wt == "crossing", 0.15).otherwise(0.05)
+    ).otherwise(0.0)
 
-    crossing_t = _c("crossing")
-    crossing_markings = _c("crossing:markings")
+    crossing_t = t("crossing")
+    crossing_markings = t("crossing:markings")
     # null-safe: reference `crossing in ['traffic_signals']` is False for a
     # NULL crossing tag (:1533), so `elif` still grants the marked bonus when
     # only crossing:markings is set; a raw isin would make ~signalled NULL
-    signalled = (wt == "crossing") & F.coalesce(
-        crossing_t.isin(["traffic_signals"]), F.lit(False)
+    signalled = (wt == "crossing") & coalesce(
+        crossing_t.isin(["traffic_signals"]), False
     )
     marked = (
         (wt == "crossing")
@@ -221,16 +212,16 @@ def score(df: DataFrame) -> DataFrame:
             | (truthy(crossing_markings) & neq(crossing_markings, "no"))
         )
     )
-    lit_tag = _c("lit")
+    lit_tag = t("lit")
     unlit = lit_tag == "no"
     dm_lit = falsy(lit_tag)
     dm_crossing = (wt == "crossing") & falsy(crossing_t)
     dm_crossing_markings = (wt == "crossing") & falsy(crossing_markings)
 
-    tml = _c("proc_traffic_mode_left")
-    tmr = _c("proc_traffic_mode_right")
-    bl = _c("proc_buffer_left")
-    br = _c("proc_buffer_right")
+    tml = t("proc_traffic_mode_left")
+    tmr = t("proc_traffic_mode_right")
+    bl = t("proc_buffer_left")
+    br = t("proc_buffer_right")
     dooring_eligible = wt.contains("cycle lane") | (
         wt.isin(["cycle track", "shared path", "segregated path"]) & (is_sidepath == "yes")
     )
@@ -243,42 +234,42 @@ def score(df: DataFrame) -> DataFrame:
     # divergence; falling back to the single-side formula keeps the index
     # non-NULL for a row whose dooring trigger was satisfied by the other side)
     diff = (
-        F.when(
+        when(
             (tml == "parking") & (tmr == "parking") & _nonzero(bl) & _nonzero(br),
             F.abs(((bl + br) / 2) - 1) / 5,
         )
         .when((tmr == "parking") & _nonzero(br), F.abs(br - 1) / 5)
         .when((tml == "parking") & _nonzero(bl), F.abs(bl - 1) / 5)
-        .otherwise(F.lit(0.0))
+        .otherwise(0.0)
     )
-    permissive = _c("bicycle") == "permissive"
+    permissive = t("bicycle") == "permissive"
 
     fac_4 = (
         F.lit(1.0)
-        + F.when(sharrow, 0.1).otherwise(0.0)
+        + when(sharrow, 0.1).otherwise(0.0)
         + colour_bonus
-        + F.when(signalled, 0.2).when(marked, 0.1).otherwise(0.0)
-        - F.when(unlit, 0.1).otherwise(0.0)
-        - F.when(dooring, diff).otherwise(0.0)
-        - F.when(permissive, 0.2).otherwise(0.0)
+        + when(signalled, 0.2).when(marked, 0.1).otherwise(0.0)
+        - when(unlit, 0.1).otherwise(0.0)
+        - when(dooring, diff).otherwise(0.0)
+        - when(permissive, 0.2).otherwise(0.0)
     )
 
     # stage the unrounded factors as temp columns (index must use unrounded
     # values while the written fac_* columns are rounded, :1476,1490,1566-1568)
-    df = df.withColumns({
+    df = t.put(df, {
         "_sc_fac1": fac_1,
         "_sc_fac2": fac_2,
         "_sc_fac4": fac_4,
         "_sc_weight": weight,
     })
-    fac_1 = _c("_sc_fac1")
-    fac_2 = _c("_sc_fac2")
-    fac_4 = _c("_sc_fac4")
-    weight = _c("_sc_weight")
+    fac_1 = t("_sc_fac1")
+    fac_2 = t("_sc_fac2")
+    fac_4 = t("_sc_fac4")
+    weight = t("_sc_weight")
 
     # ---- index (:1460-1576)
     index_f = base_index * fac_1 * fac_2 * fac_3 * fac_4
-    index = F.when(
+    index = when(
         base_index.isNotNull(),
         pyround_int(F.greatest(F.least(F.lit(100.0), index_f), F.lit(0.0))),
     )
@@ -286,47 +277,47 @@ def score(df: DataFrame) -> DataFrame:
 
     # ---- LTS (:1583-1626)
     lts = (
-        F.when(
+        when(
             wt.isin(["cycle path", "cycle track", "segregated path", "cycle lane (protected)"]),
-            F.lit(1),
+            1,
         )
         .when(
             wt.isin(["shared path", "shared footway"]),
-            F.when(
+            when(
                 notin(proc_oneway, ["yes", "-1"])
                 & _nonzero(proc_width) & (proc_width < 3)
                 & _nonzero(proc_maxspeed) & (proc_maxspeed > 30),
-                F.lit(3),
-            ).otherwise(F.lit(1)),
+                3,
+            ).otherwise(1),
         )
         .when(
             wt.isin([
                 "cycle lane (advisory)", "cycle lane (central)", "shared bus lane",
                 "link", "crossing",
             ]),
-            F.when(_nonzero(proc_maxspeed) & (proc_maxspeed <= 10), 1)
+            when(_nonzero(proc_maxspeed) & (proc_maxspeed <= 10), 1)
             .when(_nonzero(proc_maxspeed) & (proc_maxspeed <= 30), 2)
             .when(_nonzero(proc_width) & (proc_width >= 1.5), 3)
-            .otherwise(F.lit(4)),
+            .otherwise(4),
         )
         .when(
             wt == "cycle lane (exclusive)",
-            F.when(_nonzero(proc_maxspeed) & (proc_maxspeed <= 10), 1)
+            when(_nonzero(proc_maxspeed) & (proc_maxspeed <= 10), 1)
             .when(
                 _nonzero(proc_maxspeed) & (proc_maxspeed <= 50)
                 & _nonzero(proc_width) & (proc_width >= 1.85),
                 2,
             )
-            .otherwise(F.lit(3)),
+            .otherwise(3),
         )
         .when(
             wt.isin(["bicycle road", "shared road", "shared traffic lane"]),
-            F.when((wt == "bicycle road") & mva_restricted, F.lit(1)).otherwise(
-                F.when(
+            when((wt == "bicycle road") & mva_restricted, 1).otherwise(
+                when(
                     _nonzero(proc_maxspeed) & (proc_maxspeed <= 10)
                     & proc_highway.isin(["residential", "living_street"])
-                    & (falsy(_c("priority_road")) | (_c("priority_road") == "no")),
-                    F.lit(1),
+                    & (falsy(t("priority_road")) | (t("priority_road") == "no")),
+                    1,
                 )
                 .when(
                     _nonzero(proc_maxspeed) & (proc_maxspeed <= 30)
@@ -334,26 +325,26 @@ def score(df: DataFrame) -> DataFrame:
                         "tertiary", "tertiary_link", "unclassified", "road",
                         "residential", "living_street",
                     ]),
-                    F.lit(2),
+                    2,
                 )
-                .otherwise(F.lit(4))
+                .otherwise(4)
             ),
         )
         .when(
             wt == "track or service",
-            F.when(_nonzero(proc_maxspeed) & (proc_maxspeed <= 10), 1).otherwise(F.lit(2)),
+            when(_nonzero(proc_maxspeed) & (proc_maxspeed <= 10), 1).otherwise(2),
         )
         .cast("int")
     )
 
     # ---- data_missing accumulation in reference append order
     dm_pairs = [
-        (_c("dm_width_lanes"), "width:lanes"),
-        (_c("dm_width_1"), "width"),
-        (_c("dm_width_2"), "width"),
-        (_c("dm_parking"), "parking"),
-        (_c("dm_surface"), "surface"),
-        (_c("dm_smoothness"), "smoothness"),
+        (t("dm_width_lanes"), "width:lanes"),
+        (t("dm_width_1"), "width"),
+        (t("dm_width_2"), "width"),
+        (t("dm_parking"), "parking"),
+        (t("dm_surface"), "surface"),
+        (t("dm_smoothness"), "smoothness"),
         (dm_maxspeed, "maxspeed"),
         (dm_crossing, "crossing"),
         (dm_crossing_markings, "crossing_markings"),
@@ -370,7 +361,7 @@ def score(df: DataFrame) -> DataFrame:
     incompleteness = F.lit(0.0)
     for flag, tok in dm_pairs:
         w = P.DATA_INCOMPLETENESS_DICT.get(tok, 0.0)
-        incompleteness = incompleteness + F.when(flag, F.lit(w)).otherwise(F.lit(0.0))
+        incompleteness = incompleteness + when(flag, w).otherwise(0.0)
 
     # ---- data bonus/malus strings in reference append order
     bonus = joined_flags([
@@ -396,19 +387,19 @@ def score(df: DataFrame) -> DataFrame:
     # NOTE: every kept row's way_type is in BASE_INDEX_DICT, so the
     # `if base_index != NULL` guard (:1462) always holds; the fac_4 appends
     # above therefore materialize unconditionally, like the reference.
-    df = df.withColumns({
-        "fac_1": F.when(base_index.isNotNull(), pyround(fac_1, 2)),
-        "fac_2": F.when(base_index.isNotNull(), pyround(fac_2, 2)),
-        "fac_3": F.when(base_index.isNotNull(), pyround(fac_3, 2)),
-        "fac_4": F.when(base_index.isNotNull(), pyround(fac_4, 2)),
+    df = t.put(df, {
+        "fac_1": when(base_index.isNotNull(), pyround(fac_1, 2)),
+        "fac_2": when(base_index.isNotNull(), pyround(fac_2, 2)),
+        "fac_3": when(base_index.isNotNull(), pyround(fac_3, 2)),
+        "fac_4": when(base_index.isNotNull(), pyround(fac_4, 2)),
         "index": index,
         "index_10": index_10,
         "stress_level": lts,
         "data_missing": dm,
-        "data_missing_maxspeed": F.when(dm_maxspeed, F.lit(1)).cast("int"),
-        "data_missing_lit": F.when(dm_lit, F.lit(1)).cast("int"),
+        "data_missing_maxspeed": when(dm_maxspeed, 1).cast("int"),
+        "data_missing_lit": when(dm_lit, 1).cast("int"),
         "data_incompleteness": incompleteness,
         "data_bonus": bonus,
         "data_malus": malus,
     })
-    return df.drop(*[c for c in df.columns if c.startswith("_sc_")])
+    return t.drop(df, "_sc_")

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import params as P
+from ..functions.fold import Tags
 from ..functions.nulls import truthy
 from ..functions.tags import get_number, normalize_maxspeed
 from ..geo.cols import hex_cell_cols
@@ -192,24 +193,30 @@ def sidepath_stage(df: DataFrame) -> DataFrame:
     layout never affects results."""
     from .dedup import fan_out
 
+    t = Tags(df)
+    # the vote join reads these tags by name: an absent one is a NULL column
+    missing = [n for n in ("layer", "name", "maxspeed") if n not in t]
+    if missing:
+        df = df.withColumns({n: F.lit(None).cast("string") for n in missing})
     df = fan_out(df)
-    is_path = F.col("highway").isin(P.PATH_HIGHWAY_LIST)
+    highway = t("highway")
+    is_path = highway.isin(P.PATH_HIGHWAY_LIST)
     paths = df.filter(is_path)
     # P4: QGIS `IS NOT` keeps NULL highway in the roads layer (:219)
     roads = df.filter(
-        F.col("highway").isNull() | ~F.col("highway").isin(P.PATH_HIGHWAY_LIST + ["track"])
+        highway.isNull() | ~highway.isin(P.PATH_HIGHWAY_LIST + ["track"])
     )
     votes = sidepath_votes(paths, roads)
 
     out = df.join(votes, "id", "left")
 
-    tag = F.col("is_sidepath")
-    tag = F.when(F.col("footway") == "sidewalk", F.lit("yes")).otherwise(tag)
+    tag = t("is_sidepath")
+    tag = F.when(t("footway") == "sidewalk", F.lit("yes")).otherwise(tag)
     proc_sidepath = F.when(
         truthy(tag), tag
     ).otherwise(F.when(F.col("vote_yes"), F.lit("yes")).otherwise(F.lit("no")))
 
-    is_sidepath_of = F.when(truthy(F.col("is_sidepath:of")), F.col("is_sidepath:of")).otherwise(
+    is_sidepath_of = F.when(truthy(t("is_sidepath:of")), t("is_sidepath:of")).otherwise(
         F.when(proc_sidepath == "yes", F.col("derived_class"))
     )
     vote_ms = F.col("class_maxspeeds").getItem(
@@ -222,10 +229,10 @@ def sidepath_stage(df: DataFrame) -> DataFrame:
 
     out = out.withColumns({
         "proc_sidepath": F.when(is_path, proc_sidepath),
-        "proc_highway": F.when(is_path, is_sidepath_of).otherwise(F.col("highway")),
+        "proc_highway": F.when(is_path, is_sidepath_of).otherwise(highway),
         "proc_maxspeed": F.when(
             is_path, path_maxspeed
-        ).otherwise(normalize_maxspeed(F.col("maxspeed"), F.col("highway"))).cast("int"),
+        ).otherwise(normalize_maxspeed(F.col("maxspeed"), highway)).cast("int"),
         "name": F.when(
             is_path & (proc_sidepath == "yes") & truthy(F.col("vote_name")),
             F.col("vote_name"),

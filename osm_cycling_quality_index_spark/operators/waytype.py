@@ -16,10 +16,8 @@ QGIS truthiness notes honoured here:
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.colcache import ccol
-
+from ..functions.fold import Tags, coalesce, known, marked_id, when
 from ..functions.nulls import falsy, neq, notin, truthy
 from ..functions.tags import derive_separation, get_access
 
@@ -31,79 +29,81 @@ _ALLOWED_BICYCLE_ACCESS = [
 _FOOTWAY_LIKE = ["footway", "pedestrian", "bridleway", "steps"]
 
 
-def _c(name: str) -> Column:
-    # memoized: Column leaves are immutable and each F.col is a py4j
-    # round-trip (functions/colcache.py)
-    return ccol(f"`{name}`")
-
-
-def _side_tag(base: str, value, side: Column) -> Column:
+def _side_tag(t: Tags, base: str, value, side: Column) -> Column:
     """``cycleway == v or cycleway:both == v or (side=='right' and
     cycleway:right == v) or (side=='left' and cycleway:left == v)`` — the
     side-aware tag test used throughout the road branch
     (e.g. reference/cycling_quality_index.py:617,635,665)."""
     vals = value if isinstance(value, list) else [value]
     return (
-        _c(base).isin(vals)
-        | _c(f"{base}:both").isin(vals)
-        | ((side == "right") & _c(f"{base}:right").isin(vals))
-        | ((side == "left") & _c(f"{base}:left").isin(vals))
+        t(base).isin(vals)
+        | t(f"{base}:both").isin(vals)
+        | ((side == "right") & t(f"{base}:right").isin(vals))
+        | ((side == "left") & t(f"{base}:left").isin(vals))
     )
 
 
-def access_filter(df: DataFrame) -> DataFrame:
+def access_filter(df: DataFrame, t: Tags) -> DataFrame:
     """Row filters of reference/cycling_quality_index.py:516-521 and the
     restricted-footway deletion at :546-550 (P5-P7)."""
     def _holds(c: Column) -> Column:
         # a NULL predicate must mean "condition does not hold", not "drop
         # the row" — df.filter discards NULL results
-        return F.coalesce(c, F.lit(False))
+        return coalesce(c, False)
 
-    bike = get_access(df, "bicycle")
+    bike = get_access(t, "bicycle")
     keep_access = falsy(bike) | bike.isin(_ALLOWED_BICYCLE_ACCESS)
     keep_informal = ~_holds(
-        (_c("highway") == "path") & (_c("informal") == "yes") & _c("bicycle").isNull()
+        (t("highway") == "path") & (t("informal") == "yes") & t("bicycle").isNull()
     )
-    override = _override_way_type()
+    override = _override_way_type(t)
     # footway-like rows that would fall into the shared-footway branch with
     # restricted bicycle access are deleted inside the tree (:550)
     keep_footway = ~_holds(
         override.isNull()
-        & _c("highway").isin(_FOOTWAY_LIKE)
-        & notin(_c("bicycle"), _YDP)
+        & t("highway").isin(_FOOTWAY_LIKE)
+        & notin(t("bicycle"), _YDP)
     )
-    return df.filter(_holds(keep_access) & keep_informal & keep_footway)
+    keep = _holds(keep_access) & keep_informal & keep_footway
+    k = known(keep)
+    if k is not None and k.value is True:
+        return df
+    if "id" in t:
+        # a conjunct that holds on every row keeps the filter, with its tag
+        # tree, per-operator like the stages' projections (fold.per_operator)
+        keep = keep & marked_id().eqNullSafe(t("id"))
+    return df.filter(keep)
 
 
-def _override_way_type() -> Column:
+def _override_way_type(t: Tags) -> Column:
     """bicycle_road / link / crossing overrides
     (reference/cycling_quality_index.py:533-541); later assignments in the
     reference win, so priority is crossing > link > bicycle road."""
     link = (
-        (_c("footway") == "link") | (_c("cycleway") == "link")
-        | (_c("path") == "link") | (_c("bridleway") == "link")
+        (t("footway") == "link") | (t("cycleway") == "link")
+        | (t("path") == "link") | (t("bridleway") == "link")
     )
     crossing = (
-        (_c("footway") == "crossing") | (_c("cycleway") == "crossing")
-        | (_c("path") == "crossing") | (_c("bridleway") == "crossing")
+        (t("footway") == "crossing") | (t("cycleway") == "crossing")
+        | (t("path") == "crossing") | (t("bridleway") == "crossing")
     )
-    bicycle_road = (_c("bicycle_road") == "yes") & falsy(_c("side"))
+    bicycle_road = (t("bicycle_road") == "yes") & falsy(t("side"))
     return (
-        F.when(crossing, F.lit("crossing"))
-        .when(link, F.lit("link"))
-        .when(bicycle_road, F.lit("bicycle road"))
+        when(crossing, "crossing")
+        .when(link, "link")
+        .when(bicycle_road, "bicycle road")
     )
 
 
-def way_type_expr(cols) -> Column:
+def way_type_expr(t: Tags) -> Column:
     """The full classifier as a single expression
     (reference/cycling_quality_index.py:523-684)."""
-    highway = _c("highway")
-    side = _c("side")
-    bicycle = _c("bicycle")
-    foot = _c("foot")
-    sep_foot = derive_separation(cols, "foot")
-    sep_mv = derive_separation(cols, "motor_vehicle")
+    highway = t("highway")
+    side = t("side")
+    bicycle = t("bicycle")
+    foot = t("foot")
+    sep_foot = derive_separation(t, "foot")
+    sep_mv = derive_separation(t, "motor_vehicle")
     #: `not separation_motor_vehicle in [NULL,'no','none']` (:580,623,657) —
     #: NULL fails, '' passes (it is not in the list), mirroring Python.
     sep_mv_present = sep_mv.isNotNull() & ~sep_mv.isin(["no", "none"])
@@ -112,109 +112,110 @@ def way_type_expr(cols) -> Column:
     # cycleway branch tail shared by highway=cycleway (:567-588) and the
     # road cycle-track branch (:652-663)
     def track_tail() -> Column:
-        return F.when(
+        return when(
             sep_mv_present,
-            F.when(sep_mv_kerbish, "cycle track").otherwise("cycle lane (protected)"),
-        ).otherwise(F.lit("cycle track"))
+            when(sep_mv_kerbish, "cycle track").otherwise("cycle lane (protected)"),
+        ).otherwise("cycle track")
 
-    cycleway_branch = F.when(foot.isin(_YDP), "shared path").otherwise(
-        F.when(sep_foot == "no", "segregated path").otherwise(
-            F.when(
-                notin(_c("is_sidepath"), ["yes", "no"]),
-                F.when(_c("proc_sidepath") == "yes", "cycle track").otherwise("cycle path"),
+    cycleway_branch = when(foot.isin(_YDP), "shared path").otherwise(
+        when(sep_foot == "no", "segregated path").otherwise(
+            when(
+                notin(t("is_sidepath"), ["yes", "no"]),
+                when(t("proc_sidepath") == "yes", "cycle track").otherwise("cycle path"),
             )
-            .when(_c("is_sidepath") == "yes", track_tail())
-            .otherwise(F.lit("cycle path"))
+            .when(t("is_sidepath") == "yes", track_tail())
+            .otherwise("cycle path")
         )
     )
 
     lane_exclusive = (
-        (_c("cycleway:lane") == "exclusive")
-        | (_c("cycleway:both:lane") == "exclusive")
-        | ((side == "right") & (_c("cycleway:right:lane") == "exclusive"))
-        | ((side == "left") & (_c("cycleway:left:lane") == "exclusive"))
+        (t("cycleway:lane") == "exclusive")
+        | (t("cycleway:both:lane") == "exclusive")
+        | ((side == "right") & (t("cycleway:right:lane") == "exclusive"))
+        | ((side == "left") & (t("cycleway:left:lane") == "exclusive"))
     )
-    lane_branch = F.when(
-        truthy(_c("cycleway:lanes")) & _c("cycleway:lanes").contains("no|lane|no"),
-        F.lit("cycle lane (central)"),
+    lane_branch = when(
+        truthy(t("cycleway:lanes")) & t("cycleway:lanes").contains("no|lane|no"),
+        "cycle lane (central)",
     ).otherwise(
-        F.when(sep_mv_present, "cycle lane (protected)").otherwise(
-            F.when(lane_exclusive, "cycle lane (exclusive)").otherwise(
-                F.lit("cycle lane (advisory)")
+        when(sep_mv_present, "cycle lane (protected)").otherwise(
+            when(lane_exclusive, "cycle lane (exclusive)").otherwise(
+                "cycle lane (advisory)"
             )
         )
     )
 
     # segregated tests use the cycleway:segregated family (:643-650)
     seg_yes = (
-        (_c("cycleway:segregated") == "yes") | (_c("cycleway:both:segregated") == "yes")
-        | ((side == "right") & (_c("cycleway:right:segregated") == "yes"))
-        | ((side == "left") & (_c("cycleway:left:segregated") == "yes"))
+        (t("cycleway:segregated") == "yes") | (t("cycleway:both:segregated") == "yes")
+        | ((side == "right") & (t("cycleway:right:segregated") == "yes"))
+        | ((side == "left") & (t("cycleway:left:segregated") == "yes"))
     )
     seg_no = (
-        (_c("cycleway:segregated") == "no") | (_c("cycleway:both:segregated") == "no")
-        | ((side == "right") & (_c("cycleway:right:segregated") == "no"))
-        | ((side == "left") & (_c("cycleway:left:segregated") == "no"))
+        (t("cycleway:segregated") == "no") | (t("cycleway:both:segregated") == "no")
+        | ((side == "right") & (t("cycleway:right:segregated") == "no"))
+        | ((side == "left") & (t("cycleway:left:segregated") == "no"))
     )
-    track_branch = F.when(
-        _c("cycleway:foot").isin(_YDP)
-        | _c("cycleway:both:foot").isin(_YDP)
-        | ((side == "right") & _c("cycleway:right:foot").isin(_YDP))
-        | ((side == "left") & _c("cycleway:left:foot").isin(_YDP)),
-        F.lit("shared path"),
+    track_branch = when(
+        t("cycleway:foot").isin(_YDP)
+        | t("cycleway:both:foot").isin(_YDP)
+        | ((side == "right") & t("cycleway:right:foot").isin(_YDP))
+        | ((side == "left") & t("cycleway:left:foot").isin(_YDP)),
+        "shared path",
     ).otherwise(
-        F.when(seg_yes, "segregated path")
+        when(seg_yes, "segregated path")
         .when(seg_no, "shared path")
         .otherwise(
-            F.when(sep_foot == "no", "segregated path").otherwise(track_tail())
+            when(sep_foot == "no", "segregated path").otherwise(track_tail())
         )
     )
 
     sidewalk_bike_yes = (
-        (_c("sidewalk:bicycle") == "yes") | (_c("sidewalk:both:bicycle") == "yes")
-        | ((side == "right") & (_c("sidewalk:right:bicycle") == "yes"))
-        | ((side == "left") & (_c("sidewalk:left:bicycle") == "yes"))
+        (t("sidewalk:bicycle") == "yes") | (t("sidewalk:both:bicycle") == "yes")
+        | ((side == "right") & (t("sidewalk:right:bicycle") == "yes"))
+        | ((side == "left") & (t("sidewalk:left:bicycle") == "yes"))
     )
 
     def shared_road(markings_classes) -> Column:
-        lm = _c("lane_markings")
-        return F.when(
+        lm = t("lane_markings")
+        return when(
             (lm == "yes") | (neq(lm, "yes") & highway.isin(markings_classes)),
-            F.lit("shared traffic lane"),
-        ).otherwise(F.lit("shared road"))
+            "shared traffic lane",
+        ).otherwise("shared road")
 
-    road_with_side = F.when(_c("type") == "sidewalk", "shared footway").otherwise(
-        F.when(_side_tag("cycleway", "lane", side), lane_branch)
-        .when(_side_tag("cycleway", "track", side), track_branch)
-        .when(_side_tag("cycleway", "share_busway", side), F.lit("shared bus lane"))
+    road_with_side = when(t("type") == "sidewalk", "shared footway").otherwise(
+        when(_side_tag(t, "cycleway", "lane", side), lane_branch)
+        .when(_side_tag(t, "cycleway", "track", side), track_branch)
+        .when(_side_tag(t, "cycleway", "share_busway", side), "shared bus lane")
         .otherwise(
-            F.when(sidewalk_bike_yes, "shared footway").otherwise(
+            when(sidewalk_bike_yes, "shared footway").otherwise(
                 shared_road(["primary", "secondary"])
             )
         )
     )
 
     main_tree = (
-        F.when(highway.isin(_FOOTWAY_LIKE), F.when(bicycle.isin(_YDP), "shared footway"))
+        when(highway.isin(_FOOTWAY_LIKE), when(bicycle.isin(_YDP), "shared footway"))
         .when(
             highway == "path",
-            F.when((foot == "designated") & neq(bicycle, "designated"), "shared footway").otherwise(
-                F.when(_c("segregated") == "yes", "segregated path").otherwise(F.lit("shared path"))
+            when((foot == "designated") & neq(bicycle, "designated"), "shared footway").otherwise(
+                when(t("segregated") == "yes", "segregated path").otherwise("shared path")
             ),
         )
         .when(highway == "cycleway", cycleway_branch)
-        .when(highway.isin(["service", "track"]), F.lit("track or service"))
+        .when(highway.isin(["service", "track"]), "track or service")
         .otherwise(
-            F.when(
+            when(
                 falsy(side), shared_road(["motorway", "trunk", "primary", "secondary"])
             ).otherwise(road_with_side)
         )
     )
 
-    return F.coalesce(_override_way_type(), main_tree)
+    return coalesce(_override_way_type(t), main_tree)
 
 
 def classify(df: DataFrame) -> DataFrame:
     """Apply access filters then assign ``way_type``."""
-    out = access_filter(df)
-    return out.withColumn("way_type", way_type_expr(out.columns))
+    t = Tags(df)
+    out = access_filter(df, t)
+    return t.put(out, {"way_type": way_type_expr(t)})

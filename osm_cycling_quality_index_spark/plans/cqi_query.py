@@ -95,36 +95,19 @@ def _ways_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cqi_score_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fast path: replay the committed SQL stage text (plans/cqi_sql_gen.py,
-    generated from the analyzed plan of :func:`q_cqi_score_ways_built` by
-    tools/gen_cqi_sql.py) with one ``selectExpr``/``where`` per stage.
-
-    The builder path costs ~10^4 py4j round-trips (~0.65 ms each on this
-    box) to CONSTRUCT the plan — a several-second driver-side floor per
-    invocation, independent of data volume.  The replay costs ~20 calls;
-    the analyzed plans are identical (same staging, same resolved
-    expressions — ``Expression.sql()`` is the view-persistence mechanism),
-    pinned by tests/test_round4.py: regenerated text == committed text and
-    fast-path rows == builder rows bit-for-bit."""
-    from .cqi_sql_gen import CQI_STAGES
-    from .sqlgen import parquet_base_sql, replay_session, replay_stages
-
-    spark = replay_session(spark)  # codegen-off child; see replay_session
-    return replay_stages(
-        spark, parquet_base_sql(spark, f"{sf_dir}/lineitem.parquet"),
-        CQI_STAGES,
-    )
+    """The CQI scalar chain (conform -> classify -> derive -> score) over
+    the synthesized ways."""
+    return score_ways(_ways_df(spark, sf_dir))
 
 
-def q_cqi_score_ways_built(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Column-builder pipeline (conform -> classify -> derive -> score)
-    — the cited source of truth the fast path is generated from."""
-    from ..operators.conform import conform_ways
+def score_ways(ways: DataFrame) -> DataFrame:
+    """Score a ways frame with the query's simulated stage-1 outputs."""
+    from ..operators.conform import conform_ways, retain
     from ..operators.derive import derive_attributes
     from ..operators.scoring import score
     from ..operators.waytype import classify
 
-    df = conform_ways(_ways_df(spark, sf_dir), keep_geometry=False)
+    df = conform_ways(ways, keep_geometry=False)
     pathlike = F.col("highway").isin(_PATHLIKE)
     df = df.withColumns({
         # simulated stage-1 outputs (the geometric vote is exercised by
@@ -138,7 +121,7 @@ def q_cqi_score_ways_built(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(normalize_maxspeed(F.col("maxspeed"), F.col("highway"))).cast("int"),
     })
     out = score(derive_attributes(classify(df)))
-    return out.select(
+    return retain(out, [
         "id", "way_type", "proc_width", "proc_surface", "proc_smoothness",
         "proc_oneway", "proc_sidepath", "proc_highway", "proc_maxspeed",
         "proc_traffic_mode_left", "proc_traffic_mode_right",
@@ -151,7 +134,7 @@ def q_cqi_score_ways_built(spark: SparkSession, sf_dir: str) -> DataFrame:
         "data_missing_width", "data_missing_surface", "data_missing_smoothness",
         "data_missing_maxspeed", "data_missing_parking", "data_missing_lit",
         "filter_usable", "filter_way_type",
-    )
+    ])
 
 
 # ---------------------------------------------------------------------------

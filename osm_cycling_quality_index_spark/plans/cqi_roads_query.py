@@ -89,29 +89,19 @@ def _ways_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cqi_score_roads_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fast path: one nested spark.sql over the committed stage text
-    (plans/cqi_sql_gen.py CQI_ROADS_STAGES) — same mechanism and
-    rationale as plans/cqi_query.q_cqi_score_ways; text and results are
-    pinned to :func:`q_cqi_score_roads_full_built` by tests/test_round4.py."""
-    from .cqi_sql_gen import CQI_ROADS_STAGES
-    from .sqlgen import parquet_base_sql, replay_session, replay_stages
-
-    spark = replay_session(spark)  # codegen-off child; see replay_session
-    return replay_stages(
-        spark, parquet_base_sql(spark, f"{sf_dir}/orders.parquet"),
-        CQI_ROADS_STAGES,
-    )
+    """The CQI scalar chain (conform -> classify -> derive -> score) over
+    the synthesized roads."""
+    return score_roads(_ways_df(spark, sf_dir))
 
 
-def q_cqi_score_roads_full_built(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Column-builder pipeline — the cited source of truth the fast
-    path is generated from."""
-    from ..operators.conform import conform_ways
+def score_roads(ways: DataFrame) -> DataFrame:
+    """Score a roads frame with the query's simulated stage-1 outputs."""
+    from ..operators.conform import conform_ways, retain
     from ..operators.derive import derive_attributes
     from ..operators.scoring import score
     from ..operators.waytype import classify
 
-    df = conform_ways(_ways_df(spark, sf_dir), keep_geometry=False)
+    df = conform_ways(ways, keep_geometry=False)
     df = df.withColumns({
         "proc_highway": F.col("highway"),
         "proc_maxspeed": normalize_maxspeed(
@@ -119,7 +109,7 @@ def q_cqi_score_roads_full_built(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("int"),
     })
     out = score(derive_attributes(classify(df)))
-    return out.select(
+    return retain(out, [
         "id", "way_type", "proc_oneway", "proc_width", "proc_surface",
         "proc_maxspeed", "proc_mandatory",
         "fac_width", "fac_surface", "fac_maxspeed",
@@ -127,7 +117,7 @@ def q_cqi_score_roads_full_built(spark: SparkSession, sf_dir: str) -> DataFrame:
         "index", "index_10", "stress_level",
         "data_missing", "data_incompleteness",
         "data_missing_width", "data_missing_parking", "filter_usable",
-    )
+    ])
 
 
 # ---------------------------------------------------------------------------

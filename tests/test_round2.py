@@ -49,21 +49,6 @@ def test_tm_vs_equirect_distance_bound():
 
 
 # ---------------------------------------------------------------------------
-# production fingerprint == oracle fingerprint
-# ---------------------------------------------------------------------------
-
-def test_fingerprint_fast_matches(spark):
-    from osm_cycling_quality_index_spark.functions.text import (
-        fingerprint, fingerprint_fast,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = fingerprint(docs)
-    b = fingerprint_fast(docs)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-# ---------------------------------------------------------------------------
 # streaming tumbling == batch tumbling
 # ---------------------------------------------------------------------------
 

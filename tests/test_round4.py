@@ -214,47 +214,124 @@ def test_xxhash_mode_simhash_exhaustive(spark):
 
 
 # ---------------------------------------------------------------------------
-# cqi_score_ways generated-SQL fast path
+# build-time folding of absent tags (functions/fold.py)
 # ---------------------------------------------------------------------------
 
-def test_cqi_sql_gen_text_current():
-    """The committed SQL stage text (plans/cqi_sql_gen.py) regenerates
-    bit-identically from the Column-builder pipeline — i.e. nobody changed
-    conform/classify/derive/score without re-running tools/gen_cqi_sql.py."""
-    spec = importlib.util.spec_from_file_location(
-        "gen_cqi_sql", REPO / "tools" / "gen_cqi_sql.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    regenerated = mod.render(mod.generate())
-    committed = (REPO / "osm_cycling_quality_index_spark" / "plans"
-                 / "cqi_sql_gen.py").read_text()
-    assert regenerated == committed, (
-        "plans/cqi_sql_gen.py is stale — run python tools/gen_cqi_sql.py")
+def _widen(df):
+    """``df`` with every allow-listed column it lacks as a real NULL column
+    (tags as strings, pipeline columns as their types): the same input with
+    nothing absent, so nothing folds."""
+    from pyspark.sql import functions as F
+
+    from osm_cycling_quality_index_spark import params as P
+
+    have = set(df.columns)
+    add = {n: F.lit(None).cast("string") for n in P.ATTRIBUTES_LIST if n not in have}
+    add.update({n: F.lit(None).cast(t)
+                for n, t in P.NEW_ATTRIBUTES_TYPES.items() if n not in have})
+    return df.withColumns(add)
 
 
-def test_cqi_fast_path_bit_equal(spark):
-    """Fast paths (single nested spark.sql over the committed stage text)
-    return exactly the builder paths' rows and columns."""
-    from osm_cycling_quality_index_spark.plans.cqi_query import (
-        q_cqi_score_ways, q_cqi_score_ways_built,
-    )
-    from osm_cycling_quality_index_spark.plans.cqi_roads_query import (
-        q_cqi_score_roads_full, q_cqi_score_roads_full_built,
-    )
+def _assert_folds_exactly(build, ways):
+    """The build over ``ways`` equals the build over the widened input:
+    names, order and types of the columns, and every row bit for bit
+    (floats compare by repr, so -0.0 != 0.0)."""
+    narrow, wide = build(ways), build(_widen(ways))
+    assert narrow.dtypes == wide.dtypes
+    rows = [sorted(tuple(map(repr, r)) for r in d.collect()) for d in (narrow, wide)]
+    assert rows[0] == rows[1]
+    return rows[0]
 
-    def key(r):
-        return tuple((v is None, type(v).__name__, repr(v)) for v in r)
 
-    for fast, built in [
-        (q_cqi_score_ways, q_cqi_score_ways_built),
-        (q_cqi_score_roads_full, q_cqi_score_roads_full_built),
+def test_cqi_fold_bit_equal(spark):
+    """Registry inputs and the synthetic city through the full pipeline:
+    the narrow build folds most of the chain away and changes no bit."""
+    from osm_cycling_quality_index_spark.operators.conform import conform_ways
+    from osm_cycling_quality_index_spark.operators.pipeline import cqi_pipeline
+    from osm_cycling_quality_index_spark.plans import cqi_query, cqi_roads_query
+    from osm_cycling_quality_index_spark.sources.synth import ways_df
+
+    for build, ways in [
+        (cqi_query.score_ways, cqi_query._ways_df(spark, SF)),
+        (cqi_roads_query.score_roads, cqi_roads_query._ways_df(spark, SF)),
+        (cqi_pipeline, ways_df(spark, n_roads=24)),
     ]:
-        a = fast(spark, SF)
-        b = built(spark, SF)
-        assert a.columns == b.columns, fast.__module__
-        ra = sorted(map(tuple, a.collect()), key=key)
-        rb = sorted(map(tuple, b.collect()), key=key)
-        assert ra == rb and len(ra) > 100, fast.__module__
+        # non-vacuous: most tags are absent from the input
+        assert len(conform_ways(ways).columns) < 60
+        assert len(_assert_folds_exactly(build, ways)) > 40
+
+
+def test_fold_three_valued_logic(spark):
+    """Every fold equals SQL on the same operands as columns: NOT, AND, OR,
+    coalesce and when over {NULL, TRUE, FALSE}, and NULL through the
+    comparisons, IN, <=>, contains and arithmetic."""
+    from pyspark.sql import functions as F
+
+    from osm_cycling_quality_index_spark.functions import fold
+
+    row = spark.createDataFrame(
+        [(None, True, False, None, "x", None)],
+        "n boolean, t boolean, f boolean, s string, x string, d double")
+    t = fold.Tags(row)
+    k = {"n": fold.NULL_BOOL, "t": fold.TRUE, "f": fold.FALSE}
+    pairs = []  # (folded, the same on real columns)
+    for a in k:
+        pairs.append((~k[a], ~F.col(a)))
+        pairs.append((fold.when(k[a], 1).otherwise(0), F.when(F.col(a), 1).otherwise(0)))
+        for b in k:
+            pairs += [
+                (k[a] & k[b], F.col(a) & F.col(b)),
+                (k[a] | k[b], F.col(a) | F.col(b)),
+                (~(k[a] | k[b]), ~(F.col(a) | F.col(b))),
+                (fold.coalesce(k[a], k[b]), F.coalesce(F.col(a), F.col(b))),
+                (fold.when(k[a], "a").when(k[b], "b").otherwise("c"),
+                 F.when(F.col(a), "a").when(F.col(b), "b").otherwise("c")),
+            ]
+    s, col_s = fold.null("string"), F.col("s")
+    pairs += [
+        (s == "x", col_s == "x"), (s != "x", col_s != "x"),
+        (~(s == "x"), ~(col_s == "x")), (s.isin(["x", "y"]), col_s.isin(["x", "y"])),
+        (s.eqNullSafe("x"), col_s.eqNullSafe("x")), (s.eqNullSafe(None), col_s.eqNullSafe(None)),
+        (s.contains("x"), col_s.contains("x")), (s.isNull(), col_s.isNull()),
+        (fold.coalesce(s, t("x")), F.coalesce(col_s, F.col("x"))),
+        (s.try_cast("double") + 1.0, F.col("d") + 1.0),
+        (t("x") == s, F.col("x") == col_s),
+    ]
+    folded = [p for p, _ in pairs]
+    # really folded, except the coalesce that keeps its present column
+    assert [i for i, p in enumerate(folded) if fold.known(p) is None] == [len(pairs) - 3]
+    got = row.select(*[p.alias(f"k{i}") for i, p in enumerate(folded)]).first()
+    want = row.select(*[q.alias(f"k{i}") for i, (_, q) in enumerate(pairs)]).first()
+    assert list(got) == list(want)
+
+
+def test_cqi_fold_hostile_frames(spark):
+    """Bare ways (id, highway, geometry), ways whose every tag is NULL, and
+    no ways at all fold exactly too."""
+    from pyspark.sql import functions as F
+
+    from osm_cycling_quality_index_spark.operators.pipeline import cqi_pipeline
+
+    def line(lon, lat):
+        return [{"x": lon, "y": lat}, {"x": lon + 0.002, "y": lat}]
+
+    schema = "id string, highway string, geometry array<struct<x:double,y:double>>"
+    bare = spark.createDataFrame([
+        ("r1", "residential", line(13.40, 52.5)),
+        ("p1", "path", line(13.40, 52.50005)),
+        ("c1", "cycleway", line(13.41, 52.5)),
+        ("f1", "footway", line(13.41, 52.50005)),
+        ("n1", None, line(13.42, 52.5)),
+    ], schema)
+    all_null = bare.withColumns({t: F.lit(None).cast("string") for t in [
+        "highway", "cycleway", "cycleway:both", "sidewalk:bicycle", "width",
+        "oneway", "surface", "maxspeed", "bicycle", "is_sidepath", "lit",
+    ]})
+    empty = spark.createDataFrame([], schema)
+    # the footway without a bicycle tag is deleted (restricted access)
+    assert len(_assert_folds_exactly(cqi_pipeline, bare)) == 4
+    assert len(_assert_folds_exactly(cqi_pipeline, all_null)) == 5
+    assert _assert_folds_exactly(cqi_pipeline, empty) == []
 
 
 # ---------------------------------------------------------------------------

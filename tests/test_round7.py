@@ -82,25 +82,6 @@ def test_sidepath_vote_null_names_match_oracle(spark):
     assert brute_force_votes(ways)  # non-vacuous
 
 
-def test_replay_session_inherits_confs(spark):
-    """The codegen-off child session used by the committed-SQL replay
-    queries must inherit every builder conf (only wholeStage flips) and
-    be cached per parent session."""
-    from osm_cycling_quality_index_spark.plans.sqlgen import replay_session
-
-    s2 = replay_session(spark)
-    assert s2 is replay_session(spark)  # cached
-    assert s2 is not spark
-    assert s2.conf.get("spark.sql.codegen.wholeStage") == "false"
-    for key in ("spark.sql.shuffle.partitions",
-                "spark.sql.adaptive.enabled",
-                "spark.sql.codegen.fallback",
-                "spark.sql.autoBroadcastJoinThreshold"):
-        assert s2.conf.get(key) == spark.conf.get(key), key
-    # same context: RDD-level state (checkpoints, broadcasts) is shared
-    assert s2.sparkContext is spark.sparkContext
-
-
 def test_cc_max_iter_guard(spark):
     from osm_cycling_quality_index_spark.operators.dedup import (
         connected_components,

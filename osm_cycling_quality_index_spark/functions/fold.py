@@ -520,28 +520,53 @@ def _arith(a, b, name):
     return getattr(_Column, name)(a, b)
 
 
-def per_operator(c: _Column) -> _Column:
-    """``c`` unchanged, marked to run outside whole-stage codegen.
-
-    A higher-order function is CodegenFallback, and a plan node holding one
-    anywhere in its expressions is kept out of whole-stage codegen: it runs
-    as its own operator with Spark's per-expression codegen, which splits
-    large expressions into small methods.  The scalar layers need that:
-    fused into one whole-stage method their trees exceed the JVM's 64 KB
-    method limit (the compile fails, and is retried on every execution),
-    and even split into spans that do compile, methods over the JIT's 8 KB
-    limit run interpreted, several times slower than per-operator
-    execution.  The identity ``transform`` sits behind ``coalesce``, so it
-    is evaluated only on a row where ``c`` is NULL (and then yields NULL):
-    the mark costs one null test per row."""
-    return F.coalesce(c, F.transform(F.array(c), lambda x: x)[0])
+@lru_cache(maxsize=8)
+def _fallback_null(dtype: str) -> _Column:
+    """``transform(array(CAST(NULL AS dtype)), x -> x)[0]``: NULL, through a
+    CodegenFallback expression."""
+    return F.transform(F.array(_null_col(dtype)), lambda x: x)[0]
 
 
-@lru_cache(maxsize=None)
-def marked_id() -> _Column:
-    """The way id through :func:`per_operator`; every CQI frame carries it
-    through to the output, so a stage marks its projection with it."""
-    return per_operator(ccol("id"))
+@lru_cache(maxsize=8)
+def _id_mark(id_type: str) -> _Column:
+    return F.coalesce(ccol("id"), _fallback_null(id_type))
+
+
+def per_operator(df: DataFrame, exprs: dict, id_type: str | None) -> DataFrame:
+    """``df.withColumns(exprs)``, run outside whole-stage codegen.
+
+    The CQI scalar stages write their columns through this and filter
+    through :func:`per_operator_filter`.  Fused into one whole-stage method
+    their trees exceed the JVM's 64 KB method limit (the compile fails, and
+    is retried on every execution), and even split into spans that do
+    compile, methods over the JIT's 8 KB limit run interpreted, several
+    times slower than per-operator execution.  A plan node holding a
+    CodegenFallback expression, such as a higher-order function, is kept
+    out of whole-stage codegen: it runs as its own operator with Spark's
+    per-expression codegen, which splits large expressions into small
+    methods.
+
+    The projection is marked by rewriting the way id (of type ``id_type``;
+    a frame without one is not marked), which every CQI frame carries to
+    its output, as ``coalesce(id, <NULL through transform>)``.  The value
+    is the id's; the ``transform`` is evaluated only on a row whose id is
+    NULL, so the mark costs one null test per row.  It reads the id once,
+    so Catalyst still collapses adjacent marked projections where it would
+    collapse unmarked ones.  It relies on the id being nullable, as it is
+    from every source the pipeline reads: the optimizer drops ``coalesce``
+    over a non-nullable first argument, and with it the mark."""
+    if id_type is not None and "id" not in exprs:
+        exprs = {**exprs, "id": _id_mark(id_type)}
+    return df.withColumns(exprs) if exprs else df
+
+
+def per_operator_filter(df: DataFrame, cond: _Column) -> DataFrame:
+    """``df.filter(cond)``, run outside whole-stage codegen like
+    :func:`per_operator`'s projections.  The condition is marked as
+    ``coalesce(<NULL through transform>, cond)``, whose value is
+    ``cond``'s; the ``transform`` is evaluated on every row, but reads
+    nothing of it, and the mark holds whether or not ``cond`` can be NULL."""
+    return df.filter(F.coalesce(_fallback_null("boolean"), cond))
 
 
 class Tags:
@@ -553,11 +578,14 @@ class Tags:
     plan where that is exact: a NULL written to a tag or a ``_``-prefixed
     temporary the frame lacks is skipped, and a later ``t(name)`` still
     reads it as that NULL.  Every other output column is written, so a
-    stage's schema does not depend on its input's."""
+    stage's schema does not depend on its input's.  With
+    ``per_operator=True`` each write is :func:`per_operator`'s, and
+    ``t.filter`` is :func:`per_operator_filter`."""
 
-    def __init__(self, df: DataFrame):
+    def __init__(self, df: DataFrame, per_operator: bool = False):
         self.types = dict(df.dtypes)
         self.consts: dict[str, Const] = {}
+        self.per_operator = per_operator
 
     def __contains__(self, name: str) -> bool:
         return name in self.types
@@ -582,10 +610,16 @@ class Tags:
                     continue
             write[name] = _col(e)
             self.types[name] = _dtype(e)
-        if write and "id" in self.types and "id" not in write:
-            # every CQI frame carries its way id through to the output
-            write["id"] = marked_id()
-        return df.withColumns(write) if write else df
+        if not write:
+            return df
+        if self.per_operator:
+            return per_operator(df, write, self.types.get("id"))
+        return df.withColumns(write)
+
+    def filter(self, df: DataFrame, cond: _Column) -> DataFrame:
+        if self.per_operator:
+            return per_operator_filter(df, cond)
+        return df.filter(cond)
 
     def drop(self, df: DataFrame, prefix: str) -> DataFrame:
         """Drop the temporaries named ``prefix*``."""

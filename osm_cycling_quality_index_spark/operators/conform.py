@@ -28,18 +28,14 @@ def conform_ways(df: DataFrame, keep_geometry: bool = True) -> DataFrame:
     """Project to the attribute allow-list: the tags the frame has as
     strings, and the pipeline columns it has as their types."""
     existing = set(df.columns)
-    def tag(name: str):
-        c = F.col(f"`{name}`").cast("string")
-        # the id marks this projection, which may also hold the expressions
-        # that synthesize the tags, to run per-operator like those of the
-        # scalar layers
-        return (per_operator(c) if name == "id" else c).alias(name)
-
     cols = [F.col("geometry")] if keep_geometry and "geometry" in existing else []
-    cols += [tag(name) for name in P.ATTRIBUTES_LIST if name in existing]
+    cols += [F.col(f"`{name}`").cast("string").alias(name)
+             for name in P.ATTRIBUTES_LIST if name in existing]
     cols += [F.col(f"`{name}`").cast(typ).alias(name)
              for name, typ in P.NEW_ATTRIBUTES_TYPES.items() if name in existing]
-    return df.select(*cols)
+    # the projection may also hold the expressions that synthesize the tags
+    # upstream, so it runs per-operator like the scalar stages' writes
+    return per_operator(df.select(*cols), {}, "string" if "id" in existing else None)
 
 
 def retain(df: DataFrame, names: list[str]) -> DataFrame:

@@ -580,7 +580,7 @@ def mandatory_expr(t: Tags, proc_oneway: Column) -> Column:
 
 def derive_attributes(df: DataFrame) -> DataFrame:
     """Apply the whole stage-4 derivation."""
-    t = Tags(df)
+    t = Tags(df, per_operator=True)
     df = t.put(df, {"proc_oneway": oneway_expr(t)})
     df = width_stage(df, t)
     df = surface_stage(df, t)

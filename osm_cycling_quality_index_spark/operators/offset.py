@@ -138,7 +138,7 @@ def _by_branch(bid: Column, values: dict[int, Column], default: Column | None = 
 def offset_stage(df: DataFrame, mode=None) -> DataFrame:
     """Flags + the centerline row and its offset branches in one pass (U2)."""
     mode = P.OFFSET_DISTANCE if mode is None else mode
-    t = Tags(df)
+    t = Tags(df, per_operator=True)
     df = offset_flags(df, t, mode)
     # one row per centerline plus one per non-NULL branch offset (the
     # reference's per-layer filters + native:mergevectorlayers, :456-503);

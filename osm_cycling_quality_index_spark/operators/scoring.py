@@ -43,7 +43,7 @@ _SHARED_4 = ["bicycle road", "shared road", "shared traffic lane", "track or ser
 
 
 def score(df: DataFrame) -> DataFrame:
-    t = Tags(df)
+    t = Tags(df, per_operator=True)
     wt = t("way_type")
     proc_oneway = t("proc_oneway")
     proc_width = t("proc_width")

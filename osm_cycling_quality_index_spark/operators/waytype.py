@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 
-from ..functions.fold import Tags, coalesce, known, marked_id, when
+from ..functions.fold import Tags, coalesce, known, when
 from ..functions.nulls import falsy, neq, notin, truthy
 from ..functions.tags import derive_separation, get_access
 
@@ -68,11 +68,7 @@ def access_filter(df: DataFrame, t: Tags) -> DataFrame:
     k = known(keep)
     if k is not None and k.value is True:
         return df
-    if "id" in t:
-        # a conjunct that holds on every row keeps the filter, with its tag
-        # tree, per-operator like the stages' projections (fold.per_operator)
-        keep = keep & marked_id().eqNullSafe(t("id"))
-    return df.filter(keep)
+    return t.filter(df, keep)
 
 
 def _override_way_type(t: Tags) -> Column:
@@ -216,6 +212,6 @@ def way_type_expr(t: Tags) -> Column:
 
 def classify(df: DataFrame) -> DataFrame:
     """Apply access filters then assign ``way_type``."""
-    t = Tags(df)
+    t = Tags(df, per_operator=True)
     out = access_filter(df, t)
     return t.put(out, {"way_type": way_type_expr(t)})

@@ -334,6 +334,64 @@ def test_cqi_fold_hostile_frames(spark):
     assert _assert_folds_exactly(cqi_pipeline, empty) == []
 
 
+def _codegen_layout(df):
+    """Run ``df``; return, for each Project and Filter of its final plan,
+    (node, inside whole-stage codegen, holds the per-operator mark), and
+    the largest method of each whole-stage span as compiled (-1 when the
+    compile fails)."""
+    df.collect()
+    qe = df._jdf.queryExecution()
+    nodes = []
+
+    def walk(n, fused):
+        name = n.nodeName()
+        if name.startswith("WholeStageCodegen"):
+            fused = True
+        elif name == "InputAdapter":
+            fused = False
+        if name in ("Project", "Filter"):
+            nodes.append((name, fused, "transform(" in n.simpleString(1 << 20)))
+        if name == "AdaptiveSparkPlan":
+            return walk(n.executedPlan(), False)
+        if name.endswith("QueryStage"):
+            return walk(n.plan(), False)
+        kids = n.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), fused)
+
+    walk(qe.executedPlan(), False)
+    spans = qe.debug().codegenToSeq()
+    sizes = [spans.apply(i)._3().maxMethodCodeSize() for i in range(spans.size())]
+    return nodes, sizes
+
+
+def test_cqi_stages_run_per_operator(spark):
+    """The scalar stages' projections and the access filter stay out of
+    whole-stage codegen (fold.per_operator), and every span that is fused
+    compiles; in the registry queries, whose spans are all CQI stages, into
+    methods the JIT takes (at most 8,000 bytes).  A lost mark fuses the
+    stages into spans whose compile fails or whose methods run
+    interpreted."""
+    from osm_cycling_quality_index_spark.operators.pipeline import cqi_pipeline
+    from osm_cycling_quality_index_spark.plans import cqi_query, cqi_roads_query
+    from osm_cycling_quality_index_spark.sources.synth import ways_df
+
+    for df, jit_sized in [
+        (cqi_query.q_cqi_score_ways(spark, SF), True),
+        (cqi_roads_query.q_cqi_score_roads_full(spark, SF), True),
+        # the sidepath vote's spans are not part of the scalar chain
+        (cqi_pipeline(ways_df(spark, n_roads=24)), False),
+    ]:
+        nodes, sizes = _codegen_layout(df)
+        marked = [(name, fused) for name, fused, mark in nodes if mark]
+        # conform, classify, derive, score: each leaves a marked projection
+        assert sum(name == "Project" for name, _ in marked) >= 4, nodes
+        assert ("Filter", False) in marked, nodes
+        assert not any(fused for _, fused in marked), nodes
+        assert sizes and all(s >= 0 for s in sizes), sizes
+        assert not jit_sized or max(sizes) <= 8000, sizes
+
+
 # ---------------------------------------------------------------------------
 # PII scrubbing + deterministic sampling (round-4 additions)
 # ---------------------------------------------------------------------------

@@ -1,5 +1,12 @@
-"""Arrow-vectorized pandas UDFs over the numpy geometry kernels
-(SURVEY.md §2.10: no per-row Python anywhere, per BASELINE.json input_hint).
+"""Arrow UDFs over the numpy geometry kernels, and the geometry codec.
+
+:func:`decode` is the one place that knows the geometry batch layout: it
+turns an Arrow batch into flat ``(lon, lat, offsets)`` numpy arrays without
+building a Python object per vertex.  :func:`map_ways` calls a numpy kernel
+once per way on slices of those arrays and builds the Arrow list result;
+the segmentation UDF calls its kernel once per batch.  The one Python loop
+below the way level is the tile rasterizer's, once per segment
+(:func:`geo.kernels.rasterize_segment_tiles`).
 
 Geometry is ``array<struct<x:double,y:double>>`` in EPSG:4326 (x=lon, y=lat),
 matching the reference's LineString features
@@ -10,8 +17,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType, DoubleType, LongType, StructField, StructType,
 )
@@ -38,27 +48,63 @@ _SEGMENT_TYPE = ArrayType(
 )
 
 
-def _geom_to_arrays(geom) -> tuple[np.ndarray, np.ndarray]:
-    lons = np.array([p["x"] for p in geom], dtype=np.float64)
-    lats = np.array([p["y"] for p in geom], dtype=np.float64)
-    return lons, lats
+def decode(geom: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The geometry codec: one Arrow batch of ``array<struct<x,y>>`` to flat
+    ``(lon, lat, offsets)`` numpy arrays, way ``i`` owning vertices
+    ``offsets[i]:offsets[i + 1]``.  A NULL geometry decodes as an empty way;
+    a NULL vertex (or a NULL coordinate) has no defined position and raises
+    ``ValueError``."""
+    if isinstance(geom, pa.ChunkedArray):
+        geom = geom.combine_chunks()
+    lens = pc.list_value_length(geom).fill_null(0).to_numpy(zero_copy_only=False)
+    pts = geom.flatten()
+    lon, lat = (pts.flatten()[pts.type.get_field_index(k)] for k in ("x", "y"))
+    if lon.null_count or lat.null_count:
+        raise ValueError("geometry has a NULL vertex")
+    return (lon.to_numpy(zero_copy_only=False), lat.to_numpy(zero_copy_only=False),
+            np.concatenate([[0], np.cumsum(lens, dtype=np.int64)]))
 
 
-@F.pandas_udf(_POINT_TYPE)
-def checkpoints_udf(geom: pd.Series) -> pd.Series:
+def _lists(offsets: np.ndarray, values: pa.Array) -> pa.Array:
+    """Arrow list array: row ``i`` holds ``values[offsets[i]:offsets[i + 1]]``."""
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
+
+
+def map_ways(out_type: ArrayType, kernel, geom: pa.Array, *args: pa.Array,
+             min_vertices: int = 1) -> pa.Array:
+    """Per way of one Arrow batch: ``kernel(lon, lat, *row_args)`` on the
+    way's slice of the decoded arrays, returning one numpy column per field
+    of ``out_type``'s elements (one column for a list of scalars); the
+    columns become the way's ``out_type`` list.  Ways with fewer than
+    ``min_vertices`` vertices, a NULL geometry included, map to an empty
+    list without a kernel call."""
+    lon, lat, off = decode(geom)
+    args = [a.to_numpy(zero_copy_only=False) for a in args]
+    elem = to_arrow_type(out_type).value_type
+    fields = list(elem) if pa.types.is_struct(elem) else [pa.field("v", elem)]
+    cols: list[list[np.ndarray]] = [[] for _ in fields]
+    lens = np.zeros(len(off) - 1, dtype=np.int64)
+    for i, (s, e) in enumerate(zip(off[:-1].tolist(), off[1:].tolist())):
+        if e - s >= min_vertices:
+            out = kernel(lon[s:e], lat[s:e], *(a[i] for a in args))
+            lens[i] = len(out[0])
+            for c, v in zip(cols, out):
+                c.append(v)
+    vals = [pa.array(np.concatenate(c) if c else [], f.type)
+            for c, f in zip(cols, fields)]
+    values = (pa.StructArray.from_arrays(vals, fields=fields)
+              if pa.types.is_struct(elem) else vals[0])
+    return _lists(np.concatenate([[0], np.cumsum(lens)]), values)
+
+
+@F.arrow_udf(_POINT_TYPE)
+def checkpoints_udf(geom: pa.Array) -> pa.Array:
     """G1+G2+U1: check points every 100 m along the way + last vertex, in
     metric coordinates (reference/cycling_quality_index.py:223-225)."""
     from .. import params as P
 
-    out = []
-    for g in geom:
-        if g is None or len(g) == 0:
-            out.append([])
-            continue
-        lons, lats = _geom_to_arrays(g)
-        px, py = K.points_along_line(lons, lats, P.SIDEPATH_BUFFER_DISTANCE)
-        out.append([{"px": float(a), "py": float(b)} for a, b in zip(px, py)])
-    return pd.Series(out)
+    return map_ways(_POINT_TYPE, lambda lon, lat: K.points_along_line(
+        lon, lat, P.SIDEPATH_BUFFER_DISTANCE), geom)
 
 
 def make_point_cell_udf(res: int):
@@ -77,24 +123,16 @@ def make_segments_udf(res: int):
     with a sample — the prefilter guarantee of join J1).  One
     :func:`geo.cells.segment_cells` call per Arrow batch."""
 
-    @F.pandas_udf(_SEGMENT_TYPE)
-    def segments(geom: pd.Series) -> pd.Series:
-        lens = [0 if g is None else len(g) for g in geom]
-        pts = [p for g in geom if g is not None for p in g]
-        x, y = K.project(np.array([p["x"] for p in pts], dtype=np.float64),
-                         np.array([p["y"] for p in pts], dtype=np.float64))
-        (line, ax, ay, bx, by), (seg, cell) = C.segment_cells(
-            x, y, np.concatenate([[0], np.cumsum(lens)]), res)
-        # each segment's cells, then each way's segments, as slice bounds
-        cs = np.searchsorted(seg, np.arange(len(line) + 1)).tolist()
-        ls = np.searchsorted(line, np.arange(len(lens) + 1)).tolist()
-        cells = cell.tolist()
-        segs = [
-            {"ax": a, "ay": b, "bx": c, "by": d, "cells": cells[s:e]}
-            for a, b, c, d, s, e in zip(ax.tolist(), ay.tolist(), bx.tolist(),
-                                        by.tolist(), cs[:-1], cs[1:])
-        ]
-        return pd.Series([segs[s:e] for s, e in zip(ls[:-1], ls[1:])])
+    @F.arrow_udf(_SEGMENT_TYPE)
+    def segments(geom: pa.Array) -> pa.Array:
+        lon, lat, off = decode(geom)
+        x, y = K.project(lon, lat)
+        (line, ax, ay, bx, by), (seg, cell) = C.segment_cells(x, y, off, res)
+        # each segment's cells, then each way's segments, as list offsets
+        cells = _lists(np.searchsorted(seg, np.arange(len(line) + 1)), pa.array(cell))
+        segs = pa.StructArray.from_arrays(
+            [ax, ay, bx, by, cells], names=["ax", "ay", "bx", "by", "cells"])
+        return _lists(np.searchsorted(line, np.arange(len(off))), segs)
 
     return segments
 
@@ -117,17 +155,14 @@ def point_segment_distance_cols(
 def make_offset_udf():
     """G4 offset-line: geometry + signed distance -> offset geometry."""
 
-    @F.pandas_udf(GEOMETRY_TYPE)
-    def offset_line(geom: pd.Series, dist: pd.Series) -> pd.Series:
-        out = []
-        for g, d in zip(geom, dist):
-            # Arrow hands a NULL distance over as NaN: no offset
-            if g is None or len(g) == 0 or pd.isna(d):
-                out.append(g)
-                continue
-            lons, lats = _geom_to_arrays(g)
-            olon, olat = K.offset_polyline(lons, lats, float(d))
-            out.append([{"x": float(a), "y": float(b)} for a, b in zip(olon, olat)])
-        return pd.Series(out)
+    def shift(lon, lat, d):
+        # a NULL distance means no offset
+        return (lon, lat) if np.isnan(d) else K.offset_polyline(lon, lat, float(d))
+
+    @F.arrow_udf(GEOMETRY_TYPE)
+    def offset_line(geom: pa.Array, dist: pa.Array) -> pa.Array:
+        out = map_ways(GEOMETRY_TYPE, shift, geom, dist)
+        # a NULL geometry stays NULL, where the other mappers give []
+        return pc.if_else(geom.is_null(), pa.scalar(None, out.type), out)
 
     return offset_line

@@ -128,35 +128,6 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
     raise NotImplementedError(f"format {fmt!r}")
 
 
-_VSTK_MAGIC = b"VSTK"
-
-
-def video_encode(frames: list[np.ndarray], fmt: str = "png") -> bytes:
-    """Minimal real video container: magic + frame count + length-prefixed
-    per-frame payloads (each a full still-image encode).  Stands in for a
-    proper codec so frame-sampling plumbing is real and testable; a
-    production build swaps the per-frame codec, not the operator."""
-    parts = [_VSTK_MAGIC, struct.pack(">I", len(frames))]
-    for f in frames:
-        data = encode(f, fmt)
-        parts.append(struct.pack(">I", len(data)))
-        parts.append(data)
-    return b"".join(parts)
-
-
-def video_frame_offsets(data: bytes) -> list[tuple[int, int]]:
-    """(offset, length) of each frame payload — sampling never touches the
-    bytes of skipped frames."""
-    assert data[:4] == _VSTK_MAGIC, "not a VSTK payload"
-    (n,) = struct.unpack(">I", data[4:8])
-    out, pos = [], 8
-    for _ in range(n):
-        (ln,) = struct.unpack(">I", data[pos:pos + 4])
-        out.append((pos + 4, ln))
-        pos += 4 + ln
-    return out
-
-
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """Peak signal-to-noise ratio in dB (inf for identical images)."""
     mse = float(np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2))

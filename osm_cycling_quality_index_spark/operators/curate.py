@@ -93,11 +93,13 @@ def curate_pipeline(
             .join(dec, "doc_id", "left_semi")
         )
         table.write(keep_ids, "keep_ids")
-        audit.stage("keep_ids", keep_ids)
         for cb in release:
             cb()
         docs.unpersist()
+        # audit the read-back snapshot: the lazy frame would re-run the
+        # minhash/decontaminate plan for the audit's groupBy
         keep_ids = table.read_latest(spark, "keep_ids")
+        audit.stage("keep_ids", keep_ids)
         if fail_after == "keep_ids":
             raise StageKilled("killed after keep_ids commit")
 
@@ -114,8 +116,8 @@ def curate_pipeline(
             hash_split(F.col("doc_id"), train=train, val=val).alias("split"),
         )
         table.write(curated, "curated")
-        audit.stage("curated", curated)
         curated = table.read_latest(spark, "curated")
+        audit.stage("curated", curated)
         if fail_after == "curated":
             raise StageKilled("killed after curated commit")
 

@@ -37,17 +37,20 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, BooleanType, DoubleType, FloatType, IntegerType,
-    LongType, StringType, StructField, StructType,
+    ArrayType, BooleanType, DoubleType, IntegerType, LongType, StringType,
+    StructField, StructType,
 )
 
 from ..geo import cells as C
 from ..geo.cols import hex_cell_cols, hex_disk_of_cell_cols
 from ..geo.udfs import (
+    decode,
     make_segments_udf,
+    map_ways,
     point_segment_distance_cols,
 )
 from ..geo.kernels import LAT0, LON0, MPD_X, MPD_Y
@@ -55,31 +58,25 @@ from ..geo.kernels import LAT0, LON0, MPD_X, MPD_Y
 _TILE_TYPE = ArrayType(LongType())
 
 
-def pack_tile(tx, ty) -> int:
-    return (int(tx) + (1 << 30)) << 31 | (int(ty) + (1 << 30)) & ((1 << 31) - 1)
+def pack_tile(tx, ty):
+    """Packed tile id of grid tile ``(tx, ty)``: ints or int64 arrays."""
+    return (tx + (1 << 30)) << 31 | (ty + (1 << 30)) & ((1 << 31) - 1)
 
 
 def make_way_tiles_udf(tile_size_m: float):
     """Geometry -> packed tile ids the way's segments touch (J5)."""
     from ..geo.kernels import project, rasterize_segment_tiles
 
-    @F.pandas_udf(_TILE_TYPE)
-    def way_tiles(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            if g is None or len(g) < 2:
-                out.append([])
-                continue
-            lons = np.array([p["x"] for p in g])
-            lats = np.array([p["y"] for p in g])
-            x, y = project(lons, lats)
-            tiles = set()
-            for i in range(len(x) - 1):
-                tiles.update(
-                    rasterize_segment_tiles(x[i], y[i], x[i + 1], y[i + 1], tile_size_m)
-                )
-            out.append(sorted(pack_tile(tx, ty) for tx, ty in tiles))
-        return pd.Series(out)
+    def tiles(lon, lat):
+        x, y = project(lon, lat)
+        hit = {t for i in range(len(x) - 1) for t in rasterize_segment_tiles(
+            x[i], y[i], x[i + 1], y[i + 1], tile_size_m)}
+        tx, ty = np.array(list(hit), dtype=np.int64).reshape(-1, 2).T
+        return (np.sort(pack_tile(tx, ty)),)
+
+    @F.arrow_udf(_TILE_TYPE)
+    def way_tiles(geom: pa.Array) -> pa.Array:
+        return map_ways(_TILE_TYPE, tiles, geom)
 
     return way_tiles
 
@@ -107,29 +104,20 @@ def make_polygon_tiles_udf(tile_size_m: float):
     on the tile centers."""
     from ..geo.kernels import project, ray_cast_pip
 
-    @F.pandas_udf(_TILE_TYPE)
-    def polygon_tiles(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            if g is None or len(g) < 3:
-                out.append([])
-                continue
-            lons = np.array([p["x"] for p in g])
-            lats = np.array([p["y"] for p in g])
-            x, y = project(lons, lats)
-            tx0, tx1 = math.floor(x.min() / tile_size_m), math.floor(x.max() / tile_size_m)
-            ty0, ty1 = math.floor(y.min() / tile_size_m), math.floor(y.max() / tile_size_m)
-            txs, tys = np.meshgrid(
-                np.arange(tx0, tx1 + 1), np.arange(ty0, ty1 + 1)
-            )
-            txs, tys = txs.ravel(), tys.ravel()
-            cx = (txs + 0.5) * tile_size_m
-            cy = (tys + 0.5) * tile_size_m
-            inside = ray_cast_pip(cx, cy, x, y)
-            out.append(sorted(
-                pack_tile(tx, ty) for tx, ty in zip(txs[inside], tys[inside])
-            ))
-        return pd.Series(out)
+    def tiles(lon, lat):
+        x, y = project(lon, lat)
+        tx0, tx1 = math.floor(x.min() / tile_size_m), math.floor(x.max() / tile_size_m)
+        ty0, ty1 = math.floor(y.min() / tile_size_m), math.floor(y.max() / tile_size_m)
+        txs, tys = np.meshgrid(np.arange(tx0, tx1 + 1), np.arange(ty0, ty1 + 1))
+        txs, tys = txs.ravel(), tys.ravel()
+        cx = (txs + 0.5) * tile_size_m
+        cy = (tys + 0.5) * tile_size_m
+        inside = ray_cast_pip(cx, cy, x, y)
+        return (np.sort(pack_tile(txs[inside], tys[inside])),)
+
+    @F.arrow_udf(_TILE_TYPE)
+    def polygon_tiles(geom: pa.Array) -> pa.Array:
+        return map_ways(_TILE_TYPE, tiles, geom, min_vertices=3)
 
     return polygon_tiles
 
@@ -155,49 +143,18 @@ def make_covering_cells_udf(res: int):
     edge = C.hex_edge_m(res)
     step = edge * math.sqrt(3.0) / 2.0  # inradius
 
-    @F.pandas_udf(_TILE_TYPE)
-    def covering(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            if g is None or len(g) < 3:
-                out.append([])
-                continue
-            lons = np.array([p["x"] for p in g])
-            lats = np.array([p["y"] for p in g])
-            x, y = project(lons, lats)
-            xs = np.arange(x.min() - edge, x.max() + edge + step, step)
-            ys = np.arange(y.min() - edge, y.max() + edge + step, step)
-            gx, gy = np.meshgrid(xs, ys)
-            cells = np.unique(C.hex_encode_xy(gx.ravel(), gy.ravel(), res))
-            out.append([int(c) for c in cells])
-        return pd.Series(out)
+    def cells(lon, lat):
+        x, y = project(lon, lat)
+        xs = np.arange(x.min() - edge, x.max() + edge + step, step)
+        ys = np.arange(y.min() - edge, y.max() + edge + step, step)
+        gx, gy = np.meshgrid(xs, ys)
+        return (np.unique(C.hex_encode_xy(gx.ravel(), gy.ravel(), res)),)
+
+    @F.arrow_udf(_TILE_TYPE)
+    def covering(geom: pa.Array) -> pa.Array:
+        return map_ways(_TILE_TYPE, cells, geom, min_vertices=3)
 
     return covering
-
-
-def _pip_crossings_cols(px, py, geom):
-    """Ray-cast crossing count as pure column math (JVM-side, codegen):
-    same per-edge formula as :func:`geo.kernels.ray_cast_pip` and the
-    SQL oracle.  ``geom`` vertices are lon/lat structs; the math runs in the
-    projected metric frame."""
-    n = F.size(geom)
-
-    def edge_term(i):
-        p1 = F.element_at(geom, i)
-        p2 = F.element_at(geom, F.when(i == n, F.lit(1)).otherwise(i + 1))
-        x1 = (p1["x"] - F.lit(LON0)) * F.lit(MPD_X)
-        y1 = (p1["y"] - F.lit(LAT0)) * F.lit(MPD_Y)
-        x2 = (p2["x"] - F.lit(LON0)) * F.lit(MPD_X)
-        y2 = (p2["y"] - F.lit(LAT0)) * F.lit(MPD_Y)
-        cond = (y1 > py) != (y2 > py)
-        xint = x1 + (py - y1) / F.nullif(y2 - y1, F.lit(0.0)) * (x2 - x1)
-        return F.when(cond & (px < xint), F.lit(1)).otherwise(F.lit(0))
-
-    return F.aggregate(
-        F.transform(F.sequence(F.lit(1), n), edge_term),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
 
 
 def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
@@ -215,21 +172,12 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
       cheap dimension count against ``max_broadcast_polys``): projected
       rings ship once per worker via ``sc.broadcast`` and the refine is the
       Arrow-batched numpy kernel (``geo.kernels.ray_cast_pip``), vectorized
-      over all of a polygon's candidate points per batch.  The JVM column
-      form of the same formula (``_pip_crossings_cols``) is a higher-order
-      function — CodegenFallback, interpreted per edge per row — whose
-      per-row constant is the kind you pay 10^6x at 100 TB (r3 verdict:
-      slowest query in the sweep); the numpy kernel runs the identical
-      IEEE-double arithmetic (same edge order, same operation order) so the
-      result is bit-equal, oracle-checked.
+      over all of a polygon's candidate points per batch.
     * larger polygon side (the shuffle regime): the candidate cell join
       carries IDS ONLY (geometry never rides the wide shuffle); rings
       re-attach dimension-side by one poly_id equi-join, and the refine is
       the SAME Arrow-batched numpy kernel, grouped per polygon within each
       batch (the ring is projected once per unique polygon per batch).
-      The interpreted higher-order column expression this replaces
-      (``_pip_crossings_cols``, kept for the parity pytest) paid a
-      CodegenFallback per-edge-per-row constant — wrong at scale.
 
     ``res`` sets the prefilter selectivity and should sit at or just below
     the typical polygon scale (cell edge <= poly bbox edge): measured at
@@ -268,17 +216,12 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
         # from the same analyzed subtree, so it reads this cache too.
         polys = polys.persist()
 
-        rings: dict = {}
-        for r in polys.select("poly_id", "geometry").collect():
-            g = r["geometry"]
-            if g is None or len(g) < 3:
-                # mirror make_covering_cells_udf: degenerate rings emit no
-                # cells, so they can never reach the refine
-                continue
-            rings[r["poly_id"]] = project(
-                np.array([p["x"] for p in g], dtype=np.float64),
-                np.array([p["y"] for p in g], dtype=np.float64),
-            )
+        tbl = polys.select("poly_id", "geometry").toArrow()
+        lon, lat, off = decode(tbl.column("geometry"))
+        # mirror make_covering_cells_udf: degenerate rings emit no cells,
+        # so they can never reach the refine
+        rings = {p: project(lon[s:e], lat[s:e]) for p, s, e in zip(
+            tbl.column("poly_id").to_pylist(), off[:-1], off[1:]) if e - s >= 3}
         # the rings broadcast (ids + projected coordinates only) and the
         # polys persist are registered with the dedup module's session
         # registry: repeated pip_join calls over different polygon sets in
@@ -322,21 +265,20 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
     pairs = pts.join(pcells.select("poly_id", "cell"), "cell")
     cand = pairs.join(polys.select("poly_id", "geometry"), "poly_id")
 
-    @F.pandas_udf("boolean")
+    @F.arrow_udf("boolean")
     def _inside_attached(
-        poly_id: pd.Series, qx: pd.Series, qy: pd.Series, geom: pd.Series
-    ) -> pd.Series:
+        poly_id: pa.Array, qx: pa.Array, qy: pa.Array, geom: pa.Array
+    ) -> pa.Array:
         out = np.zeros(len(poly_id), dtype=bool)
-        xs = qx.to_numpy(np.float64)
-        ys = qy.to_numpy(np.float64)
-        for p, ix in poly_id.groupby(poly_id, sort=False).indices.items():
-            g = geom.iloc[ix[0]]
-            rx, ry = project(
-                np.array([v["x"] for v in g], dtype=np.float64),
-                np.array([v["y"] for v in g], dtype=np.float64),
-            )
+        xs = qx.to_numpy(zero_copy_only=False)
+        ys = qy.to_numpy(zero_copy_only=False)
+        lon, lat, off = decode(geom)
+        ids = poly_id.to_pandas()
+        for ix in ids.groupby(ids, sort=False).indices.values():
+            s, e = off[ix[0]], off[ix[0] + 1]
+            rx, ry = project(lon[s:e], lat[s:e])
             out[ix] = ray_cast_pip(xs[ix], ys[ix], rx, ry)
-        return pd.Series(out)
+        return pa.array(out)
 
     return cand.where(
         _inside_attached(F.col("poly_id"), F.col("px"), F.col("py"), F.col("geometry"))
@@ -537,23 +479,18 @@ def _collect_ways(ways: DataFrame) -> dict:
     are interned in lexicographic order, so the int argmin tie-break equals
     the shuffle path's min-id tie-break; like the Spark rows, only ways with
     a segment (two or more vertices) take part."""
-    import pyarrow.compute as pc
-
     from ..geo.kernels import project
 
     tbl = ways.select("id", "geometry").toArrow()
-    geom = tbl.column("geometry").combine_chunks()
-    lens = pc.list_value_length(geom).fill_null(0).to_numpy(
-        zero_copy_only=False).astype(np.int64)
-    lon, lat = (v.to_numpy(zero_copy_only=False) for v in geom.flatten().flatten())
+    lon, lat, offsets = decode(tbl.column("geometry"))
     x, y = project(lon, lat)
+    lens = np.diff(offsets)
     id_all = tbl.column("id").to_numpy()
     has = lens >= 2
     ids = np.unique(id_all[has])  # sorted -> int order == lexicographic order
     wid = np.zeros(len(lens), dtype=np.int64)
     wid[has] = np.searchsorted(ids, id_all[has])
-    return {"x": x, "y": y, "offsets": np.concatenate([[0], np.cumsum(lens)]),
-            "wid": wid, "ids": ids}
+    return {"x": x, "y": y, "offsets": offsets, "wid": wid, "ids": ids}
 
 
 def _csr_level(raw: dict, res: int, rings: int) -> dict:
@@ -981,139 +918,3 @@ def verify_payloads(images: DataFrame) -> DataFrame:
     return images.select("image_id", "bytes", "w", "h", "fmt", "caption", "phash").mapInPandas(
         run, _DECODE_SCHEMA
     )
-
-
-_THUMB_SCHEMA = StructType([
-    StructField("image_id", StringType()),
-    StructField("bytes", BinaryType()),
-    StructField("w", IntegerType()),
-    StructField("h", IntegerType()),
-    StructField("fmt", StringType()),
-])
-
-
-def resize_images(images: DataFrame, size: int = 8) -> DataFrame:
-    """Thumbnail operator (multimodal pipeline component): decode the binary
-    payload, deterministic area-mean resize to ``size``x``size``, re-encode
-    PNG.  Arrow-batched ``mapInPandas``; bytes never enter a shuffle (the
-    transform is map-only).  Rows that fail to decode are dropped (the
-    payload audit path, :func:`verify_payloads`, reports them).
-    Output: (image_id, bytes, w, h, fmt='png')."""
-
-    def run(batches):
-        from ..imaging import codec
-        from ..imaging.phash import _resize_area
-
-        for pdf in batches:
-            out = []
-            for image_id, buf, fmt in zip(
-                pdf["image_id"].to_numpy(), pdf["bytes"].to_numpy(),
-                pdf["fmt"].to_numpy(),
-            ):
-                try:
-                    px = codec.decode(bytes(buf), fmt)
-                    thumb = np.stack(
-                        [_resize_area(px[:, :, c].astype(np.float64), size)
-                         for c in range(3)], axis=2,
-                    )
-                    data = codec.png_encode(
-                        np.clip(np.round(thumb), 0, 255).astype(np.uint8)
-                    )
-                    out.append((image_id, data, size, size, "png"))
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                out, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, _THUMB_SCHEMA)
-
-
-_FEAT_SCHEMA = StructType([
-    StructField("image_id", StringType()),
-    StructField("embedding", ArrayType(
-        FloatType())),
-])
-
-
-def image_embeddings(images: DataFrame, size: int = 8) -> DataFrame:
-    """Feature-extraction operator: decode, grayscale, area-resize to
-    ``size``x``size``, L2-normalize — a ``size``²-dim embedding column
-    (array<float>) that plugs directly into the ANN / embedding-near-dup
-    operators (``operators/ann.py``, ``operators/dedup.py``), giving an
-    end-to-end image near-duplicate pipeline: bytes -> embedding ->
-    hyperplane-LSH buckets -> exact cosine verify.  Map-only; the embedding
-    (256 B at size=8) is what enters downstream joins, never the payload."""
-
-    def run(batches):
-        from ..imaging import codec
-        from ..imaging.phash import _resize_area
-
-        for pdf in batches:
-            ids, vecs = [], []
-            for image_id, buf, fmt in zip(
-                pdf["image_id"].to_numpy(), pdf["bytes"].to_numpy(),
-                pdf["fmt"].to_numpy(),
-            ):
-                try:
-                    px = codec.decode(bytes(buf), fmt)
-                except Exception:
-                    continue
-                gray = px.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-                v = _resize_area(gray, size).ravel()
-                v = v - v.mean()
-                nrm = np.sqrt((v * v).sum())
-                if nrm > 0:
-                    v = v / nrm
-                ids.append(image_id)
-                vecs.append(v.astype(np.float32))
-            yield pd.DataFrame({"image_id": ids, "embedding": vecs})
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, _FEAT_SCHEMA)
-
-
-_FRAME_SCHEMA = StructType([
-    StructField("video_id", StringType()),
-    StructField("frame_idx", IntegerType()),
-    StructField("bytes", BinaryType()),
-    StructField("fmt", StringType()),
-])
-
-
-def sample_frames(videos: DataFrame, every_k: int = 10) -> DataFrame:
-    """Video frame-sampling operator (multimodal pipeline component): one
-    output row per sampled frame (frame 0, k, 2k, ...).  The container's
-    length-prefixed index means skipped frames are never decoded or even
-    copied — per-row cost is O(frames_kept), not O(frames).  Map-only
-    ``mapInPandas``; downstream the frame rows feed the same decode /
-    thumbnail / embedding operators as still images.
-    Input: (video_id, bytes, fmt); output: (video_id, frame_idx, bytes, fmt).
-    """
-
-    def run(batches):
-        from ..imaging import codec
-
-        for pdf in batches:
-            vids, idxs, bufs, fmts = [], [], [], []
-            for video_id, buf, fmt in zip(
-                pdf["video_id"].to_numpy(), pdf["bytes"].to_numpy(),
-                pdf["fmt"].to_numpy(),
-            ):
-                try:
-                    offs = codec.video_frame_offsets(bytes(buf))
-                except Exception:
-                    continue
-                data = bytes(buf)
-                for i in range(0, len(offs), every_k):
-                    o, ln = offs[i]
-                    vids.append(video_id)
-                    idxs.append(i)
-                    bufs.append(data[o:o + ln])
-                    fmts.append(fmt)
-            yield pd.DataFrame({
-                "video_id": vids, "frame_idx": idxs,
-                "bytes": bufs, "fmt": fmts,
-            })
-
-    return videos.select("video_id", "bytes", "fmt").mapInPandas(run, _FRAME_SCHEMA)
-

@@ -3,6 +3,8 @@ brute-force oracles (SURVEY.md §5, FIXTURES.md §3b-3d)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 
@@ -102,6 +104,57 @@ def test_tile_assignment_matches_bruteforce(spark, data):
         assert K.ray_cast_pip(
             np.array([px[j] + 1e-9]), np.array([py[j] + 1e-9]), poly_x, poly_y
         )[0], img_id
+
+    # each tile UDF equals its per-way numpy kernel on degenerate geometry:
+    # way tiles rasterize every segment, polygon tiles ray-cast the bbox
+    # grid's tile centers and covering cells sample the dilated bbox; fewer
+    # vertices than a segment (way tiles) or a ring (the other two) give []
+    from osm_cycling_quality_index_spark.geo import cells as C
+
+    size, res = 300.0, 9
+
+    def line(*pts):
+        return [{"x": x, "y": y} for x, y in pts]
+
+    tri = line((13.39, 52.49), (13.42, 52.495), (13.40, 52.52))
+    rows = [("null", None), ("empty", []), ("s1", line((13.401, 52.5))),
+            ("z0", line((13.4, 52.5), (13.4, 52.5))),
+            ("dup", line((13.399, 52.5003), (13.3995, 52.5003),
+                         (13.3995, 52.5003), (13.4, 52.5003))),
+            ("flat", line((13.4, 52.5), (13.4, 52.5), (13.4, 52.5))),
+            ("tri", tri), ("tri_dup", tri[:1] + tri)]
+    df = spark.createDataFrame(
+        rows, "id string, geometry array<struct<x:double,y:double>>")
+    got = {r["id"]: (r["w"], r["p"], r["c"]) for r in df.select(
+        "id",
+        I.make_way_tiles_udf(size)("geometry").alias("w"),
+        I.make_polygon_tiles_udf(size)("geometry").alias("p"),
+        I.make_covering_cells_udf(res)("geometry").alias("c"),
+    ).collect()}
+
+    edge = C.hex_edge_m(res)
+    step = edge * math.sqrt(3.0) / 2.0
+    for i, g in rows:
+        g = g or []
+        x, y = K.project(np.array([p["x"] for p in g]), np.array([p["y"] for p in g]))
+        way = sorted({I.pack_tile(tx, ty) for k in range(len(x) - 1)
+                      for tx, ty in K.rasterize_segment_tiles(
+                          x[k], y[k], x[k + 1], y[k + 1], size)})
+        poly, cover = [], []
+        if len(g) >= 3:
+            txs, tys = (a.ravel() for a in np.meshgrid(
+                np.arange(math.floor(x.min() / size), math.floor(x.max() / size) + 1),
+                np.arange(math.floor(y.min() / size), math.floor(y.max() / size) + 1)))
+            inside = K.ray_cast_pip((txs + 0.5) * size, (tys + 0.5) * size, x, y)
+            poly = sorted(I.pack_tile(int(a), int(b))
+                          for a, b in zip(txs[inside], tys[inside]))
+            gx, gy = np.meshgrid(
+                np.arange(x.min() - edge, x.max() + edge + step, step),
+                np.arange(y.min() - edge, y.max() + edge + step, step))
+            cover = np.unique(C.hex_encode_xy(gx.ravel(), gy.ravel(), res)).tolist()
+        assert got[i] == (way, poly, cover), i
+    assert got["null"] == got["empty"] == got["s1"] == ([], [], [])
+    assert got["tri"][1] and got["tri_dup"][1] == got["tri"][1]
 
 
 def test_payload_invariants(spark, data):

@@ -156,6 +156,21 @@ def test_geotag_broadcast_parity(spark):
     assert got["on_z0"] == ("z0", 0.0) and got["on_dup"] == ("dup", 0.0)
     assert got["far"] == (None, None) and len(got) == 6
 
+    # a NULL vertex has no position: both forms raise the codec's ValueError
+    # (the broadcast form on the driver, while it builds its index)
+    ways, imgs = _hostile_geo(spark)
+    ways = ways.unionByName(spark.createDataFrame(
+        [("nv", [{"x": 13.4, "y": 52.5}, None, {"x": 13.41, "y": 52.5}])],
+        ways.schema))
+    spark.conf.set(key, "-1")
+    try:
+        with pytest.raises(Exception, match="ValueError: geometry has a NULL vertex"):
+            I.geotag_join(imgs, ways, res=9).collect()
+    finally:
+        spark.conf.set(key, saved)
+    with pytest.raises(ValueError, match="geometry has a NULL vertex"):
+        I.geotag_join(imgs, ways, res=9).collect()
+
 
 def test_geotag_size_rule_reads_the_geometry(spark, tmp_path):
     """The broadcast/shuffle choice is made on the index the ways would
@@ -211,6 +226,40 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_no_pandas_udf_reads_geometry(spark):
+    """Every UDF that reads a geometry is an Arrow UDF over the one codec:
+    in the physical plans of the geometry operators, every ArrowEvalPython
+    node over ``geometry`` has eval type 250 (``arrow_udf``), none 200 (a
+    pandas UDF, which hands the UDF one Python dict per vertex)."""
+    from osm_cycling_quality_index_spark.operators import images as I
+    from osm_cycling_quality_index_spark.operators.dedup import (
+        release_session_pinned,
+    )
+    from osm_cycling_quality_index_spark.operators.pipeline import cqi_pipeline
+    from osm_cycling_quality_index_spark.sources import synth
+
+    ways = synth.ways_df(spark, n_roads=24)
+    polys = ways.select(F.col("id").alias("poly_id"), "geometry")
+    imgs = synth.images_df(spark, synth.ways_pdf(n_roads=24), n_images=50) \
+        .select("image_id", "lon", "lat")
+    frames = {
+        "cqi_pipeline": cqi_pipeline(ways),
+        "way_tile_assignment": I.way_tile_assignment(ways),
+        "polygon_tile_assignment": I.polygon_tile_assignment(polys),
+        "pip_join broadcast": I.pip_join(imgs, polys),
+        "pip_join shuffle": I.pip_join(imgs, polys, max_broadcast_polys=0),
+        "knn_ways": I.knn_ways(imgs, ways.select("id", "geometry"), k=3),
+    }
+    try:
+        for name, df in frames.items():
+            evals = [ln.strip() for ln in _plan(df).splitlines()
+                     if "ArrowEvalPython" in ln and "geometry" in ln]
+            assert evals, name
+            assert all(ln.endswith(", 250") for ln in evals), (name, evals)
+    finally:
+        release_session_pinned(spark)
+
+
 def _spark_csr_rows(ways, res, rings, ids):
     """The Spark-built segment rows as a bit matrix (cell, way int, ax, ay,
     dx, dy) — the CSR content — in lexicographic row order."""
@@ -255,21 +304,29 @@ def test_segment_index_matches_spark_rows(spark):
 
 def test_segments_udf_is_the_kernel(spark):
     """make_segments_udf returns what geo.cells.segment_cells gives for the
-    same geometries, and both sample each segment at np.linspace points."""
+    same geometries, and both sample each segment at np.linspace points;
+    checkpoints_udf returns geo.kernels.points_along_line per way.  The
+    inputs include a NULL geometry, an empty one, a single vertex and
+    duplicated vertices."""
+    from osm_cycling_quality_index_spark import params as P
     from osm_cycling_quality_index_spark.geo import cells as C
     from osm_cycling_quality_index_spark.geo import kernels as K
-    from osm_cycling_quality_index_spark.geo.udfs import make_segments_udf
+    from osm_cycling_quality_index_spark.geo.udfs import (
+        checkpoints_udf, make_segments_udf,
+    )
     from osm_cycling_quality_index_spark.sources import synth
 
     res = 9
+    hostile = _hostile_geo(spark)[0]
     ways = synth.ways_df(spark, n_roads=12).select("id", "geometry").unionByName(
-        _hostile_geo(spark)[0])
+        hostile).unionByName(spark.createDataFrame(
+            [("null", None), ("empty", [])], hostile.schema))
+    out = ways.select("id", make_segments_udf(res)("geometry").alias("segs"),
+                      checkpoints_udf("geometry").alias("chk")).collect()
     got = {r["id"]: [(s["ax"], s["ay"], s["bx"], s["by"], list(s["cells"]))
-                     for s in r["segs"]]
-           for r in ways.select("id", make_segments_udf(res)("geometry")
-                                .alias("segs")).collect()}
+                     for s in r["segs"]] for r in out}
     pdf = ways.toPandas()
-    geoms = list(pdf["geometry"])
+    geoms = [[] if g is None else g for g in pdf["geometry"]]
     lens = [len(g) for g in geoms]
     x, y = K.project(np.array([p["x"] for g in geoms for p in g]),
                      np.array([p["y"] for g in geoms for p in g]))
@@ -287,64 +344,15 @@ def test_segments_udf_is_the_kernel(spark):
         assert cells == ref.tolist()
     assert got == want
     assert got["s1"] == [] and len(got["dup"]) == 3 and len(got["z0"]) == 1
+    assert got["null"] == [] and got["empty"] == []
 
-
-def test_resize_and_image_embeddings(spark):
-    """Multimodal operators: thumbnails decode to the requested shape, and
-    duplicate payloads produce identical embeddings that the embedding
-    near-dup operator then finds — the end-to-end image near-dup path."""
-    from osm_cycling_quality_index_spark.imaging import codec
-    from osm_cycling_quality_index_spark.operators.dedup import embedding_near_dups
-    from osm_cycling_quality_index_spark.operators.images import (
-        image_embeddings, resize_images,
-    )
-    from osm_cycling_quality_index_spark.sources import synth
-
-    wpdf = synth.ways_pdf(n_roads=10)
-    imgs = synth.images_df(spark, wpdf, n_images=60)
-    # plant an exact duplicate payload under a new id
-    dup = imgs.where(F.col("image_id") == "img0").withColumn(
-        "image_id", F.lit("img0_copy"))
-    imgs = imgs.unionByName(dup)
-
-    thumbs = resize_images(imgs, size=8).collect()
-    assert len(thumbs) == 61
-    for r in thumbs[:5]:
-        px = codec.decode(bytes(r["bytes"]), r["fmt"])
-        assert px.shape == (8, 8, 3) and r["w"] == 8 and r["h"] == 8
-
-    emb = image_embeddings(imgs, size=8).withColumnRenamed("image_id", "vec_id")
-    row = {r["vec_id"]: r["embedding"] for r in emb.collect()}
-    assert len(row["img0"]) == 64
-    assert row["img0"] == row["img0_copy"]
-    pairs = {(r["vec_a"], r["vec_b"])
-             for r in embedding_near_dups(emb, threshold=0.999).collect()}
-    assert ("img0", "img0_copy") in pairs or ("img0_copy", "img0") in pairs
-
-
-def test_sample_frames(spark):
-    """Frame sampling keeps every k-th frame, and sampled payloads decode
-    back to the exact source pixels (real container round-trip)."""
-    import numpy as np
-
-    from osm_cycling_quality_index_spark.imaging import codec
-    from osm_cycling_quality_index_spark.operators.images import sample_frames
-
-    rng = np.random.default_rng(11)
-    videos, source = [], {}
-    for v in range(3):
-        frames = [rng.integers(0, 256, (16, 16, 3)).astype(np.uint8)
-                  for _ in range(7 + v)]
-        source[f"v{v}"] = frames
-        videos.append((f"v{v}", codec.video_encode(frames, "png"), "png"))
-    df = spark.createDataFrame(videos, "video_id string, bytes binary, fmt string")
-    rows = sample_frames(df, every_k=3).collect()
-    got = {(r["video_id"], r["frame_idx"]) for r in rows}
-    want = {(f"v{v}", i) for v in range(3) for i in range(0, 7 + v, 3)}
-    assert got == want
-    for r in rows:
-        px = codec.decode(bytes(r["bytes"]), r["fmt"])
-        assert (px == source[r["video_id"]][r["frame_idx"]]).all()
+    chk = {r["id"]: [(p["px"], p["py"]) for p in r["chk"]] for r in out}
+    for i, g in zip(pdf["id"], geoms):
+        want = [] if len(g) == 0 else list(zip(*K.points_along_line(
+            np.array([p["x"] for p in g]), np.array([p["y"] for p in g]),
+            P.SIDEPATH_BUFFER_DISTANCE)))
+        assert chk[i] == want, i
+    assert chk["null"] == [] and len(chk["s1"]) == 2
 
 
 def test_streaming_sessionize_stateful(spark, tmp_path):

@@ -163,7 +163,7 @@ def test_excise_spans_roundtrip(spark):
 # snapshot-resume on the curate pipeline (r5 VERDICT item 6)
 # ---------------------------------------------------------------------------
 
-def test_curate_pipeline_kill_and_resume(spark, tmp_path):
+def test_curate_pipeline_kill_and_resume(spark, tmp_path, monkeypatch):
     """A curate run killed between stages resumes from the committed
     snapshot: the expensive stage is NOT recomputed (snapshot count stays
     1, audit records resumed=True), and the resumed output is bit-equal
@@ -199,7 +199,21 @@ def test_curate_pipeline_kill_and_resume(spark, tmp_path):
     def rows(df):
         return sorted((r.doc_id, r.source, r.split) for r in df.collect())
 
+    # each stage's audit reads its committed snapshot, never the lazy
+    # stage plan (whose groupBy would re-run the stage)
+    from urllib.parse import urlparse
+
+    from osm_cycling_quality_index_spark.audit import Audit
+
+    audited = []
+    stage = Audit.stage
+    monkeypatch.setattr(Audit, "stage", lambda self, name, df: (
+        audited.append((name, df.inputFiles())), stage(self, name, df))[1])
     out_single = curate_pipeline(docs, ck_single)
+    assert [n for n, _ in audited] == ["keep_ids", "curated"]
+    for _, files in audited:
+        assert files and all(
+            urlparse(f).path.startswith(ck_single + "/") for f in files), files
     got = rows(out_resumed)
     assert got == rows(out_single)
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -251,21 +252,31 @@ def test_way_type_offset_sides(spark):
 
 
 def test_offset_udf_null_distance(spark):
-    """A NULL offset distance leaves the geometry bit-identical: Arrow hands
-    it to the UDF as NaN, not None."""
+    """A NULL offset distance leaves the geometry bit-identical.  Degenerate
+    geometry gets the per-way kernel's answer: a NULL geometry stays NULL,
+    an empty one stays empty, a single vertex stays put, and duplicated
+    vertices go through geo.kernels.offset_polyline."""
+    from osm_cycling_quality_index_spark.geo import kernels as K
     from osm_cycling_quality_index_spark.geo.udfs import make_offset_udf
     from osm_cycling_quality_index_spark.operators.offset import offset_stage
 
     line = [{"x": 13.4, "y": 52.5}, {"x": 13.41, "y": 52.5001}]
+    dup = [line[0], line[0], line[1], line[1], {"x": 13.42, "y": 52.5}]
     df = spark.createDataFrame(
-        [("keep", line, None), ("move", line, 2.0)],
+        [("keep", line, None), ("move", line, 2.0), ("null", None, 2.0),
+         ("empty", [], 2.0), ("s1", line[:1], 2.0), ("dup", dup, -3.0)],
         "id string, geometry array<struct<x:double,y:double>>, d double",
     )
-    got = {r["id"]: [p.asDict() for p in r["g"]] for r in
+    got = {r["id"]: r["g"] and [p.asDict() for p in r["g"]] for r in
            df.select("id", make_offset_udf()("geometry", "d").alias("g")).collect()}
     assert got["keep"] == line
     assert not any(math.isnan(v) for p in got["keep"] for v in p.values())
     assert got["move"] != line
+    assert got["null"] is None and got["empty"] == [] and got["s1"] == line[:1]
+    for i, g, d in (("move", line, 2.0), ("dup", dup, -3.0)):
+        lon, lat = K.offset_polyline(np.array([p["x"] for p in g]),
+                                     np.array([p["y"] for p in g]), d)
+        assert got[i] == [{"x": x, "y": y} for x, y in zip(lon, lat)], i
 
     # realistic mode runs the UDF over every row: a way that spawns no
     # branch keeps its centerline geometry

@@ -9,13 +9,19 @@ with snapshot checkpoints between stages and an audit trail:
     # or on synthetic data (no inputs needed):
     python main.py --synth-roads 200 --synth-images 2000 --output out/
 
-Resume: re-running with the same --checkpoint dir skips stages whose
-snapshots are already committed.
+Each stage is written once, to <output>/<stage>; with --checkpoint that
+write is the stage's snapshot, committed in the manifest under the
+checkpoint dir, and the audit is read from its task metrics.  Resume:
+re-running with the same --checkpoint dir skips stages whose snapshots are
+committed and intact; it copies them to a new --output, and leaves them be
+when --output is their own directory.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
+import shutil
 import sys
 
 
@@ -35,16 +41,43 @@ def build_args():
 
 def main(argv=None) -> int:
     args = build_args().parse_args(argv)
+    from osm_cycling_quality_index_spark.session import get_spark
+
+    spark = get_spark(app_name="cqi-main", master=args.master)
+    try:
+        return _run(spark, args)
+    finally:
+        # frames the operators pinned for this run (the sidepath vote's
+        # check counts) are not used once its outputs are written
+        from osm_cycling_quality_index_spark.operators.dedup import release_session_pinned
+
+        release_session_pinned(spark)
+
+
+def _run(spark, args) -> int:
     from osm_cycling_quality_index_spark.audit import Audit
     from osm_cycling_quality_index_spark.checkpoint import SnapshotTable
     from osm_cycling_quality_index_spark.operators import images as I
     from osm_cycling_quality_index_spark.operators.pipeline import cqi_pipeline
-    from osm_cycling_quality_index_spark.session import get_spark
     from osm_cycling_quality_index_spark.sources import geojson, synth
 
-    spark = get_spark(app_name="cqi-main", master=args.master)
-    audit = Audit(args.audit or f"{args.output.rstrip('/')}/audit.jsonl")
-    ckpt = SnapshotTable(args.checkpoint) if args.checkpoint else None
+    out = args.output.rstrip("/")
+    audit = Audit(args.audit or f"{out}/audit.jsonl")
+    table = SnapshotTable(args.checkpoint, data_root=out)
+
+    def stage(name, build) -> str:
+        """Write stage ``name`` once, to ``<output>/<name>``, or resume it
+        from its committed snapshot; returns the output directory."""
+        path = os.path.join(out, name)
+        done = table.committed(name)
+        if done is None:
+            audit.stage(name, table.write(build(), name))
+            return path
+        if os.path.realpath(done["path"]) != os.path.realpath(path):
+            shutil.rmtree(path, ignore_errors=True)
+            shutil.copytree(done["path"], path)
+        audit.record(stage=name, snapshot=done["id"], resumed=True)
+        return path
 
     # ---- ways input
     if args.synth_roads:
@@ -57,19 +90,10 @@ def main(argv=None) -> int:
         print("need --ways or --synth-roads", file=sys.stderr)
         return 2
 
-    # ---- stage: CQI scoring (resume from checkpoint when present)
-    scored = ckpt.read_latest(spark, "scored") if ckpt else None
-    if scored is None:
-        scored = cqi_pipeline(ways)
-        if ckpt:
-            ckpt.write(scored, "scored")
-            scored = ckpt.read_latest(spark, "scored")
-    # persist before the audit count so the pipeline executes once: the
-    # count materializes the frame and the write below reuses it
-    scored = scored.persist()
-    audit.stage("scored", scored)
-    scored.write.mode("overwrite").parquet(f"{args.output.rstrip('/')}/scored")
+    # ---- stage: CQI scoring
+    scored_path = stage("scored", lambda: cqi_pipeline(ways))
     if args.geojson_out:
+        scored = spark.read.parquet(scored_path)
         if "geometry" in scored.columns:
             export = scored
         else:
@@ -77,14 +101,12 @@ def main(argv=None) -> int:
             # re-attaches the centerline geometry and the export keeps every
             # feature (offset cycleway/sidewalk rows included)
             export = scored.join(ways.select("id", "geometry"), "id", "left")
-        geojson.write_geojson_features(
-            export, f"{args.output.rstrip('/')}/scored_geojson"
-        )
+        geojson.write_geojson_features(export, f"{out}/scored_geojson")
         # S7: graduated QGIS style over `index`, same classes/colors as the
         # reference's styles/index.qml
         from osm_cycling_quality_index_spark.sources.style import write_qml_style
 
-        write_qml_style(f"{args.output.rstrip('/')}/scored_geojson.qml")
+        write_qml_style(f"{out}/scored_geojson.qml")
 
     # ---- image stages
     if args.synth_images or args.images:
@@ -93,15 +115,8 @@ def main(argv=None) -> int:
             imgs = synth.images_df(spark, wpdf, n_images=args.synth_images)
         else:
             imgs = spark.read.parquet(args.images)
-        tagged = I.geotag_join(imgs.select("image_id", "lon", "lat"), ways).persist()
-        if ckpt:
-            ckpt.write(tagged, "geotag")
-        audit.stage("geotag", tagged)
-        tagged.write.mode("overwrite").parquet(f"{args.output.rstrip('/')}/geotag")
-
-        tiles = I.way_tile_assignment(ways)
-        audit.stage("way_tiles", tiles)
-        tiles.write.mode("overwrite").parquet(f"{args.output.rstrip('/')}/way_tiles")
+        stage("geotag", lambda: I.geotag_join(imgs.select("image_id", "lon", "lat"), ways))
+        stage("way_tiles", lambda: I.way_tile_assignment(ways))
 
         checks = I.verify_payloads(imgs)
         bad = checks.where(~checks.ok | ~checks.caption_ok).count()

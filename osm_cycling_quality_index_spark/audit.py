@@ -2,8 +2,11 @@
 (north_rule: "row-count/latency metrics emitted to an audit table").
 
 Rows append as JSON lines locally (and the same records can be appended to
-an Iceberg audit table on a cluster); ``stage_timer`` wraps a stage action
-and records wall time + output rows + partition count.
+an Iceberg audit table on a cluster).  ``stage`` records a stage from the
+entry of the one write that produced it
+(:meth:`~osm_cycling_quality_index_spark.checkpoint.SnapshotTable.write`),
+whose figures come from Spark's task metrics, so auditing starts no Spark
+job; each record is keyed by the entry's snapshot id.
 """
 
 from __future__ import annotations
@@ -11,8 +14,6 @@ from __future__ import annotations
 import json
 import os
 import time
-
-from pyspark.sql import DataFrame
 
 
 class Audit:
@@ -26,32 +27,23 @@ class Audit:
             fh.write(json.dumps(rec) + "\n")
         return rec
 
-    def stage(self, name: str, df: DataFrame) -> dict:
-        """Materialize ``df`` and record stage metrics, including the
-        per-partition row distribution (one pass: a partition-id groupBy
-        replaces the plain count) — max/mean partition size is the skew
-        signal that tells an operator to salt or re-bucket BEFORE a
+    def stage(self, name: str, entry: dict) -> dict:
+        """Record a stage's write: rows, wall time, bytes, data files and
+        the per-partition row distribution.  Max/mean partition size is the
+        skew signal: a high ratio tells an operator to re-bucket BEFORE a
         straggler kills the job at scale."""
-        from pyspark.sql import functions as F
-
-        t0 = time.time()
-        per_part = df.groupBy(
-            F.spark_partition_id().alias("pid")
-        ).agg(F.count(F.lit(1)).alias("rows")).collect()
-        wall = time.time() - t0
-        rows = sum(r["rows"] for r in per_part)
-        nonempty = len(per_part)
-        max_rows = max((r["rows"] for r in per_part), default=0)
-        total_parts = df.rdd.getNumPartitions()
+        rows, wall, parts = entry["rows"], entry["wall_sec"], entry["partitions"]
+        max_rows = entry["max_partition_rows"]
         # skew denominator is rows / TOTAL partitions (empty ones
         # included): all-rows-in-one-of-200-partitions must read as skew
         # 200, not 1.0 — the empty partitions ARE the imbalance
-        mean_rows = rows / total_parts if total_parts else 0
+        mean_rows = rows / parts if parts else 0
         return self.record(
-            stage=name, rows=rows, wall_sec=round(wall, 3),
-            partitions=total_parts,
-            nonempty_partitions=nonempty,
+            stage=name, snapshot=entry["id"], rows=rows, wall_sec=wall,
+            partitions=parts,
+            nonempty_partitions=entry["nonempty_partitions"],
             max_partition_rows=max_rows,
             partition_skew=round(max_rows / mean_rows, 2) if mean_rows else None,
             rows_per_sec=round(rows / wall, 1) if wall > 0 else None,
+            bytes=entry["bytes"], files=len(entry["files"]),
         )

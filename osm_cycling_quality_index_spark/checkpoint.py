@@ -1,13 +1,24 @@
-"""Snapshot checkpointing with per-partition lineage (north_rule: "resumable
-from Iceberg snapshot checkpoints").
+"""Snapshot checkpoints: one parquet write per stage, committed by a manifest
+entry that carries its lineage (north_rule: "resumable from Iceberg
+snapshot checkpoints").
 
 No Iceberg runtime ships in this container, so this implements the same
-semantics on plain parquet: a table root holds numbered snapshot directories
-plus a manifest; writes go to a staging directory and commit by an atomic
-manifest replace, so readers only ever see complete snapshots and a killed
-run resumes from the last committed one.  On a cluster with Iceberg jars the
-``write`` call maps 1:1 to ``writeTo(...).createOrReplace()`` and ``latest``
-to snapshot selection — the pipeline code is agnostic.
+semantics on plain parquet.  A table root holds a manifest; each committed
+entry names a stage, its snapshot id, the directory of its data and the
+data files with their sizes, plus the write's row count and per-partition
+figures taken from Spark's task metrics (:mod:`.statusstore`).  The rows
+themselves carry no lineage columns: the stage and snapshot id live in the
+entry, the partition id in each part-file name.
+
+The data go to ``<data_root>/<stage>`` when the table has a data root (so a
+stage's snapshot can be the output a caller asked for), else to a fresh
+``<root>/snap-<id>``.  A commit is an atomic manifest replace made after the
+data write, so a run killed mid-write leaves no entry; an entry is trusted
+only while its directory holds exactly its recorded files at their recorded
+sizes, so damaged or overwritten data is recomputed rather than read.  A
+table without a root writes the same way and commits nothing.  On a cluster
+with Iceberg jars ``write`` maps 1:1 to ``writeTo(...).createOrReplace()``
+and ``read_latest`` to snapshot selection — the pipeline code is agnostic.
 """
 
 from __future__ import annotations
@@ -18,20 +29,49 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .statusstore import StatusStore
+
+
+def data_files(path: str) -> dict[str, int]:
+    """name -> size of the data files in ``path``: everything but the
+    ``_``/``.``-prefixed markers and checksums, as parquet readers see it."""
+    return {f: os.path.getsize(os.path.join(path, f)) for f in sorted(os.listdir(path))
+            if not f.startswith(("_", "."))}
+
+
+def write_parquet(df: DataFrame, path: str) -> dict:
+    """Write ``df`` to ``path`` (overwriting it) and describe the write:
+    its data files, row count, wall time and per-partition row counts, all
+    read without another Spark job."""
+    store = StatusStore(df.sparkSession)
+    before = store.last_stage()
+    t0 = time.perf_counter()
+    df.write.mode("overwrite").parquet(path)
+    wall = time.perf_counter() - t0
+    per_part = store.records_written(before)
+    files = data_files(path)
+    return {
+        "path": path, "rows": sum(per_part), "bytes": sum(files.values()), "files": files,
+        "wall_sec": round(wall, 3), "partitions": len(per_part),
+        "nonempty_partitions": sum(1 for n in per_part if n),
+        "max_partition_rows": max(per_part, default=0),
+    }
 
 
 class SnapshotTable:
-    def __init__(self, root: str):
+    def __init__(self, root: str | None, data_root: str | None = None):
         self.root = root
-        os.makedirs(root, exist_ok=True)
+        self.data_root = data_root
+        if root is not None:
+            os.makedirs(root, exist_ok=True)
 
     @property
     def _manifest_path(self) -> str:
         return os.path.join(self.root, "_manifest.json")
 
     def _read_manifest(self) -> dict:
-        if not os.path.exists(self._manifest_path):
+        if self.root is None or not os.path.exists(self._manifest_path):
             return {"snapshots": []}
         with open(self._manifest_path) as fh:
             return json.load(fh)
@@ -41,38 +81,41 @@ class SnapshotTable:
         return snaps[-1] if snaps else None
 
     def write(self, df: DataFrame, stage: str) -> dict:
-        """Write a new snapshot; returns its manifest entry.  The frame gets
-        lineage columns (stage, snapshot id, partition id) baked in."""
+        """Write a stage's snapshot and commit it; returns its manifest
+        entry (committed only when the table has a root)."""
         snap_id = f"{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-        path = os.path.join(self.root, f"snap-{snap_id}")
-        staged = (
-            df.withColumn("_lineage_stage", F.lit(stage))
-            .withColumn("_lineage_snapshot", F.lit(snap_id))
-            .withColumn("_lineage_partition", F.spark_partition_id())
-        )
-        staged.write.mode("overwrite").parquet(path)
-        rows = None  # row count comes from the audit layer to avoid a rescan
+        path = (os.path.join(self.data_root, stage) if self.data_root
+                else os.path.join(self.root, f"snap-{snap_id}"))
+        entry = {"id": snap_id, "stage": stage, **write_parquet(df, path)}
+        if self.root is not None:
+            self._commit(entry)
+        return entry
+
+    def _commit(self, entry: dict) -> None:
         manifest = self._read_manifest()
-        entry = {
-            "id": snap_id, "stage": stage, "path": path,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "rows": rows,
-        }
+        entry["committed_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
         manifest["snapshots"].append(entry)
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh, indent=1)
         os.replace(tmp, self._manifest_path)  # atomic commit
-        return entry
 
-    def read_latest(self, spark: SparkSession, stage: str | None = None) -> DataFrame | None:
-        """Resume: the most recent committed snapshot (optionally of a given
-        stage), lineage columns dropped."""
+    def committed(self, stage: str | None = None) -> dict | None:
+        """The newest entry (optionally of a given stage) if its data are
+        intact: its directory holds exactly the recorded files at the
+        recorded sizes.  Otherwise ``None``, and the stage is recomputed."""
         for snap in reversed(self._read_manifest()["snapshots"]):
             if stage is None or snap["stage"] == stage:
-                df = spark.read.parquet(snap["path"])
-                return df.drop("_lineage_stage", "_lineage_snapshot", "_lineage_partition")
+                path = snap["path"]
+                ok = "files" in snap and os.path.isdir(path) and data_files(path) == snap["files"]
+                return snap if ok else None
         return None
+
+    def read_latest(self, spark: SparkSession, stage: str | None = None) -> DataFrame | None:
+        """Resume: the most recent intact snapshot (optionally of a given
+        stage), or ``None``."""
+        snap = self.committed(stage)
+        return spark.read.parquet(snap["path"]) if snap else None
 
     def has_stage(self, stage: str) -> bool:
         return any(s["stage"] == stage for s in self._read_manifest()["snapshots"])

@@ -61,8 +61,9 @@ def curate_pipeline(
        stage; its output is an ids-only frame.
     2. ``curated`` — stratified sample of the kept rows + hash split.
 
-    A stage whose snapshot is already committed is NOT recomputed — the
-    frame is read back from the snapshot (lineage columns stripped).
+    A stage whose snapshot is committed and intact is NOT recomputed — the
+    frame is read back from the snapshot.  Each computed stage is written
+    once and audited from that write's task metrics, with no extra job.
     ``fail_after='keep_ids'`` raises :class:`StageKilled` right after that
     stage's commit, simulating a mid-run kill for the resume test.
 
@@ -72,9 +73,9 @@ def curate_pipeline(
     table = SnapshotTable(ckpt_root)
     audit = Audit(audit_path or f"{ckpt_root}/_audit.jsonl")
 
-    if table.has_stage("keep_ids"):
-        keep_ids = table.read_latest(spark, "keep_ids")
-        audit.record(stage="keep_ids", resumed=True)
+    done = table.committed("keep_ids")
+    if done is not None:
+        audit.record(stage="keep_ids", snapshot=done["id"], resumed=True)
     else:
         docs = docs.persist()
         release: list = []
@@ -92,22 +93,22 @@ def curate_pipeline(
             keep.join(rep, "doc_id", "left_semi")
             .join(dec, "doc_id", "left_semi")
         )
-        table.write(keep_ids, "keep_ids")
+        done = table.write(keep_ids, "keep_ids")
+        audit.stage("keep_ids", done)
         for cb in release:
             cb()
         docs.unpersist()
-        # audit the read-back snapshot: the lazy frame would re-run the
-        # minhash/decontaminate plan for the audit's groupBy
-        keep_ids = table.read_latest(spark, "keep_ids")
-        audit.stage("keep_ids", keep_ids)
         if fail_after == "keep_ids":
             raise StageKilled("killed after keep_ids commit")
+    keep_path = done["path"]
 
-    if table.has_stage("curated"):
-        curated = table.read_latest(spark, "curated")
-        audit.record(stage="curated", resumed=True)
+    done = table.committed("curated")
+    if done is not None:
+        audit.record(stage="curated", snapshot=done["id"], resumed=True)
     else:
-        kept = docs.join(keep_ids, "doc_id", "left_semi")
+        # the snapshot, not the lazy frame, which would re-run the
+        # minhash/decontaminate plan
+        kept = docs.join(spark.read.parquet(keep_path), "doc_id", "left_semi")
         s = stratified_sample(
             kept, rates or {"src0": 1.0, "src1": 0.5, "src2": 0.25},
             default_rate=default_rate)
@@ -115,10 +116,9 @@ def curate_pipeline(
             "doc_id", "source",
             hash_split(F.col("doc_id"), train=train, val=val).alias("split"),
         )
-        table.write(curated, "curated")
-        curated = table.read_latest(spark, "curated")
-        audit.stage("curated", curated)
+        done = table.write(curated, "curated")
+        audit.stage("curated", done)
         if fail_after == "curated":
             raise StageKilled("killed after curated commit")
 
-    return curated
+    return spark.read.parquet(done["path"])

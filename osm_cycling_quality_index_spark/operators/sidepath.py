@@ -219,9 +219,7 @@ def sidepath_stage(df: DataFrame) -> DataFrame:
     is_sidepath_of = F.when(truthy(t("is_sidepath:of")), t("is_sidepath:of")).otherwise(
         F.when(proc_sidepath == "yes", F.col("derived_class"))
     )
-    vote_ms = F.col("class_maxspeeds").getItem(
-        F.coalesce(is_sidepath_of, F.lit("~~null~~"))
-    )
+    vote_ms = F.col("class_maxspeeds")[F.coalesce(is_sidepath_of, F.lit("~~null~~"))]
     path_maxspeed = F.when(
         (proc_sidepath == "yes") & truthy(is_sidepath_of) & (vote_ms.isNotNull()) & (vote_ms != 0.0),
         vote_ms,

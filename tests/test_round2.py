@@ -545,7 +545,11 @@ def test_word_ids_rank(spark):
 
 def test_checkpoint_snapshot_resume(spark, tmp_path):
     """Snapshot commit is atomic (manifest replace) and resume returns the
-    last committed stage with lineage columns stripped."""
+    last committed stage.  The lineage lives in the manifest entry (stage,
+    snapshot id, row count, data files with sizes), not in the rows."""
+    import json
+    import os
+
     from osm_cycling_quality_index_spark.checkpoint import SnapshotTable
 
     t = SnapshotTable(str(tmp_path / "ckpt"))
@@ -560,9 +564,21 @@ def test_checkpoint_snapshot_resume(spark, tmp_path):
     assert back_b.columns == ["k"] and back_b.count() == 5
     back_a = t.read_latest(spark, "stage_a")
     assert back_a.count() == 10
-    # lineage columns are present in the stored snapshot itself
-    raw = spark.read.parquet(e1["path"])
-    assert {"_lineage_stage", "_lineage_snapshot", "_lineage_partition"} <= set(raw.columns)
+    # the committed entries carry the lineage; the stored rows do not
+    with open(tmp_path / "ckpt" / "_manifest.json") as fh:
+        entries = json.load(fh)["snapshots"]
+    assert [(e["stage"], e["id"], e["rows"]) for e in entries] == [
+        ("stage_a", e1["id"], 10), ("stage_b", e2["id"], 5)]
+    assert e1["id"] != e2["id"]
+    for e in entries:
+        assert e["files"] and all(
+            os.path.getsize(os.path.join(e["path"], f)) == n for f, n in e["files"].items())
+        assert all(f.startswith("part-") for f in e["files"])
+    assert spark.read.parquet(e1["path"]).columns == ["k"]
+    # an empty frame still writes one schema-only file and commits
+    e3 = t.write(spark.range(0).withColumnRenamed("id", "k"), "stage_empty")
+    assert (e3["rows"], e3["nonempty_partitions"], len(e3["files"])) == (0, 0, 1)
+    assert t.read_latest(spark, "stage_empty").count() == 0
 
 
 def test_streaming_geotag_broadcast(spark, tmp_path):
@@ -790,8 +806,7 @@ def test_main_resume_from_checkpoint(tmp_path):
     spark = get_spark(master="local[4]")
     a = spark.read.parquet(f"{out1}/scored")
     b = spark.read.parquet(f"{out2}/scored")
-    key = [c for c in a.columns if not c.startswith("_lineage")]
-    assert a.select(key).exceptAll(b.select(key)).count() == 0
+    assert a.exceptAll(b).count() == 0
     assert a.count() == b.count() > 0
 
 

@@ -163,12 +163,14 @@ def test_excise_spans_roundtrip(spark):
 # snapshot-resume on the curate pipeline (r5 VERDICT item 6)
 # ---------------------------------------------------------------------------
 
-def test_curate_pipeline_kill_and_resume(spark, tmp_path, monkeypatch):
+def test_curate_pipeline_kill_and_resume(spark, tmp_path, audit_calls):
     """A curate run killed between stages resumes from the committed
     snapshot: the expensive stage is NOT recomputed (snapshot count stays
     1, audit records resumed=True), and the resumed output is bit-equal
     to an uninterrupted single run AND to the driver's un-checkpointed
     corpus_curate plan — restartability never changes the answer."""
+    import os
+
     from osm_cycling_quality_index_spark.operators.curate import (
         StageKilled, curate_pipeline,
     )
@@ -183,37 +185,34 @@ def test_curate_pipeline_kill_and_resume(spark, tmp_path, monkeypatch):
     out_resumed = curate_pipeline(docs, ck_killed)
 
     with open(f"{ck_killed}/_manifest.json") as fh:
-        stages = [s["stage"] for s in json.load(fh)["snapshots"]]
+        entries = json.load(fh)["snapshots"]
+    stages = [s["stage"] for s in entries]
     assert stages.count("keep_ids") == 1  # resumed, didn't rewrite
     assert stages.count("curated") == 1
     with open(f"{ck_killed}/_audit.jsonl") as fh:
         audits = [json.loads(line) for line in fh]
-    assert any(a.get("resumed") for a in audits if a["stage"] == "keep_ids")
-    # lineage columns present in the stored snapshot, stripped on read
-    snap_path = [s for s in json.load(open(f"{ck_killed}/_manifest.json"))
-                 ["snapshots"] if s["stage"] == "keep_ids"][0]["path"]
-    raw = spark.read.parquet(snap_path)
-    assert "_lineage_partition" in raw.columns
-    assert "_lineage_partition" not in out_resumed.columns
+    keep = next(s for s in entries if s["stage"] == "keep_ids")
+    assert any(a.get("resumed") and a["snapshot"] == keep["id"]
+               for a in audits if a["stage"] == "keep_ids")
+    # the manifest entry carries the lineage: stage, snapshot id, rows and
+    # the data files with their sizes; the rows carry none of it
+    curated = next(s for s in entries if s["stage"] == "curated")
+    assert keep["id"] != curated["id"]
+    assert curated["rows"] == out_resumed.count() > 0
+    for s in (keep, curated):
+        assert s["files"] and all(
+            os.path.getsize(os.path.join(s["path"], f)) == n for f, n in s["files"].items())
+    assert spark.read.parquet(keep["path"]).columns == ["doc_id"]
+    assert out_resumed.columns == ["doc_id", "source", "split"]
 
     def rows(df):
         return sorted((r.doc_id, r.source, r.split) for r in df.collect())
 
-    # each stage's audit reads its committed snapshot, never the lazy
-    # stage plan (whose groupBy would re-run the stage)
-    from urllib.parse import urlparse
-
-    from osm_cycling_quality_index_spark.audit import Audit
-
-    audited = []
-    stage = Audit.stage
-    monkeypatch.setattr(Audit, "stage", lambda self, name, df: (
-        audited.append((name, df.inputFiles())), stage(self, name, df))[1])
+    # each stage's audit reads the metrics of the write that committed it
+    # and starts no Spark job of its own
+    del audit_calls[:]
     out_single = curate_pipeline(docs, ck_single)
-    assert [n for n, _ in audited] == ["keep_ids", "curated"]
-    for _, files in audited:
-        assert files and all(
-            urlparse(f).path.startswith(ck_single + "/") for f in files), files
+    assert [(n, jobs) for n, _, _, jobs in audit_calls] == [("keep_ids", 0), ("curated", 0)]
     got = rows(out_resumed)
     assert got == rows(out_single)
 

@@ -125,3 +125,16 @@ def test_randomized_layout_matches_oracle(spark):
             "bicycle": "yes",
         })
     _compare(spark, ways)
+
+
+def test_pipeline_build_uses_no_deprecated_api(spark):
+    """Building the whole CQI chain, sidepath vote included, emits no
+    FutureWarning (Spark 4.1 deprecates a Column key in ``getItem``)."""
+    import warnings
+
+    from osm_cycling_quality_index_spark.operators.pipeline import cqi_pipeline
+    from osm_cycling_quality_index_spark.sources.synth import ways_df
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        cqi_pipeline(ways_df(spark, n_roads=24))

@@ -47,8 +47,9 @@ def main(argv=None) -> int:
     try:
         return _run(spark, args)
     finally:
-        # frames the operators pinned for this run (the sidepath vote's
-        # check counts) are not used once its outputs are written
+        # frames and broadcasts the operators pinned for this run (e.g. the
+        # shuffle form of the geotag join) are not used once its outputs
+        # are written
         from osm_cycling_quality_index_spark.operators.dedup import release_session_pinned
 
         release_session_pinned(spark)

@@ -116,6 +116,3 @@ class SnapshotTable:
         stage), or ``None``."""
         snap = self.committed(stage)
         return spark.read.parquet(snap["path"]) if snap else None
-
-    def has_stage(self, stage: str) -> bool:
-        return any(s["stage"] == stage for s in self._read_manifest()["snapshots"])

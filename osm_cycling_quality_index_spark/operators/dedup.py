@@ -471,8 +471,7 @@ def minhash_lsh_pairs(
     # but recompute cost multiplies by consumer count, and on
     # single-row-group input the shingling pass runs at parallelism 1, so
     # the recompute was the plan's scale-killer (the r2 bench paid ~4x for
-    # it).  Fan-out boundaries get persisted; that is the repo rule
-    # (operators/sidepath.py follows it for the same reason).
+    # it).  Fan-out boundaries get persisted; that is the repo rule.
     toks = tokenize(df, text_col, "shingle").persist()
     pin_session(df.sparkSession, toks.unpersist)
     # ONE grouped pass computes BOTH the n_hashes signature minima and the

@@ -12,19 +12,21 @@ Scale design: candidates are generated by hexcell equi-joins (never a cross
 join); ``bytes`` stays out of every shuffle — joins carry (image_id, lon,
 lat, cell) only and payloads re-attach by a final id-equi-join.
 
-J3 and J4 share one spatial-join core: the shuffle cell join plus exact
-distance refine (``_cell_pairs``), the broadcast CSR index
-(``build_segment_index``, ``_csr_pairs`` inside ``_broadcast_join``), and
-the way segment/cell rows.  Those rows have two forms over the one
-segmentation kernel ``geo.cells.segment_cells``, held equal bit for bit by
-test: ``_way_segments_cells`` in Spark (the shuffle form and the sidepath
-vote) and ``_csr_level`` on the driver, which builds the broadcast index
-faster than collecting the Spark rows.  The shuffle and broadcast forms
-differ only in their exchange and are bit-identical by test.
-``geotag_join`` takes the broadcast form whenever a bound on its index,
-measured on the ways' geometry, is within
-``spark.sql.autoBroadcastJoinThreshold``, and always for a streaming image
-side; the shuffle form serves ways sides too big for the driver.  AQE
+J3, J4 and the sidepath vote (J1, ``operators/sidepath.py``) share one
+spatial-join core: the shuffle cell join plus exact distance refine
+(``_cell_pairs``), the broadcast CSR index (``_csr_level``, with the
+``_csr_pairs`` kernel; ``_broadcast_join`` drives it for J3 and J4), and
+the way segment/cell rows.
+Those rows have two forms over the one segmentation kernel
+``geo.cells.segment_cells``, held equal bit for bit by test:
+``_way_segments_cells`` in Spark (the shuffle forms) and ``_csr_level`` on
+the driver, which builds the broadcast index faster than collecting the
+Spark rows.  The shuffle and broadcast forms differ only in their exchange
+and are bit-identical by test.  One capacity rule,
+:func:`_broadcast_index`, picks the form of ``geotag_join``, the sidepath
+vote and ``pip_join``: broadcast when the index as built fits
+``spark.sql.autoBroadcastJoinThreshold``, and always for a streaming fact
+side; the shuffle form serves dimensions too big for the driver.  AQE
 skew-join splitting (``session.get_spark``: 8 MB threshold, factor 2) is
 the one skew mechanism for hot cells in the shuffle form: the
 ``geotag_hotcell`` benchmark, with 25% of its points in one res-8 cell,
@@ -38,6 +40,7 @@ import math
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -157,8 +160,7 @@ def make_covering_cells_udf(res: int):
     return covering
 
 
-def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
-             max_broadcast_polys: int = 2_000_000) -> DataFrame:
+def pip_join(points: DataFrame, polys: DataFrame, res: int = 9) -> DataFrame:
     """Broadcast cell-bucketed point-in-polygon join (north_star: "joined
     via broadcast-or-shuffle cell-bucketed point-in-polygon (ray-casting
     with prepared bbox prefilter)").
@@ -168,9 +170,9 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
     math and equi-joins the broadcast cell table — the fact side is never
     shuffled.  The exact ray-cast refine has two physical strategies:
 
-    * polygon side fits the driver (the broadcast regime, checked with one
-      cheap dimension count against ``max_broadcast_polys``): projected
-      rings ship once per worker via ``sc.broadcast`` and the refine is the
+    * polygon side fits a broadcast (the broadcast regime, decided by
+      :func:`_broadcast_index` on the projected rings as built): the rings
+      ship once per worker via ``sc.broadcast`` and the refine is the
       Arrow-batched numpy kernel (``geo.kernels.ray_cast_pip``), vectorized
       over all of a polygon's candidate points per batch.
     * larger polygon side (the shuffle regime): the candidate cell join
@@ -195,7 +197,7 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
     # measured at sf0.1 the refine was a single-task 5.5 s stage vs 1.4 s
     # fanned out.  Already-wide inputs (the cluster case) pass through
     # untouched, so the "fact side never shuffled at scale" contract holds.
-    from .dedup import fan_out
+    from .dedup import fan_out, pin_session
 
     points = fan_out(points)
     pcells = polys.select(
@@ -208,20 +210,24 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
         "image_id", px.alias("px"), py.alias("py"),
         hex_cell_cols(px, py, res).alias("cell"),
     )
-    if polys.count() <= max_broadcast_polys:
-        # persist the (dimension-sized, by the chooser) polygon side: the
-        # broadcast regime scans it again for the ring collect and the
-        # covering-cell explode, and a recomputed nondeterministic lineage
-        # could make rings and cells disagree.  pcells above was built
-        # from the same analyzed subtree, so it reads this cache too.
-        polys = polys.persist()
 
+    def build_rings(polys):
+        # persist the polygon side: the broadcast regime scans it again for
+        # the covering-cell explode, and a recomputed nondeterministic
+        # lineage could make rings and cells disagree.  pcells above was
+        # built from the same analyzed subtree, so it reads this cache too.
+        polys.persist()
         tbl = polys.select("poly_id", "geometry").toArrow()
         lon, lat, off = decode(tbl.column("geometry"))
         # mirror make_covering_cells_udf: degenerate rings emit no cells,
         # so they can never reach the refine
-        rings = {p: project(lon[s:e], lat[s:e]) for p, s, e in zip(
+        return {p: project(lon[s:e], lat[s:e]) for p, s, e in zip(
             tbl.column("poly_id").to_pylist(), off[:-1], off[1:]) if e - s >= 3}
+
+    rings = _broadcast_index(polys, build_rings)
+    if rings is None:
+        polys.unpersist()
+    else:
         # the rings broadcast (ids + projected coordinates only) and the
         # polys persist are registered with the dedup module's session
         # registry: repeated pip_join calls over different polygon sets in
@@ -229,8 +235,6 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 9,
         # memory until session end.  release_session_pinned(spark) frees
         # them once the join output is consumed (the returned frame is not
         # re-executable afterwards).
-        from .dedup import pin_session
-
         bc = points.sparkSession.sparkContext.broadcast(rings)
 
         def _release(bc=bc, frame=polys):
@@ -471,26 +475,30 @@ def knn_ways(
     return done1.unionByName(ranked2)
 
 
-def _collect_ways(ways: DataFrame) -> dict:
+def _collect_ways(ways: DataFrame, carry: tuple = ()) -> dict:
     """The ways side of the broadcast index, collected once as ``(id,
-    geometry)`` through Arrow: every way's projected vertices back to back
-    (``x``, ``y``, ``offsets`` as :func:`geo.cells.segment_cells` takes
-    them) and its id interned as an int (``wid``; ``ids`` maps back).  Ids
-    are interned in lexicographic order, so the int argmin tie-break equals
-    the shuffle path's min-id tie-break; like the Spark rows, only ways with
-    a segment (two or more vertices) take part."""
+    geometry, *carry)`` through Arrow: every way's projected vertices back
+    to back (``x``, ``y``, ``offsets`` as :func:`geo.cells.segment_cells`
+    takes them), its id interned as an int (``wid``; ``ids`` maps back) and
+    the ``carry`` columns (aliased Columns) as Arrow arrays under
+    ``carry``, by name.  Ids are interned in Spark's order (lexicographic,
+    NULL first), so the int argmin tie-break equals the shuffle path's
+    min-id tie-break; like the Spark rows, only ways with a segment (two or
+    more vertices) take part."""
     from ..geo.kernels import project
 
-    tbl = ways.select("id", "geometry").toArrow()
+    tbl = ways.select("id", "geometry", *carry).toArrow()
     lon, lat, offsets = decode(tbl.column("geometry"))
     x, y = project(lon, lat)
-    lens = np.diff(offsets)
-    id_all = tbl.column("id").to_numpy()
-    has = lens >= 2
-    ids = np.unique(id_all[has])  # sorted -> int order == lexicographic order
-    wid = np.zeros(len(lens), dtype=np.int64)
-    wid[has] = np.searchsorted(ids, id_all[has])
-    return {"x": x, "y": y, "offsets": offsets, "wid": wid, "ids": ids}
+    has = np.diff(offsets) >= 2
+    id_has = tbl.column("id").filter(pa.array(has))
+    ids = pc.unique(id_has)
+    ids = ids.take(pc.sort_indices(ids, null_placement="at_start"))
+    wid = np.zeros(len(has), dtype=np.int64)
+    wid[has] = pc.index_in(id_has, value_set=ids).to_numpy()
+    return {"x": x, "y": y, "offsets": offsets, "wid": wid,
+            "ids": ids.to_numpy(zero_copy_only=False),
+            "carry": {n: tbl.column(n).combine_chunks() for n in tbl.column_names[2:]}}
 
 
 def _csr_level(raw: dict, res: int, rings: int) -> dict:
@@ -802,33 +810,37 @@ def geotag_join_broadcast(images: DataFrame, ways: DataFrame,
     return images.join(nn.select("image_id", "way_id", "dist_m"), "image_id", "left")
 
 
-# bytes per index row: the segment (4 float64) and way int, plus the
-# cells/starts entries of a row that opens its own cell
-_INDEX_ROW_BYTES = 4 * 8 + 8 + 2 * 8
+def _nbytes(obj) -> int:
+    """Bytes of the numpy arrays in a built index (nested dicts and tuples)."""
+    if isinstance(obj, np.ndarray):
+        return obj.nbytes
+    if isinstance(obj, dict):
+        obj = obj.values()
+    elif not isinstance(obj, tuple):
+        return 0
+    return sum(_nbytes(v) for v in obj)
 
 
-def _index_bytes_bound(ways: DataFrame, res: int, rings: int,
-                       coarse_drop: int = 3) -> int:
-    """Upper bound on the bytes :func:`build_segment_index` would build and
-    broadcast for ``ways``, from one aggregate over the geometry itself (not
-    the optimizer's size estimate, which prices a vertex array at a default
-    width whatever its length).  A segment of length ``l`` gets at most
-    ``l / (edge / 2) + 2`` cell samples in :func:`geo.cells.segment_cells`,
-    and each sample at most a grid_disk of rows, so both levels together
-    hold at most ``sum(disk * (L / step + 2 * S))`` rows for ``S`` segments
-    of total projected length ``L``."""
-    g = F.col("geometry")
-    n = F.greatest(F.size(g) - 1, F.lit(0))
-    seg_m = F.zip_with(
-        F.slice(g, 1, n), F.slice(g, 2, n),
-        lambda a, b: F.hypot((b["x"] - a["x"]) * MPD_X, (b["y"] - a["y"]) * MPD_Y))
-    segs, length = ways.agg(
-        F.sum(n), F.sum(F.aggregate(seg_m, F.lit(0.0), lambda acc, v: acc + v)),
-    ).first()
-    segs, length = segs or 0, length or 0.0
-    rows = sum((1 + 3 * k * (k + 1)) * (length / (C.hex_edge_m(r) / 2.0) + 2 * segs)
-               for r, k in ((res, rings), (max(0, res - coarse_drop), 2)))
-    return int(math.ceil(rows * _INDEX_ROW_BYTES))
+def _broadcast_index(ways: DataFrame, build, stream: bool = False):
+    """The one capacity rule of the broadcast spatial joins: ``build(ways)``
+    (a driver-built index of the dimension ``ways``) when it fits a
+    broadcast, else None, for the shuffle form.
+
+    ``spark.sql.autoBroadcastJoinThreshold`` is the capacity, as for Spark's
+    own broadcast joins: a negative threshold means the shuffle form, and a
+    ``stream`` fact side always takes the broadcast form (the shuffle forms
+    persist, which a stream cannot).  Otherwise one lambda-free aggregate
+    first caps the collect at 16 bytes per vertex (the two doubles the
+    driver decodes), so a dimension too big for the driver is never
+    collected, and the index as built must then fit too."""
+    if stream:
+        return build(ways)
+    limit = ways.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    if limit < 0 or 16 * (ways.agg(F.sum(F.size("geometry"))).first()[0] or 0) > limit:
+        return None
+    index = build(ways)
+    return index if _nbytes(index) <= limit else None
 
 
 def geotag_join(images: DataFrame, ways: DataFrame, res: int = 8) -> DataFrame:
@@ -836,25 +848,22 @@ def geotag_join(images: DataFrame, ways: DataFrame, res: int = 8) -> DataFrame:
     fallback).  Output: images + (way_id, dist_m).
 
     The broadcast form, :func:`geotag_join_broadcast`, runs whenever its
-    CSR index fits a broadcast: :func:`_index_bytes_bound`, measured on the
-    ways' geometry by one aggregate, is within
-    ``spark.sql.autoBroadcastJoinThreshold`` (a negative threshold disables
-    it, as for Spark's own broadcast joins).  The index is then built here,
-    eagerly, from one collect of the ways.  A streaming ``images`` frame
-    always takes the broadcast form, since the shuffle form persists, which
-    a stream cannot.  Otherwise, for a ways side too big to hold on the
-    driver, it is the shuffle form, ``knn_ways`` k=1.  Both give the same
-    rows and tie-breaks (tested).
+    CSR index fits a broadcast by :func:`_broadcast_index`, the rule every
+    broadcast spatial join shares; the index is then built here, eagerly,
+    from one collect of the ways.  A streaming ``images`` frame always takes
+    it.  Otherwise, for a ways side too big to hold on the driver, it is the
+    shuffle form, ``knn_ways`` k=1.  Both give the same rows and tie-breaks
+    (tested).
 
     In the shuffle form, payload-free frames (only image_id/lon/lat) skip
     the final id-equi-join: lon/lat ride through the kNN agg as carry
     columns, saving a full shuffle join of the big side.  Frames with
     payload columns (bytes!) re-attach by the final equi-join so payloads
     never enter the kNN shuffle."""
-    limit = images.sparkSession._jsparkSession.sessionState().conf() \
-        .autoBroadcastJoinThreshold()
-    if images.isStreaming or 0 <= limit and _index_bytes_bound(ways, res, 1) <= limit:
-        return geotag_join_broadcast(images, ways, res=res)
+    index = _broadcast_index(
+        ways, lambda w: build_segment_index(w, res=res, rings=1), images.isStreaming)
+    if index is not None:
+        return geotag_join_broadcast(images, ways, res=res, index=index)
     extra = [c for c in images.columns if c not in ("image_id", "lon", "lat")]
     if not extra:
         return knn_ways(images, ways, k=1, res=res, rings=1,

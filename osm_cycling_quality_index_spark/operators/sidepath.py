@@ -11,172 +11,285 @@ votes in a driver-side dict (:250-288).  Here:
    property-tested);
 3. road polylines explode to segments with covering cells sampled at half the
    cell edge, guaranteeing cell overlap for any candidate within 22 m — the
-   same segment/cell source as the geotag and kNN joins
-   (``images._way_segments_cells``);
-4. equi-join on (cell) + same-layer predicate (J1a), exact point-to-segment
-   distance refine, distinct (way, check point, road);
-5. ``groupBy`` votes replace the driver-side dict: a path is a sidepath when
-   >= 2/3 of its check points see the same road id, highway class or name
-   (== all of them when checks <= 2, :317-341).
+   same segment/cell rows as the geotag and kNN joins, built on the driver
+   (``images._csr_level``) or in Spark (``images._way_segments_cells``);
+4. the cell lookup, the same-layer predicate (J1a, NULL-safe) and the exact
+   point-to-segment distance refine;
+5. one numpy vote (:func:`_vote`) replaces the driver-side dict, counting
+   distinct check points: a path is a sidepath when >= 2/3 of its check
+   points see the same road id, highway class or name (== all of them when
+   checks <= 2, :317-341).
 
-Scale notes: the join shuffles on cell ids; AQE skew-join handles dense urban
-cells, and the roads side is broadcast when small.  Only ids + 4 doubles +
-join keys flow through the shuffle — never geometry arrays or payload bytes.
+Scale notes: the roads side is a dimension.  When its index fits a broadcast
+(``images._broadcast_index``, the rule every broadcast spatial join shares),
+steps 1-5 run in one ``mapInArrow`` kernel per batch of paths against the
+broadcast CSR index: no shuffle and no persist.  Otherwise steps 2-4 are a
+cell-keyed shuffle join (AQE skew-join handles dense urban cells; only ids,
+4 doubles and join keys ride it, never geometry) and step 5 runs per path
+through ``groupBy("id").applyInArrow``.  Both forms give the same rows
+(tested).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType, DoubleType, LongType, MapType, StringType, StructField,
+    StructType,
+)
 
 from .. import params as P
 from ..functions.fold import Tags
 from ..functions.nulls import truthy
 from ..functions.tags import get_number, normalize_maxspeed
+from ..geo import kernels as K
 from ..geo.cols import hex_cell_cols
-from ..geo.udfs import checkpoints_udf, point_segment_distance_cols
-from .images import _way_segments_cells
+from ..geo.udfs import checkpoints_udf, decode, point_segment_distance_cols
+from .images import (
+    _broadcast_index, _collect_ways, _csr_level, _csr_pairs, _way_segments_cells,
+)
 
 _RES = 9  # hexcell resolution: 22 m disc fits in ring-1 (edge ~174 m)
 
 
-def _check_points(paths: DataFrame) -> DataFrame:
-    """(id, layer, chk_idx, px, py) — one row per check point."""
+def _road_cols() -> tuple:
+    """The road columns the vote reads, as the shuffle form's rows name them."""
     return (
-        paths.select("id", "layer", F.posexplode(checkpoints_udf("geometry")).alias("chk_idx", "pt"))
-        .select("id", "layer", "chk_idx", F.col("pt.px").alias("px"), F.col("pt.py").alias("py"))
-    )
-
-
-def _road_segments(roads: DataFrame) -> DataFrame:
-    """(road_id, road_layer, road_highway, road_name, road_maxspeed,
-    ax..by, cell) — road polylines exploded to segments x covering cells,
-    ring-expanded on the small (roads) side so path check points join on a
-    single cell each.  The roads come from the stage's fanned-out input, so
-    no second exchange is added here."""
-    return _way_segments_cells(roads, _RES, 1, carry=(
         F.col("id").alias("road_id"),
         F.col("layer").alias("road_layer"),
         F.col("highway").alias("road_highway"),
         F.col("name").alias("road_name"),
         get_number(F.col("maxspeed")).alias("road_maxspeed"),
-    ))
+    )
+
+
+#: A7 rank of a highway class in HIGHWAY_CLASS_LIST (:345-354); a NULL or
+#: unlisted class ranks last
+_RANK = {c: i for i, c in enumerate(P.HIGHWAY_CLASS_LIST) if c is not None}
+_LAST = len(P.HIGHWAY_CLASS_LIST) - 1
+#: class_maxspeeds key of the NULL class
+_NULL_CLASS = "~~null~~"
+
+
+def _codes(values: pa.Array) -> tuple[np.ndarray, list]:
+    """Sorted dictionary codes of an Arrow column: ``codes[i]`` indexes
+    ``vals``, -1 for NULL, so code order is Spark's string order with NULL
+    lowest."""
+    codes, vals = pd.factorize(values.to_pandas().astype(object), sort=True)
+    return codes.astype(np.int64), list(vals)
+
+
+def _runs(*keys: np.ndarray) -> np.ndarray:
+    """Start of every run of equal rows in key arrays that are sorted."""
+    new = np.ones(len(keys[0]), dtype=bool)
+    if len(new) > 1:
+        new[1:] = np.any([k[1:] != k[:-1] for k in keys], axis=0)
+    return np.flatnonzero(new)
+
+
+def _last_per_path(gp: np.ndarray, *keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(path, group) of the greatest group of each path by ``keys``
+    (most significant first)."""
+    order = np.lexsort((*keys[::-1], gp))
+    ends = np.append(_runs(gp[order])[1:], len(order))[:len(order)] - 1
+    return gp[order][ends], order[ends]
+
+
+_VOTE_COLS = {
+    "checks": LongType(), "vote_yes": BooleanType(), "derived_class": StringType(),
+    "class_maxspeeds": MapType(StringType(), DoubleType()), "vote_name": StringType(),
+}
+
+
+def _road_keys(cols: dict) -> tuple[dict, list, list]:
+    """What the vote reads of each road, from its Arrow columns (named as
+    in :func:`_road_cols`): ``rid``, ``hw`` and ``name`` codes
+    (:func:`_codes`), the maxspeed ``ms`` and ``ms_ok`` (False for NULL);
+    then the ``hw`` and ``name`` values the codes index."""
+    hw, hw_vals = _codes(cols["road_highway"])
+    name, name_vals = _codes(cols["road_name"])
+    ms = cols["road_maxspeed"]
+    return ({"rid": _codes(cols["road_id"])[0], "hw": hw, "name": name,
+             "ms": ms.to_numpy(zero_copy_only=False).astype(np.float64),
+             "ms_ok": ~ms.is_null().to_numpy(zero_copy_only=False)},
+            hw_vals, name_vals)
+
+
+def _vote(ids: pa.Array, checks: np.ndarray, p: np.ndarray, c: np.ndarray,
+          road: dict, hw_vals: list, name_vals: list) -> pa.RecordBatch:
+    """The A1-A9 vote of a batch of paths, in numpy: one output row per path
+    ``ids[i]`` with ``checks[i]`` check points.  The hits are (check point,
+    road) rows, repeats allowed: path ``p``, check point ``c`` (unique
+    across the batch) and the road's :func:`_road_keys` arrays in ``road``.
+
+    Same semantics as the reference's dict: a vote key counts the distinct
+    check points that see it, NULL highway and name groups vote, and a
+    path's class maxspeed is the max over its hits of that class.  Ties:
+    ``derived_class`` is the max of (count, -rank, class) with a NULL class
+    lowest; ``vote_name`` the max count, then the least name, NULL first."""
+    n = len(checks)
+    yes = np.zeros(n, dtype=bool)
+    out = {}
+    for kind in ("rid", "hw", "name"):
+        k = road[kind]
+        order = np.lexsort((c, k, p))
+        first = _runs(p[order], k[order], c[order])
+        pk, kk = p[order][first], k[order][first]
+        g = _runs(pk, kk)
+        gp, gk = pk[g], kk[g]
+        cnt = np.diff(np.append(g, len(pk)))
+        chk = checks[gp]
+        flag = np.where(chk <= 2, cnt == chk, cnt >= chk * 0.66)
+        yes[gp[flag]] = True
+        out[kind] = (gp, gk, cnt)
+
+    gp, gk, cnt = out["hw"]
+    rank = np.array([_RANK.get(v, _LAST) for v in hw_vals] + [_LAST])[gk]
+    derived = np.full(n, -1, dtype=np.int64)
+    at, win = _last_per_path(gp, cnt, -rank, gk)
+    derived[at] = gk[win]
+    np_, nk, ncnt = out["name"]
+    name = np.full(n, -1, dtype=np.int64)
+    at, win = _last_per_path(np_, ncnt, -nk)
+    name[at] = nk[win]
+
+    # class_maxspeeds: per (path, class) — the groups of gp/gk, in their
+    # order — the max maxspeed of its hits; a NaN stays the max, as in Spark
+    order = np.lexsort((road["hw"], p))
+    g = _runs(p[order], road["hw"][order])
+    ms = np.maximum.reduceat(np.where(road["ms_ok"], road["ms"], -np.inf)[order], g)
+    ms_ok = np.logical_or.reduceat(road["ms_ok"][order], g)
+    per_path = np.bincount(gp, minlength=n)
+    offsets = np.concatenate([[0], np.cumsum(per_path)])
+    keys = [hw_vals[k] if k >= 0 else _NULL_CLASS for k in gk]
+    maxspeeds = pa.MapArray.from_arrays(
+        pa.array(offsets, pa.int32(), mask=np.append(per_path == 0, False)),
+        pa.array(keys, pa.string()), pa.array(ms, pa.float64(), mask=~ms_ok))
+
+    def strings(code, vals):
+        return pa.array([vals[k] if k >= 0 else None for k in code], pa.string())
+
+    return pa.RecordBatch.from_arrays(
+        [ids, pa.array(checks, pa.int64()), pa.array(yes),
+         strings(derived, hw_vals), maxspeeds, strings(name, name_vals)],
+        names=["id", *_VOTE_COLS])
+
+
+def _vote_schema(paths: DataFrame) -> StructType:
+    return StructType([paths.schema["id"], *(
+        StructField(k, t) for k, t in _VOTE_COLS.items())])
+
+
+def _road_index(roads: DataFrame) -> dict:
+    """The broadcast form's dimension: the roads' res-9 ring-1 CSR level
+    (rows keyed by the road's row in the collect) and the road columns the
+    vote reads, from one Arrow collect."""
+    raw = _collect_ways(roads, carry=_road_cols())
+    level = _csr_level(dict(raw, wid=np.arange(len(raw["offsets"]) - 1)), _RES, 1)
+    layer, layers = _codes(raw["carry"]["road_layer"])
+    return {
+        "level": {k: level[k] for k in ("res", "cells", "starts", "seg", "wid")},
+        "layer": layer, "layers": {v: i for i, v in enumerate(layers)},
+        "roads": _road_keys(raw["carry"]),
+    }
+
+
+def _broadcast_votes(paths: DataFrame, index: dict) -> DataFrame:
+    """Steps 1-5 in one Arrow kernel per batch of ``(id, layer, geometry)``
+    paths against the broadcast road index."""
+    bidx = paths.sparkSession.sparkContext.broadcast(index)
+
+    def run(batches):
+        idx = bidx.value
+        keys, hw_vals, name_vals = idx["roads"]
+        for b in batches:
+            # step 1: check points exactly as checkpoints_udf makes them
+            lon, lat, off = decode(b.column("geometry"))
+            xs, ys, npts = [], [], np.zeros(b.num_rows, dtype=np.int64)
+            for i, (s, e) in enumerate(zip(off[:-1].tolist(), off[1:].tolist())):
+                if e > s:
+                    x, y = K.points_along_line(lon[s:e], lat[s:e],
+                                               P.SIDEPATH_BUFFER_DISTANCE)
+                    xs.append(x)
+                    ys.append(y)
+                    npts[i] = len(x)
+            has = np.flatnonzero(npts)
+            checks = npts[has]
+            path = np.repeat(np.arange(len(has)), checks)
+            # steps 2-4: cell lookup, distance refine, same layer (NULL-safe:
+            # NULL == NULL; a layer no road has matches none)
+            pt, road = np.array([], np.int64), np.array([], np.int64)
+            pairs = _csr_pairs(idx["level"], np.concatenate(xs or [[]]),
+                               np.concatenate(ys or [[]]))
+            if pairs is not None:
+                _, pt, road, d = pairs
+                lut = idx["layers"]
+                layer = np.array([-1 if v is None else lut.get(v, -2)
+                                  for v in b.column("layer").to_pylist()])[has]
+                keep = (d <= P.SIDEPATH_BUFFER_SIZE) & (layer[path[pt]] == idx["layer"][road])
+                pt, road = pt[keep], road[keep]
+            yield _vote(b.column("id").take(has), checks, path[pt], pt,
+                        {k: v[road] for k, v in keys.items()}, hw_vals, name_vals)
+
+    return paths.select("id", "layer", "geometry").mapInArrow(run, _vote_schema(paths))
+
+
+def _vote_group(tbl: pa.Table) -> pa.Table:
+    """Step 5 of the shuffle form for one path's rows: every check point
+    once, with its hits (``segs`` > 0) distinct per road."""
+    chk = tbl.column("chk_idx").to_numpy()
+    checks = np.array([len(np.unique(chk))], dtype=np.int64)
+    hit = tbl.column("segs").to_numpy() > 0
+    hits = tbl.filter(pa.array(hit))
+    return pa.Table.from_batches([_vote(
+        tbl.column("id").slice(0, 1).combine_chunks(), checks,
+        np.zeros(hits.num_rows, dtype=np.int64), chk[hit],
+        *_road_keys({n: hits.column(n) for n in hits.column_names}))])
+
+
+def _shuffle_votes(paths: DataFrame, roads: DataFrame) -> DataFrame:
+    """Steps 1-4 as a cell-keyed shuffle join, step 5 per path through
+    ``groupBy("id").applyInArrow``.  A left join keeps every check point, so
+    the vote counts those without a hit too."""
+    from .dedup import fan_out
+
+    pts = paths.select(
+        "id", "layer", F.posexplode(checkpoints_udf("geometry")).alias("chk_idx", "pt"),
+    ).select("id", "layer", "chk_idx", F.col("pt.px").alias("px"), F.col("pt.py").alias("py"))
+    pts = pts.withColumn("cell", hex_cell_cols(F.col("px"), F.col("py"), _RES))
+    rsegs = _way_segments_cells(fan_out(roads), _RES, 1, carry=_road_cols()) \
+        .withColumnRenamed("cell", "road_cell")
+    dist = point_segment_distance_cols(
+        F.col("px"), F.col("py"), F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
+    cand = pts.join(
+        rsegs,
+        (F.col("cell") == F.col("road_cell"))
+        # J1a: only roads in the same OSM layer (:255-257); QGIS compares
+        # with Python != where NULL == NULL holds
+        & F.col("layer").eqNullSafe(F.col("road_layer"))
+        & (dist <= F.lit(P.SIDEPATH_BUFFER_SIZE)),
+        "left",
+    )
+    # a (check point, road) pair counts once no matter how many segments or
+    # cells matched (:250-269 dedupes via id_list/highway_list)
+    hits = cand.groupBy("id", "chk_idx", "road_id", "road_highway", "road_name").agg(
+        F.max("road_maxspeed").alias("road_maxspeed"), F.count("ax").alias("segs"))
+    return hits.groupBy("id").applyInArrow(_vote_group, _vote_schema(paths))
 
 
 def sidepath_votes(paths: DataFrame, roads: DataFrame) -> DataFrame:
-    """One row per path id with vote results:
-    (id, checks, vote_yes, derived_class, class_maxspeeds map, vote_name)."""
-    pts = _check_points(paths)
-    pts_cells = pts.withColumn(
-        "cell", hex_cell_cols(F.col("px"), F.col("py"), _RES)
-    )
-    rsegs = _road_segments(roads)
-
-    cand = pts_cells.join(rsegs, on="cell", how="inner").where(
-        # J1a: only roads in the same OSM layer (:255-257); QGIS compares with
-        # Python != where NULL == NULL holds
-        F.col("layer").eqNullSafe(F.col("road_layer"))
-    )
-    hits = (
-        cand.where(
-            point_segment_distance_cols(
-                F.col("px"), F.col("py"), F.col("ax"), F.col("ay"),
-                F.col("bx"), F.col("by"),
-            )
-            <= F.lit(P.SIDEPATH_BUFFER_SIZE)
-        )
-        .select("id", "chk_idx", "road_id", "road_highway", "road_name", "road_maxspeed")
-        # a (check point, road) pair counts once no matter how many segments
-        # or cells matched (:250-269 dedupes via id_list/highway_list)
-        .groupBy("id", "chk_idx", "road_id", "road_highway", "road_name")
-        .agg(F.max("road_maxspeed").alias("road_maxspeed"))
-    )
-
-    checks = pts.groupBy("id").agg(F.count(F.lit(1)).alias("checks")).persist()
-    from .dedup import pin_session
-
-    pin_session(paths.sparkSession, checks.unpersist)
-
-    # All six vote results (A1-A9) reduce over the same hits frame keyed by
-    # (id, <road_id | highway | name>).  The previous shape ran SIX
-    # aggregate branches off a persisted hits cache and re-joined them with
-    # six per-id left joins — ~0.4 s of fixed stage latency per branch at
-    # bench scale (57 static exchanges).  Instead: explode each hit row
-    # into its three vote dimensions once (map-side, 3x the ids-only hit
-    # rows — the payload is four short columns), aggregate ONE
-    # (kind, id, key) count table, and reduce it to one row per id in a
-    # single grouped pass.  Vote semantics are bit-identical:
-    #
-    # * flags: max(flag) over each kind's rows == the per-vote() max;
-    # * derived_class (A7): max(struct(cnt, -rank, key)) == row_number
-    #   over (cnt DESC, rank ASC) — highest count, tie to lowest rank
-    #   (ties beyond that are data-impossible: rank is injective on the
-    #   class list and NULL/unlisted classes share the last rank only if
-    #   two such classes tie exactly, where the old window order was
-    #   nondeterministic anyway);
-    # * vote_name (A8): min(struct(-cnt, name)) == row_number over
-    #   (cnt DESC, name ASC NULLS FIRST) — struct ordering puts NULL
-    #   fields first, verified by test;
-    # * class_maxspeeds (A5/A9): the same (id, highway) groups, folded to
-    #   a map in the same pass.
-    expl = hits.select(
-        "id", "chk_idx", "road_maxspeed",
-        F.explode(F.array(
-            F.struct(F.lit("i").alias("kind"), F.col("road_id").alias("key")),
-            F.struct(F.lit("h").alias("kind"), F.col("road_highway").alias("key")),
-            F.struct(F.lit("n").alias("kind"), F.col("road_name").alias("key")),
-        )).alias("e"),
-    ).select("id", "chk_idx", "road_maxspeed", F.col("e.kind").alias("kind"),
-             F.col("e.key").alias("key"))
-    counts = expl.groupBy("kind", "id", "key").agg(
-        F.countDistinct("chk_idx").alias("cnt"),
-        # only read for kind='h' (max maxspeed per (way, class), A5)
-        F.max("road_maxspeed").alias("ms"),
-    )
-
-    # A7 rank: most frequent highway class, ties -> highest rank in
-    # HIGHWAY_CLASS_LIST (:345-354); NULL class ranks last
-    rank_expr = F.lit(len(P.HIGHWAY_CLASS_LIST) - 1)
-    for i, cls in enumerate(P.HIGHWAY_CLASS_LIST):
-        if cls is not None:
-            rank_expr = F.when(F.col("key") == cls, F.lit(i)).otherwise(rank_expr)
-
-    flag = F.when(
-        F.col("checks") <= 2, F.col("cnt") == F.col("checks")
-    ).otherwise(F.col("cnt") >= F.col("checks") * 0.66)
-    is_h = F.col("kind") == "h"
-    is_n = F.col("kind") == "n"
-    per_id = (
-        counts.join(checks, "id")
-        .groupBy("id")
-        .agg(
-            F.max(F.when(F.col("kind") == "i", flag)).alias("vote_road_id"),
-            F.max(F.when(is_h, flag)).alias("vote_road_highway"),
-            F.max(F.when(is_n, flag)).alias("vote_road_name"),
-            F.max(F.when(is_h, F.struct(
-                F.col("cnt"), (-rank_expr).alias("nrank"), F.col("key"),
-            ))).alias("_dc"),
-            F.min(F.when(is_n, F.struct(
-                (-F.col("cnt")).alias("nc"), F.col("key"),
-            ))).alias("_nm"),
-            F.map_from_entries(F.collect_list(F.when(is_h, F.struct(
-                F.coalesce(F.col("key"), F.lit("~~null~~")), F.col("ms"),
-            )))).alias("class_maxspeeds"),
-        )
-    )
-
-    out = checks.join(per_id, "id", "left")
-    return out.withColumn(
-        "vote_yes",
-        F.coalesce(F.col("vote_road_id"), F.lit(False))
-        | F.coalesce(F.col("vote_road_highway"), F.lit(False))
-        | F.coalesce(F.col("vote_road_name"), F.lit(False)),
-    ).select(
-        "id", "checks", "vote_yes",
-        F.col("_dc.key").alias("derived_class"),
-        "class_maxspeeds",
-        F.col("_nm.key").alias("vote_name"),
-    )
+    """One row per path id with a check point, with vote results:
+    (id, checks, vote_yes, derived_class, class_maxspeeds map, vote_name).
+    The broadcast form runs when the roads' index fits a broadcast
+    (``images._broadcast_index``), else the shuffle form."""
+    index = _broadcast_index(roads, _road_index)
+    if index is None:
+        return _shuffle_votes(paths, roads)
+    return _broadcast_votes(paths, index)
 
 
 def sidepath_stage(df: DataFrame) -> DataFrame:
@@ -184,31 +297,34 @@ def sidepath_stage(df: DataFrame) -> DataFrame:
     proc_sidepath/proc_highway/proc_maxspeed and the transferred name
     (reference/cycling_quality_index.py:210-366).
 
-    The stage's cost is the pandas-UDF geometry sampling inside
-    :func:`sidepath_votes` — fan the input out first so that per-row
-    work runs at the cluster's width instead of the upstream scan's
-    (one-row-group local fixtures scan as 1-2 partitions; already-wide
-    or shuffled inputs — the cluster case — pass through untouched).
-    Every downstream consumer is an aggregate or an id-equi-join, so
-    layout never affects results."""
+    The stage's per-row work (the check points and the vote kernel, and
+    every layer downstream) must run at the cluster's width, so the input
+    is fanned out first (one-row-group local fixtures scan as 1-2
+    partitions; already-wide or shuffled inputs — the cluster case — pass
+    through untouched).  The roads are read before the fan-out: the
+    broadcast form collects them to the driver, and the shuffle form fans
+    them out itself.  Every downstream consumer is an aggregate or an
+    id-equi-join, so layout never affects results."""
     from .dedup import fan_out
 
     t = Tags(df)
-    # the vote join reads these tags by name: an absent one is a NULL column
+    # the vote reads these tags by name: an absent one is a NULL column
     missing = [n for n in ("layer", "name", "maxspeed") if n not in t]
     if missing:
         df = df.withColumns({n: F.lit(None).cast("string") for n in missing})
-    df = fan_out(df)
     highway = t("highway")
     is_path = highway.isin(P.PATH_HIGHWAY_LIST)
-    paths = df.filter(is_path)
     # P4: QGIS `IS NOT` keeps NULL highway in the roads layer (:219)
     roads = df.filter(
         highway.isNull() | ~highway.isin(P.PATH_HIGHWAY_LIST + ["track"])
     )
-    votes = sidepath_votes(paths, roads)
+    df = fan_out(df)
+    votes = sidepath_votes(df.filter(is_path), roads)
 
-    out = df.join(votes, "id", "left")
+    # rows sorted by id within each partition: ways whose ids sort together
+    # share their tags, so the written stages compress better than in the
+    # fan-out's order (the benchmark city's snapshot by 4%)
+    out = df.join(votes, "id", "left").sortWithinPartitions("id")
 
     tag = t("is_sidepath")
     tag = F.when(t("footway") == "sidewalk", F.lit("yes")).otherwise(tag)
@@ -219,7 +335,7 @@ def sidepath_stage(df: DataFrame) -> DataFrame:
     is_sidepath_of = F.when(truthy(t("is_sidepath:of")), t("is_sidepath:of")).otherwise(
         F.when(proc_sidepath == "yes", F.col("derived_class"))
     )
-    vote_ms = F.col("class_maxspeeds")[F.coalesce(is_sidepath_of, F.lit("~~null~~"))]
+    vote_ms = F.col("class_maxspeeds")[F.coalesce(is_sidepath_of, F.lit(_NULL_CLASS))]
     path_maxspeed = F.when(
         (proc_sidepath == "yes") & truthy(is_sidepath_of) & (vote_ms.isNotNull()) & (vote_ms != 0.0),
         vote_ms,
@@ -236,6 +352,4 @@ def sidepath_stage(df: DataFrame) -> DataFrame:
             F.col("vote_name"),
         ).otherwise(F.col("name")),
     })
-    return out.drop(
-        "checks", "vote_yes", "derived_class", "class_maxspeeds", "vote_name"
-    )
+    return out.drop(*_VOTE_COLS)

@@ -173,12 +173,11 @@ def test_geotag_broadcast_parity(spark):
 
 
 def test_geotag_size_rule_reads_the_geometry(spark, tmp_path):
-    """The broadcast/shuffle choice is made on the index the ways would
-    build, not on Spark's size estimate: on a parquet ways table with wide
-    tag columns and long polylines, the estimate of ``(id, geometry)``
-    passes a 1 MB threshold while the built index is several times larger,
-    so geotag_join must take the shuffle form.  The bound the rule reads
-    holds the built index, here and on the degenerate ways."""
+    """The broadcast/shuffle choice is made on the index as built, not on
+    Spark's size estimate: on a parquet ways table with wide tag columns
+    and long polylines, the estimate of ``(id, geometry)`` and the
+    vertex cap both pass a 1 MB threshold while the built index is over
+    1 MB, so geotag_join must take the shuffle form."""
     from osm_cycling_quality_index_spark.operators import images as I
 
     rng = np.random.default_rng(7)
@@ -204,10 +203,8 @@ def test_geotag_size_rule_reads_the_geometry(spark, tmp_path):
     limit = 1 << 20
     est = wide.select("id", "geometry")._jdf.queryExecution() \
         .optimizedPlan().stats().sizeInBytes()
-    built = index_bytes(wide)
-    assert int(est) <= limit < built
-    for ways in (wide, _hostile_geo(spark)[0]):
-        assert I._index_bytes_bound(ways, 8, 1) >= index_bytes(ways)
+    vertices = wide.agg(F.sum(F.size("geometry"))).first()[0]
+    assert max(int(est), 16 * vertices) <= limit < index_bytes(wide)
 
     imgs = spark.createDataFrame(
         [(f"i{k}", 13.30 + 0.001 * k, 52.45) for k in range(50)],
@@ -230,7 +227,10 @@ def test_no_pandas_udf_reads_geometry(spark):
     """Every UDF that reads a geometry is an Arrow UDF over the one codec:
     in the physical plans of the geometry operators, every ArrowEvalPython
     node over ``geometry`` has eval type 250 (``arrow_udf``), none 200 (a
-    pandas UDF, which hands the UDF one Python dict per vertex)."""
+    pandas UDF, which hands the UDF one Python dict per vertex).  The
+    broadcast sidepath vote reads the geometry in its ``mapInArrow`` kernel
+    (Arrow batches, no eval node); its shuffle form runs the check-point
+    UDF."""
     from osm_cycling_quality_index_spark.operators import images as I
     from osm_cycling_quality_index_spark.operators.dedup import (
         release_session_pinned,
@@ -242,14 +242,23 @@ def test_no_pandas_udf_reads_geometry(spark):
     polys = ways.select(F.col("id").alias("poly_id"), "geometry")
     imgs = synth.images_df(spark, synth.ways_pdf(n_roads=24), n_images=50) \
         .select("image_id", "lon", "lat")
+    broadcast = _plan(cqi_pipeline(ways)).splitlines()
+    assert any("MapInArrow" in ln and "geometry" in ln for ln in broadcast)
+    assert not any("ArrowEvalPython" in ln and ln.endswith(", 200") for ln in broadcast)
     frames = {
-        "cqi_pipeline": cqi_pipeline(ways),
         "way_tile_assignment": I.way_tile_assignment(ways),
         "polygon_tile_assignment": I.polygon_tile_assignment(polys),
         "pip_join broadcast": I.pip_join(imgs, polys),
-        "pip_join shuffle": I.pip_join(imgs, polys, max_broadcast_polys=0),
         "knn_ways": I.knn_ways(imgs, ways.select("id", "geometry"), k=3),
     }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        frames["cqi_pipeline shuffle"] = cqi_pipeline(ways)
+        frames["pip_join shuffle"] = I.pip_join(imgs, polys)
+    finally:
+        spark.conf.set(key, saved)
     try:
         for name, df in frames.items():
             evals = [ln.strip() for ln in _plan(df).splitlines()
@@ -559,7 +568,7 @@ def test_checkpoint_snapshot_resume(spark, tmp_path):
     df2 = spark.range(5).withColumnRenamed("id", "k")
     e2 = t.write(df2, "stage_b")
     assert t.latest()["id"] == e2["id"]
-    assert t.has_stage("stage_a") and not t.has_stage("stage_c")
+    assert t.committed("stage_a")["id"] == e1["id"] and t.committed("stage_c") is None
     back_b = t.read_latest(spark)
     assert back_b.columns == ["k"] and back_b.count() == 5
     back_a = t.read_latest(spark, "stage_a")

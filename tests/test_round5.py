@@ -137,7 +137,7 @@ def test_bpe_pieces_equal_greedy_sequences(spark):
 
 
 def test_pip_join_shuffle_regime_matches_broadcast(spark):
-    """pip_join with max_broadcast_polys=0 (forcing the shuffle regime's
+    """pip_join with the broadcast threshold at -1 (forcing the shuffle regime's
     ids-only candidate join + attached-ring Arrow refine) returns exactly
     the broadcast regime's rows, and the session storage returns to
     baseline after release."""
@@ -154,10 +154,13 @@ def test_pip_join_shuffle_regime_matches_broadcast(spark):
     pts = _points_df(spark, SF01)
     tris = _triangles_df(spark, SF01)
     bc = {(r.image_id, r.poly_id) for r in pip_join(pts, tris, res=9).collect()}
-    sh = {
-        (r.image_id, r.poly_id)
-        for r in pip_join(pts, tris, res=9, max_broadcast_polys=0).collect()
-    }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        sh = {(r.image_id, r.poly_id) for r in pip_join(pts, tris, res=9).collect()}
+    finally:
+        spark.conf.set(key, saved)
     assert bc == sh and len(bc) > 100
     release_session_pinned(spark)
     assert _registry_size(spark) == base

@@ -138,3 +138,112 @@ def test_pipeline_build_uses_no_deprecated_api(spark):
     with warnings.catch_warnings():
         warnings.simplefilter("error", FutureWarning)
         cqi_pipeline(ways_df(spark, n_roads=24))
+
+
+def _overlapping_roads():
+    """Two same-class roads over one stretch (every check point of ``p1``
+    sees both) next to a road of another class that only some check points
+    see: a class's vote counts each check point once, however many of its
+    roads the point sees."""
+    return [
+        {"id": "r1", "geometry": _line(13.40, 52.50, 300), "highway": "secondary",
+         "name": "Alpha", "maxspeed": "50"},
+        {"id": "r2", "geometry": _line(13.40, 52.50, 300, 4), "highway": "secondary",
+         "name": "Alpha", "maxspeed": "30"},
+        {"id": "r3", "geometry": _line(13.40, 52.50, 700, 20), "highway": "primary",
+         "name": "Beta", "maxspeed": "60"},
+        # checks 7+1: secondary sees 4, primary all 8
+        {"id": "p1", "geometry": _line(13.40, 52.50, 700, 10), "highway": "cycleway"},
+        # checks 3+1: secondary and primary both see all 4 -> rank wins
+        {"id": "p2", "geometry": _line(13.40, 52.50, 250, 12), "highway": "cycleway"},
+    ]
+
+
+def _hostile_ways():
+    """Degenerate paths and roads: NULL, empty, single-vertex and
+    zero-length geometry, roads with NULL layer, highway, name or id, a
+    path on a layer no road has, and the overlapping same-class roads."""
+    pt = _line(13.45, 52.52, 0)[:1]
+    return [
+        *_overlapping_roads(),
+        {"id": "pnull", "geometry": None, "highway": "cycleway"},
+        {"id": "pempty", "geometry": [], "highway": "path"},
+        {"id": "psingle", "geometry": pt, "highway": "footway"},
+        {"id": "pzero", "geometry": pt + pt, "highway": "cycleway"},
+        {"id": "rzero", "geometry": pt + pt, "highway": "residential", "name": "Zed"},
+        {"id": "rnullhw", "geometry": _line(13.45, 52.52, 200, 6), "name": "Zed",
+         "maxspeed": "20"},
+        {"id": None, "geometry": _line(13.45, 52.52, 200, -6), "highway": "service"},
+        {"id": "rnulls", "geometry": _line(13.45, 52.52, 200, 9), "highway": "residential",
+         "layer": None, "maxspeed": "x"},
+        {"id": "plong", "geometry": _line(13.45, 52.52, 200, 3), "highway": "cycleway"},
+        {"id": "player", "geometry": _line(13.45, 52.52, 200, 3), "highway": "path",
+         "layer": "2"},
+        {"id": "rsingle", "geometry": _line(13.46, 52.52, 0)[:1], "highway": "primary"},
+    ]
+
+
+def _frame(spark, ways):
+    cols = sorted({k for w in ways for k in w} - {"geometry"})
+    fields = [StructField("geometry", GEOM_T)] + [StructField(c, StringType()) for c in cols]
+    rows = [tuple([w.get("geometry")] + [w.get(c) for c in cols]) for w in ways]
+    return conform_ways(spark.createDataFrame(rows, StructType(fields)))
+
+
+def test_overlapping_same_class_roads_count_check_points(spark):
+    """Both forms agree with the brute-force oracle when two roads of one
+    class overlap: the class counts a check point once, not once per road."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    ways = _overlapping_roads()
+    _compare(spark, ways)
+    spark.conf.set(key, "-1")
+    try:
+        _compare(spark, ways)
+    finally:
+        spark.conf.set(key, saved)
+    got = _run(spark, ways)
+    assert got["p1"]["proc_sidepath"] == "yes" and got["p1"]["proc_highway"] == "primary"
+    assert got["p2"]["proc_highway"] == "primary" and got["p2"]["proc_maxspeed"] == 60
+
+
+def test_sidepath_broadcast_parity(spark):
+    """The broadcast form (the roads' CSR index in one mapInArrow kernel,
+    no cell exchange) and the shuffle form (threshold -1: the cell join
+    and a grouped Arrow vote, no mapInArrow) give the same rows, on the
+    golden network and on hostile ways, for the stage and for the raw vote
+    (maps compared as dicts)."""
+    from osm_cycling_quality_index_spark.operators.sidepath import sidepath_votes
+    from osm_cycling_quality_index_spark.sources.synth import ways_df
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def rows(df):
+        return sorted((tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v
+                             for v in r) for r in df.collect()), key=repr)
+
+    def outputs(ways):
+        paths = ways.where(F.col("highway").isin("cycleway", "footway", "path"))
+        roads = ways.where(~F.col("highway").isin("cycleway", "footway", "path", "track")
+                           | F.col("highway").isNull())
+        stage, votes = sidepath_stage(ways), sidepath_votes(paths, roads)
+        return plan(stage), rows(stage.drop("geometry")), rows(votes)
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    for ways in (conform_ways(ways_df(spark, n_roads=24)),
+                 _frame(spark, _hostile_ways())):
+        for c in ("layer", "name", "maxspeed"):
+            if c not in ways.columns:
+                ways = ways.withColumn(c, F.lit(None).cast("string"))
+        saved = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            shuffle_plan, *shuffled = outputs(ways)
+        finally:
+            spark.conf.set(key, saved)
+        default_plan, *default = outputs(ways)
+        assert "MapInArrow" not in shuffle_plan
+        assert "MapInArrow" in default_plan
+        assert "Exchange hashpartitioning(cell" not in default_plan
+        assert default == shuffled and len(default[1]) > 0

@@ -2,9 +2,10 @@
 
 :func:`decode` is the one place that knows the geometry batch layout: it
 turns an Arrow batch into flat ``(lon, lat, offsets)`` numpy arrays without
-building a Python object per vertex.  :func:`map_ways` calls a numpy kernel
-once per way on slices of those arrays and builds the Arrow list result;
-the segmentation UDF calls its kernel once per batch.  The one Python loop
+building a Python object per vertex.  :func:`ways_apply` calls a numpy kernel
+once per way on slices of those arrays, and :func:`map_ways` builds the
+Arrow list result from its output; the segmentation UDF calls its kernel
+once per batch.  The one Python loop
 below the way level is the tile rasterizer's, once per segment
 (:func:`geo.kernels.rasterize_segment_tiles`).
 
@@ -70,19 +71,16 @@ def _lists(offsets: np.ndarray, values: pa.Array) -> pa.Array:
     return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
 
 
-def map_ways(out_type: ArrayType, kernel, geom: pa.Array, *args: pa.Array,
-             min_vertices: int = 1) -> pa.Array:
+def ways_apply(kernel, n_out: int, geom: pa.Array, *args: pa.Array,
+               min_vertices: int = 1) -> tuple[list[np.ndarray], np.ndarray]:
     """Per way of one Arrow batch: ``kernel(lon, lat, *row_args)`` on the
-    way's slice of the decoded arrays, returning one numpy column per field
-    of ``out_type``'s elements (one column for a list of scalars); the
-    columns become the way's ``out_type`` list.  Ways with fewer than
-    ``min_vertices`` vertices, a NULL geometry included, map to an empty
-    list without a kernel call."""
+    way's slice of the decoded arrays, returning ``n_out`` numpy columns.
+    Returns those columns back to back over the batch, and the offsets of
+    each way's rows in them.  Ways with fewer than ``min_vertices``
+    vertices, a NULL geometry included, get no rows and no kernel call."""
     lon, lat, off = decode(geom)
     args = [a.to_numpy(zero_copy_only=False) for a in args]
-    elem = to_arrow_type(out_type).value_type
-    fields = list(elem) if pa.types.is_struct(elem) else [pa.field("v", elem)]
-    cols: list[list[np.ndarray]] = [[] for _ in fields]
+    cols: list[list[np.ndarray]] = [[] for _ in range(n_out)]
     lens = np.zeros(len(off) - 1, dtype=np.int64)
     for i, (s, e) in enumerate(zip(off[:-1].tolist(), off[1:].tolist())):
         if e - s >= min_vertices:
@@ -90,21 +88,45 @@ def map_ways(out_type: ArrayType, kernel, geom: pa.Array, *args: pa.Array,
             lens[i] = len(out[0])
             for c, v in zip(cols, out):
                 c.append(v)
-    vals = [pa.array(np.concatenate(c) if c else [], f.type)
-            for c, f in zip(cols, fields)]
+    return ([np.concatenate(c) if c else np.empty(0) for c in cols],
+            np.concatenate([[0], np.cumsum(lens)]))
+
+
+def map_ways(out_type: ArrayType, kernel, geom: pa.Array, *args: pa.Array,
+             min_vertices: int = 1) -> pa.Array:
+    """:func:`ways_apply` as an Arrow column: the kernel returns one numpy
+    column per field of ``out_type``'s elements (one column for a list of
+    scalars), and they become each way's ``out_type`` list; a way without
+    rows maps to an empty list."""
+    elem = to_arrow_type(out_type).value_type
+    fields = list(elem) if pa.types.is_struct(elem) else [pa.field("v", elem)]
+    cols, offsets = ways_apply(kernel, len(fields), geom, *args,
+                               min_vertices=min_vertices)
+    vals = [pa.array(c, f.type) for c, f in zip(cols, fields)]
     values = (pa.StructArray.from_arrays(vals, fields=fields)
               if pa.types.is_struct(elem) else vals[0])
-    return _lists(np.concatenate([[0], np.cumsum(lens)]), values)
+    return _lists(offsets, values)
+
+
+def checkpoints(geom: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """G1+G2+U1 on one Arrow batch: check points every 100 m along each way
+    + its last vertex, in metric coordinates
+    (reference/cycling_quality_index.py:223-225), as flat ``(px, py,
+    offsets)`` arrays, way ``i`` owning points ``offsets[i]:offsets[i + 1]``;
+    a NULL or empty way has none."""
+    from .. import params as P
+
+    (px, py), offsets = ways_apply(lambda lon, lat: K.points_along_line(
+        lon, lat, P.SIDEPATH_BUFFER_DISTANCE), 2, geom)
+    return px, py, offsets
 
 
 @F.arrow_udf(_POINT_TYPE)
 def checkpoints_udf(geom: pa.Array) -> pa.Array:
-    """G1+G2+U1: check points every 100 m along the way + last vertex, in
-    metric coordinates (reference/cycling_quality_index.py:223-225)."""
-    from .. import params as P
-
-    return map_ways(_POINT_TYPE, lambda lon, lat: K.points_along_line(
-        lon, lat, P.SIDEPATH_BUFFER_DISTANCE), geom)
+    """:func:`checkpoints` as one ``array<struct<px, py>>`` per way."""
+    px, py, offsets = checkpoints(geom)
+    return _lists(offsets, pa.StructArray.from_arrays(
+        [pa.array(px, pa.float64()), pa.array(py, pa.float64())], names=["px", "py"]))
 
 
 def make_point_cell_udf(res: int):

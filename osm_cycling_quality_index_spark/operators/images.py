@@ -40,7 +40,6 @@ import math
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -475,30 +474,33 @@ def knn_ways(
     return done1.unionByName(ranked2)
 
 
-def _collect_ways(ways: DataFrame, carry: tuple = ()) -> dict:
-    """The ways side of the broadcast index, collected once as ``(id,
-    geometry, *carry)`` through Arrow: every way's projected vertices back
-    to back (``x``, ``y``, ``offsets`` as :func:`geo.cells.segment_cells`
-    takes them), its id interned as an int (``wid``; ``ids`` maps back) and
-    the ``carry`` columns (aliased Columns) as Arrow arrays under
-    ``carry``, by name.  Ids are interned in Spark's order (lexicographic,
-    NULL first), so the int argmin tie-break equals the shuffle path's
-    min-id tie-break; like the Spark rows, only ways with a segment (two or
-    more vertices) take part."""
+def _collect_ways(ways: DataFrame, *cols) -> dict:
+    """The ways side of a broadcast index, collected once as ``(geometry,
+    *cols)`` through Arrow: every way's projected vertices back to back
+    (``x``, ``y``, ``offsets`` as :func:`geo.cells.segment_cells` takes
+    them) and the ``cols`` (names or aliased Columns) as Arrow arrays under
+    ``cols``, by name, one entry per way."""
     from ..geo.kernels import project
 
-    tbl = ways.select("id", "geometry", *carry).toArrow()
+    tbl = ways.select("geometry", *cols).toArrow()
     lon, lat, offsets = decode(tbl.column("geometry"))
     x, y = project(lon, lat)
-    has = np.diff(offsets) >= 2
-    id_has = tbl.column("id").filter(pa.array(has))
-    ids = pc.unique(id_has)
-    ids = ids.take(pc.sort_indices(ids, null_placement="at_start"))
+    return {"x": x, "y": y, "offsets": offsets,
+            "cols": {n: tbl.column(n).combine_chunks() for n in tbl.column_names[1:]}}
+
+
+def _intern_ids(raw: dict) -> dict:
+    """``raw`` (:func:`_collect_ways` with an ``id`` column) with each way's
+    id interned as an int (``wid``; ``ids`` maps back).  Ids are interned in
+    lexicographic order, so the int argmin tie-break equals the shuffle
+    path's min-id tie-break; like the Spark rows, only ways with a segment
+    (two or more vertices) take part."""
+    id_all = raw["cols"]["id"].to_numpy(zero_copy_only=False)
+    has = np.diff(raw["offsets"]) >= 2
+    ids = np.unique(id_all[has])  # sorted -> int order == lexicographic order
     wid = np.zeros(len(has), dtype=np.int64)
-    wid[has] = pc.index_in(id_has, value_set=ids).to_numpy()
-    return {"x": x, "y": y, "offsets": offsets, "wid": wid,
-            "ids": ids.to_numpy(zero_copy_only=False),
-            "carry": {n: tbl.column(n).combine_chunks() for n in tbl.column_names[2:]}}
+    wid[has] = np.searchsorted(ids, id_all[has])
+    return dict(raw, wid=wid, ids=ids)
 
 
 def _csr_level(raw: dict, res: int, rings: int) -> dict:
@@ -535,7 +537,7 @@ def _csr_level(raw: dict, res: int, rings: int) -> dict:
     # candidate and never recomputes the segment direction per point
     seg = np.column_stack([ax, ay, bx - ax, by - ay])
     return {"res": res, "cells": cells, "starts": starts, "seg": seg,
-            "wid": wid, "ids": raw["ids"]}
+            "wid": wid, "ids": raw.get("ids")}
 
 
 def build_segment_index(ways: DataFrame, res: int = 8, rings: int = 1,
@@ -545,7 +547,7 @@ def build_segment_index(ways: DataFrame, res: int = 8, rings: int = 1,
     the same guarantee radii as :func:`knn_ways` k=1.  Eager: one Spark job
     (the Arrow collect of ``(id, geometry)``) serves both levels, and the
     segmentation, cell sampling and ring expansion run in numpy here."""
-    raw = _collect_ways(ways)
+    raw = _intern_ids(_collect_ways(ways, "id"))
     res2 = max(0, res - coarse_drop)
     return {"fine": _csr_level(raw, res, rings),
             "coarse": _csr_level(raw, res2, 2),

@@ -20,14 +20,18 @@ votes in a driver-side dict (:250-288).  Here:
    points see the same road id, highway class or name (== all of them when
    checks <= 2, :317-341).
 
+Every path row votes on its own geometry, as each feature does in the
+reference, and every input row comes out once, with its vote or NULLs.
+
 Scale notes: the roads side is a dimension.  When its index fits a broadcast
 (``images._broadcast_index``, the rule every broadcast spatial join shares),
-steps 1-5 run in one ``mapInArrow`` kernel per batch of paths against the
-broadcast CSR index: no shuffle and no persist.  Otherwise steps 2-4 are a
-cell-keyed shuffle join (AQE skew-join handles dense urban cells; only ids,
-4 doubles and join keys ride it, never geometry) and step 5 runs per path
-through ``groupBy("id").applyInArrow``.  Both forms give the same rows
-(tested).
+steps 1-5 run in one ``mapInArrow`` kernel per batch of rows against the
+broadcast CSR index, the rows passing through it: no shuffle, no join and
+no persist.  Otherwise steps 2-4 are a cell-keyed shuffle join (AQE
+skew-join handles dense urban cells; only ids, 4 doubles and join keys ride
+it, never geometry), step 5 runs once per hash bucket of paths through
+``groupBy(...).applyInArrow``, and the votes join back on the path's id and
+a hash of its layer and geometry.  Both forms give the same rows (tested).
 """
 
 from __future__ import annotations
@@ -35,7 +39,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, MapType, StringType, StructField,
@@ -46,9 +50,8 @@ from .. import params as P
 from ..functions.fold import Tags
 from ..functions.nulls import truthy
 from ..functions.tags import get_number, normalize_maxspeed
-from ..geo import kernels as K
 from ..geo.cols import hex_cell_cols
-from ..geo.udfs import checkpoints_udf, decode, point_segment_distance_cols
+from ..geo.udfs import checkpoints, checkpoints_udf, point_segment_distance_cols
 from .images import (
     _broadcast_index, _collect_ways, _csr_level, _csr_pairs, _way_segments_cells,
 )
@@ -119,12 +122,13 @@ def _road_keys(cols: dict) -> tuple[dict, list, list]:
             hw_vals, name_vals)
 
 
-def _vote(ids: pa.Array, checks: np.ndarray, p: np.ndarray, c: np.ndarray,
-          road: dict, hw_vals: list, name_vals: list) -> pa.RecordBatch:
-    """The A1-A9 vote of a batch of paths, in numpy: one output row per path
-    ``ids[i]`` with ``checks[i]`` check points.  The hits are (check point,
-    road) rows, repeats allowed: path ``p``, check point ``c`` (unique
-    across the batch) and the road's :func:`_road_keys` arrays in ``road``.
+def _vote(checks: np.ndarray, p: np.ndarray, c: np.ndarray, road: dict,
+          hw_vals: list, name_vals: list) -> list[pa.Array]:
+    """The A1-A9 vote of a batch of paths, in numpy: the :data:`_VOTE_COLS`
+    arrays, one row per path ``i`` with ``checks[i]`` check points.  The
+    hits are (check point, road) rows, repeats allowed: path ``p``, check
+    point ``c`` (unique across the batch) and the road's :func:`_road_keys`
+    arrays in ``road``.
 
     Same semantics as the reference's dict: a vote key counts the distinct
     check points that see it, NULL highway and name groups vote, and a
@@ -173,95 +177,108 @@ def _vote(ids: pa.Array, checks: np.ndarray, p: np.ndarray, c: np.ndarray,
     def strings(code, vals):
         return pa.array([vals[k] if k >= 0 else None for k in code], pa.string())
 
-    return pa.RecordBatch.from_arrays(
-        [ids, pa.array(checks, pa.int64()), pa.array(yes),
-         strings(derived, hw_vals), maxspeeds, strings(name, name_vals)],
-        names=["id", *_VOTE_COLS])
+    return [pa.array(checks, pa.int64()), pa.array(yes), strings(derived, hw_vals),
+            maxspeeds, strings(name, name_vals)]
 
 
-def _vote_schema(paths: DataFrame) -> StructType:
-    return StructType([paths.schema["id"], *(
-        StructField(k, t) for k, t in _VOTE_COLS.items())])
+_VOTE_FIELDS = [StructField(k, t) for k, t in _VOTE_COLS.items()]
 
 
 def _road_index(roads: DataFrame) -> dict:
     """The broadcast form's dimension: the roads' res-9 ring-1 CSR level
     (rows keyed by the road's row in the collect) and the road columns the
     vote reads, from one Arrow collect."""
-    raw = _collect_ways(roads, carry=_road_cols())
+    raw = _collect_ways(roads, *_road_cols())
     level = _csr_level(dict(raw, wid=np.arange(len(raw["offsets"]) - 1)), _RES, 1)
-    layer, layers = _codes(raw["carry"]["road_layer"])
+    layer, layers = _codes(raw["cols"]["road_layer"])
     return {
         "level": {k: level[k] for k in ("res", "cells", "starts", "seg", "wid")},
         "layer": layer, "layers": {v: i for i, v in enumerate(layers)},
-        "roads": _road_keys(raw["carry"]),
+        "roads": _road_keys(raw["cols"]),
     }
 
 
-def _broadcast_votes(paths: DataFrame, index: dict) -> DataFrame:
-    """Steps 1-5 in one Arrow kernel per batch of ``(id, layer, geometry)``
-    paths against the broadcast road index."""
-    bidx = paths.sparkSession.sparkContext.broadcast(index)
+def _broadcast_votes(df: DataFrame, index: dict) -> DataFrame:
+    """Steps 1-5 in one Arrow kernel per batch of rows against the broadcast
+    road index: every row passes through, and a ``_path`` row gains its
+    vote."""
+    bidx = df.sparkSession.sparkContext.broadcast(index)
+    names = [c for c in df.columns if c != "_path"]
 
     def run(batches):
         idx = bidx.value
         keys, hw_vals, name_vals = idx["roads"]
+        lut = idx["layers"]
         for b in batches:
+            rows = np.flatnonzero(b.column("_path").to_numpy(zero_copy_only=False))
             # step 1: check points exactly as checkpoints_udf makes them
-            lon, lat, off = decode(b.column("geometry"))
-            xs, ys, npts = [], [], np.zeros(b.num_rows, dtype=np.int64)
-            for i, (s, e) in enumerate(zip(off[:-1].tolist(), off[1:].tolist())):
-                if e > s:
-                    x, y = K.points_along_line(lon[s:e], lat[s:e],
-                                               P.SIDEPATH_BUFFER_DISTANCE)
-                    xs.append(x)
-                    ys.append(y)
-                    npts[i] = len(x)
+            px, py, off = checkpoints(b.column("geometry").take(rows))
+            npts = np.diff(off)
             has = np.flatnonzero(npts)
             checks = npts[has]
             path = np.repeat(np.arange(len(has)), checks)
             # steps 2-4: cell lookup, distance refine, same layer (NULL-safe:
             # NULL == NULL; a layer no road has matches none)
-            pt, road = np.array([], np.int64), np.array([], np.int64)
-            pairs = _csr_pairs(idx["level"], np.concatenate(xs or [[]]),
-                               np.concatenate(ys or [[]]))
+            pt = road = np.array([], np.int64)
+            pairs = _csr_pairs(idx["level"], px, py)
             if pairs is not None:
                 _, pt, road, d = pairs
-                lut = idx["layers"]
-                layer = np.array([-1 if v is None else lut.get(v, -2)
-                                  for v in b.column("layer").to_pylist()])[has]
+                layer = np.array([-1 if v is None else lut.get(v, -2) for v in
+                                  b.column("layer").take(rows[has]).to_pylist()])
                 keep = (d <= P.SIDEPATH_BUFFER_SIZE) & (layer[path[pt]] == idx["layer"][road])
                 pt, road = pt[keep], road[keep]
-            yield _vote(b.column("id").take(has), checks, path[pt], pt,
-                        {k: v[road] for k, v in keys.items()}, hw_vals, name_vals)
+            votes = _vote(checks, path[pt], pt, {k: v[road] for k, v in keys.items()},
+                          hw_vals, name_vals)
+            at = np.full(b.num_rows, -1, dtype=np.int64)
+            at[rows[has]] = np.arange(len(has))
+            at = pa.array(at, mask=at < 0)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(n) for n in names] + [v.take(at) for v in votes],
+                names=names + list(_VOTE_COLS))
 
-    return paths.select("id", "layer", "geometry").mapInArrow(run, _vote_schema(paths))
+    return df.mapInArrow(run, StructType([df.schema[n] for n in names] + _VOTE_FIELDS))
 
 
-def _vote_group(tbl: pa.Table) -> pa.Table:
-    """Step 5 of the shuffle form for one path's rows: every check point
-    once, with its hits (``segs`` > 0) distinct per road."""
+def _vote_bucket(tbl: pa.Table) -> pa.Table:
+    """Step 5 of the shuffle form for one hash bucket of paths, a path being
+    an ``(id, _key)`` group: its every check point once, with its hits
+    (``segs`` > 0) distinct per road."""
+    idc = _codes(tbl.column("id"))[0]
+    key = tbl.column("_key").to_numpy()
     chk = tbl.column("chk_idx").to_numpy()
-    checks = np.array([len(np.unique(chk))], dtype=np.int64)
+    order = np.lexsort((chk, key, idc))
+    tbl, idc, key, chk = tbl.take(order), idc[order], key[order], chk[order]
+    starts = _runs(idc, key)
+    p = np.repeat(np.arange(len(starts)), np.diff(np.append(starts, len(idc))))
+    new = np.zeros(len(idc), dtype=bool)
+    new[_runs(idc, key, chk)] = True
+    c = np.cumsum(new) - 1
+    checks = np.bincount(p[new], minlength=len(starts))
     hit = tbl.column("segs").to_numpy() > 0
     hits = tbl.filter(pa.array(hit))
-    return pa.Table.from_batches([_vote(
-        tbl.column("id").slice(0, 1).combine_chunks(), checks,
-        np.zeros(hits.num_rows, dtype=np.int64), chk[hit],
-        *_road_keys({n: hits.column(n) for n in hits.column_names}))])
+    votes = _vote(checks, p[hit], c[hit],
+                  *_road_keys({n: hits.column(n) for n in hits.column_names}))
+    return pa.Table.from_arrays(
+        [tbl.column("id").take(starts), tbl.column("_key").take(starts), *votes],
+        names=["_vid", "_vkey", *_VOTE_COLS])
 
 
-def _shuffle_votes(paths: DataFrame, roads: DataFrame) -> DataFrame:
-    """Steps 1-4 as a cell-keyed shuffle join, step 5 per path through
-    ``groupBy("id").applyInArrow``.  A left join keeps every check point, so
-    the vote counts those without a hit too."""
-    from .dedup import fan_out
-
-    pts = paths.select(
-        "id", "layer", F.posexplode(checkpoints_udf("geometry")).alias("chk_idx", "pt"),
-    ).select("id", "layer", "chk_idx", F.col("pt.px").alias("px"), F.col("pt.py").alias("py"))
+def _shuffle_votes(df: DataFrame, roads: DataFrame) -> DataFrame:
+    """Steps 1-4 as a cell-keyed shuffle join, step 5 once per hash bucket
+    of paths through ``groupBy(...).applyInArrow``.  A left join keeps every
+    check point, so the vote counts those without a hit too.  The votes
+    join back to their rows on the id and ``_key``, a hash of the path's
+    layer and geometry, so path rows that share an id vote apart (rows
+    equal in id, layer and geometry share one vote row)."""
+    spark = df.sparkSession
+    df = df.withColumn("_key", F.xxhash64("layer", "geometry"))
+    pts = df.where("_path").select(
+        "id", "_key", "layer",
+        F.posexplode(checkpoints_udf("geometry")).alias("chk_idx", "pt"),
+    ).select("id", "_key", "layer", "chk_idx",
+             F.col("pt.px").alias("px"), F.col("pt.py").alias("py"))
     pts = pts.withColumn("cell", hex_cell_cols(F.col("px"), F.col("py"), _RES))
-    rsegs = _way_segments_cells(fan_out(roads), _RES, 1, carry=_road_cols()) \
+    rsegs = _way_segments_cells(roads, _RES, 1, carry=_road_cols()) \
         .withColumnRenamed("cell", "road_cell")
     dist = point_segment_distance_cols(
         F.col("px"), F.col("py"), F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
@@ -276,20 +293,33 @@ def _shuffle_votes(paths: DataFrame, roads: DataFrame) -> DataFrame:
     )
     # a (check point, road) pair counts once no matter how many segments or
     # cells matched (:250-269 dedupes via id_list/highway_list)
-    hits = cand.groupBy("id", "chk_idx", "road_id", "road_highway", "road_name").agg(
+    hits = cand.groupBy("id", "_key", "chk_idx", "road_id", "road_highway", "road_name").agg(
         F.max("road_maxspeed").alias("road_maxspeed"), F.count("ax").alias("segs"))
-    return hits.groupBy("id").applyInArrow(_vote_group, _vote_schema(paths))
+    buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    votes = hits.withColumn("_bucket", F.pmod(F.xxhash64("id", "_key"), F.lit(buckets))) \
+        .groupBy("_bucket").applyInArrow(_vote_bucket, StructType([
+            StructField("_vid", df.schema["id"].dataType),
+            StructField("_vkey", LongType()), *_VOTE_FIELDS]))
+    out = df.join(votes, F.col("id").eqNullSafe(F.col("_vid"))
+                  & (F.col("_key") == F.col("_vkey")), "left")
+    return out.drop("_path", "_key", "_vid", "_vkey")
 
 
-def sidepath_votes(paths: DataFrame, roads: DataFrame) -> DataFrame:
-    """One row per path id with a check point, with vote results:
-    (id, checks, vote_yes, derived_class, class_maxspeeds map, vote_name).
-    The broadcast form runs when the roads' index fits a broadcast
-    (``images._broadcast_index``), else the shuffle form."""
-    index = _broadcast_index(roads, _road_index)
+def sidepath_votes(df: DataFrame, is_path: Column, is_road: Column) -> DataFrame:
+    """Every row of ``df``, fanned out (``dedup.fan_out``), with the vote of
+    each ``is_path`` row against the ``is_road`` rows: (checks, vote_yes,
+    derived_class, class_maxspeeds map, vote_name), NULL on other rows and
+    on paths without a check point.  Each path row votes on its own
+    geometry.  The broadcast form runs when the roads' index fits a
+    broadcast (``images._broadcast_index``), else the shuffle form."""
+    from .dedup import fan_out
+
+    # the broadcast collect scans the input, not the fan-out exchange
+    index = _broadcast_index(df.filter(is_road), _road_index)
+    df = fan_out(df).withColumn("_path", F.coalesce(is_path, F.lit(False)))
     if index is None:
-        return _shuffle_votes(paths, roads)
-    return _broadcast_votes(paths, index)
+        return _shuffle_votes(df, df.filter(is_road))
+    return _broadcast_votes(df, index)
 
 
 def sidepath_stage(df: DataFrame) -> DataFrame:
@@ -298,15 +328,11 @@ def sidepath_stage(df: DataFrame) -> DataFrame:
     (reference/cycling_quality_index.py:210-366).
 
     The stage's per-row work (the check points and the vote kernel, and
-    every layer downstream) must run at the cluster's width, so the input
-    is fanned out first (one-row-group local fixtures scan as 1-2
-    partitions; already-wide or shuffled inputs — the cluster case — pass
-    through untouched).  The roads are read before the fan-out: the
-    broadcast form collects them to the driver, and the shuffle form fans
-    them out itself.  Every downstream consumer is an aggregate or an
-    id-equi-join, so layout never affects results."""
-    from .dedup import fan_out
-
+    every layer downstream) must run at the cluster's width, so
+    :func:`sidepath_votes` fans the input out first (one-row-group local
+    fixtures scan as 1-2 partitions; already-wide or shuffled inputs — the
+    cluster case — pass through untouched).  It keeps every row, so the
+    layout never affects results."""
     t = Tags(df)
     # the vote reads these tags by name: an absent one is a NULL column
     missing = [n for n in ("layer", "name", "maxspeed") if n not in t]
@@ -315,16 +341,12 @@ def sidepath_stage(df: DataFrame) -> DataFrame:
     highway = t("highway")
     is_path = highway.isin(P.PATH_HIGHWAY_LIST)
     # P4: QGIS `IS NOT` keeps NULL highway in the roads layer (:219)
-    roads = df.filter(
-        highway.isNull() | ~highway.isin(P.PATH_HIGHWAY_LIST + ["track"])
-    )
-    df = fan_out(df)
-    votes = sidepath_votes(df.filter(is_path), roads)
+    is_road = highway.isNull() | ~highway.isin(P.PATH_HIGHWAY_LIST + ["track"])
 
     # rows sorted by id within each partition: ways whose ids sort together
     # share their tags, so the written stages compress better than in the
     # fan-out's order (the benchmark city's snapshot by 4%)
-    out = df.join(votes, "id", "left").sortWithinPartitions("id")
+    out = sidepath_votes(df, is_path, is_road).sortWithinPartitions("id")
 
     tag = t("is_sidepath")
     tag = F.when(t("footway") == "sidewalk", F.lit("yes")).otherwise(tag)

@@ -162,7 +162,9 @@ def _overlapping_roads():
 def _hostile_ways():
     """Degenerate paths and roads: NULL, empty, single-vertex and
     zero-length geometry, roads with NULL layer, highway, name or id, a
-    path on a layer no road has, and the overlapping same-class roads."""
+    path on a layer no road has, the overlapping same-class roads, and
+    three path rows sharing an id: one 10 m from a road, two equal ones at
+    60 m."""
     pt = _line(13.45, 52.52, 0)[:1]
     return [
         *_overlapping_roads(),
@@ -180,6 +182,9 @@ def _hostile_ways():
         {"id": "player", "geometry": _line(13.45, 52.52, 200, 3), "highway": "path",
          "layer": "2"},
         {"id": "rsingle", "geometry": _line(13.46, 52.52, 0)[:1], "highway": "primary"},
+        {"id": "rdup", "geometry": _line(13.47, 52.52, 300), "highway": "secondary"},
+        {"id": "pdup", "geometry": _line(13.47, 52.52, 300, 10), "highway": "cycleway"},
+        *[{"id": "pdup", "geometry": _line(13.47, 52.52, 300, 60), "highway": "cycleway"}] * 2,
     ]
 
 
@@ -212,7 +217,8 @@ def test_sidepath_broadcast_parity(spark):
     no cell exchange) and the shuffle form (threshold -1: the cell join
     and a grouped Arrow vote, no mapInArrow) give the same rows, on the
     golden network and on hostile ways, for the stage and for the raw vote
-    (maps compared as dicts)."""
+    (maps compared as dicts); both keep every input row once, and path rows
+    sharing an id vote apart."""
     from osm_cycling_quality_index_spark.operators.sidepath import sidepath_votes
     from osm_cycling_quality_index_spark.sources.synth import ways_df
 
@@ -221,14 +227,14 @@ def test_sidepath_broadcast_parity(spark):
 
     def rows(df):
         return sorted((tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v
-                             for v in r) for r in df.collect()), key=repr)
+                             for v in r) for r in df.drop("geometry").collect()), key=repr)
 
     def outputs(ways):
-        paths = ways.where(F.col("highway").isin("cycleway", "footway", "path"))
-        roads = ways.where(~F.col("highway").isin("cycleway", "footway", "path", "track")
-                           | F.col("highway").isNull())
-        stage, votes = sidepath_stage(ways), sidepath_votes(paths, roads)
-        return plan(stage), rows(stage.drop("geometry")), rows(votes)
+        is_path = F.col("highway").isin("cycleway", "footway", "path")
+        is_road = ~F.col("highway").isin("cycleway", "footway", "path", "track") \
+            | F.col("highway").isNull()
+        stage = sidepath_stage(ways)
+        return plan(stage), rows(stage), rows(sidepath_votes(ways, is_path, is_road))
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     for ways in (conform_ways(ways_df(spark, n_roads=24)),
@@ -246,4 +252,7 @@ def test_sidepath_broadcast_parity(spark):
         assert "MapInArrow" not in shuffle_plan
         assert "MapInArrow" in default_plan
         assert "Exchange hashpartitioning(cell" not in default_plan
-        assert default == shuffled and len(default[1]) > 0
+        assert default == shuffled
+        assert len(default[0]) == len(default[1]) == ways.count()
+    stage = sidepath_stage(ways).where("id = 'pdup'")
+    assert sorted(r["proc_sidepath"] for r in stage.collect()) == ["no", "no", "yes"]

@@ -8,21 +8,27 @@
   phash re-computation (PSNR vs source pixels is asserted in tests where the
   source is available).
 
-Scale design: candidates are generated by hexcell equi-joins (never a cross
-join); ``bytes`` stays out of every shuffle — joins carry (image_id, lon,
-lat, cell) only and payloads re-attach by a final id-equi-join.
+Scale design: candidates are generated by hexcell lookups (never a cross
+join); ``bytes`` stays out of every cell shuffle — the shuffle joins carry
+(image_id, lon, lat, cell) only and payloads re-attach by a final
+id-equi-join, while the broadcast form maps the rows themselves.
 
 J3, J4 and the sidepath vote (J1, ``operators/sidepath.py``) share one
 spatial-join core: the shuffle cell join plus exact distance refine
 (``_cell_pairs``), the broadcast CSR index (``_csr_level``, with the
-``_csr_pairs`` kernel; ``_broadcast_join`` drives it for J3 and J4), and
-the way segment/cell rows.
+``_csr_pairs`` kernel), and the way segment/cell rows.
 Those rows have two forms over the one segmentation kernel
 ``geo.cells.segment_cells``, held equal bit for bit by test:
 ``_way_segments_cells`` in Spark (the shuffle forms) and ``_csr_level`` on
 the driver, which builds the broadcast index faster than collecting the
 Spark rows.  The shuffle and broadcast forms differ only in their exchange
-and are bit-identical by test.  One capacity rule,
+and are bit-identical by test.
+
+Every broadcast spatial join (J1, J3, J4 and ``pip_join``) has one
+physical shape, :func:`_broadcast_map`: the driver-built index is
+broadcast once per call and one ``mapInArrow`` kernel per batch of the
+fanned-out fact side passes its rows through and appends the join's
+columns, with no join after it.  One capacity rule,
 :func:`_broadcast_index`, picks the form of ``geotag_join``, the sidepath
 vote and ``pip_join``: broadcast when the index as built fits
 ``spark.sql.autoBroadcastJoinThreshold``, and always for a streaming fact
@@ -40,6 +46,7 @@ import math
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -134,23 +141,27 @@ def polygon_tile_assignment(polys: DataFrame, tile_size_m: float = 500.0) -> Dat
     )
 
 
-def make_covering_cells_udf(res: int):
-    """Polygon ring -> hex cells covering the polygon's bbox (dilated by one
-    cell circumradius) — the candidate superset for :func:`pip_join`.  The
-    dilated bbox is sampled at the cell inradius, which guarantees every
-    cell whose region intersects the bbox contributes at least one sample
-    (a grid of step h hits any disk of radius >= h/sqrt(2))."""
-    from ..geo.kernels import project
-
+def _covering_cells(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
+    """Projected polygon ring -> the sorted hex cells covering its bbox
+    (dilated by one cell circumradius) — the candidate superset for
+    :func:`pip_join`.  The dilated bbox is sampled at the cell inradius,
+    which guarantees every cell whose region intersects the bbox contributes
+    at least one sample (a grid of step h hits any disk of radius >= h/sqrt(2))."""
     edge = C.hex_edge_m(res)
     step = edge * math.sqrt(3.0) / 2.0  # inradius
+    xs = np.arange(x.min() - edge, x.max() + edge + step, step)
+    ys = np.arange(y.min() - edge, y.max() + edge + step, step)
+    gx, gy = np.meshgrid(xs, ys)
+    return np.unique(C.hex_encode_xy(gx.ravel(), gy.ravel(), res))
+
+
+def make_covering_cells_udf(res: int):
+    """Polygon ring -> :func:`_covering_cells`; a ring of fewer than three
+    vertices covers no cell."""
+    from ..geo.kernels import project
 
     def cells(lon, lat):
-        x, y = project(lon, lat)
-        xs = np.arange(x.min() - edge, x.max() + edge + step, step)
-        ys = np.arange(y.min() - edge, y.max() + edge + step, step)
-        gx, gy = np.meshgrid(xs, ys)
-        return (np.unique(C.hex_encode_xy(gx.ravel(), gy.ravel(), res)),)
+        return (_covering_cells(*project(lon, lat), res),)
 
     @F.arrow_udf(_TILE_TYPE)
     def covering(geom: pa.Array) -> pa.Array:
@@ -159,26 +170,72 @@ def make_covering_cells_udf(res: int):
     return covering
 
 
+def _pip_index(polys: DataFrame, res: int) -> dict:
+    """The broadcast form's dimension of :func:`pip_join`, from one Arrow
+    collect of the rings: a CSR level mapping each covering cell to the
+    polygon rows it covers (``row``: a polygon is keyed by its row in the
+    collect, so rows sharing a ``poly_id`` stay apart), the rings'
+    projected vertices and the ``poly_id`` values."""
+    raw = _collect_ways(polys, "poly_id")
+    x, y, off = raw["x"], raw["y"], raw["offsets"]
+    rings = np.flatnonzero(np.diff(off) >= 3)
+    cover = [_covering_cells(x[off[i]:off[i + 1]], y[off[i]:off[i + 1]], res)
+             for i in rings]
+    row = np.repeat(rings, [len(c) for c in cover]).astype(np.int64)
+    cell = np.concatenate(cover) if cover else np.array([], dtype=np.int64)
+    # a cell's polygon rows last row first: a point's output rows keep the
+    # order of the broadcast hash join that this index replaced
+    order = np.lexsort((-row, cell))
+    cells, starts = _cell_buckets(cell[order])
+    return {"res": res, "cells": cells, "starts": starts, "row": row[order],
+            "x": x, "y": y, "offsets": off, "ids": raw["cols"]["poly_id"]}
+
+
+def _pip_kernel(idx: dict, batch: pa.RecordBatch):
+    """The broadcast :func:`pip_join` over one batch of points: the cell
+    lookup, then ``ray_cast_pip`` once per candidate polygon row over its
+    candidate points.  One row per (point, polygon row) containing it, in
+    the points' order."""
+    from ..geo.kernels import ray_cast_pip
+
+    x, y = _projected(batch)
+    rows = poly = np.array([], dtype=np.int64)
+    hit = _csr_lookup(idx, x, y)
+    if hit is not None:
+        _, pt, pos = hit
+        cand = idx["row"][pos]
+        keep = np.zeros(len(pt), dtype=bool)
+        off = idx["offsets"]
+        order = np.argsort(cand, kind="stable")
+        for ix in np.split(order, np.flatnonzero(np.diff(cand[order])) + 1):
+            s, e = off[cand[ix[0]]], off[cand[ix[0]] + 1]
+            keep[ix] = ray_cast_pip(x[pt[ix]], y[pt[ix]], idx["x"][s:e], idx["y"][s:e])
+        rows, poly = pt[keep], cand[keep]
+    return rows, [idx["ids"].take(poly)]
+
+
 def pip_join(points: DataFrame, polys: DataFrame, res: int = 9) -> DataFrame:
-    """Broadcast cell-bucketed point-in-polygon join (north_star: "joined
-    via broadcast-or-shuffle cell-bucketed point-in-polygon (ray-casting
-    with prepared bbox prefilter)").
+    """Cell-bucketed point-in-polygon join (north_star: "joined via
+    broadcast-or-shuffle cell-bucketed point-in-polygon (ray-casting with
+    prepared bbox prefilter)").
 
-    The polygon dimension explodes to its bbox's covering hex cells (pandas
-    UDF over the small side); each point computes its single cell in column
-    math and equi-joins the broadcast cell table — the fact side is never
-    shuffled.  The exact ray-cast refine has two physical strategies:
+    Each polygon row covers its bbox's hex cells (:func:`_covering_cells`),
+    each point takes its single cell, and the exact refine is the numpy
+    ray cast (``geo.kernels.ray_cast_pip``) over each polygon's candidate
+    points.  Polygons are keyed by row, so polygon rows that share a
+    ``poly_id`` are tested apart: the output has one row per (point,
+    polygon row) that contains the point.  Two physical forms, picked by
+    :func:`_broadcast_index` on the index as built:
 
-    * polygon side fits a broadcast (the broadcast regime, decided by
-      :func:`_broadcast_index` on the projected rings as built): the rings
-      ship once per worker via ``sc.broadcast`` and the refine is the
-      Arrow-batched numpy kernel (``geo.kernels.ray_cast_pip``), vectorized
-      over all of a polygon's candidate points per batch.
-    * larger polygon side (the shuffle regime): the candidate cell join
-      carries IDS ONLY (geometry never rides the wide shuffle); rings
-      re-attach dimension-side by one poly_id equi-join, and the refine is
-      the SAME Arrow-batched numpy kernel, grouped per polygon within each
-      batch (the ring is projected once per unique polygon per batch).
+    * broadcast: :func:`_pip_index`, a driver-built CSR level from cell to
+      polygon rows, and one :func:`_broadcast_map` kernel per batch of
+      points (:func:`_pip_kernel`) — the fact side is never shuffled.
+    * shuffle (a polygon side too big for the driver): the polygon rows
+      explode to their covering cells through the Arrow UDF, the candidate
+      cell join carries IDS ONLY (``poly_id`` and ``_key``, a hash of
+      ``poly_id`` and geometry; geometry never rides the wide shuffle), the
+      rings re-attach dimension-side by one ``(poly_id, _key)`` equi-join,
+      and the same ray cast refines, once per polygon per batch.
 
     ``res`` sets the prefilter selectivity and should sit at or just below
     the typical polygon scale (cell edge <= poly bbox edge): measured at
@@ -189,102 +246,51 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 9) -> DataFrame:
 
     Output: (image_id, poly_id)."""
     from ..geo.kernels import project, ray_cast_pip
+    from .dedup import fan_out
 
-    # the points side is the fact table: the per-candidate ray-cast refine
-    # (and in the broadcast regime the whole candidate join) runs at ITS
-    # width, and a one-row-group local scan pins that at 1-2 partitions —
-    # measured at sf0.1 the refine was a single-task 5.5 s stage vs 1.4 s
-    # fanned out.  Already-wide inputs (the cluster case) pass through
-    # untouched, so the "fact side never shuffled at scale" contract holds.
-    from .dedup import fan_out, pin_session
+    index = _broadcast_index(polys, lambda p: _pip_index(p, res))
+    if index is not None:
+        return _broadcast_map(points.select("image_id", "lon", "lat"), index,
+                              _pip_kernel, [polys.schema["poly_id"]]
+                              ).select("image_id", "poly_id")
 
+    # the points side is the fact table: the per-candidate refine runs at
+    # ITS width, and a one-row-group local scan pins that at 1-2 partitions
+    # — measured at sf0.1 the refine was a single-task 5.5 s stage vs 1.4 s
+    # fanned out.  Already-wide inputs pass through untouched.
     points = fan_out(points)
-    pcells = polys.select(
-        "poly_id", "geometry",
-        F.explode(make_covering_cells_udf(res)("geometry")).alias("cell"),
-    )
     px = (F.col("lon") - F.lit(LON0)) * F.lit(MPD_X)
     py = (F.col("lat") - F.lit(LAT0)) * F.lit(MPD_Y)
     pts = points.select(
         "image_id", px.alias("px"), py.alias("py"),
         hex_cell_cols(px, py, res).alias("cell"),
     )
-
-    def build_rings(polys):
-        # persist the polygon side: the broadcast regime scans it again for
-        # the covering-cell explode, and a recomputed nondeterministic
-        # lineage could make rings and cells disagree.  pcells above was
-        # built from the same analyzed subtree, so it reads this cache too.
-        polys.persist()
-        tbl = polys.select("poly_id", "geometry").toArrow()
-        lon, lat, off = decode(tbl.column("geometry"))
-        # mirror make_covering_cells_udf: degenerate rings emit no cells,
-        # so they can never reach the refine
-        return {p: project(lon[s:e], lat[s:e]) for p, s, e in zip(
-            tbl.column("poly_id").to_pylist(), off[:-1], off[1:]) if e - s >= 3}
-
-    rings = _broadcast_index(polys, build_rings)
-    if rings is None:
-        polys.unpersist()
-    else:
-        # the rings broadcast (ids + projected coordinates only) and the
-        # polys persist are registered with the dedup module's session
-        # registry: repeated pip_join calls over different polygon sets in
-        # a long-lived session would otherwise accumulate driver/executor
-        # memory until session end.  release_session_pinned(spark) frees
-        # them once the join output is consumed (the returned frame is not
-        # re-executable afterwards).
-        bc = points.sparkSession.sparkContext.broadcast(rings)
-
-        def _release(bc=bc, frame=polys):
-            frame.unpersist()
-            bc.destroy()
-
-        pin_session(points.sparkSession, _release)
-
-        @F.pandas_udf("boolean")
-        def _inside(poly_id: pd.Series, qx: pd.Series, qy: pd.Series) -> pd.Series:
-            out = np.zeros(len(poly_id), dtype=bool)
-            xs = qx.to_numpy(np.float64)
-            ys = qy.to_numpy(np.float64)
-            # one hash pass to group rows by polygon (an equality scan per
-            # unique poly would be O(unique x batch) — measured 8x slower
-            # than the column path at sf0.1), then one vectorized ray-cast
-            # over each polygon's candidate points
-            for p, ix in poly_id.groupby(poly_id, sort=False).indices.items():
-                rx, ry = bc.value[p]
-                out[ix] = ray_cast_pip(xs[ix], ys[ix], rx, ry)
-            return pd.Series(out)
-
-        pairs = pts.join(F.broadcast(pcells.drop("geometry")), "cell")
-        return pairs.where(
-            _inside(F.col("poly_id"), F.col("px"), F.col("py"))
-        ).select("image_id", "poly_id")
-
-    # shuffle regime: the candidate join shuffles ids only; rings re-attach
-    # by a dimension-side poly_id equi-join (each geometry row moves once),
-    # then the identical Arrow ray-cast kernel refines, grouped per polygon
-    # within each batch with the ring projected once per unique polygon
-    pairs = pts.join(pcells.select("poly_id", "cell"), "cell")
-    cand = pairs.join(polys.select("poly_id", "geometry"), "poly_id")
+    keyed = polys.select("poly_id", "geometry",
+                         F.xxhash64("poly_id", "geometry").alias("_key"))
+    pcells = keyed.select(
+        "poly_id", "_key",
+        F.explode(make_covering_cells_udf(res)("geometry")).alias("cell"),
+    )
+    rings = keyed.dropDuplicates(["poly_id", "_key"])
+    cand = pts.join(pcells, "cell").join(rings, ["poly_id", "_key"])
 
     @F.arrow_udf("boolean")
     def _inside_attached(
-        poly_id: pa.Array, qx: pa.Array, qy: pa.Array, geom: pa.Array
+        key: pa.Array, qx: pa.Array, qy: pa.Array, geom: pa.Array
     ) -> pa.Array:
-        out = np.zeros(len(poly_id), dtype=bool)
+        out = np.zeros(len(key), dtype=bool)
         xs = qx.to_numpy(zero_copy_only=False)
         ys = qy.to_numpy(zero_copy_only=False)
         lon, lat, off = decode(geom)
-        ids = poly_id.to_pandas()
-        for ix in ids.groupby(ids, sort=False).indices.values():
+        keys = key.to_pandas()
+        for ix in keys.groupby(keys, sort=False).indices.values():
             s, e = off[ix[0]], off[ix[0] + 1]
             rx, ry = project(lon[s:e], lat[s:e])
             out[ix] = ray_cast_pip(xs[ix], ys[ix], rx, ry)
         return pa.array(out)
 
     return cand.where(
-        _inside_attached(F.col("poly_id"), F.col("px"), F.col("py"), F.col("geometry"))
+        _inside_attached(F.col("_key"), F.col("px"), F.col("py"), F.col("geometry"))
     ).select("image_id", "poly_id")
 
 
@@ -491,16 +497,26 @@ def _collect_ways(ways: DataFrame, *cols) -> dict:
 
 def _intern_ids(raw: dict) -> dict:
     """``raw`` (:func:`_collect_ways` with an ``id`` column) with each way's
-    id interned as an int (``wid``; ``ids`` maps back).  Ids are interned in
-    lexicographic order, so the int argmin tie-break equals the shuffle
-    path's min-id tie-break; like the Spark rows, only ways with a segment
-    (two or more vertices) take part."""
-    id_all = raw["cols"]["id"].to_numpy(zero_copy_only=False)
+    id interned as an int (``wid``; ``ids``, an Arrow array of the ways' id
+    type, maps back).  Ids are interned in sorted order, so the int argmin
+    tie-break equals the shuffle path's min-id tie-break; like the Spark
+    rows, only ways with a segment (two or more vertices) take part."""
     has = np.diff(raw["offsets"]) >= 2
-    ids = np.unique(id_all[has])  # sorted -> int order == lexicographic order
+    id_has = raw["cols"]["id"].filter(pa.array(has))
+    ids = pc.unique(id_has)
+    ids = ids.take(pc.sort_indices(ids))  # int order == the ids' sort order
     wid = np.zeros(len(has), dtype=np.int64)
-    wid[has] = np.searchsorted(ids, id_all[has])
+    wid[has] = pc.index_in(id_has, value_set=ids).to_numpy(zero_copy_only=False)
     return dict(raw, wid=wid, ids=ids)
+
+
+def _cell_buckets(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """CSR buckets of sorted cell keys: the distinct cells, and ``starts``
+    with cell ``i`` owning entries ``starts[i]:starts[i + 1]``."""
+    first = np.ones(len(cell), dtype=bool)
+    np.not_equal(cell[1:], cell[:-1], out=first[1:])
+    bounds = np.flatnonzero(first)
+    return cell[bounds], np.append(bounds, len(cell)).astype(np.int64)
 
 
 def _csr_level(raw: dict, res: int, rings: int) -> dict:
@@ -521,18 +537,8 @@ def _csr_level(raw: dict, res: int, rings: int) -> dict:
         order = order[keep]
     else:
         order = np.argsort(cell, kind="stable")
-    cell_s = cell[order]
+    cells, starts = _cell_buckets(cell[order])
     wid, ax, ay, bx, by = (c[order] for c in cols)
-    first = np.empty(len(cell_s), dtype=bool)
-    if len(cell_s):
-        first[0] = True
-        np.not_equal(cell_s[1:], cell_s[:-1], out=first[1:])
-        bounds = np.flatnonzero(first)
-        cells = cell_s[bounds]
-        starts = np.append(bounds, len(cell_s)).astype(np.int64)
-    else:
-        cells = np.array([], dtype=np.int64)
-        starts = np.zeros(1, dtype=np.int64)
     # per-segment (ax, ay, dx, dy): the pair expansion reads 4 doubles per
     # candidate and never recomputes the segment direction per point
     seg = np.column_stack([ax, ay, bx - ax, by - ay])
@@ -555,18 +561,11 @@ def build_segment_index(ways: DataFrame, res: int = 8, rings: int = 1,
             "id_type": ways.schema["id"].dataType}
 
 
-def _csr_pairs(level: dict, x: np.ndarray, y: np.ndarray):
-    """CSR expansion of points against one index level: one flat row per
-    (point, candidate segment) pair, with its exact distance.  Returns
-    ``(cnt, row, wid, dist)`` — candidates per point, then per pair the
-    point's row (non-decreasing), way int and distance — or None when no
-    point has a candidate.
-
-    The distance op order matches :func:`geo.udfs.point_segment_distance_cols`
-    EXACTLY (division by len², closest point as ``a + t*d``): a
-    reciprocal-multiply or a different subtraction association differs by
-    ulps, which can flip a guarantee-radius or tie decision vs the shuffle
-    path."""
+def _csr_lookup(level: dict, x: np.ndarray, y: np.ndarray):
+    """The cell lookup of points against a CSR level: one flat entry per
+    (point, candidate) pair.  Returns ``(cnt, row, pos)`` — candidates per
+    point, then per pair the point's row (non-decreasing) and the entry's
+    position in the level — or None when no point has a candidate."""
     if len(x) == 0 or len(level["cells"]) == 0:
         return None
     cell = C.hex_encode_xy(x, y, level["res"])
@@ -581,7 +580,25 @@ def _csr_pairs(level: dict, x: np.ndarray, y: np.ndarray):
     cum = np.cumsum(cnt)
     flat_i = np.arange(total)
     row = np.searchsorted(cum, flat_i, side="right")
-    pos = s0[row] + (flat_i - (cum[row] - cnt[row]))
+    return cnt, row, s0[row] + (flat_i - (cum[row] - cnt[row]))
+
+
+def _csr_pairs(level: dict, x: np.ndarray, y: np.ndarray):
+    """CSR expansion of points against one segment index level
+    (:func:`_csr_lookup`), with each pair's exact distance.  Returns
+    ``(cnt, row, wid, dist)`` — candidates per point, then per pair the
+    point's row (non-decreasing), way int and distance — or None when no
+    point has a candidate.
+
+    The distance op order matches :func:`geo.udfs.point_segment_distance_cols`
+    EXACTLY (division by len², closest point as ``a + t*d``): a
+    reciprocal-multiply or a different subtraction association differs by
+    ulps, which can flip a guarantee-radius or tie decision vs the shuffle
+    path."""
+    hit = _csr_lookup(level, x, y)
+    if hit is None:
+        return None
+    cnt, row, pos = hit
     seg = level["seg"][pos]
     dx, dy = seg[:, 2], seg[:, 3]
     ll = dx * dx + dy * dy
@@ -672,51 +689,43 @@ def _index_topk(level: dict, x: np.ndarray, y: np.ndarray, k: int):
             (within[keep] + 1).astype(np.int64), count, kth)
 
 
-def _broadcast_join(points: DataFrame, index: dict, schema: StructType,
-                    reduce, how: str) -> DataFrame:
-    """The broadcast spatial-index join both J3 and J4 run: the CSR index
-    ships once per python worker, the point side streams through
-    ``mapInPandas`` with ZERO shuffles, ``reduce(idx, pdf, x, y)`` turns one
-    Arrow batch (``x``/``y`` projected) into way-int rows, and the string
-    way id re-attaches by a JVM-side broadcast id-join (``how``).  Building
-    10^6-row python object arrays per batch is the measured bottleneck, not
-    the geometry math, so way ids stay ints inside the kernel."""
-    from .dedup import fan_out
+def _broadcast_map(df: DataFrame, index: dict, kernel, fields: list) -> DataFrame:
+    """The one physical shape of every broadcast spatial join: ``index``,
+    the dimension built on the driver, is broadcast once per call (its
+    ``destroy`` pinned for ``dedup.release_session_pinned``), the fact side
+    ``df`` is fanned out (``dedup.fan_out``), and one ``mapInArrow`` kernel
+    per Arrow batch passes its rows through.  ``kernel(idx, batch)``
+    returns ``(rows, columns)``: the output is ``batch.take(rows)`` (the
+    whole batch when ``rows`` is None) with ``columns``, one per field of
+    ``fields``, appended.  No shuffle keyed on cells, no join and no
+    persist: a stateless map, so it also runs on a stream."""
+    from .dedup import fan_out, pin_session
 
-    spark = points.sparkSession
-    # memoize the broadcast + id dimension frame on the index: pickling the
-    # CSR arrays and building the 10^3-row ids frame are per-JOB costs
-    # (driver-serial), not per-query costs
-    if "_bc" not in index:
-        index["_bc"] = spark.sparkContext.broadcast(
-            {k: index[k] for k in ("fine", "coarse", "g1")}
-        )
-    if "_ids_df" not in index:
-        ids = index["fine"]["ids"]
-        index["_ids_df"] = spark.createDataFrame(
-            pd.DataFrame({"way_idx": np.arange(len(ids), dtype=np.int64),
-                          "way_id": ids}),
-            StructType([StructField("way_idx", LongType()),
-                        StructField("way_id", index["id_type"])]),
-        )
-    bidx = index["_bc"]
+    spark = df.sparkSession
+    bidx = spark.sparkContext.broadcast(index)
+    pin_session(spark, bidx.destroy)
+    # fan_out only exchanges an input NARROWER than the cluster (the
+    # one-row-group local fixture, which otherwise runs the whole kernel on
+    # 1-2 cores); wide fact tables pass through untouched
+    df = fan_out(df)
+    names = [*df.columns, *(f.name for f in fields)]
 
     def run(batches):
         idx = bidx.value
-        for pdf in batches:
-            x = (pdf["lon"].to_numpy(dtype=np.float64) - LON0) * MPD_X
-            y = (pdf["lat"].to_numpy(dtype=np.float64) - LAT0) * MPD_Y
-            yield reduce(idx, pdf, x, y)
+        for b in batches:
+            rows, cols = kernel(idx, b)
+            kept = b if rows is None else b.take(rows)
+            yield pa.RecordBatch.from_arrays([*kept.columns, *cols], names=names)
 
-    # zero shuffles at scale still holds: fan_out only exchanges an input
-    # NARROWER than the cluster (the one-row-group local fixture, which
-    # otherwise runs the whole CSR lookup on 1-2 cores); wide fact tables
-    # pass through untouched
-    return (
-        fan_out(points.select("image_id", "lon", "lat"))
-        .mapInPandas(run, schema)
-        .join(F.broadcast(index["_ids_df"]), "way_idx", how)
-    )
+    return df.mapInArrow(run, StructType([*df.schema.fields, *fields]))
+
+
+def _projected(batch: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray]:
+    """A batch's ``lon``/``lat`` in the metric frame, as the shuffle forms
+    project them in column math."""
+    lon, lat = (np.asarray(batch.column(c).to_numpy(zero_copy_only=False),
+                           dtype=np.float64) for c in ("lon", "lat"))
+    return (lon - LON0) * MPD_X, (lat - LAT0) * MPD_Y
 
 
 def knn_ways_broadcast(
@@ -730,91 +739,75 @@ def knn_ways_broadcast(
 ) -> DataFrame:
     """J4 as a broadcast spatial-index join: same two-round
     guarantee-radius semantics and output as :func:`knn_ways` (k>1), but the
-    point side streams through ``mapInPandas`` with ZERO shuffles — the plan
-    for a fact table that must never be exchanged, whenever the ways side
-    fits in a broadcast (the common case: the dimension is ~10^3x smaller).
-    Points whose k-th distance is unguaranteed at the fine level redo at the
-    coarse level inside the same batch; points with no candidates anywhere
-    drop out, exactly like the shuffle path's inner cell join.
+    points stream through one :func:`_broadcast_map` kernel against the
+    driver-built CSR index (:func:`build_segment_index`, unless ``index`` is
+    given) — the plan for a fact table that must never be exchanged,
+    whenever the ways side fits in a broadcast (the common case: the
+    dimension is ~10^3x smaller).  Points whose k-th distance is
+    unguaranteed at the fine level redo at the coarse level inside the same
+    batch; points with no candidates anywhere drop out, exactly like the
+    shuffle path's inner cell join.
     Output: (image_id, way_id, dist_m, rank)."""
     if index is None:
         index = build_segment_index(ways, res=res, rings=rings,
                                     coarse_drop=coarse_drop)
-    schema = StructType([
-        points.schema["image_id"],
-        StructField("way_idx", LongType()),
-        StructField("dist_m", DoubleType()),
-        StructField("rank", LongType()),
-    ])
 
-    def topk(idx, pdf, x, y):
+    def topk(idx, batch):
+        x, y = _projected(batch)
         sr, sw, sd, srk, cnt, kth = _index_topk(idx["fine"], x, y, k)
         complete = (cnt >= k) & (kth < idx["g1"])
-        done = complete[sr]
-        out_r, out_w, out_d, out_k = [sr[done]], [sw[done]], [sd[done]], [srk[done]]
         redo = np.flatnonzero(~complete)
-        if len(redo):
-            cr, cw, cd, crk, _, _ = _index_topk(idx["coarse"], x[redo], y[redo], k)
-            out_r.append(redo[cr])
-            out_w.append(cw)
-            out_d.append(cd)
-            out_k.append(crk)
-        return pd.DataFrame({
-            "image_id": pdf["image_id"].to_numpy()[np.concatenate(out_r)],
-            "way_idx": np.concatenate(out_w),
-            "dist_m": np.concatenate(out_d),
-            "rank": np.concatenate(out_k),
-        })
+        cr, cw, cd, crk, _, _ = _index_topk(idx["coarse"], x[redo], y[redo], k)
+        done = complete[sr]
+        rows, w, d, rank = (np.concatenate(c) for c in zip(
+            (sr[done], sw[done], sd[done], srk[done]), (redo[cr], cw, cd, crk)))
+        return rows, [idx["fine"]["ids"].take(w), pa.array(d, pa.float64()),
+                      pa.array(rank, pa.int64())]
 
-    return _broadcast_join(points, index, schema, topk, "inner").select(
-        "image_id", "way_id", "dist_m", "rank")
+    return _broadcast_map(
+        points.select("image_id", "lon", "lat"), index, topk,
+        [StructField("way_id", index["id_type"]), StructField("dist_m", DoubleType()),
+         StructField("rank", LongType())],
+    ).select("image_id", "way_id", "dist_m", "rank")
 
 
 def geotag_join_broadcast(images: DataFrame, ways: DataFrame,
                           res: int = 8, index: dict | None = None) -> DataFrame:
     """J3 as a broadcast spatial-index join: the small ways side becomes a
     driver-built CSR cell index (:func:`build_segment_index`, unless
-    ``index`` is given) shipped to every python worker; the big image side
-    streams through ``mapInPandas`` with ZERO shuffles and no persist — the
-    plan that survives 10^12 rows (shuffling the fact table even once is the
-    thing that doesn't), and a stateless map, so it also runs on a stream.
-    Output and tie-breaks are identical to the shuffle path (``knn_ways``
-    k=1).  :func:`geotag_join` takes this form when its index fits a
-    broadcast."""
+    ``index`` is given) and the image rows stream through one
+    :func:`_broadcast_map` kernel, payload columns included, which appends
+    the nearest way's id and distance (NULL for a point with no way in
+    reach).  Output, column order and tie-breaks are those of the shuffle
+    path (``knn_ways`` k=1): ``image_id`` first, then the images' other
+    columns, then ``way_id``, ``dist_m``.  :func:`geotag_join` takes this
+    form when its index fits a broadcast."""
     if index is None:
         index = build_segment_index(ways, res=res, rings=1)
-    # image_id, lon and lat keep the images' own types, as in the shuffle form
-    schema = StructType([
-        *(images.schema[c] for c in ("image_id", "lon", "lat")),
-        StructField("way_idx", LongType()),
-        StructField("dist_m", DoubleType()),
-    ])
 
-    def nearest(idx, pdf, x, y):
+    def nearest(idx, batch):
+        x, y = _projected(batch)
         w, d = _index_nearest(idx["fine"], x, y)
         # round 2 for unguaranteed/unmatched points, same rule as knn_ways
         redo = ~(d < idx["g1"])
-        if redo.any():
-            w[redo], d[redo] = _index_nearest(idx["coarse"], x[redo], y[redo])
-        return pd.DataFrame({
-            "image_id": pdf["image_id"],
-            "lon": pdf["lon"], "lat": pdf["lat"],
-            "way_idx": w, "dist_m": d,
-        })
+        w[redo], d[redo] = _index_nearest(idx["coarse"], x[redo], y[redo])
+        miss = w < 0
+        return None, [idx["fine"]["ids"].take(pa.array(w, mask=miss)),
+                      pa.array(d, mask=miss)]
 
-    nn = _broadcast_join(images, index, schema, nearest, "left").select(
-        "image_id", "lon", "lat", "way_id",
-        F.when(F.col("way_idx") >= 0, F.col("dist_m")).alias("dist_m"),
-    )
+    # a payload-free frame comes out as (image_id, lon, lat, ...) whatever
+    # its column order, as the shuffle form's kNN agg gives it
     extra = [c for c in images.columns if c not in ("image_id", "lon", "lat")]
-    if not extra:
-        return nn
-    return images.join(nn.select("image_id", "way_id", "dist_m"), "image_id", "left")
+    rest = [c for c in images.columns if c != "image_id"] if extra else ["lon", "lat"]
+    return _broadcast_map(
+        images.select("image_id", *rest), index, nearest,
+        [StructField("way_id", index["id_type"]), StructField("dist_m", DoubleType())])
 
 
 def _nbytes(obj) -> int:
-    """Bytes of the numpy arrays in a built index (nested dicts and tuples)."""
-    if isinstance(obj, np.ndarray):
+    """Bytes of the numpy and Arrow arrays in a built index (nested dicts
+    and tuples)."""
+    if isinstance(obj, (np.ndarray, pa.Array)):
         return obj.nbytes
     if isinstance(obj, dict):
         obj = obj.values()

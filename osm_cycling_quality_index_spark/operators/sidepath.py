@@ -37,8 +37,8 @@ a hash of its layer and geometry.  Both forms give the same rows (tested).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -53,7 +53,8 @@ from ..functions.tags import get_number, normalize_maxspeed
 from ..geo.cols import hex_cell_cols
 from ..geo.udfs import checkpoints, checkpoints_udf, point_segment_distance_cols
 from .images import (
-    _broadcast_index, _collect_ways, _csr_level, _csr_pairs, _way_segments_cells,
+    _broadcast_index, _broadcast_map, _collect_ways, _csr_level, _csr_pairs,
+    _way_segments_cells,
 )
 
 _RES = 9  # hexcell resolution: 22 m disc fits in ring-1 (edge ~174 m)
@@ -78,12 +79,14 @@ _LAST = len(P.HIGHWAY_CLASS_LIST) - 1
 _NULL_CLASS = "~~null~~"
 
 
-def _codes(values: pa.Array) -> tuple[np.ndarray, list]:
+def _codes(values: pa.Array) -> tuple[np.ndarray, pa.Array]:
     """Sorted dictionary codes of an Arrow column: ``codes[i]`` indexes
     ``vals``, -1 for NULL, so code order is Spark's string order with NULL
     lowest."""
-    codes, vals = pd.factorize(values.to_pandas().astype(object), sort=True)
-    return codes.astype(np.int64), list(vals)
+    vals = pc.unique(values.drop_null())
+    vals = vals.take(pc.sort_indices(vals))
+    codes = pc.index_in(values, value_set=vals).fill_null(-1)
+    return codes.to_numpy(zero_copy_only=False).astype(np.int64), vals
 
 
 def _runs(*keys: np.ndarray) -> np.ndarray:
@@ -108,7 +111,7 @@ _VOTE_COLS = {
 }
 
 
-def _road_keys(cols: dict) -> tuple[dict, list, list]:
+def _road_keys(cols: dict) -> tuple[dict, pa.Array, pa.Array]:
     """What the vote reads of each road, from its Arrow columns (named as
     in :func:`_road_cols`): ``rid``, ``hw`` and ``name`` codes
     (:func:`_codes`), the maxspeed ``ms`` and ``ms_ok`` (False for NULL);
@@ -123,7 +126,7 @@ def _road_keys(cols: dict) -> tuple[dict, list, list]:
 
 
 def _vote(checks: np.ndarray, p: np.ndarray, c: np.ndarray, road: dict,
-          hw_vals: list, name_vals: list) -> list[pa.Array]:
+          hw_vals: pa.Array, name_vals: pa.Array) -> list[pa.Array]:
     """The A1-A9 vote of a batch of paths, in numpy: the :data:`_VOTE_COLS`
     arrays, one row per path ``i`` with ``checks[i]`` check points.  The
     hits are (check point, road) rows, repeats allowed: path ``p``, check
@@ -152,7 +155,7 @@ def _vote(checks: np.ndarray, p: np.ndarray, c: np.ndarray, road: dict,
         out[kind] = (gp, gk, cnt)
 
     gp, gk, cnt = out["hw"]
-    rank = np.array([_RANK.get(v, _LAST) for v in hw_vals] + [_LAST])[gk]
+    rank = np.array([_RANK.get(v, _LAST) for v in hw_vals.to_pylist()] + [_LAST])[gk]
     derived = np.full(n, -1, dtype=np.int64)
     at, win = _last_per_path(gp, cnt, -rank, gk)
     derived[at] = gk[win]
@@ -169,16 +172,17 @@ def _vote(checks: np.ndarray, p: np.ndarray, c: np.ndarray, road: dict,
     ms_ok = np.logical_or.reduceat(road["ms_ok"][order], g)
     per_path = np.bincount(gp, minlength=n)
     offsets = np.concatenate([[0], np.cumsum(per_path)])
-    keys = [hw_vals[k] if k >= 0 else _NULL_CLASS for k in gk]
     maxspeeds = pa.MapArray.from_arrays(
         pa.array(offsets, pa.int32(), mask=np.append(per_path == 0, False)),
-        pa.array(keys, pa.string()), pa.array(ms, pa.float64(), mask=~ms_ok))
+        _strings(gk, hw_vals).fill_null(_NULL_CLASS),
+        pa.array(ms, pa.float64(), mask=~ms_ok))
+    return [pa.array(checks, pa.int64()), pa.array(yes), _strings(derived, hw_vals),
+            maxspeeds, _strings(name, name_vals)]
 
-    def strings(code, vals):
-        return pa.array([vals[k] if k >= 0 else None for k in code], pa.string())
 
-    return [pa.array(checks, pa.int64()), pa.array(yes), strings(derived, hw_vals),
-            maxspeeds, strings(name, name_vals)]
+def _strings(code: np.ndarray, vals: pa.Array) -> pa.Array:
+    """The strings of :func:`_codes` codes, NULL for -1."""
+    return vals.cast(pa.string()).take(pa.array(code, pa.int64(), mask=code < 0))
 
 
 _VOTE_FIELDS = [StructField(k, t) for k, t in _VOTE_COLS.items()]
@@ -193,50 +197,41 @@ def _road_index(roads: DataFrame) -> dict:
     layer, layers = _codes(raw["cols"]["road_layer"])
     return {
         "level": {k: level[k] for k in ("res", "cells", "starts", "seg", "wid")},
-        "layer": layer, "layers": {v: i for i, v in enumerate(layers)},
-        "roads": _road_keys(raw["cols"]),
+        "layer": layer, "layers": layers, "roads": _road_keys(raw["cols"]),
     }
 
 
-def _broadcast_votes(df: DataFrame, index: dict) -> DataFrame:
-    """Steps 1-5 in one Arrow kernel per batch of rows against the broadcast
-    road index: every row passes through, and a ``_path`` row gains its
-    vote."""
-    bidx = df.sparkSession.sparkContext.broadcast(index)
-    names = [c for c in df.columns if c != "_path"]
-
-    def run(batches):
-        idx = bidx.value
-        keys, hw_vals, name_vals = idx["roads"]
-        lut = idx["layers"]
-        for b in batches:
-            rows = np.flatnonzero(b.column("_path").to_numpy(zero_copy_only=False))
-            # step 1: check points exactly as checkpoints_udf makes them
-            px, py, off = checkpoints(b.column("geometry").take(rows))
-            npts = np.diff(off)
-            has = np.flatnonzero(npts)
-            checks = npts[has]
-            path = np.repeat(np.arange(len(has)), checks)
-            # steps 2-4: cell lookup, distance refine, same layer (NULL-safe:
-            # NULL == NULL; a layer no road has matches none)
-            pt = road = np.array([], np.int64)
-            pairs = _csr_pairs(idx["level"], px, py)
-            if pairs is not None:
-                _, pt, road, d = pairs
-                layer = np.array([-1 if v is None else lut.get(v, -2) for v in
-                                  b.column("layer").take(rows[has]).to_pylist()])
-                keep = (d <= P.SIDEPATH_BUFFER_SIZE) & (layer[path[pt]] == idx["layer"][road])
-                pt, road = pt[keep], road[keep]
-            votes = _vote(checks, path[pt], pt, {k: v[road] for k, v in keys.items()},
-                          hw_vals, name_vals)
-            at = np.full(b.num_rows, -1, dtype=np.int64)
-            at[rows[has]] = np.arange(len(has))
-            at = pa.array(at, mask=at < 0)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(n) for n in names] + [v.take(at) for v in votes],
-                names=names + list(_VOTE_COLS))
-
-    return df.mapInArrow(run, StructType([df.schema[n] for n in names] + _VOTE_FIELDS))
+def _vote_kernel(idx: dict, b: pa.RecordBatch):
+    """Steps 1-5 over one batch of rows against the broadcast road index
+    (a :func:`images._broadcast_map` kernel): every row passes through, and
+    a ``_path`` row gains its vote."""
+    keys, hw_vals, name_vals = idx["roads"]
+    rows = np.flatnonzero(b.column("_path").to_numpy(zero_copy_only=False))
+    # step 1: check points exactly as checkpoints_udf makes them
+    px, py, off = checkpoints(b.column("geometry").take(rows))
+    npts = np.diff(off)
+    has = np.flatnonzero(npts)
+    checks = npts[has]
+    path = np.repeat(np.arange(len(has)), checks)
+    # steps 2-4: cell lookup, distance refine, same layer (NULL-safe:
+    # NULL == NULL; a layer no road has matches none)
+    pt = road = np.array([], np.int64)
+    pairs = _csr_pairs(idx["level"], px, py)
+    if pairs is not None:
+        _, pt, road, d = pairs
+        col = b.column("layer").take(rows[has])
+        layer = np.where(
+            col.is_null().to_numpy(zero_copy_only=False), -1,
+            pc.index_in(col, value_set=idx["layers"]).fill_null(-2)
+            .to_numpy(zero_copy_only=False))
+        keep = (d <= P.SIDEPATH_BUFFER_SIZE) & (layer[path[pt]] == idx["layer"][road])
+        pt, road = pt[keep], road[keep]
+    votes = _vote(checks, path[pt], pt, {k: v[road] for k, v in keys.items()},
+                  hw_vals, name_vals)
+    at = np.full(b.num_rows, -1, dtype=np.int64)
+    at[rows[has]] = np.arange(len(has))
+    at = pa.array(at, mask=at < 0)
+    return None, [v.take(at) for v in votes]
 
 
 def _vote_bucket(tbl: pa.Table) -> pa.Table:
@@ -316,10 +311,12 @@ def sidepath_votes(df: DataFrame, is_path: Column, is_road: Column) -> DataFrame
 
     # the broadcast collect scans the input, not the fan-out exchange
     index = _broadcast_index(df.filter(is_road), _road_index)
-    df = fan_out(df).withColumn("_path", F.coalesce(is_path, F.lit(False)))
+    path = F.coalesce(is_path, F.lit(False))
     if index is None:
+        df = fan_out(df).withColumn("_path", path)
         return _shuffle_votes(df, df.filter(is_road))
-    return _broadcast_votes(df, index)
+    return _broadcast_map(df.withColumn("_path", path), index, _vote_kernel,
+                          _VOTE_FIELDS).drop("_path")
 
 
 def sidepath_stage(df: DataFrame) -> DataFrame:

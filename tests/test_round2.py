@@ -117,8 +117,9 @@ def test_geotag_broadcast_parity(spark):
     """geotag_join's two plans give the same rows bit for bit: the shuffle
     form (``knn_ways`` k=1), forced by disabling broadcasts, against the
     default, which on these small ways sides is the broadcast CSR form —
-    MapInPandas with no cell exchange.  Both keep the images' own
-    ``image_id`` type (a numeric id included)."""
+    MapInArrow with no cell exchange.  Both keep the images' own
+    ``image_id`` type (a numeric id included), and a frame with payload
+    columns comes out with them unchanged."""
     from osm_cycling_quality_index_spark.operators import images as I
     from osm_cycling_quality_index_spark.sources import synth
 
@@ -129,10 +130,15 @@ def test_geotag_broadcast_parity(spark):
     wpdf = synth.ways_pdf(n_roads=40)
     ways = synth.ways_df(spark, n_roads=40).select("id", "geometry")
     imgs = synth.images_df(spark, wpdf, n_images=400).select("image_id", "lon", "lat")
+    payload = imgs.select(
+        "image_id", "lon", "lat",
+        F.encode(F.concat(F.lit("px-"), "image_id"), "utf-8").alias("bytes"),
+        F.concat(F.lit("a photo of "), "image_id").alias("caption"))
     cases = [
         (ways, imgs),
         (ways, imgs.withColumn("image_id", F.xxhash64("image_id"))),
         _hostile_geo(spark),
+        (ways, payload),
     ]
     key = "spark.sql.autoBroadcastJoinThreshold"
     for ways, imgs in cases:
@@ -140,18 +146,27 @@ def test_geotag_broadcast_parity(spark):
         spark.conf.set(key, "-1")
         try:
             shuffled = I.geotag_join(imgs, ways, res=9)
-            assert "MapInPandas" not in _plan(shuffled)
+            assert "MapInArrow" not in _plan(shuffled)
             a = rows(shuffled)
         finally:
             spark.conf.set(key, saved)
         default = I.geotag_join(imgs, ways, res=9)
         plan = _plan(default)
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         assert "Exchange hashpartitioning(cell" not in plan
         assert rows(default) == a and len(a) == imgs.count()
+        assert default.schema == shuffled.schema
+        assert default.columns == ["image_id", *imgs.columns[1:], "way_id", "dist_m"]
         id_type = imgs.schema["image_id"].dataType
-        assert shuffled.schema["image_id"].dataType == id_type
         assert default.schema["image_id"].dataType == id_type
+        extra = [c for c in imgs.columns if c not in ("image_id", "lon", "lat")]
+        if extra:
+            assert sorted(map(tuple, default.select(*imgs.columns).collect())) \
+                == sorted(map(tuple, imgs.collect()))
+            assert sorted(map(tuple, shuffled.select(*imgs.columns).collect())) \
+                == sorted(map(tuple, imgs.collect()))
+    ways, imgs = _hostile_geo(spark)
+    a = rows(I.geotag_join(imgs, ways, res=9))
     got = {i: (w, round(d, 6) if d is not None else None) for i, w, d in a}
     assert got["on_z0"] == ("z0", 0.0) and got["on_dup"] == ("dup", 0.0)
     assert got["far"] == (None, None) and len(got) == 6
@@ -177,7 +192,9 @@ def test_geotag_size_rule_reads_the_geometry(spark, tmp_path):
     Spark's size estimate: on a parquet ways table with wide tag columns
     and long polylines, the estimate of ``(id, geometry)`` and the
     vertex cap both pass a 1 MB threshold while the built index is over
-    1 MB, so geotag_join must take the shuffle form."""
+    1 MB, so geotag_join must take the shuffle form.  The index's ids
+    count with their string data: short ways with 40 KB ids take the
+    shuffle form too."""
     from osm_cycling_quality_index_spark.operators import images as I
 
     rng = np.random.default_rng(7)
@@ -206,6 +223,13 @@ def test_geotag_size_rule_reads_the_geometry(spark, tmp_path):
     vertices = wide.agg(F.sum(F.size("geometry"))).first()[0]
     assert max(int(est), 16 * vertices) <= limit < index_bytes(wide)
 
+    long_ids = spark.createDataFrame(
+        [(f"{i:03d}" + "w" * 40_000, [{"x": 13.30 + 0.01 * i, "y": 52.45},
+                                      {"x": 13.305 + 0.01 * i, "y": 52.45}])
+         for i in range(30)], f"id string, geometry {geom}")
+    assert index_bytes(long_ids) < limit < I._nbytes(
+        I.build_segment_index(long_ids, res=8, rings=1))
+
     imgs = spark.createDataFrame(
         [(f"i{k}", 13.30 + 0.001 * k, 52.45) for k in range(50)],
         "image_id string, lon double, lat double")
@@ -213,10 +237,10 @@ def test_geotag_size_rule_reads_the_geometry(spark, tmp_path):
     saved = spark.conf.get(key)
     spark.conf.set(key, str(limit))
     try:
-        plan = _plan(I.geotag_join(imgs, wide))
+        plans = [_plan(I.geotag_join(imgs, w)) for w in (wide, long_ids)]
     finally:
         spark.conf.set(key, saved)
-    assert "MapInPandas" not in plan
+    assert not any("MapInArrow" in plan for plan in plans)
 
 
 def _plan(df) -> str:
@@ -228,14 +252,18 @@ def test_no_pandas_udf_reads_geometry(spark):
     in the physical plans of the geometry operators, every ArrowEvalPython
     node over ``geometry`` has eval type 250 (``arrow_udf``), none 200 (a
     pandas UDF, which hands the UDF one Python dict per vertex).  The
-    broadcast sidepath vote reads the geometry in its ``mapInArrow`` kernel
-    (Arrow batches, no eval node); its shuffle form runs the check-point
-    UDF."""
+    shuffle form of the sidepath vote runs the check-point UDF.
+
+    Each broadcast spatial join — the sidepath vote, geotag, kNN and
+    ``pip_join`` — plans as one ``MapInArrow`` kernel (Arrow batches, no
+    eval node) with no ``MapInPandas`` or ``ArrowEvalPython`` in the plan
+    and no join above the kernel."""
     from osm_cycling_quality_index_spark.operators import images as I
     from osm_cycling_quality_index_spark.operators.dedup import (
         release_session_pinned,
     )
     from osm_cycling_quality_index_spark.operators.pipeline import cqi_pipeline
+    from osm_cycling_quality_index_spark.operators.sidepath import sidepath_stage
     from osm_cycling_quality_index_spark.sources import synth
 
     ways = synth.ways_df(spark, n_roads=24)
@@ -245,10 +273,22 @@ def test_no_pandas_udf_reads_geometry(spark):
     broadcast = _plan(cqi_pipeline(ways)).splitlines()
     assert any("MapInArrow" in ln and "geometry" in ln for ln in broadcast)
     assert not any("ArrowEvalPython" in ln and ln.endswith(", 200") for ln in broadcast)
+    kernels = {
+        "sidepath vote": sidepath_stage(ways),
+        "geotag_join": I.geotag_join(imgs, ways.select("id", "geometry")),
+        "knn_ways_broadcast": I.knn_ways_broadcast(imgs, ways.select("id", "geometry")),
+        "pip_join broadcast": I.pip_join(imgs, polys),
+    }
+    for name, df in kernels.items():
+        lines = _plan(df).splitlines()
+        at = [i for i, ln in enumerate(lines) if "MapInArrow" in ln]
+        assert len(at) == 1, (name, lines)
+        assert not any("MapInPandas" in ln or "ArrowEvalPython" in ln
+                       for ln in lines), (name, lines)
+        assert not any("Join" in ln for ln in lines[:at[0]]), (name, lines)
     frames = {
         "way_tile_assignment": I.way_tile_assignment(ways),
         "polygon_tile_assignment": I.polygon_tile_assignment(polys),
-        "pip_join broadcast": I.pip_join(imgs, polys),
         "knn_ways": I.knn_ways(imgs, ways.select("id", "geometry"), k=3),
     }
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -275,6 +315,7 @@ def _spark_csr_rows(ways, res, rings, ids):
     from osm_cycling_quality_index_spark.operators import images as I
 
     pdf = I._way_segments_cells(ways, res, rings).toPandas()
+    ids = np.array(ids.to_pylist(), dtype=object)
     assert list(np.unique(pdf["way_id"].to_numpy(dtype=object))) == list(ids)
     ax, ay, bx, by = (pdf[c].to_numpy(np.float64) for c in ("ax", "ay", "bx", "by"))
     return _sorted_bits(pdf["cell"].to_numpy(np.int64),
@@ -308,7 +349,7 @@ def test_segment_index_matches_spark_rows(spark):
             got = _sorted_bits(cell, lvl["wid"], *lvl["seg"].T)
             assert got.shape == want.shape and np.array_equal(got, want)
     # the hostile ways: z0 and dup keep their zero-length segments, s1 has none
-    assert list(idx["fine"]["ids"]) == ["a", "b", "dup", "z0"]
+    assert idx["fine"]["ids"].to_pylist() == ["a", "b", "dup", "z0"]
 
 
 def test_segments_udf_is_the_kernel(spark):
@@ -407,8 +448,9 @@ def test_streaming_sessionize_stateful(spark, tmp_path):
 
 
 def test_pip_join_brute_force(spark):
-    """pip_join (cell-bucketed candidates + column-math ray cast) must equal
-    the numpy ray_cast_pip kernel applied all-pairs."""
+    """pip_join (cell-bucketed candidates + ray cast), in both forms, must
+    equal the numpy ray_cast_pip kernel applied all-pairs, one row per
+    (point, polygon row) also where polygon rows share a poly_id."""
     import numpy as np
 
     from osm_cycling_quality_index_spark.geo.kernels import (
@@ -430,21 +472,33 @@ def test_pip_join_brute_force(spark):
     pts = [(str(j), float(LON0 + x / MPD_X), float(LAT0 + y / MPD_Y),
             float(x), float(y))
            for j, (x, y) in enumerate(rng.uniform(0, 6500, (1500, 2)))]
-    pdf = spark.createDataFrame(
-        polys, "poly_id string, geometry array<struct<x double, y double>>")
     tdf = spark.createDataFrame(
         [(p[0], p[1], p[2]) for p in pts], "image_id string, lon double, lat double")
-    got = {(r["image_id"], r["poly_id"])
-           for r in pip_join(tdf, pdf, res=7).collect()}
+    # repeated poly_ids: g0 again with another ring, and an exact repeat
+    # of g1; each polygon row counts apart
+    polys += [("g0", polys[2][1]), polys[1]]
+    pdf = spark.createDataFrame(
+        polys, "poly_id string, geometry array<struct<x double, y double>>")
     qx = np.array([p[3] for p in pts])
     qy = np.array([p[4] for p in pts])
-    want = set()
+    want = []
     for pid, ring in polys:
         rx, ry = project(np.array([v["x"] for v in ring]),
                          np.array([v["y"] for v in ring]))
         for j in np.flatnonzero(ray_cast_pip(qx, qy, rx, ry)):
-            want.add((pts[j][0], pid))
-    assert got == want and len(want) > 0
+            want.append((pts[j][0], pid))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    got = [sorted((r["image_id"], r["poly_id"])
+                  for r in pip_join(tdf, pdf, res=7).collect())]
+    spark.conf.set(key, "-1")
+    try:
+        got.append(sorted((r["image_id"], r["poly_id"])
+                          for r in pip_join(tdf, pdf, res=7).collect()))
+    finally:
+        spark.conf.set(key, saved)
+    assert got[0] == got[1] == sorted(want) and len(want) > 0
+    assert len(set(want)) < len(want)
 
 
 def test_knn_broadcast_parity(spark):

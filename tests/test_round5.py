@@ -140,7 +140,9 @@ def test_pip_join_shuffle_regime_matches_broadcast(spark):
     """pip_join with the broadcast threshold at -1 (forcing the shuffle regime's
     ids-only candidate join + attached-ring Arrow refine) returns exactly
     the broadcast regime's rows, and the session storage returns to
-    baseline after release."""
+    baseline after release.  Polygon rows that share a poly_id are tested
+    apart in both regimes: one row per (point, polygon row) containing
+    the point."""
     from osm_cycling_quality_index_spark.operators.dedup import (
         release_session_pinned,
     )
@@ -149,19 +151,37 @@ def test_pip_join_shuffle_regime_matches_broadcast(spark):
         _points_df, _triangles_df,
     )
 
+    def square(x0, y0):
+        return [{"x": x, "y": y} for x, y in
+                ((x0, y0), (x0 + 0.01, y0), (x0 + 0.01, y0 + 0.01), (x0, y0 + 0.01))]
+
     release_session_pinned(spark)  # drain pins left by earlier tests
     base = _registry_size(spark)
-    pts = _points_df(spark, SF01)
-    tris = _triangles_df(spark, SF01)
-    bc = {(r.image_id, r.poly_id) for r in pip_join(pts, tris, res=9).collect()}
+    geom = "array<struct<x double, y double>>"
+    repeated = (
+        spark.createDataFrame(
+            [("A", square(13.40, 52.50)), ("A", square(13.42, 52.50)),
+             ("B", square(13.40, 52.50))], f"poly_id string, geometry {geom}"),
+        spark.createDataFrame(
+            [("in_first", 13.405, 52.505), ("in_second", 13.425, 52.505)],
+            "image_id string, lon double, lat double"),
+    )
+    cases = [(_points_df(spark, SF01), _triangles_df(spark, SF01)), repeated[::-1]]
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        sh = {(r.image_id, r.poly_id) for r in pip_join(pts, tris, res=9).collect()}
-    finally:
-        spark.conf.set(key, saved)
-    assert bc == sh and len(bc) > 100
+    got = []
+    for pts, polys in cases:
+        bc = sorted((r.image_id, r.poly_id) for r in pip_join(pts, polys, res=9).collect())
+        spark.conf.set(key, "-1")
+        try:
+            sh = sorted((r.image_id, r.poly_id)
+                        for r in pip_join(pts, polys, res=9).collect())
+        finally:
+            spark.conf.set(key, saved)
+        assert bc == sh
+        got.append(bc)
+    assert len(got[0]) > 100
+    assert got[1] == [("in_first", "A"), ("in_first", "B"), ("in_second", "A")]
     release_session_pinned(spark)
     assert _registry_size(spark) == base
 

@@ -39,7 +39,8 @@ def stats(plan: str) -> str:
     n_ex = len(re.findall(r"\bExchange\b", plan))
     n_bc = len(re.findall(r"BroadcastExchange|BroadcastHashJoin", plan))
     n_scan = len(re.findall(r"Scan parquet", plan))
-    n_py = len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan))
+    n_py = len(re.findall(
+        r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsIn(?:Pandas|Arrow)", plan))
     return (f"exchanges={n_ex} broadcast_ops={n_bc} "
             f"parquet_scans={n_scan} python_stages={n_py}")
 

@@ -5,41 +5,35 @@ Replaces the <=4-char-piece regex proxy for token-count-based filtering /
 budgeting (the reference pipeline has no tokenizer; this belongs to the
 training-data component set).
 
-Two implementations with identical results:
+:func:`bpe_token_count` is pure Column arithmetic, exactly mirrored in
+DuckDB by :func:`bpe_query_sql`.  The text is exploded to a space-delimited
+symbol string (word boundaries become a ``|`` symbol that participates in
+no merge), then each merge rule is applied IN RANK ORDER as a literal
+``replace(' a b ', ' ab ')``, repeated ``_REPEAT`` times so runs of the
+same pair merge exhaustively.  Sequential exhaustive application in rank
+order is exactly BPE encoding: a merge at rank r can only create pairs
+involving its output symbol, and every rule consuming that symbol was
+learned later, so no earlier rule ever becomes applicable again.
+Exhaustiveness bound (verified empirically and by site-overlap argument,
+round 4): for a rule with DISTINCT symbols ``a != b`` the pair sites are
+disjoint, a non-overlapping replace pass merges alternate sites and the
+second pass catches every leftover — two passes are always exhaustive, for
+runs of ANY length.  Same-symbol rules ``(x, x)`` have OVERLAPPING sites
+and the left-to-right non-overlap pairing can strand symbols unrecoverably
+(``aaaaaa`` -> ``aa a aa a`` vs greedy ``aa aa aa``) at any repeat count,
+so they are banned at learn time (tools/learn_bpe.py) and at import below.
+``_REPEAT = 3`` keeps one pass of headroom over the proven bound.
 
-* :func:`bpe_token_count` — pure Column arithmetic, exactly mirrored in
-  DuckDB by :func:`bpe_count_sql`.  The text is exploded to a
-  space-delimited symbol string (word boundaries become a ``|`` symbol that
-  participates in no merge), then each merge rule is applied IN RANK ORDER
-  as a literal ``replace(' a b ', ' ab ')``, repeated ``_REPEAT`` times so
-  runs of the same pair merge exhaustively.  Sequential exhaustive
-  application in rank order is exactly BPE encoding: a merge at rank r can
-  only create pairs involving its output symbol, and every rule consuming
-  that symbol was learned later, so no earlier rule ever becomes applicable
-  again.  Exhaustiveness bound (verified empirically and by site-overlap
-  argument, round 4): for a rule with DISTINCT symbols ``a != b`` the
-  pair sites are disjoint, a non-overlapping replace pass merges alternate
-  sites and the second pass catches every leftover — two passes are
-  always exhaustive, for runs of ANY length.  Same-symbol rules ``(x, x)``
-  have OVERLAPPING sites and the left-to-right non-overlap pairing can
-  strand symbols unrecoverably (``aaaaaa`` -> ``aa a aa a`` vs greedy
-  ``aa aa aa``) at any repeat count, so they are banned at learn time
-  (tools/learn_bpe.py) and at import below.  ``_REPEAT = 3`` keeps one
-  pass of headroom over the proven bound.
-* :func:`bpe_token_count_fast` — Arrow-batched pandas UDF running the
-  classic per-word greedy encoder with a word->count memo (words repeat
-  heavily, so the memo hit rate is ~100%); the production path when the
-  chain of 3x64 JVM replaces is not wanted.  Bit-equality with the column
-  path is pytest-gated on the corpus AND on edge inputs (tab, newline,
-  literal '|', NULL).  The symbol-explosion regexp runs in dotall mode
-  (``(?s)``) in BOTH engines so ``\\n`` is an ordinary in-word symbol
-  everywhere (it can participate in no merge — the merges-table guard
-  below bans whitespace symbols), matching the twin's treatment.
+The symbol-explosion regexp runs in dotall mode (``(?s)``) in BOTH engines
+so ``\\n`` is an ordinary in-word symbol everywhere (it can participate in
+no merge — the merges-table guard below bans whitespace symbols).
+:func:`bpe_encode_word` is the classic per-word greedy encoder, kept as
+the reference the column path is pytest-gated against, on the corpus AND
+on edge inputs (tab, newline, literal '|', NULL).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -72,7 +66,7 @@ def _symbol_chain(text: Column) -> Column:
     as the ``|`` mark), shared by the count and the piece-sequence paths."""
     s = F.replace(F.lower(text), F.lit(" "), F.lit(_WORD_MARK))
     # (?s): dot matches \n too, so newline-bearing text spaces out the same
-    # way in Spark (Java regex) and DuckDB (RE2) — and as the fast twin
+    # way in Spark (Java regex) and DuckDB (RE2) — and as the greedy encoder
     s = F.concat(F.lit(" "), F.regexp_replace(s, "(?s)(.)", "$1 "))
     for a, b in MERGES:
         for _ in range(_REPEAT):
@@ -189,7 +183,7 @@ FROM pieces JOIN vocab USING (piece)
 
 
 # ---------------------------------------------------------------------------
-# reference encoder + vectorized twin
+# reference encoder
 # ---------------------------------------------------------------------------
 
 _RANK = {pair: i for i, pair in enumerate(MERGES)}
@@ -235,16 +229,3 @@ def _count_doc(text: str | None, memo: dict) -> int | None:
             c = memo[w] = len(bpe_encode_word(w))
         n += c
     return n
-
-
-def bpe_token_count_fast(text: Column) -> Column:
-    """Arrow-batched twin of :func:`bpe_token_count` (see module doc).
-
-    The UDF is built lazily — ``pandas_udf`` resolves its return type
-    against the active session, so a module-level decorator would make the
-    import order matter."""
-    def _count(texts: pd.Series) -> pd.Series:
-        memo: dict = {}
-        return texts.map(lambda t: _count_doc(t, memo)).astype("Int32")
-
-    return F.pandas_udf(_count, "int")(text)

@@ -132,20 +132,3 @@ def last_pipe_token_number(c: Column) -> Column:
     if is_null(c):
         return null("double")
     return F.element_at(F.split(c, "\\|"), -1).try_cast("double")
-
-
-def contains_sign(traffic_sign: Column, sign_ids) -> Column:
-    """True when any ';'/','-delimited token of ``traffic_sign`` contains one
-    of ``sign_ids`` as a substring (reference/cycling_quality_index.py:1243-1251
-    with the sign lists of reference/parameter.py:250-251).
-
-    A substring that contains no delimiter cannot span a token boundary, and
-    every sign id is delimiter-free — so per-token ``exists`` (a
-    CodegenFallback higher-order function) is equivalent to a whole-string
-    ``contains``, which stays in whole-stage codegen."""
-    assert all("," not in s and ";" not in s for s in sign_ids)
-    cond = None
-    for sid in sign_ids:
-        c = traffic_sign.contains(F.lit(sid))
-        cond = c if cond is None else (cond | c)
-    return cond

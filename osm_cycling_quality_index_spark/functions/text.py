@@ -59,7 +59,7 @@ def subword_token_count(text: Column) -> Column:
     """Real BPE subword token count over the committed merges table —
     delegates to :func:`..functions.bpe.bpe_token_count` (which replaced
     the earlier <=4-char-piece regex proxy; see functions/bpe.py for the
-    encoder, its SQL mirror, and the Arrow-batched production twin)."""
+    encoder and its SQL mirror)."""
     from .bpe import bpe_token_count
 
     return bpe_token_count(text)

@@ -10,7 +10,8 @@ Two encoders, both vectorized numpy (no h3/s2 library dependency):
   (reference/cycling_quality_index.py:234-248) becomes "same cell or ring-1
   neighbor at res 9" + exact distance refine.
 * **s2** — a faithful S2 cell id (cube face -> quadratic s/t -> Hilbert
-  curve position, 64-bit id, public algorithm), used for covering sets.
+  curve position, 64-bit id, public algorithm) and its parent at a coarser
+  level.
 
 Aperture-7 hexagon grids never nest exactly (true for H3 too), so the engine
 never derives a coarse cell from a fine one: each resolution is encoded from
@@ -23,7 +24,7 @@ import math
 
 import numpy as np
 
-from .kernels import MPD_X, MPD_Y, project
+from .kernels import project
 
 # ---------------------------------------------------------------------------
 # hexcell
@@ -158,13 +159,6 @@ def segment_cells(x, y, offsets, res: int, rings: int = 0):
     return (line, ax, ay, bx, by), (seg, cell)
 
 
-def k_for_distance(distance_m: float, res: int) -> int:
-    """Smallest safe ring count: two points <= distance_m apart always fall
-    in cells within this hex distance (property-tested in
-    tests/test_cells.py)."""
-    return int(distance_m / (math.sqrt(3.0) * EDGES_M[res])) + 1
-
-
 # ---------------------------------------------------------------------------
 # S2 (public algorithm: cube faces + quadratic ST + Hilbert curve)
 # ---------------------------------------------------------------------------
@@ -259,28 +253,3 @@ def s2_parent(cell_id, level: int) -> np.ndarray:
     cid = np.asarray(cell_id, dtype=np.int64).view(np.uint64)
     new_lsb = np.uint64(1) << np.uint64(2 * (_MAX_LEVEL - level))
     return ((cid & (~(new_lsb - np.uint64(1)))) | new_lsb).view(np.int64)
-
-
-def s2_range(cell_id) -> tuple[np.ndarray, np.ndarray]:
-    """[range_min, range_max] of leaf ids contained in the cell."""
-    cid = np.asarray(cell_id, dtype=np.int64).view(np.uint64)
-    lsb = cid & (~cid + np.uint64(1))
-    return (cid - (lsb - np.uint64(1))).view(np.int64), (cid + (lsb - np.uint64(1))).view(np.int64)
-
-
-def s2_covering_of_segment(
-    lon_a: float, lat_a: float, lon_b: float, lat_b: float, level: int
-) -> np.ndarray:
-    """Covering cells of a segment at ``level`` by dense sampling (step =
-    half the cell edge), deduplicated.  Pragmatic covering: correct for
-    membership because sampling is finer than the cell size."""
-    # cell edge at level in metres (earth circumference / 4 / 2^level scaled)
-    edge_m = 2 * math.pi * 6371000.0 / 4 / (1 << level)
-    seg_m = math.hypot(
-        (lon_b - lon_a) * MPD_X, (lat_b - lat_a) * MPD_Y
-    )
-    n = max(2, int(seg_m / max(edge_m / 2, 1e-9)) + 2)
-    t = np.linspace(0.0, 1.0, n)
-    lons = lon_a + t * (lon_b - lon_a)
-    lats = lat_a + t * (lat_b - lat_a)
-    return np.unique(s2_parent(s2_encode(lons, lats), level))

@@ -20,10 +20,6 @@ from pyspark.sql import functions as F
 from .. import params as P
 from ..functions.fold import per_operator
 
-#: non-tag columns the pipeline threads through conformance
-PASSTHROUGH_COLS = ["geometry", "way_id"]
-
-
 def conform_ways(df: DataFrame, keep_geometry: bool = True) -> DataFrame:
     """Project to the attribute allow-list: the tags the frame has as
     strings, and the pipeline columns it has as their types."""

@@ -408,28 +408,6 @@ def ngram_jaccard_pairs(
     return jac.select("doc_a", "doc_b", "common", F.round("jaccard", 6).alias("jaccard"))
 
 
-def minhash_signatures(
-    df: DataFrame, n_hashes: int = 16, text_col: str = "text",
-    mode: str = "dictionary", tokens: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash signature per doc: sig_i = min over words of
-    (a_i*word_id + b_i) mod P, with a_i = 2i+1, b_i = 31*i+7 (fixed affine
-    family), over 3-word shingles.  Output: (doc_id, sig array<long>).
-
-    ``tokens`` lets a caller that already shingled the corpus share one
-    tokenize+distinct pass instead of re-running it.  (minhash_lsh_pairs no
-    longer calls this: it folds the same minima into its verify-set
-    aggregate so the token stream shuffles once, not twice.)"""
-    toks = word_ids(tokens if tokens is not None
-                    else tokenize(df, text_col, "shingle"), mode)
-    aggs = [
-        F.min((F.col("word_id") * (2 * i + 1) + (31 * i + 7)) % _P).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
-    sig = toks.groupBy("doc_id").agg(*aggs)
-    return sig.select("doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig"))
-
-
 def minhash_lsh_pairs(
     df: DataFrame, n_hashes: int = 16, bands: int = 4,
     threshold: float = 0.5, text_col: str = "text", mode: str = "xxhash",
@@ -475,8 +453,8 @@ def minhash_lsh_pairs(
     toks = tokenize(df, text_col, "shingle").persist()
     pin_session(df.sparkSession, toks.unpersist)
     # ONE grouped pass computes BOTH the n_hashes signature minima and the
-    # exact-verify shingle set per doc: a separate minhash_signatures
-    # groupBy + a separate collect_set groupBy shuffled the full token
+    # exact-verify shingle set per doc: a separate signature groupBy + a
+    # separate collect_set groupBy shuffled the full token
     # stream twice for two aggregates over the same key — the merged
     # aggregate halves the token shuffle volume and drops a whole stage.
     idtoks = word_ids(toks, mode)
@@ -634,17 +612,6 @@ def hamming_near_pairs(
         .select(out_a, out_b, "hamming")
         .distinct()
     )
-
-
-def simhash_near_pairs(df: DataFrame, bits: int = 32, max_hamming: int = 3,
-                       text_col: str = "text", mode: str = "dictionary") -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance — the generic
-    :func:`hamming_near_pairs` blocking over :func:`simhash` signatures.
-    Output: (doc_a, doc_b, hamming)."""
-    # the signature frame feeds both sides of the block self-join
-    sh = simhash(df, bits, text_col, mode).persist()
-    pin_session(df.sparkSession, sh.unpersist)
-    return hamming_near_pairs(sh, "doc_id", "simhash", bits, max_hamming)
 
 
 def connected_components(
@@ -963,7 +930,7 @@ def dedup_groups(
     chains (A~B, B~C with A,C never compared) must collapse to ONE cluster.
 
     ``df`` is the full corpus (so singletons keep themselves), ``pairs`` any
-    near-dup pair frame (minhash_lsh_pairs / simhash_near_pairs /
+    near-dup pair frame (minhash_lsh_pairs / hamming_near_pairs /
     embedding_near_dups output).  Pair endpoints need NOT be corpus ids:
     components are computed over the full pair graph (so two corpus rows
     bridged only through a foreign id still collapse into one group), then
@@ -1373,43 +1340,3 @@ def repeated_spans(
             (F.col("span_end") - F.col("span_start") + 1).alias("n_tokens"),
         )
     )
-
-
-def excise_spans(
-    df: DataFrame, spans: DataFrame, text_col: str = "text",
-) -> DataFrame:
-    """Remove every token covered by a :func:`repeated_spans` interval and
-    rebuild the text — the write side of the Lee-et-al pass.  Documents
-    with no flagged span pass through unchanged (left join); a document
-    whose every token is covered comes back as the empty string.
-
-    The token walk is pure JVM array lambda work (filter over positions
-    against the doc's own span list — spans per doc are few, the
-    quadratic term is bounded by span count, not doc length squared); the
-    spans attach by a single equi-join on doc_id.  Output: (doc_id, text)
-    with the same lowercase/whitespace normalization as the detector.
-    """
-    per_doc = spans.groupBy("doc_id").agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
-    )
-    ws = F.filter(F.split(F.lower(F.col(text_col)), " "),
-                  lambda w: w != "")
-    out = df.join(per_doc, "doc_id", "left")
-    covered = lambda i: F.exists(  # noqa: E731
-        F.col("_spans"),
-        lambda sp: (i >= sp["span_start"]) & (i <= sp["span_end"]),
-    )
-    kept = F.when(
-        F.col("_spans").isNull(), ws
-    ).otherwise(
-        # zip each token with its dense position, drop covered ones
-        F.transform(
-            F.filter(
-                F.transform(ws, lambda w, i: F.struct(w.alias("w"),
-                                                      i.alias("i"))),
-                lambda s: ~covered(s["i"]),
-            ),
-            lambda s: s["w"],
-        )
-    )
-    return out.select("doc_id", F.concat_ws(" ", kept).alias(text_col))

@@ -5,12 +5,7 @@ cardinality at scale (HLL's simpler cousin, chosen here because it is
 EXACTLY deterministic and SQL-mirrorable): hash every key with a fixed
 affine map, keep the ``k`` smallest distinct hash values per group.  The
 estimator is ``(k-1) * H / h_k`` (``H`` = hash-space size, ``h_k`` = the
-k-th smallest), exact when fewer than ``k`` distinct keys exist.
-
-Mergeability is exact, not approximate: the k smallest of a union is the
-k smallest of the per-part k-smallest — so partial sketches (per day, per
-partition) compose into the global sketch with zero error relative to
-sketching the whole input directly (property-tested)."""
+k-th smallest), exact when fewer than ``k`` distinct keys exist."""
 
 from __future__ import annotations
 
@@ -41,21 +36,6 @@ def kmv_sketch(df: DataFrame, key: str, group: str, k: int = 64) -> DataFrame:
     w = Window.partitionBy(group).orderBy("h")
     return (
         hashes.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= k)
-    )
-
-
-def kmv_merge(*sketches: DataFrame, k: int = 64) -> DataFrame:
-    """Compose partial sketches: union, dedup, re-rank, keep k — exactly
-    the sketch of the union of the inputs."""
-    u = sketches[0].select("*")
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    grp = [c for c in u.columns if c not in ("h", "r")]
-    w = Window.partitionBy(*grp).orderBy("h")
-    return (
-        u.select(*grp, "h").distinct()
-        .withColumn("r", F.row_number().over(w))
         .where(F.col("r") <= k)
     )
 

@@ -22,7 +22,6 @@ from ..functions.nulls import falsy, neq, notin, truthy
 from ..functions.tags import derive_separation, get_access
 
 _YDP = ["yes", "designated", "permissive"]
-_LTS = ["lane", "track", "share_busway"]  # noqa: N816 (reference value set)
 _ALLOWED_BICYCLE_ACCESS = [
     "yes", "permissive", "designated", "use_sidepath", "optional_sidepath", "discouraged",
 ]

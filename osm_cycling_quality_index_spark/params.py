@@ -12,7 +12,6 @@ from __future__ import annotations
 # a local tangent frame (we use equirectangular scale factors instead of a full
 # EPSG:25833 transverse-Mercator reprojection; distances agree to <<1% inside a
 # city-scale bbox), output EPSG:4326.
-CRS_OUTPUT = "EPSG:4326"
 
 #: right- or left-hand traffic (reference/parameter.py:9)
 RIGHT_HAND_TRAFFIC = True
@@ -190,32 +189,6 @@ HIGHWAY_FACTOR_DICT_WEIGHTS = {  # reference/parameter.py:171-188
     "shared footway": 0.2,
     "track or service": 0.0,
     "cycle path": 0.0,
-}
-
-#: separation protection levels (reference/parameter.py:191-212); the NULL key
-#: is represented by None.  Only used by the (disabled) protection factor and
-#: exported for API completeness.
-SEPARATION_LEVEL_DICT = {
-    "no": 0.0,
-    "none": 0.0,
-    None: 0.0,
-    "studs": 0.1,
-    "yes": 0.3,
-    "vertical_panel": 0.3,
-    "tree_row": 0.3,
-    "bump": 0.3,
-    "kerb": 0.3,
-    "flex_post": 0.5,
-    "greenery": 0.5,
-    "bollard": 0.6,
-    "planter": 0.6,
-    "structure": 0.7,
-    "ditch": 0.8,
-    "jersey_barrier": 0.9,
-    "hedge": 0.9,
-    "fence": 1.0,
-    "guard_rail": 1.0,
-    "ELSE": 0.3,
 }
 
 BASE_INDEX_DICT = {  # reference/parameter.py:215-232

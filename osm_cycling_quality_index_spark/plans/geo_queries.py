@@ -15,7 +15,6 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from .. import params as P
 from ..geo import cells as C
@@ -23,8 +22,6 @@ from ..geo.kernels import LAT0, LON0, MPD_X, MPD_Y
 
 _MX = repr(MPD_X)
 _MY = repr(MPD_Y)
-
-GEOM_T = ArrayType(StructType([StructField("x", DoubleType()), StructField("y", DoubleType())]))
 
 
 # ---------------------------------------------------------------------------

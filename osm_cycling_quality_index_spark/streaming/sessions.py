@@ -1,17 +1,12 @@
-"""Event-stream operators (sessionization, tumbling windows).
+"""Event-log operators (sessionization, tumbling windows, hourly rollups).
 
-Batch DataFrame forms here (SQL-mirrorable for the oracle gate); the same
-transformations run under Structured Streaming via ``readStream`` +
-``window()``/``session_window()`` — see :func:`streaming_tumbling` which
-builds the streaming variant of the tumbling aggregation with a watermark.
-The reference pipeline has no streaming semantics (SURVEY.md §2.10), so this
+Batch DataFrame forms, each SQL-mirrorable for the oracle gate.  The
+reference pipeline has no streaming semantics (SURVEY.md §2.10), so this
 module is engine capability surface, not parity surface.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -47,68 +42,6 @@ def tumbling_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def _session_accumulate(secs, last_ts, n_sessions, n_events, gap_s):
-    """Pure accumulator for one sorted chunk of a user's epoch-seconds:
-    returns the advanced (last_ts, n_sessions, n_events).  Unit-testable
-    without Spark state; the first element closes against ``last_ts`` from
-    the previous micro-batch (None = no history)."""
-    if len(secs) == 0:
-        return last_ts, n_sessions, n_events
-    prev = np.empty(len(secs), dtype=np.float64)
-    prev[1:] = secs[:-1]
-    prev[0] = np.nan if last_ts is None else last_ts
-    gaps = secs - prev
-    new = np.isnan(gaps) | (gaps > gap_s)
-    return float(secs[-1]), n_sessions + int(new.sum()), n_events + len(secs)
-
-
-def streaming_sessionize(stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Custom stateful streaming operator (``applyInPandasWithState``):
-    per-user session counting whose state (last event time + running
-    counts) survives across micro-batches — the semantics of
-    :func:`sessionize` under continuous arrival.  Emits the running
-    (user_id, n_sessions, n_events) for every group touched by a batch;
-    ``n_events`` is monotone per user, so the latest row per user is the
-    one with max ``n_events``.
-
-    Events are assumed time-ordered ACROSS batches per user (the standard
-    log-ingestion contract); within a batch any order is fine (sorted
-    here).  State is three scalars per user — bounded, no timeline kept."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_s = float(gap_minutes * 60)
-    empty = np.array([], dtype=np.float64)
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            last_ts, ns, ne = state.get
-        else:
-            last_ts, ns, ne = None, 0, 0
-        chunk = pd.concat(list(pdfs), ignore_index=True)
-        chunk = chunk.sort_values(["ts", "event_id"])
-        # epoch seconds truncated to long — identical to the batch form's
-        # cast("timestamp").cast("long")
-        secs = (
-            chunk["ts"].astype("datetime64[ns]").astype("int64") // 1_000_000_000
-        ).to_numpy(dtype=np.float64) if len(chunk) else empty
-        last_ts, ns, ne = _session_accumulate(secs, last_ts, ns, ne, gap_s)
-        state.update((last_ts, ns, ne))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_sessions": [ns], "n_events": [ne]}
-        )
-
-    return (
-        stream.groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="user_id long, n_sessions long, n_events long",
-            stateStructType="last_ts double, n_sessions long, n_events long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def hourly_partials(events: DataFrame, value_col: str = "value") -> DataFrame:
     """Finest rollup level: hourly ALGEBRAIC partials (count + sum, from
     which any coarser mean recomposes exactly).  This is the hypertable /
@@ -139,37 +72,4 @@ def rollup_daily(hourly: DataFrame, scale: float = 1.0) -> DataFrame:
             # real-valued mean here; pyround keeps tie rounding cross-engine
             pyround(F.col("sum_value") / (F.col("n") * F.lit(scale)), 4).alias("avg_value"),
         )
-    )
-
-
-def streaming_dedup(stream: DataFrame, text_col: str = "text",
-                    ts_col: str = "ts", watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact-dedup for a document stream: first arrival of each
-    content hash passes, later duplicates drop.  State is one xxhash64 per
-    distinct document, bounded by the watermark (duplicates arriving later
-    than ``watermark`` after the original are treated as new — the standard
-    state-retention trade; batch :func:`operators.dedup.dedup_exact` is the
-    exact form for reprocessing).
-
-    ``dropDuplicatesWithinWatermark`` is load-bearing: plain
-    ``dropDuplicates`` on a non-event-time subset never evicts its state
-    (the watermark only bounds state when the event-time column is part of
-    the key), so on a continuous stream it grows one hash per distinct
-    document forever."""
-    return (
-        stream.withColumn("_text_hash", F.xxhash64(text_col))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["_text_hash"])
-        .drop("_text_hash")
-    )
-
-
-def streaming_tumbling(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Structured Streaming variant: tumbling 1h windows with late-data
-    watermark.  ``stream`` must be a streaming DataFrame (readStream)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.avg("value").alias("avg_value"))
-        .select(F.col("win.start").alias("window_start"), "event_type", "n", "avg_value")
     )

@@ -49,37 +49,6 @@ def test_tm_vs_equirect_distance_bound():
 
 
 # ---------------------------------------------------------------------------
-# streaming tumbling == batch tumbling
-# ---------------------------------------------------------------------------
-
-def test_streaming_tumbling(spark, tmp_path):
-    from osm_cycling_quality_index_spark.streaming.sessions import (
-        streaming_tumbling, tumbling_counts,
-    )
-
-    events = spark.read.parquet(f"{SF}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    src = str(tmp_path / "events_in")
-    events.write.parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    out = streaming_tumbling(stream)
-    q = (
-        out.writeStream.format("memory").queryName("tumbling_test")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql(
-        "SELECT window_start, event_type, n, ROUND(avg_value, 6) AS avg_value "
-        "FROM tumbling_test"
-    )
-    want = tumbling_counts(events).withColumn(
-        "window_start", F.col("window_start").cast("timestamp")
-    )
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-
-# ---------------------------------------------------------------------------
 # broadcast geotag == shuffle geotag (J3 strategies)
 # ---------------------------------------------------------------------------
 
@@ -405,48 +374,6 @@ def test_segments_udf_is_the_kernel(spark):
     assert chk["null"] == [] and len(chk["s1"]) == 2
 
 
-def test_streaming_sessionize_stateful(spark, tmp_path):
-    """applyInPandasWithState session counting across two micro-batches must
-    equal the batch window form on the full event set."""
-    import os
-    import time as _time
-
-    from osm_cycling_quality_index_spark.streaming.sessions import (
-        sessionize, streaming_sessionize,
-    )
-
-    events = spark.read.parquet(f"{SF}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    ).select("event_id", "ts", "user_id")
-    cut = events.agg(F.percentile_approx("ts", 0.5)).collect()[0][0]
-    src = str(tmp_path / "events_in")
-    os.makedirs(src)
-    # batch 1 = earlier half, batch 2 = later half; the file source orders
-    # batches by modification time, so stamp them explicitly
-    events.where(F.col("ts") <= cut).coalesce(1).write.parquet(f"{src}/b1")
-    events.where(F.col("ts") > cut).coalesce(1).write.parquet(f"{src}/b2")
-    now = _time.time()
-    for sub, mt in (("b1", now - 100), ("b2", now)):
-        for f in os.listdir(f"{src}/{sub}"):
-            os.utime(f"{src}/{sub}/{f}", (mt, mt))
-    stream = spark.readStream.schema(events.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(f"{src}/*")
-    out = streaming_sessionize(stream)
-    q = (
-        out.writeStream.format("memory").queryName("sessionize_test")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    # n_events is monotone per user: the final answer is the max-n_events row
-    got = spark.sql(
-        "SELECT user_id, max_by(n_sessions, n_events) AS n_sessions, "
-        "MAX(n_events) AS n_events FROM sessionize_test GROUP BY user_id"
-    )
-    want = sessionize(events)
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-
 def test_pip_join_brute_force(spark):
     """pip_join (cell-bucketed candidates + ray cast), in both forms, must
     equal the numpy ray_cast_pip kernel applied all-pairs, one row per
@@ -703,33 +630,6 @@ def test_streaming_geotag_join(spark, tmp_path):
     assert got == want and len(got) == 300
 
 
-def test_streaming_dedup(spark, tmp_path):
-    """First arrival of each document content passes, duplicates drop."""
-    from osm_cycling_quality_index_spark.streaming.sessions import streaming_dedup
-
-    rows = [
-        (1, "2024-01-01 10:00:00", "alpha beta"),
-        (2, "2024-01-01 10:01:00", "gamma"),
-        (3, "2024-01-01 10:02:00", "alpha beta"),   # dup of 1
-        (4, "2024-01-01 10:03:00", "delta"),
-        (5, "2024-01-01 10:04:00", "gamma"),        # dup of 2
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, ts string, text string") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    src = str(tmp_path / "docs_in")
-    docs.write.parquet(src)
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    q = (
-        streaming_dedup(stream).writeStream.format("memory")
-        .queryName("dedup_stream").outputMode("append")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    kept = {r["text"] for r in spark.sql("SELECT text FROM dedup_stream").collect()}
-    n = spark.sql("SELECT COUNT(*) AS n FROM dedup_stream").collect()[0]["n"]
-    assert kept == {"alpha beta", "gamma", "delta"} and n == 3
-
-
 def test_qml_style_sink(tmp_path):
     """S7: the generated QML is well-formed XML with the reference's 11
     graduated classes over `index` (bounds, labels, colors)."""
@@ -755,54 +655,6 @@ def test_qml_style_sink(tmp_path):
             if opt.get("name") == "line_color":
                 colors.append(opt.get("value"))
     assert colors == [c[3] for c in INDEX_CLASSES]
-
-
-def test_spatial_partition_pruning(spark, tmp_path):
-    """A pcell-partitioned layout prunes at the scan: the filtered read
-    plans PartitionFilters and returns exactly the partition's rows."""
-    from osm_cycling_quality_index_spark.sources.layout import (
-        with_partition_cell, write_spatially_partitioned,
-    )
-    from osm_cycling_quality_index_spark.plans.geo_queries import _points_df
-
-    pts = _points_df(spark, SF)
-    path = str(tmp_path / "pts_by_cell")
-    write_spatially_partitioned(pts, path, res=5)
-    want = with_partition_cell(pts, 5).groupBy("pcell").count().orderBy(
-        F.desc("count")).first()
-    got = spark.read.parquet(path).where(F.col("pcell") == want["pcell"])
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "pcell" in plan.split("PartitionFilters")[1][:120]
-    assert got.count() == want["count"]
-
-
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """Two tables bucketed+sorted on the cell key sort-merge join with zero
-    exchanges — the persistent co-location strategy for recurring spatial
-    joins."""
-    from osm_cycling_quality_index_spark.sources.layout import (
-        bucketed_join, save_bucketed,
-    )
-
-    a = spark.range(0, 5000).select(
-        (F.col("id") % 97).alias("cell"), F.col("id").alias("pid"))
-    b = spark.range(0, 300).select(
-        (F.col("id") % 97).alias("cell"), F.col("id").alias("wid"))
-    save_bucketed(a, "pts_bkt", "cell", 8)
-    save_bucketed(b, "ways_bkt", "cell", 8)
-    try:
-        # disable broadcast so the join strategy under test is sort-merge
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = bucketed_join(spark, "pts_bkt", "ways_bkt", "cell")
-        n = j.count()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:800]
-        want = a.join(b, "cell").count()
-        assert n == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS pts_bkt")
-        spark.sql("DROP TABLE IF EXISTS ways_bkt")
 
 
 def test_word_ids_layout_invariance(spark):
@@ -940,23 +792,14 @@ def test_rollup_composition(spark):
 
 
 def test_kmv_merge_property(spark):
-    """Exact mergeability: per-day partial sketches composed with kmv_merge
-    equal sketching the whole table directly, and the estimator lands
-    within the expected ~1/sqrt(k) band of truth at k=32."""
+    """The KMV estimator lands within the expected ~1/sqrt(k) band of
+    truth at k=32."""
     from osm_cycling_quality_index_spark.operators.sketch import (
-        kmv_estimate, kmv_merge, kmv_sketch,
+        kmv_estimate, kmv_sketch,
     )
 
     e = spark.read.parquet(f"{SF}/events.parquet")
     direct = kmv_sketch(e, "user_id", "event_type", k=32)
-    parts = [
-        kmv_sketch(e.where(F.dayofmonth("ts") % 3 == i), "user_id",
-                   "event_type", k=32)
-        for i in range(3)
-    ]
-    merged = kmv_merge(*parts, k=32)
-    assert direct.exceptAll(merged).count() == 0
-    assert merged.exceptAll(direct).count() == 0
     est = {r["event_type"]: r["est_distinct"]
            for r in kmv_estimate(direct, k=32).collect()}
     exact = {r["event_type"]: r["n"]
@@ -1027,24 +870,22 @@ def test_dedup_groups_keeper_and_singletons(spark):
 # ---------------------------------------------------------------------------
 
 def test_bpe_three_way_equality(spark):
-    """Column replace-chain == Arrow-batched twin == classic greedy encoder
-    on the corpus, plus a pathological same-pair run (two replace passes
-    are exhaustive for the distinct-symbol rules the import guard
-    enforces; see functions/bpe.py module doc)."""
+    """Column replace-chain == classic greedy encoder on the corpus, plus a
+    pathological same-pair run (two replace passes are exhaustive for the
+    distinct-symbol rules the import guard enforces; see functions/bpe.py
+    module doc) and the boundary-semantics edges."""
     from pyspark.sql import functions as F
 
     from osm_cycling_quality_index_spark.functions.bpe import (
-        _count_doc, bpe_encode_word, bpe_token_count, bpe_token_count_fast,
+        _count_doc, bpe_encode_word, bpe_token_count,
     )
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
     col = {r["doc_id"]: r["n"] for r in
            d.select("doc_id", bpe_token_count(F.col("text")).alias("n")).collect()}
-    fast = {r["doc_id"]: r["n"] for r in
-            d.select("doc_id", bpe_token_count_fast(F.col("text")).alias("n")).collect()}
     ref = {r["doc_id"]: _count_doc(r["text"], {})
            for r in d.select("doc_id", "text").collect()}
-    assert col == fast == ref and len(col) == d.count()
+    assert col == ref and len(col) == d.count()
     # merged pieces exist (i.e. this is not a char counter)
     assert bpe_encode_word("lower") == ["low", "er"]
     # run of 8 'e r' pairs + empty text edge
@@ -1057,19 +898,17 @@ def test_bpe_three_way_equality(spark):
             for r in edge.select("doc_id", "text").collect()}
     assert got == want and got[1] == 0
     # boundary-semantics edges: tab is an ordinary symbol, a literal '|'
-    # behaves like a space, NULL stays NULL — column path, fast twin and
-    # reference counter must agree on all three
+    # behaves like a space, NULL stays NULL — column path and reference
+    # counter must agree on all three
     hard = spark.createDataFrame(
         [(0, "a\tb"), (1, "a|b er"), (2, None), (3, "  er  "),
          (4, "er\ner"), (5, "a\nb c"), (6, "\n\n"), (7, "low\r\ner")],
         "doc_id long, text string")
     col2 = {r["doc_id"]: r["n"] for r in
             hard.select("doc_id", bpe_token_count(F.col("text")).alias("n")).collect()}
-    fast2 = {r["doc_id"]: r["n"] for r in
-             hard.select("doc_id", bpe_token_count_fast(F.col("text")).alias("n")).collect()}
     ref2 = {r["doc_id"]: _count_doc(r["text"], {})
             for r in hard.select("doc_id", "text").collect()}
-    assert col2 == fast2 == ref2, (col2, fast2, ref2)
+    assert col2 == ref2, (col2, ref2)
     assert col2[2] is None
 
 

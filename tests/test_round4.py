@@ -192,7 +192,7 @@ def test_xxhash_mode_simhash_exhaustive(spark):
     brute-force all-pairs hamming filter over that mode's own signatures.
     This is the first coverage of the production xxhash path end-to-end."""
     from osm_cycling_quality_index_spark.operators.dedup import (
-        simhash, simhash_near_pairs,
+        hamming_near_pairs, simhash,
     )
 
     d = spark.read.parquet(f"{SF01}/documents.parquet")
@@ -207,7 +207,7 @@ def test_xxhash_mode_simhash_exhaustive(spark):
             if bin(sigs[a] ^ sigs[b]).count("1") <= 3
         }
         got = {(r["doc_a"], r["doc_b"])
-               for r in simhash_near_pairs(d, mode=mode).collect()}
+               for r in hamming_near_pairs(simhash(d, mode=mode)).collect()}
         spark.catalog.clearCache()
         assert got == brute, (mode, len(got), len(brute))
         assert brute  # non-vacuous

@@ -128,37 +128,6 @@ def test_repeated_spans_matches_brute_force(spark):
     spark.catalog.clearCache()
 
 
-def test_excise_spans_roundtrip(spark):
-    """excise_spans removes exactly the flagged tokens: untouched docs
-    pass through (normalized), a fully-covered doc becomes empty, and no
-    k-gram in the excised corpus repeats >= min_count times EXCEPT grams
-    newly formed across excision seams (Lee et al. accept the same
-    artifact; re-running the detector converges)."""
-    from osm_cycling_quality_index_spark.operators.dedup import (
-        excise_spans, repeated_spans, release_session_pinned,
-    )
-
-    boiler = "one two three four five six seven eight nine ten"
-    rows = [
-        (0, f"keep these words {boiler} and these"),
-        (1, f"{boiler} trailing unique content follows here"),
-        (2, boiler),
-        (3, "nothing shared with anybody at all in this document"),
-    ]
-    sdf = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    spans = repeated_spans(sdf, k=8, min_count=2)
-    out = {r.doc_id: r.text for r in excise_spans(sdf, spans).collect()}
-    assert out[0] == "keep these words and these"
-    assert out[1] == "trailing unique content follows here"
-    assert out[2] == ""
-    assert out[3] == "nothing shared with anybody at all in this document"
-    # idempotence: a second detector pass over the excised corpus is empty
-    sdf2 = spark.createDataFrame(list(out.items()), "doc_id BIGINT, text STRING")
-    assert repeated_spans(sdf2, k=8, min_count=2).count() == 0
-    release_session_pinned(spark)
-    spark.catalog.clearCache()
-
-
 # ---------------------------------------------------------------------------
 # snapshot-resume on the curate pipeline (r5 VERDICT item 6)
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ from osm_cycling_quality_index_spark.operators.sidepath import sidepath_stage
 
 from oracle_sidepath import brute_force_votes
 
-GEOM_T = ArrayType(StructType([StructField("x", DoubleType()), StructField("y", DoubleType())]))
+GEOMETRY_T = ArrayType(StructType([StructField("x", DoubleType()), StructField("y", DoubleType())]))
 
 
 def _line(lon0, lat0, length_m, lat_off_m=0.0):
@@ -27,7 +27,7 @@ def _line(lon0, lat0, length_m, lat_off_m=0.0):
 
 def _run(spark, ways: list[dict]) -> dict[str, dict]:
     cols = sorted({k for w in ways for k in w} - {"geometry"})
-    fields = [StructField("geometry", GEOM_T)] + [StructField(c, StringType()) for c in cols]
+    fields = [StructField("geometry", GEOMETRY_T)] + [StructField(c, StringType()) for c in cols]
     rows = [
         tuple([w.get("geometry")] + [w.get(c) for c in cols]) for w in ways
     ]
@@ -190,7 +190,7 @@ def _hostile_ways():
 
 def _frame(spark, ways):
     cols = sorted({k for w in ways for k in w} - {"geometry"})
-    fields = [StructField("geometry", GEOM_T)] + [StructField(c, StringType()) for c in cols]
+    fields = [StructField("geometry", GEOMETRY_T)] + [StructField(c, StringType()) for c in cols]
     rows = [tuple([w.get("geometry")] + [w.get(c) for c in cols]) for w in ways]
     return conform_ways(spark.createDataFrame(rows, StructType(fields)))
 

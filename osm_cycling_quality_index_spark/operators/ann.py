@@ -189,13 +189,15 @@ def ivf_topk(
             "cid int, cvec array<double>",
         )
     else:
+        # one window over at most n_centroids rows, safe by size; a foldable
+        # partition spec (lit) is erased and WindowExec then warns "No
+        # Partition Defined" as for a corpus-sized global window, so
+        # partition by a value-derived constant (0, NULL seeds included)
+        one = F.coalesce(F.col("cseed") * 0, F.lit(0))
         cents = (
             embeddings.orderBy("vec_id").limit(n_centroids)
             .select(F.col("vec_id").alias("cseed"), F.col("embedding").alias("cvec"))
-            .withColumn(
-                "cid",
-                F.row_number().over(Window.partitionBy(F.lit(0)).orderBy("cseed")),
-            )
+            .withColumn("cid", F.row_number().over(Window.partitionBy(one).orderBy("cseed")))
             .select("cid", "cvec")
         )
     # corpus -> inverted list id: argmax cosine over the broadcast centroids

@@ -4,13 +4,34 @@ Tuned for correctness tests on ``local[N]`` but every knob is the one you'd
 set on a 1000-executor cluster: AQE (runtime re-planning + skew-join
 splitting), Arrow for every pandas UDF exchange, and shuffle partition counts
 sized to the parallelism at hand.
+
+Every Arrow kernel of the engine (the broadcast spatial joins, the
+sidepath vote, the geometry UDFs) runs in a pyspark Python worker.  A cold
+worker costs far more than a batch of kernel work: the first Python stage
+of a fresh context waits for the Python daemon to start and import pyspark
+(about 1.2 s per task), then for each worker to import the kernel modules.
+So the first ``get_spark`` on a context starts a background warm-up: one
+``mapInArrow`` job of ``defaultParallelism - 1`` one-row tasks, each
+importing the kernel modules, so those workers are idle in the pool that
+``MapInArrow``, ``ArrowEvalPython`` and ``MapInPandas`` reuse when the first
+real stage starts.  It overlaps the driver's input reads and plan
+construction.  One task slot stays free, so the driver's first single-task
+jobs (a parquet schema read, a broadcast size aggregate) are not queued
+behind it; the first stage forks its last worker from the warm daemon.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
+
+#: job description of the warm-up job in the status store
+WARMUP_JOB = "python worker warm-up"
 
 
 def _host_driver_memory() -> str:
@@ -66,4 +87,58 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _start_warmup(spark)
+    return spark
+
+
+def _import_kernels(batches):
+    """Warm-up task: import the modules the Arrow kernels live in."""
+    from .operators import images, sidepath  # noqa: F401
+
+    # drained, or the worker is not returned to the pool
+    for _ in batches:
+        pass
+    yield from ()
+
+
+def _warm_up(spark: SparkSession, jsc, n: int) -> None:
+    """Run the warm-up job; ``jsc`` is the context's Java handle, taken
+    before a stop can clear it."""
+    sc = spark.sparkContext
+    try:
+        # held while the plan is built: pyspark builds a UDF on the active
+        # session or creates one, so a stop between the check and the build
+        # must wait rather than leave a fresh context behind
+        with SparkContext._lock:
+            if SparkContext._active_spark_context is not sc:
+                return
+            jsc.setJobDescription(WARMUP_JOB)
+            df = spark.range(0, n, 1, n).mapInArrow(_import_kernels, "id long")
+        df.collect()
+    except (Py4JError, PySparkException, AttributeError):
+        # a stop fails the build or the job, and clears the Python
+        # context's Java handle (AttributeError); any other failure, or
+        # one on a running context, is a real one
+        if not jsc.sc().isStopped():
+            raise
+
+
+def _start_warmup(spark: SparkSession) -> None:
+    """Start the context's worker warm-up once, on its first ``get_spark``."""
+    sc = spark.sparkContext
+    with SparkContext._lock:
+        if getattr(sc, "_worker_warmup", None) is not None:
+            return
+        n = max(1, sc.defaultParallelism - 1)
+        sc._worker_warmup = threading.Thread(
+            target=_warm_up, args=(spark, sc._jsc, n), name="python-worker-warmup",
+            daemon=True)
+    sc._worker_warmup.start()
+
+
+def wait_for_warmup(spark: SparkSession) -> None:
+    """Block until the context's worker warm-up has ended."""
+    t = getattr(spark.sparkContext, "_worker_warmup", None)
+    if t is not None:
+        t.join()

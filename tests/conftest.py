@@ -7,10 +7,12 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    from osm_cycling_quality_index_spark.session import get_spark
+    from osm_cycling_quality_index_spark.session import get_spark, wait_for_warmup
 
     n = len(os.sched_getaffinity(0))  # what `nproc` reports
     s = get_spark(app_name="cqi-tests", master=f"local[{n}]", shuffle_partitions=n)
+    # the worker warm-up job has ended before any test counts jobs
+    wait_for_warmup(s)
     yield s
     s.stop()
 

@@ -288,14 +288,15 @@ def q_lang_quality(spark, sf_dir):
         LANG_BOUNDARY_CASES, lang_id, lang_scores, quality_score,
     )
 
-    # every row's text is one of the n boundary cases BY CONSTRUCTION
-    # (t is a pure function of c_custkey % n), so the heavy scoring
-    # expressions — repeat() literals up to tens of KB + marker scans per
-    # language — are evaluated once per DISTINCT case on an n-row
-    # dimension and attached by broadcast join, the same value-collapse
-    # move the dedup resolvers use.  Same lang_scores/lang_id/
-    # quality_score expressions, same values per row (measured at sf0.1:
-    # 3.9-5.2 s of per-row scoring collapses to the n-row evaluation).
+    # every row's text is one of the n boundary cases or '' BY
+    # CONSTRUCTION (t is a pure function of c_custkey % n), so the heavy
+    # scoring expressions — repeat() literals up to tens of KB + marker
+    # scans per language — are evaluated once per DISTINCT case on an
+    # (n + 1)-row dimension and attached by broadcast join, the same
+    # value-collapse move the dedup resolvers use.  Same lang_scores/
+    # lang_id/quality_score expressions, same values per row (measured at
+    # sf0.1: 3.9-5.2 s of per-row scoring collapses to the n-row
+    # evaluation).
     c = _t(spark, sf_dir, "customer")
     k = F.col("c_custkey")
     n = len(LANG_BOUNDARY_CASES)
@@ -307,14 +308,17 @@ def q_lang_quality(spark, sf_dir):
         t = F.when(cid == i, lit) if t is None else t.when(cid == i, lit)
     t = t.otherwise(F.lit(""))
     scores = lang_scores(t)
-    dim = spark.range(n).select(
+    # case -1 takes the keys whose ``% n`` is negative or NULL (the
+    # oracle's ELSE '' arm); the chain's otherwise("") gives it ''
+    dim = spark.range(-1, n).select(
         F.col("id").alias("case_id"),
         *[scores[lang].cast("int").alias(f"s_{lang}") for lang in sorted(scores)],
         lang_id(t).alias("lang"),
         quality_score(t).alias("quality"),
     )
     return (
-        c.select(k.alias("doc_id"), (k % n).alias("case_id"))
+        c.select(k.alias("doc_id"),
+                 F.when(k % n >= 0, k % n).otherwise(-1).alias("case_id"))
         .join(F.broadcast(dim), "case_id")
         .select(
             "doc_id",

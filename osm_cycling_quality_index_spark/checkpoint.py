@@ -16,7 +16,15 @@ stage's snapshot can be the output a caller asked for), else to a fresh
 data write, so a run killed mid-write leaves no entry; an entry is trusted
 only while its directory holds exactly its recorded files at their recorded
 sizes, so damaged or overwritten data is recomputed rather than read.  A
-table without a root writes the same way and commits nothing.  On a cluster
+table without a root writes the same way and commits nothing.
+
+Every snapshot is zstd-compressed parquet at parquet-mr's default level.
+The codec belongs to the table, as Iceberg's
+``write.parquet.compression-codec`` does, so it holds whichever session
+wrote the snapshot; zstd is Iceberg's default since 1.4.  Spark's session
+default, snappy, leaves the coordinate and distance doubles that fill the
+stages uncompressed.  Parquet records the codec per column chunk, so a
+snapshot committed with another codec still resumes.  On a cluster
 with Iceberg jars ``write`` maps 1:1 to ``writeTo(...).createOrReplace()``
 and ``read_latest`` to snapshot selection — the pipeline code is agnostic.
 """
@@ -41,13 +49,14 @@ def data_files(path: str) -> dict[str, int]:
 
 
 def write_parquet(df: DataFrame, path: str) -> dict:
-    """Write ``df`` to ``path`` (overwriting it) and describe the write:
-    its data files, row count, wall time and per-partition row counts, all
-    read without another Spark job."""
+    """Write ``df`` to ``path`` (overwriting it) as zstd parquet, the
+    table's codec and Iceberg's default, and describe the write: its data
+    files, row count, wall time and per-partition row counts, all read
+    without another Spark job."""
     store = StatusStore(df.sparkSession)
     before = store.last_stage()
     t0 = time.perf_counter()
-    df.write.mode("overwrite").parquet(path)
+    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
     wall = time.perf_counter() - t0
     per_part = store.records_written(before)
     files = data_files(path)

@@ -25,24 +25,19 @@ _DCT = _dct_matrix(_N)
 
 
 def _resize_area(gray: np.ndarray, n: int) -> np.ndarray:
-    """Area-mean resize to (n, n) via bin averaging (deterministic)."""
+    """Area-mean resize to (n, n) via bin averaging (deterministic): each
+    bin's sum from the four corners of the 2D cumulative sum, over its
+    area."""
     h, w = gray.shape
     ys = (np.arange(n + 1) * h // n).astype(np.int64)
     xs = (np.arange(n + 1) * w // n).astype(np.int64)
     ys[1:] = np.maximum(ys[1:], ys[:-1] + 1) if h >= n else ys[1:]
     xs[1:] = np.maximum(xs[1:], xs[:-1] + 1) if w >= n else xs[1:]
-    out = np.empty((n, n), dtype=np.float64)
+    y0, y1 = ys[:-1, None], np.maximum(ys[1:], ys[:-1] + 1)[:, None]
+    x0, x1 = xs[None, :-1], np.maximum(xs[1:], xs[:-1] + 1)[None, :]
     csum = np.zeros((h + 1, w + 1), dtype=np.float64)
     csum[1:, 1:] = np.cumsum(np.cumsum(gray, axis=0), axis=1)
-    for yi in range(n):
-        y0, y1 = ys[yi], max(ys[yi + 1], ys[yi] + 1)
-        for xi in range(n):
-            x0, x1 = xs[xi], max(xs[xi + 1], xs[xi] + 1)
-            area = (y1 - y0) * (x1 - x0)
-            out[yi, xi] = (
-                csum[y1, x1] - csum[y0, x1] - csum[y1, x0] + csum[y0, x0]
-            ) / area
-    return out
+    return (csum[y1, x1] - csum[y0, x1] - csum[y1, x0] + csum[y0, x0]) / ((y1 - y0) * (x1 - x0))
 
 
 def phash64_batch32(stack: np.ndarray) -> np.ndarray:
@@ -64,8 +59,5 @@ def phash64(pixels: np.ndarray) -> int:
     freq = _DCT @ small @ _DCT.T
     block = freq[:8, :8].flatten()
     med = np.median(block[1:])
-    bits = (block > med).astype(np.uint64)
-    h = np.uint64(0)
-    for b in bits:
-        h = (h << np.uint64(1)) | b
-    return int(h.view(np.int64))
+    # first coefficient is the most significant bit
+    return int(np.packbits(block > med).view(">i8")[0])

@@ -127,6 +127,11 @@ def _warm_up(spark: SparkSession, jsc, n: int) -> None:
 def _start_warmup(spark: SparkSession) -> None:
     """Start the context's worker warm-up once, on its first ``get_spark``."""
     sc = spark.sparkContext
+    # set once, under the lock, before the thread starts; a later call
+    # must not wait for the lock, which the warm-up holds while it builds
+    # its plan
+    if getattr(sc, "_worker_warmup", None) is not None:
+        return
     with SparkContext._lock:
         if getattr(sc, "_worker_warmup", None) is not None:
             return

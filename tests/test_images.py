@@ -201,3 +201,55 @@ def test_payload_psnr_via_synth_source(spark):
             assert (dec == stack[j]).all()
         else:
             assert codec.psnr(stack[j], dec) >= 40.0
+
+
+def _ref_resize_area(gray, n):
+    """The per-bin loop ``phash._resize_area`` vectorizes."""
+    h, w = gray.shape
+    ys = (np.arange(n + 1) * h // n).astype(np.int64)
+    xs = (np.arange(n + 1) * w // n).astype(np.int64)
+    ys[1:] = np.maximum(ys[1:], ys[:-1] + 1) if h >= n else ys[1:]
+    xs[1:] = np.maximum(xs[1:], xs[:-1] + 1) if w >= n else xs[1:]
+    out = np.empty((n, n), dtype=np.float64)
+    csum = np.zeros((h + 1, w + 1), dtype=np.float64)
+    csum[1:, 1:] = np.cumsum(np.cumsum(gray, axis=0), axis=1)
+    for yi in range(n):
+        y0, y1 = ys[yi], max(ys[yi + 1], ys[yi] + 1)
+        for xi in range(n):
+            x0, x1 = xs[xi], max(xs[xi + 1], xs[xi] + 1)
+            area = (y1 - y0) * (x1 - x0)
+            out[yi, xi] = (
+                csum[y1, x1] - csum[y0, x1] - csum[y1, x0] + csum[y0, x0]
+            ) / area
+    return out
+
+
+def _ref_phash64(pixels):
+    """pHash with the per-bin resize and a per-bit packing loop."""
+    from osm_cycling_quality_index_spark.imaging import phash
+
+    gray = pixels.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
+    freq = phash._DCT @ _ref_resize_area(gray, 32) @ phash._DCT.T
+    block = freq[:8, :8].flatten()
+    med = np.median(block[1:])
+    h = np.uint64(0)
+    for b in (block > med).astype(np.uint64):
+        h = (h << np.uint64(1)) | b
+    return int(h.view(np.int64))
+
+
+def test_phash64_matches_per_bin_reference():
+    """``phash64`` is bit-identical to the per-bin loop, on images smaller,
+    equal to and larger than 32x32 and on the synth images."""
+    from osm_cycling_quality_index_spark.imaging.phash import _resize_area, phash64
+
+    rng = np.random.default_rng(11)
+    images = [rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+              for h, w in [(32, 32), (64, 48), (17, 40), (5, 7), (100, 100), (31, 33)]
+              for _ in range(8)]
+    _, stack = synth.images_pdf(synth.ways_pdf(n_roads=24), n_images=60, return_pixels=True)
+    images += list(stack)
+    for px in images:
+        gray = px.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
+        assert np.array_equal(_resize_area(gray, 32), _ref_resize_area(gray, 32)), px.shape
+        assert phash64(px) == _ref_phash64(px), px.shape

@@ -90,3 +90,43 @@ def test_cc_max_iter_guard(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(ValueError):
         connected_components(df, max_iter=0)
+
+
+def test_lang_quality_keeps_negative_and_null_keys(spark, tmp_path):
+    """``q_lang_quality`` keeps a customer whose key is negative or NULL,
+    with text '', as its DuckDB oracle does (both keep the dividend's sign
+    in ``%``); compared the way ``tools/check_oracles.py`` compares."""
+    import importlib.util
+    from pathlib import Path
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    root = Path(__file__).parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "check_oracles", root / "tools" / "check_oracles.py")
+    check = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check)
+
+    keys = [-7, -1, None, 0, 13, 14]
+    pq.write_table(pa.table({
+        "c_custkey": pa.array(keys, pa.int64()),
+        "c_name": [f"c{k}" for k in keys],
+        "c_nationkey": pa.array([1] * len(keys), pa.int32()),
+        "c_acctbal": [0.0] * len(keys),
+        "c_mktsegment": ["BUILDING"] * len(keys),
+    }), tmp_path / "customer.parquet")
+
+    sdf = E.queries()["lang_quality"](spark, str(tmp_path))
+    cols = sorted(sdf.columns)
+    got = check.normalize([r.asDict() for r in sdf.collect()], cols)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW customer AS SELECT * FROM '{tmp_path}/customer.parquet'")
+    rel = con.sql(E.oracle_sql()["lang_quality"])
+    want = check.normalize([dict(zip(rel.columns, row)) for row in rel.fetchall()],
+                           sorted(rel.columns))
+    assert len(want) == len(keys)
+    assert got == want

@@ -1,7 +1,8 @@
 """The Python worker warm-up that ``session.get_spark`` starts with a new
 context: it reaches the worker pool that the Arrow kernel stages use, runs
-once per context and writes no output, and a stop or an interpreter exit
-while it runs prints no Python traceback and leaves no Python worker.
+once per context and writes no output, a later ``get_spark`` does not wait
+for it, and a stop or an interpreter exit while it runs prints no Python
+traceback and leaves no Python worker.
 
 Each case runs in a fresh interpreter, because the shared test session's
 pool is warm already."""
@@ -70,6 +71,38 @@ print(json.dumps({"n": n, "start_ms": start, "warmup_jobs": len(warm),
 spark.stop()
 """
 
+SECOND_CALL = r"""
+import json, threading, time
+from pyspark import SparkContext
+from osm_cycling_quality_index_spark.session import WARMUP_JOB, get_spark, wait_for_warmup
+
+spark = get_spark(app_name="warmup-second-call-test")
+held, release = threading.Event(), threading.Event()
+
+def hold():
+    with SparkContext._lock:
+        held.set()
+        release.wait(10)
+
+holder = threading.Thread(target=hold)
+holder.start()
+held.wait()
+t0 = time.perf_counter()
+get_spark(app_name="warmup-second-call-test")
+second_s = time.perf_counter() - t0
+release.set()
+holder.join()
+wait_for_warmup(spark)
+
+jsc = spark.sparkContext._jsc.sc()
+jsc.listenerBus().waitUntilEmpty()
+jobs = jsc.statusStore().jobsList(None)
+warm = [j for j in (jobs.apply(i) for i in range(jobs.size()))
+        if j.description().isDefined() and j.description().get() == WARMUP_JOB]
+print(json.dumps({"second_s": second_s, "warmup_jobs": len(warm)}))
+spark.stop()
+"""
+
 #: ``now`` stops while the warm-up plan is built, ``running`` once its job
 #: runs; ``exit`` leaves the interpreter then, without a stop
 STOPS = r"""
@@ -127,6 +160,16 @@ def test_warmup_reaches_the_worker_pool():
     assert len(got["start_ms"]) == 1 and got["start_ms"][0] < 300, got
     assert got["warmup_jobs"] == 1 and got["warmup_stages"] >= 1, got
     assert got["warmup_output_bytes"] == 0 and not got["picked_as_write"], got
+
+
+def test_second_get_spark_does_not_wait_for_the_warmup():
+    """A second ``get_spark`` on a live context returns at once, even while
+    another thread holds ``SparkContext._lock`` (as the warm-up does while
+    it builds its plan), and the context still runs one warm-up job."""
+    r, _ = _run([sys.executable, "-c", SECOND_CALL])
+    assert r.returncode == 0, r.stderr[-3000:]
+    got = json.loads(r.stdout.strip().splitlines()[-1])
+    assert got["second_s"] < 1.0 and got["warmup_jobs"] == 1, got
 
 
 @pytest.mark.parametrize("argv,rc", [

@@ -36,8 +36,17 @@ def _footer_rows(path) -> dict[str, int]:
             for f in os.listdir(path) if f.startswith("part-")}
 
 
+def _codecs(path) -> set[str]:
+    """The compression codecs of every column chunk of every part file."""
+    return {md.row_group(g).column(c).compression
+            for f in os.listdir(path) if f.startswith("part-")
+            for md in [pq.ParquetFile(os.path.join(path, f)).metadata]
+            for g in range(md.num_row_groups) for c in range(md.num_columns)}
+
+
 def _check_against_footers(entry: dict, rec: dict) -> None:
     rows = _footer_rows(entry["path"])
+    assert _codecs(entry["path"]) == {"ZSTD"}, entry["path"]
     assert sorted(rows) == sorted(entry["files"])
     assert rec["snapshot"] == entry["id"]
     assert rec["rows"] == entry["rows"] == sum(rows.values())
@@ -52,8 +61,9 @@ def _check_against_footers(entry: dict, rec: dict) -> None:
 
 def test_stage_audit_starts_no_job(spark, tmp_path, audit_calls):
     """Auditing ``main.py``'s stages (with and without ``--checkpoint``) and
-    ``curate_pipeline``'s starts no Spark job, and each record's figures
-    equal the written files' parquet footers.  ``main.py`` leaves no frame
+    ``curate_pipeline``'s starts no Spark job, each record's figures equal
+    the written files' parquet footers, and every column chunk of every
+    part file is zstd-compressed.  ``main.py`` leaves no frame
     persisted."""
     from osm_cycling_quality_index_spark.operators.curate import curate_pipeline
     from osm_cycling_quality_index_spark.operators.dedup import release_session_pinned
@@ -80,6 +90,30 @@ def test_stage_audit_starts_no_job(spark, tmp_path, audit_calls):
     for name, entry, rec, jobs in audit_calls:
         assert jobs == 0, name
         _check_against_footers(entry, rec)
+
+
+def test_snappy_snapshot_still_resumes(spark, tmp_path):
+    """A stage committed as snappy parquet, as snapshots were written before
+    zstd became the table's codec, is still trusted and read, next to a
+    zstd stage of the same table."""
+    from osm_cycling_quality_index_spark.checkpoint import SnapshotTable, data_files
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    table = SnapshotTable(ckpt, data_root=out)
+    df = spark.range(0, 500, 1, 3).selectExpr("id", "id * 0.25 AS lon")
+    new = table.write(df, "new")
+
+    old_path = os.path.join(out, "old")
+    df.write.mode("overwrite").option("compression", "snappy").parquet(old_path)
+    table._commit({"id": "legacy", "stage": "old", "path": old_path,
+                   "files": data_files(old_path), "rows": 500})
+    assert _codecs(old_path) == {"SNAPPY"} and _codecs(new["path"]) == {"ZSTD"}
+
+    assert table.committed("old")["id"] == "legacy"
+    assert table.committed("new")["id"] == new["id"]
+    want = sorted(tuple(r) for r in df.collect())
+    for stage in ("old", "new"):
+        assert sorted(tuple(r) for r in table.read_latest(spark, stage).collect()) == want
 
 
 class Killed(Exception):
